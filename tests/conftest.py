@@ -13,7 +13,3 @@ def spark():
     yield s
     s.stop()
 
-
-@pytest.fixture(scope="session")
-def sf_dir():
-    return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -1,80 +1,6 @@
-"""PII detection/redaction, benchmark decontamination, and text
-normalization (the r4 training-data hygiene operators)."""
+"""Text normalization: NFC composition, whitespace and control characters."""
 
-import pytest
-from pyspark.sql import functions as F
-
-from trident_spark.operators import decontaminate as D
-from trident_spark.operators import pii, textstats
-
-
-def test_pii_signals_counts(spark):
-    rows = [
-        (1, "mail me at alice@example.com or bob.smith+x@sub.example.org"),
-        (2, "call (415) 555-1234 or +1 415.555.9876 today"),
-        (3, "server at 192.168.1.100 and 10.0.0.1"),
-        (4, "card 4111 1111 1111 1111 exp 12/25; ssn 123-45-6789"),
-        (5, "nothing sensitive here, just prose with numbers like 42"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["id"]: r for r in pii.pii_signals(df).collect()}
-    assert out[1]["n_email"] == 2 and out[1]["n_pii_total"] == 2
-    assert out[2]["n_phone"] == 2
-    assert out[3]["n_ipv4"] == 2
-    assert out[4]["n_credit_card"] == 1 and out[4]["n_ssn"] == 1
-    assert out[5]["n_pii_total"] == 0
-
-
-def test_redact_pii_masks_and_flags(spark):
-    rows = [(1, "write alice@example.com, ssn 123-45-6789, ip 10.0.0.1"),
-            (2, "clean text")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["id"]: r for r in pii.redact_pii(df).collect()}
-    assert out[1]["text"] == "write [EMAIL], ssn [SSN], ip [IP]"
-    assert out[1]["was_redacted"] is True
-    assert out[2]["text"] == "clean text"
-    assert out[2]["was_redacted"] is False
-
-
-def test_contamination_scores_and_filter(spark):
-    bench_q = ("what is the capital of france and why does the river "
-               "seine flow through it")
-    docs = [
-        # verbatim benchmark quote inside a longer doc → contaminated
-        (1, "some prose before. " + bench_q + " and some prose after."),
-        # partial overlap below threshold
-        (2, "what is the capital of france anyway I forget"),
-        # clean
-        (3, "completely unrelated text about spark shuffle partitions "
-            "and adaptive query execution and join strategies"),
-    ]
-    bench = [(100, bench_q),
-             (200, "name every planet of the solar system in order")]
-    docs_df = spark.createDataFrame(docs, "doc_id long, text string")
-    bench_df = spark.createDataFrame(bench, "bench_id long, text string")
-
-    scores = {(r["id"], r["bench_id"]): r for r in
-              D.contamination_scores(docs_df, bench_df, n=5).collect()}
-    assert scores[(1, 100)]["overlap_frac"] == 1.0
-    assert (2, 100) not in scores or scores[(2, 100)]["overlap_frac"] < 0.5
-
-    out = {r["id"]: r for r in
-           D.decontaminate(docs_df, bench_df, threshold=0.5, n=5).collect()}
-    assert out[1]["is_contaminated"] is True
-    assert out[1]["worst_bench_id"] == 100
-    assert out[2]["is_contaminated"] is False
-    assert out[3]["is_contaminated"] is False and out[3]["max_overlap"] == 0.0
-
-
-def test_contamination_short_doc_guard(spark):
-    """Docs/bench items shorter than n tokens yield no grams (sequence
-    counts DOWN for k < 1 — CLAUDE.md rule 13) and never crash or match."""
-    docs_df = spark.createDataFrame([(1, "too short")],
-                                    "doc_id long, text string")
-    bench_df = spark.createDataFrame([(9, "also tiny")],
-                                     "bench_id long, text string")
-    out = D.decontaminate(docs_df, bench_df, n=8).collect()
-    assert len(out) == 1 and out[0]["is_contaminated"] is False
+from trident_spark.operators import textstats
 
 
 def test_normalize_text(spark):
@@ -93,22 +19,3 @@ def test_normalize_text(spark):
     assert out[3]["text"] == "bell and null controls"
     assert out[4]["text"] == "already clean"
     assert out[4]["was_changed"] is False
-
-
-def test_pii_report_single_scan(spark):
-    """pii_report = pii_signals + redact_pii fused into ONE projection:
-    identical counts/redaction, and the plan contains no Join node."""
-    rows = [(1, "write alice@example.com, ssn 123-45-6789, ip 10.0.0.1"),
-            (2, "clean text")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    rep = pii.pii_report(df)
-    out = {r["id"]: r for r in rep.collect()}
-    sig = {r["id"]: r for r in pii.pii_signals(df).collect()}
-    red = {r["id"]: r for r in pii.redact_pii(df).collect()}
-    for i in (1, 2):
-        assert out[i]["n_pii_total"] == sig[i]["n_pii_total"]
-        assert out[i]["n_email"] == sig[i]["n_email"]
-        assert out[i]["redacted"] == red[i]["text"]
-        assert out[i]["was_redacted"] == red[i]["was_redacted"]
-    plan = rep._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in plan

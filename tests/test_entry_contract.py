@@ -5,9 +5,8 @@ pandas frame → columns sorted by name → rows sorted by every column
 (``sort_values``; unhashable cells like lists CRASH, exactly as they crash
 the driver) → per-cell hash that distinguishes int from float dtype (DuckDB
 HUGEINT → float64 ``1.0`` hashes differently from Spark's int64 ``1``) but
-not integer widths.  Round 1 proved a looser local mirror lets driver-red
-queries pass pytest (events_sessionized); this one reproduces each failure
-mode locally.
+not integer widths.  A looser local mirror once let a driver-red query
+pass pytest; this one reproduces each failure mode locally.
 """
 
 import numpy as np
@@ -16,8 +15,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
+TABLES = ("documents",)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -99,11 +97,8 @@ def test_driver_window_fits():
 
 
 def test_every_registered_query_has_an_oracle_or_reason():
-    # rows-only queries are the documented exceptions (r4: the IVF query
-    # gained a SQL-mirror oracle — re-trained codebook literals)
-    rows_only = {"lang_id", "embedding_near_dup_lsh"}
-    missing = set(entry_mod.queries()) - set(entry_mod.oracle_sql()) - rows_only
-    assert not missing, f"queries without oracle or documented reason: {missing}"
+    assert set(entry_mod.queries()) == set(entry_mod.oracle_sql())
+    assert set(entry_mod.extra_queries()) == set(entry_mod.extra_oracle_sql())
 
 
 @pytest.mark.parametrize("name", sorted(_all_oracles().keys()))
@@ -114,14 +109,3 @@ def test_query_vs_oracle(spark, duck, name):
     want = _canon(duck.sql(oracle).df())
     _assert_canon_equal(name, got, want)
 
-
-@pytest.mark.parametrize(
-    "name",
-    [n for n in entry_mod.queries() if n not in entry_mod.oracle_sql()],
-)
-def test_rows_only_queries_run(spark, name):
-    # rows-only queries still pass through the driver's canonicalization,
-    # so they must at least be sortable/hashable (no list/array columns)
-    pdf = entry_mod.queries()[name](spark, SF_DIR).toPandas()
-    _canon(pdf)
-    assert len(pdf) >= 0

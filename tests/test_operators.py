@@ -1,4 +1,4 @@
-"""Tests for dedup / similarity / textstats / multimodal operators.
+"""Tests for dedup / similarity / textstats / sampling / url operators.
 
 Approximate methods (MinHash-LSH, SimHash, hyperplane LSH) are verified
 against their exact counterparts on corpora with planted near-duplicates.
@@ -9,7 +9,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from trident_spark.operators import dedup, multimodal, similarity, textstats
+from trident_spark.operators import dedup, similarity, textstats
 
 VOCAB = ("spark shuffle partition join hash sort merge scan filter agg "
          "window broadcast skew salt codegen arrow batch column row "
@@ -302,72 +302,6 @@ def test_lang_id_on_driver_corpus_is_english(spark):
     assert not set(counts) & {"zh", "ja", "ko", "ru", "und"}, counts
 
 
-def test_multimodal_plumbing(spark):
-    media = multimodal.synthetic_media_df(spark, n=30)
-    feats = multimodal.extract_features(media, feature_dim=16)
-    rows = feats.collect()
-    assert len(rows) == 30
-    # image + audio decode for real; video has no codec -> error channel
-    for r in rows:
-        if r["kind"] in ("image", "audio"):
-            assert r["decode_error"] is None and len(r["feature"]) == 16, r
-        else:
-            assert r["feature"] is None and "codec" in r["decode_error"], r
-    # deterministic across runs
-    again = {r["media_id"]: r["feature"] for r in
-             multimodal.extract_features(media, feature_dim=16).collect()}
-    assert all(again[r["media_id"]] == r["feature"] for r in rows)
-    stats = {r["kind"]: r["n"] for r in multimodal.media_stats(media).collect()}
-    assert stats == {"image": 10, "audio": 10, "video": 10}
-
-
-def test_ppm_codec_roundtrip_and_rejects():
-    import numpy as np
-    import pytest as _pytest
-
-    px = np.arange(6 * 4 * 3, dtype=np.uint8).reshape(6, 4, 3)
-    assert (multimodal.decode_ppm(multimodal.encode_ppm(px)) == px).all()
-    with _pytest.raises(ValueError, match="not a P6"):
-        multimodal.decode_ppm(b"JFIF....")
-    with _pytest.raises(ValueError, match="truncated"):
-        multimodal.decode_ppm(multimodal.encode_ppm(px)[:-5])
-
-
-def test_wav_codec_roundtrip_and_features():
-    import numpy as np
-
-    t = np.arange(1600) / 8000.0
-    samp = (np.sin(2 * np.pi * 440.0 * t) * 10000).astype(np.int16)
-    back, rate = multimodal.decode_wav(multimodal.encode_wav(samp, 8000))
-    assert rate == 8000 and (back == samp).all()
-    feats = multimodal.audio_features(multimodal.encode_wav(samp, 8000), 8)
-    assert feats[0] == 1600 and feats[1] == 8000
-    assert 0.5 < feats[2] / (10000 / 32768 / np.sqrt(2)) < 1.5  # ~sine RMS
-
-
-def test_image_features_reflect_pixels():
-    import numpy as np
-
-    px = np.zeros((5, 7, 3), dtype=np.uint8)
-    px[:, :, 0] = 200  # red-dominant image
-    f = multimodal.image_features(multimodal.encode_ppm(px), 8)
-    assert f[0] == 5 and f[1] == 7
-    assert f[2] == 200.0 and f[3] == 0.0 and f[4] == 0.0
-
-
-def test_corrupt_payload_hits_error_channel(spark):
-    import pandas as pd
-
-    media = spark.createDataFrame(
-        [(1, "image", b"P6 garbage", "image/x-portable-pixmap", 2, 2, None),
-         (2, "audio", b"not a wav", "audio/wav", None, None, 100)],
-        multimodal.MEDIA_SCHEMA)
-    rows = {r["media_id"]: r for r in
-            multimodal.extract_features(media, 8).collect()}
-    assert rows[1]["feature"] is None and rows[1]["decode_error"]
-    assert rows[2]["feature"] is None and rows[2]["decode_error"]
-
-
 def test_ivf_topk_contains_true_neighbors(spark, embeddings):
     query = [float(x) for x in
              embeddings.where("vec_id = 0").first()["embedding"]]
@@ -499,68 +433,6 @@ def test_embedding_centroids_exact_small(spark):
     got = {(r["grp"], r["dim"]): r["c"]
            for r in embedding_centroids(embs).collect()}
     assert got == {(0, 0): 2.0, (0, 1): 3.0, (1, 0): 10.0, (1, 1): 0.0}
-
-
-def test_resize_images_real_and_error_channel(spark):
-    from trident_spark.operators.multimodal import (
-        decode_ppm, resize_images, synthetic_media_df,
-    )
-
-    media = synthetic_media_df(spark, 12)
-    out = resize_images(media, 4, 3)
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert len(rows) == 12  # nothing dropped
-    for i, r in rows.items():
-        if r["kind"] == "image":
-            assert r["resize_error"] is None
-            px = decode_ppm(bytes(r["payload"]))
-            assert px.shape == (3, 4, 3)
-            assert (r["width"], r["height"]) == (4, 3)
-        else:
-            assert r["resize_error"] is None  # pass-through untouched
-    # corrupt image payload → error channel, row survives
-    bad = media.withColumn(
-        "payload",
-        F.when(F.col("kind") == "image",
-               F.lit(b"garbage")).otherwise(F.col("payload")))
-    bad_rows = resize_images(bad, 4, 3).where("kind = 'image'").collect()
-    assert all(r["resize_error"] for r in bad_rows)
-
-
-def test_resize_deterministic_nearest_neighbor():
-    import numpy as np
-
-    from trident_spark.operators.multimodal import (
-        decode_ppm, encode_ppm, resize_image_payload,
-    )
-
-    px = np.arange(2 * 2 * 3, dtype=np.uint8).reshape(2, 2, 3)
-    up = decode_ppm(resize_image_payload(encode_ppm(px), 4, 4))
-    # nearest-neighbor: each source pixel becomes a 2x2 block
-    assert (up[0, 0] == px[0, 0]).all() and (up[0, 1] == px[0, 0]).all()
-    assert (up[3, 3] == px[1, 1]).all()
-
-
-def test_sample_frames_uniform_and_error_channel(spark):
-    from trident_spark.operators.multimodal import (
-        sample_frames, synthetic_media_df, synthetic_video_df,
-    )
-
-    vids = synthetic_video_df(spark, 5, n_frames=12)
-    out = sample_frames(vids, n_frames=4).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r["media_id"], []).append(r)
-    assert set(by_id) == set(range(5))
-    for rows in by_id.values():
-        assert [r["frame_idx"] for r in rows] == [0, 3, 6, 9]
-        assert all(r["n_frames"] == 12 and r["frame_error"] is None
-                   and r["payload"] for r in rows)
-    # MP4 blobs (no codec) → one error row per video, stage survives;
-    # image/audio rows are not video and are dropped
-    mixed = sample_frames(synthetic_media_df(spark, 9), n_frames=4).collect()
-    assert len(mixed) == 3  # the 3 video rows
-    assert all(r["frame_error"] and r["payload"] is None for r in mixed)
 
 
 def test_remove_boilerplate(spark):

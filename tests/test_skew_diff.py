@@ -1,44 +1,6 @@
-"""Tests for skew salting (C16) and snapshot diff / top-k (C18/C19)."""
+"""Tests for snapshot diff / top-k (C18/C19) and connected components."""
 
-from pyspark.sql import functions as F
-
-from trident_spark.pipeline import diff, skew
-
-
-def test_salted_count_matches_plain(spark):
-    df = spark.createDataFrame(
-        [("hub",)] * 500 + [("a",)] * 3 + [("b",)] * 7, "k string"
-    )
-    plain = {r["k"]: r["n"] for r in df.groupBy("k").agg(F.count("*").alias("n")).collect()}
-    salted = {r["k"]: r["n"] for r in skew.salted_count(df, ["k"], n_salt=8).collect()}
-    assert salted == plain
-
-
-def test_salted_agg_matches_plain(spark):
-    df = spark.createDataFrame(
-        [("hub", i * 1.0) for i in range(200)] + [("x", 5.0)], "k string, v double"
-    )
-    out = {r["k"]: (r["total"], r["n"], r["mx"]) for r in
-           skew.salted_agg(df, ["k"], {"total": "sum(v)", "n": "count(*)",
-                                       "mx": "max(v)"}, n_salt=8).collect()}
-    assert out["hub"] == (sum(i * 1.0 for i in range(200)), 200, 199.0)
-    assert out["x"] == (5.0, 1, 5.0)
-
-
-def test_hot_keys_detects_hub(spark):
-    df = spark.createDataFrame([("hub",)] * 5000 + [("cold",)] * 5, "k string")
-    hot = [r["k"] for r in skew.hot_keys(df, ["k"], fraction=0.1, threshold=100).collect()]
-    assert hot == ["hub"]
-
-
-def test_salted_join_matches_plain(spark):
-    big = spark.createDataFrame([("k1", i) for i in range(100)] + [("k2", 0)],
-                                "k string, v int")
-    small = spark.createDataFrame([("k1", "x"), ("k2", "y")], "k string, tag string")
-    plain = big.join(small, "k").select("k", "v", "tag")
-    salted = skew.salted_join(big, small, "k", n_salt=4).select("k", "v", "tag")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
+from trident_spark.pipeline import diff
 
 
 def test_triple_diff(spark):

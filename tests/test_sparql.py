@@ -2783,6 +2783,42 @@ def test_decode_triples_round_trips_encode(spark, encoded_kg):
     assert dec.count() == edges.count()
 
 
+def test_id_runs_hash_like_the_warehouse(spark):
+    """One term-id space: the lexical engine's id-run expressions, applied
+    to the decoded graph, reproduce the stored edge ids row for row —
+    lang-tagged and typed literals included."""
+    import datetime
+    import json
+
+    from trident_spark.pipeline import build_kg
+    from trident_spark.pipeline.kg import decode_triples
+    from trident_spark.pipeline.pages import PAGES_SCHEMA, pages_df
+    from trident_spark.query.sparql import _id_exprs
+
+    node = {"@context": "https://schema.org", "@id": "http://x.example/a",
+            "@type": "Person",
+            "name": {"@value": "Ada", "@language": "EN-gb"},
+            "description": {"@value": "hallo", "@language": "de"},
+            "birthDate": {"@value": "1815-12-10", "@type":
+                          "http://www.w3.org/2001/XMLSchema#date"}}
+    html = ('<html><head><script type="application/ld+json">'
+            + json.dumps(node) + "</script></head><body></body></html>")
+    tagged = spark.createDataFrame(
+        [("http://x.example/a", datetime.datetime(2024, 1, 1),
+          html.encode(), "", "en")], PAGES_SCHEMA)
+    result = build_kg(pages_df(spark, 10).unionByName(tagged), alias_dict=None)
+    edges = result.triples.localCheckpoint(eager=True)
+    dec = decode_triples(edges, result.terms)
+    assert dec.where("obj_lang IS NOT NULL").count() == 2
+    assert dec.where("obj_datatype IS NOT NULL").count() > 0
+    ids = _id_exprs()
+    got = dec.select(ids["subj"].alias("subj_id"), ids["pred"].alias("pred_id"),
+                     ids["obj"].alias("obj_id"))
+    want = edges.select("subj_id", "pred_id", "obj_id")
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
 def test_lexical_over_decoded_graph_matches_encoded(spark, encoded_kg):
     """CLI parity: query(decode_triples(...)) and query_encoded(...) give
     identical answers — incl. a shape only the lexical engine supports

@@ -96,7 +96,7 @@ def segment_dedup(docs: DataFrame, window: int = 20, min_docs: int = 2,
         segments = F.transform(segments, lambda s: F.trim(s))
     else:
         n_segs = F.ceil(F.size(toks) / float(window)).cast("int")
-        # rule 13: sequence(0, n-1) counts DOWN when n < 1 — greatest-guard
+        # rule 12: sequence(0, n-1) counts DOWN when n < 1 — greatest-guard
         idxs = F.sequence(F.lit(0), F.greatest(n_segs - 1, F.lit(0)))
 
         def _seg(i):
@@ -129,7 +129,7 @@ def segment_dedup(docs: DataFrame, window: int = 20, min_docs: int = 2,
              F.count("*").alias("n_removed"))
     )
     drop_idx = F.coalesce("drop_idx", F.array().cast("array<int>"))
-    # rule 16: the 2-param higher-order lambda is (element, index) — here
+    # rule 15: the 2-param higher-order lambda is (element, index) — here
     # that is exactly the contract we want (filter by position)
     kept = F.filter("segs", lambda s, i: ~F.array_contains(drop_idx, i))
     # paragraphs re-join on a blank line (their delimiter class);

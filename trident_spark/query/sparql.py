@@ -1710,12 +1710,13 @@ def _all_vars(obj) -> set[str]:
 
 # --- dictionary-encoded BGP runs -------------------------------------------
 # Consecutive plain triple patterns compile to equi-joins on 64-bit term
-# ids (xxhash64 over the term's kind/lexical/lang/datatype identity) instead
-# of lexical strings: intermediate joins shuffle longs, and variables used
-# only as join keys are never materialized at all.  Lexical values come
-# back via one small decode join per *referenced* variable against the
-# (already pred-filtered) scan that bound it.  This also makes joins
-# term-correct: a literal "x" never joins an IRI "x".
+# ids (kg.term_id, the warehouse's own id over the term's kind/lexical/
+# datatype/lang identity) instead of lexical strings: intermediate joins
+# shuffle longs, and variables used only as join keys are never
+# materialized at all.  Lexical values come back via one small decode join
+# per *referenced* variable against the (already pred-filtered) scan that
+# bound it.  This also makes joins term-correct: a literal "x" never joins
+# an IRI "x".
 
 _ID_EXPRS = None
 
@@ -1723,17 +1724,17 @@ _ID_EXPRS = None
 def _id_exprs():
     global _ID_EXPRS
     if _ID_EXPRS is None:
+        from trident_spark.pipeline.kg import term_id
+
+        # unskolemized `_:` subjects hash as kind "blank", the kind the
+        # object slot carries for them, so a blank node joins across slots
         subj_kind = F.when(F.col("subj").startswith("_:"),
                            F.lit("blank")).otherwise(F.lit("iri"))
         _ID_EXPRS = {
-            "subj": F.xxhash64(subj_kind, F.col("subj"), F.lit(""),
-                               F.lit("")),
-            "pred": F.xxhash64(F.lit("iri"), F.col("pred"), F.lit(""),
-                               F.lit("")),
-            "obj": F.xxhash64(F.col("obj_kind"), F.col("obj_lexical"),
-                              F.coalesce(F.col("obj_lang"), F.lit("")),
-                              F.coalesce(F.col("obj_datatype"),
-                                         F.lit(""))),
+            "subj": term_id(subj_kind, F.col("subj")),
+            "pred": term_id(F.lit("iri"), F.col("pred")),
+            "obj": term_id(F.col("obj_kind"), F.col("obj_lexical"),
+                           F.col("obj_datatype"), F.col("obj_lang")),
         }
     return _ID_EXPRS
 

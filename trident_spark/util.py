@@ -29,28 +29,6 @@ def subject_chunk_key(df: DataFrame, keys: list[str], chunk_size: int,
     return df.withColumn("_chunk", F.pmod(h, n_chunks))
 
 
-def word_ngrams_col(text_col: str, n: int):
-    """Column expression: array of space-joined lowercase word n-grams.
-
-    The ONE shared sliding-window construction (rule 13: Spark
-    ``sequence(1, k)`` counts DOWN for k < 1, so every copy of this
-    needed its own short-input guard — docs with < n tokens yield an
-    EMPTY array here).  Used by decontaminate._gram_hashes;
-    textstats.top_ngrams keeps its trim-first variant and
-    dedup._ngrams_col its documented divergence (short docs emit one
-    truncated gram so tiny near-duplicate docs still Jaccard-compare) —
-    both are oracle-pinned, so they cannot silently adopt this one."""
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
-    k = F.size(toks) - (n - 1)
-    return F.when(
-        k >= 1,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 # Logical operators whose presence means the frame's partitioning is already
 # governed by spark.sql.shuffle.partitions / AQE — repartitioning on top of
 # them is at best redundant and at worst (via the old .rdd partition probe)
