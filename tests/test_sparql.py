@@ -2,7 +2,7 @@
 
 import pytest
 
-from trident_spark.query.sparql import SparqlError, query
+from trident_spark.query.sparql import SparqlError, ask, query
 
 COLS = ("subj string, pred string, obj_lexical string, obj_kind string, "
         "obj_datatype string, obj_lang string")
@@ -452,6 +452,70 @@ def test_property_path_ground_check(spark, chain):
     assert [r["y"] for r in df.collect()] == ["http://n/5"]
 
 
+def test_property_path_star_zero_length_on_absent_term(spark, chain):
+    """SPARQL 1.1 §18.5: eval(Path(X:term, ZeroLengthPath, Y:var)) =
+    {(Y, X)} and a ground zero-length path matches when both ends are the
+    same term, whether or not that term occurs in the graph."""
+    absent = "http://n/absent"
+
+    def rows(q):
+        return sorted(tuple(r) for r in query(chain, q).collect())
+
+    assert rows(f"SELECT ?x WHERE {{ <{absent}> <http://p/next>* ?x }}") \
+        == [(absent,)]
+    assert rows(f"SELECT ?x WHERE {{ ?x <http://p/next>* <{absent}> }}") \
+        == [(absent,)]
+    assert ask(chain, f"ASK {{ <{absent}> <http://p/next>* <{absent}> }}")
+    assert not ask(chain,
+                   f"ASK {{ <{absent}> <http://p/next>* <http://n/0> }}")
+    # a term in the graph reaches itself through the zero-length path too
+    assert rows("SELECT ?x WHERE { ?x <http://p/next>* <http://n/0> }") \
+        == [("http://n/0",)]
+
+
+def test_property_path_closure_size_bound(spark, chain, monkeypatch):
+    """A closure whose pair relation passes the module bound raises
+    SparqlError instead of returning a truncated answer, seeded or
+    not."""
+    from trident_spark.query import sparql as S
+
+    # the 5-hop chain's closure has 15 pairs; squaring passes 9 pairs
+    # (paths of 1-2 hops) on its way to 14 (1-4 hops)
+    monkeypatch.setattr(S, "_MAX_CLOSURE_PAIRS", 9)
+    with pytest.raises(SparqlError, match="closure"):
+        query(chain, "SELECT ?x ?y WHERE { ?x <http://p/next>+ ?y }")
+    with pytest.raises(SparqlError, match="closure"):
+        query(chain, "SELECT ?x WHERE { <http://n/0> <http://p/next>+ ?x }")
+    # a seed whose closure ends before the step relation passes the bound
+    df = query(chain, "SELECT ?x WHERE { <http://n/4> <http://p/next>+ ?x }")
+    assert [r["x"] for r in df.collect()] == ["http://n/5"]
+
+
+def test_seeded_closure_jobs_do_not_grow_with_the_graph(spark):
+    """A closure seeded at a node with no out-edge costs the same number
+    of Spark jobs whether the rest of the graph holds a 16-hop or a 64-hop
+    chain: the loop never squares the step relation for it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = []
+    for hops in (16, 64):
+        rows = [(f"http://c/{i}", "http://p/next", f"http://c/{i + 1}", "iri",
+                 None, None) for i in range(hops)]
+        rows.append(("http://x/hub", "http://p/next", "http://x/leaf", "iri",
+                     None, None))
+        g = spark.createDataFrame(rows, COLS).localCheckpoint(eager=True)
+        group = f"seeded-closure-{hops}"
+        sc.setJobGroup(group, group)
+        try:
+            got = query(g, "SELECT ?x WHERE { <http://x/leaf> "
+                           "<http://p/next>+ ?x }").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got == []
+        jobs.append(len(tracker.getJobIdsForGroup(group)))
+    assert jobs[0] == jobs[1], jobs
+
+
 # ---------------------------------------------------------------------------
 # SPARQL 1.1 solution modifiers and pattern operators (round 2 additions)
 # ---------------------------------------------------------------------------
@@ -690,7 +754,6 @@ def test_subquery_with_aggregate(spark, people):
 
 
 def test_ask(spark, people):
-    from trident_spark.query.sparql import ask
     assert ask(people, 'ASK { <http://x/alice> <https://schema.org/name> "Alice" }')
     assert not ask(people, 'ASK WHERE { <http://x/alice> <https://schema.org/name> "Zed" }')
     # query() form returns a 1-row boolean DataFrame

@@ -9,7 +9,10 @@ SPARQL-correct semantics, while the lexical single-pattern path joins on
 the lexical form alone (a 100-query run on a collision-dense graph shows
 the lexical path emitting extra rows in ~10% of shared-subject/object-var
 queries, all term confusions).  test_cross_pattern_term_identity below
-pins the CORRECT behavior explicitly."""
+pins the CORRECT behavior explicitly.
+
+Property-path closures are checked against an independent oracle: a
+plain Python graph search over the input rows."""
 
 import random
 
@@ -135,3 +138,98 @@ def test_run_literal_constant_full_term_identity(spark):
             SELECT ?s WHERE {{ ?s <http://p/n> "hello"@FR . {extra} }}
         """)
         assert [r["s"] for r in tagged.collect()] == ["http://x/s1"], extra
+
+
+# ---------------------------------------------------------------------------
+# property-path closures vs a plain graph search
+# ---------------------------------------------------------------------------
+
+T = "http://t/"
+P, Q = f"<{T}p>", f"<{T}q>"
+GRAPHS = (f"{T}g1", f"{T}g2")
+
+
+def _path_quads(seed):
+    """Seeded directed graph as (s, pred, o, graph) rows: two components,
+    each with a p-diamond, a p-cycle and a p-self-loop, plus random p/q
+    edges inside the component, spread over two named graphs."""
+    rng = random.Random(seed)
+    quads = set()
+    for comp in "ab":
+        n = [f"{T}{comp}{i}" for i in range(7)]
+        fixed = [(n[0], n[1]), (n[0], n[2]), (n[1], n[3]), (n[2], n[3]),
+                 (n[3], n[4]), (n[4], n[5]), (n[5], n[3]), (n[6], n[6])]
+        extra = [(rng.choice(n), rng.choice(n)) for _ in range(8)]
+        for k, (s, o) in enumerate(fixed + extra):
+            pred = "p" if k < len(fixed) else rng.choice("pq")
+            quads.add((s, T + pred, o, rng.choice(GRAPHS)))
+    return sorted(quads)
+
+
+def _reach(edges, start):
+    """Nodes at the end of a walk of one or more steps from ``start``."""
+    adj = {}
+    for s, o in edges:
+        adj.setdefault(s, set()).add(o)
+    seen, todo = set(), [start]
+    while todo:
+        for nxt in adj.get(todo.pop(), ()):
+            if nxt not in seen:
+                seen.add(nxt)
+                todo.append(nxt)
+    return seen
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_property_path_closures_match_graph_search(spark, seed):
+    quads = _path_quads(seed)
+
+    def rel(pred, graph=None):
+        return {(s, o) for s, p, o, g in quads
+                if p == T + pred and graph in (None, g)}
+
+    p, q = rel("p"), rel("q")
+    inv_p = {(o, s) for s, o in p}
+    p_q = {(s, o2) for s, m in p for m2, o2 in q if m == m2}
+    triples = spark.createDataFrame(
+        sorted({(s, pr, o, "iri", None, None) for s, pr, o, _ in quads}),
+        COLS)
+    quad_frame = spark.createDataFrame(
+        [(s, pr, o, "iri", None, None, g) for s, pr, o, g in quads],
+        COLS + ", graph string")
+    nodes = sorted({s for s, *_ in quads} | {o for _, _, o, _ in quads})
+    rng = random.Random(seed)
+
+    def pick():
+        return rng.choice(nodes + [f"{T}absent"])
+
+    def rows(frame, body, names="?x"):
+        df = S.query(frame, f"SELECT {names} WHERE {{ {body} }}")
+        return {tuple(r) for r in df.collect()}
+
+    c = pick()
+    assert rows(triples, f"<{c}> {P}+ ?x") == {(x,) for x in _reach(p, c)}
+    c = pick()
+    assert rows(triples, f"?x {P}+ <{c}>") == {
+        (x,) for x in _reach(inv_p, c)}
+    for a, b in ((pick(), pick()), (nodes[0], nodes[3])):
+        assert S.ask(triples, f"ASK {{ <{a}> {P}+ <{b}> }}") \
+            == (b in _reach(p, a)), (a, b)
+    c = pick()
+    assert rows(triples, f"<{c}> {P}* ?x") == {
+        (x,) for x in _reach(p, c) | {c}}
+    c = pick()
+    assert rows(triples, f"<{c}> ^{P}+ ?x") == {
+        (x,) for x in _reach(inv_p, c)}
+    c = pick()
+    assert rows(triples, f"<{c}> ({P}|{Q})+ ?x") == {
+        (x,) for x in _reach(p | q, c)}
+    c = pick()
+    assert rows(triples, f"<{c}> ({P}/{Q})+ ?x") == {
+        (x,) for x in _reach(p_q, c)}
+    c = pick()
+    assert rows(quad_frame, f"GRAPH ?g {{ <{c}> {P}+ ?x }}", "?g ?x") == {
+        (g, x) for g in GRAPHS for x in _reach(rel("p", g), c)}
+    # no bound endpoint: the loop squares to a fixpoint
+    assert rows(triples, f"?x {P}+ ?y", "?x ?y") == {
+        (s, o) for s in nodes for o in _reach(p, s)}

@@ -161,10 +161,3 @@ def host_strict_error(s: pd.Series) -> pd.Series:
     hosts only."""
     table = {v: K.validate_host_strict(v) for v in s.dropna().unique()}
     return pd.Series([table.get(v) for v in s], dtype=object)
-
-
-def resolved_iri(base_col, rel_col):
-    """Convenience: resolve + normalize, returning just the canonical IRI
-    (null on error).  This is the hot-path composition used by extraction."""
-    r = iri_resolve(base_col, rel_col)
-    return F.when(r["error"].isNull(), iri_normalize(r["value"])["value"])

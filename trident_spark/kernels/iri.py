@@ -693,13 +693,6 @@ def _host_to_ascii(host: str) -> str:
         return host
 
 
-def _host_to_unicode(host: str) -> str:
-    try:
-        return ".".join(_label_to_unicode(l) for l in host.split("."))
-    except _IdnaError:
-        return host
-
-
 def _host_idna_roundtrip(host: str) -> str:
     """ToASCII → ToUnicode with WHOLE-HOST fallback, matching the
     reference (iri/autority.go:256-271: either conversion failing keeps

@@ -172,22 +172,6 @@ def connected_components_labelprop(edges: DataFrame, max_iter: int = 20) -> Data
     return labels
 
 
-def canonical_map(labels: DataFrame, terms: DataFrame) -> DataFrame:
-    """labels + term table → (term_id, canonical_term_id, canonical_iri).
-
-    The canonical representative of each component is its min term id; the
-    lexical form is looked up once per component (tiny join).
-    """
-    reps = labels.select(
-        F.col("node").alias("term_id"), F.col("component").alias("canonical_term_id")
-    )
-    rep_terms = terms.select(
-        F.col("term_id").alias("canonical_term_id"),
-        F.col("lexical").alias("canonical_iri"),
-    )
-    return reps.join(rep_terms, "canonical_term_id", "left")
-
-
 def rewrite_triples(triples: DataFrame, labels: DataFrame) -> DataFrame:
     """Rewrite subj/obj ids to their canonical component representative.
 

@@ -197,17 +197,6 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     )
 
 
-def predicate_stats(triples: DataFrame, terms: DataFrame) -> DataFrame:
-    """Per-predicate counts for metrics (C15); broadcast the tiny pred dim."""
-    counts = triples.groupBy("pred_id").agg(F.count("*").alias("n"))
-    return (
-        counts.join(F.broadcast(terms.select("term_id", "lexical")),
-                    counts.pred_id == F.col("term_id"))
-        .select(F.col("lexical").alias("predicate"), "n")
-        .orderBy(F.desc("n"))
-    )
-
-
 def assert_no_id_collisions(terms: DataFrame) -> int:
     """Safety check: xxhash64 collision across distinct lexical forms."""
     return (

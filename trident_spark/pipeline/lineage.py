@@ -52,12 +52,3 @@ def resume_filter(pages: DataFrame, lineage: DataFrame, stage: str,
         .join(F.broadcast(done), "bucket", "left_anti")
         .drop("bucket")
     )
-
-
-def write_partitioned(df: DataFrame, path: str, mode: str = "overwrite",
-                      partition_by: tuple = ()) -> None:
-    """Parquet sink (sandbox stand-in for Iceberg writeTo/overwritePartitions)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)

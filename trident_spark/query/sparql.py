@@ -1081,19 +1081,40 @@ def _graph_nodes(triples: DataFrame, per_graph: bool = False) -> DataFrame:
     return nodes.select("_ps", F.col("_ps").alias("_po"))
 
 
+# a property-path closure whose step relation grows past this many pairs
+# raises SparqlError
+_MAX_CLOSURE_PAIRS = 20_000_000
+
+
 def _compile_path(triples: DataFrame, node: tuple,
                   prefixes: dict[str, str],
-                  per_graph: bool = False) -> DataFrame:
+                  per_graph: bool = False,
+                  subj: str | None = None,
+                  obj: str | None = None) -> DataFrame:
     """Property path → distinct (_ps, _po) endpoint pairs (plus ``_pg``,
     the containing named graph, when ``per_graph`` — the GRAPH ?var case:
     each graph's closure is computed independently by keying every join on
     the graph column too).
 
-    Closures (`+`/`*`) run an iterative driver-side fixpoint (join new
-    frontier against the base relation, union, until no new pairs) — the
-    standard DataFrame transitive closure; each round localCheckpoints to
-    bound lineage.  `*` adds the identity pair for every graph term, per
-    SPARQL's zero-length-path semantics."""
+    ``subj``/``obj`` are the lexical values of the pattern's constant
+    endpoints, if any.  The result always holds every pair with those
+    endpoints and may hold others; the caller filters on the constants.
+
+    A closure (`+`/`*`) runs one loop over 64-bit endpoint hashes, decoded
+    once at the end.  The step relation starts as the one-step pairs, and
+    each round squares it (adds its composition with itself), doubling
+    the path lengths it covers, so a D-hop chain closes in about log2(D)
+    rounds.  A constant endpoint seeds the closure (a bound object alone
+    through the inverse relation; with both bound, the subject): the
+    seed's reach is the step relation's pairs from the seed, and the loop
+    squares only while that reach still grows, so a seed with no step of
+    its own costs one count of the one-step pairs and no squaring.
+    Without a constant (and per graph) the loop squares to a fixpoint.
+    There is no round cap; a closure whose step relation passes
+    ``_MAX_CLOSURE_PAIRS`` raises SparqlError instead of returning a
+    truncated answer.  `*` adds the zero-length pairs of SPARQL 1.1
+    §18.5: (c, c) for a constant c, whether or not c occurs in the graph,
+    else (n, n) for every graph term."""
     kind = node[0]
     g_sel = [F.col("graph").alias("_pg")] if per_graph else []
     g_cols = ["_pg"] if per_graph else []
@@ -1106,7 +1127,8 @@ def _compile_path(triples: DataFrame, node: tuple,
             .distinct()
         )
     if kind == "inv":
-        p = _compile_path(triples, node[1], prefixes, per_graph)
+        p = _compile_path(triples, node[1], prefixes, per_graph,
+                          subj=obj, obj=subj)
         return p.select(*g_cols, F.col("_po").alias("_ps"),
                         F.col("_ps").alias("_po"))
     if kind == "seq":
@@ -1123,9 +1145,9 @@ def _compile_path(triples: DataFrame, node: tuple,
         )
     if kind == "alt":
         return (
-            _compile_path(triples, node[1], prefixes, per_graph)
+            _compile_path(triples, node[1], prefixes, per_graph, subj, obj)
             .unionByName(_compile_path(triples, node[2], prefixes,
-                                       per_graph))
+                                       per_graph, subj, obj))
             .distinct()
         )
     if kind == "neg":
@@ -1155,39 +1177,57 @@ def _compile_path(triples: DataFrame, node: tuple,
         return base.unionByName(
             _graph_nodes(triples, per_graph)).distinct()
     if kind in ("plus", "star"):
-        # Transitive closure by recursive doubling: composing the closure-
-        # so-far with itself doubles the maximum covered path length each
-        # round, so a diameter-D graph converges in ceil(log2(D)) joins —
-        # and the loop runs to a true fixpoint with NO round cap (a capped
-        # loop silently truncates long chains).  The closure rounds run
-        # over 64-bit endpoint hashes (16-byte rows through every shuffle
-        # instead of two lexical strings); endpoints decode once at the
-        # end against the base relation's node dictionary.
+        # materialized by its first use, read again by the decode
         base = _compile_path(triples, node[1], prefixes, per_graph) \
-            .distinct().localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
+        seed = None if per_graph else (subj if subj is not None else obj)
+        # a bound object alone seeds the inverse relation
+        src, dst = (("_po", "_ps") if seed is not None and subj is None
+                    else ("_ps", "_po"))
         enc = ([F.xxhash64("_pg").alias("_pg")] if per_graph else []) + [
-            F.xxhash64("_ps").alias("_ps"),
-            F.xxhash64("_po").alias("_po")]
-        paths = base.select(*enc).distinct().localCheckpoint(eager=True)
-        while True:
-            step = (
-                paths.withColumnRenamed("_po", "_mid")
-                .join(paths.withColumnRenamed("_ps", "_mid"),
-                      g_cols + ["_mid"])
-                .select(*g_cols, "_ps", "_po")
-            )
-            new = step.subtract(paths)
-            if not new.take(1):
-                break
-            paths = paths.union(new).distinct().localCheckpoint(eager=True)
-        nodes = (
-            base.select(F.col("_ps").alias("_lex"))
+            F.xxhash64(src).alias("_ps"), F.xxhash64(dst).alias("_po")]
+        # the pairs whose growth keeps the loop going: the seed's, or all.
+        # After round k the step relation holds every path of 1..2^k hops,
+        # so a round that adds no pair from the seed shows that no node
+        # lies 2^(k-1)+1 hops from it, hence none further
+        growing = (F.col("_ps") == F.xxhash64(F.lit(seed))
+                   if seed is not None else F.lit(True))
+        step, counts, grown = base.select(*enc), {}, True
+        while grown:
+            # a lazy checkpoint: the count below materializes it
+            step = step.localCheckpoint(eager=False)
+            prev, counts = counts, dict(
+                step.groupBy(growing).count().collect())
+            if sum(counts.values()) > _MAX_CLOSURE_PAIRS:
+                raise SparqlError(
+                    f"property-path closure passed {_MAX_CLOSURE_PAIRS} "
+                    "pairs; bind an endpoint or narrow the path")
+            grown = counts.get(True, 0) > prev.get(True, 0)
+            if grown:
+                step = step.union(
+                    step.withColumnRenamed("_po", "_mid")
+                    .join(step.withColumnRenamed("_ps", "_mid"),
+                          g_cols + ["_mid"])
+                    .select(*g_cols, "_ps", "_po")
+                ).distinct()
+        if seed is not None:
+            # the zero-length path of `*` reaches the seed itself
+            far = base.sparkSession.range(int(kind == "star")) \
+                .select(F.lit(seed).alias("_lex"))
+            if counts.get(True):
+                dec = (base.select(F.col(dst).alias("_lex")).distinct()
+                       .select(F.xxhash64("_lex").alias("_po"), "_lex"))
+                far = far.union(step.where(growing).join(dec, "_po")
+                                .select("_lex"))
+            ends = {src: F.lit(seed), dst: F.col("_lex")}
+            return far.distinct().select(ends["_ps"].alias("_ps"),
+                                         ends["_po"].alias("_po"))
+        nodes = base.select(F.col("_ps").alias("_lex")) \
             .union(base.select("_po")).distinct()
-        )
         dec = nodes.select(F.xxhash64("_lex").alias("_k"), "_lex")
         paths = (
-            paths.join(dec.withColumnRenamed("_k", "_ps")
-                       .withColumnRenamed("_lex", "_ps_lex"), "_ps")
+            step.join(dec.withColumnRenamed("_k", "_ps")
+                      .withColumnRenamed("_lex", "_ps_lex"), "_ps")
             .join(dec.withColumnRenamed("_k", "_po")
                   .withColumnRenamed("_lex", "_po_lex"), "_po")
         )
@@ -1353,16 +1393,17 @@ def _compile_pattern(triples: DataFrame, pat: _Pattern,
             # is computed independently, keyed on the graph column
             per_graph = True
             rename["_pg"] = extra["graph"]
-        pairs = _compile_path(triples, pat.pred, prefixes, per_graph)
-        scan = pairs
-        for col, term in (("_ps", pat.subj), ("_po", pat.obj)):
-            if term.startswith("?"):
-                rename[col] = term[1:]
-            elif term.startswith('"'):
-                scan = scan.where(
-                    F.col(col) == _term_value(term, prefixes))
+        ends = {"_ps": pat.subj, "_po": pat.obj}
+        bound = {col: _term_value(term, prefixes)
+                 for col, term in ends.items() if not term.startswith("?")}
+        # the closure starts from the bound endpoints
+        scan = _compile_path(triples, pat.pred, prefixes, per_graph,
+                             subj=bound.get("_ps"), obj=bound.get("_po"))
+        for col, term in ends.items():
+            if col in bound:
+                scan = scan.where(F.col(col) == bound[col])
             else:
-                scan = scan.where(F.col(col) == _expand(term, prefixes))
+                rename[col] = term[1:]
         out_vars = set(rename.values())
         scan, rename = _dedupe_repeated_vars(scan, rename)
         proj = [F.col(c).alias(v) for c, v in rename.items()]
