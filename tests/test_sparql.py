@@ -473,6 +473,34 @@ def test_property_path_star_zero_length_on_absent_term(spark, chain):
         == [("http://n/0",)]
 
 
+def test_property_path_zero_or_one_on_absent_term(spark, chain):
+    """SPARQL 1.1 §18.5: eval(Path(X:term, ZeroOrOnePath(P), Y:var)) =
+    {(Y, X)} ∪ eval(Path(X, P, Y)), so a constant reaches itself whether
+    or not it occurs in the graph; two distinct constants need one step."""
+    absent = "http://n/absent"
+
+    def rows(q):
+        return sorted(tuple(r) for r in query(chain, q).collect())
+
+    assert rows(f"SELECT ?x WHERE {{ <{absent}> <http://p/next>? ?x }}") \
+        == [(absent,)]
+    assert rows(f"SELECT ?x WHERE {{ ?x <http://p/next>? <{absent}> }}") \
+        == [(absent,)]
+    assert rows(f"SELECT ?x WHERE {{ <{absent}> ^<http://p/next>? ?x }}") \
+        == [(absent,)]
+    assert ask(chain, f"ASK {{ <{absent}> <http://p/next>? <{absent}> }}")
+    assert not ask(chain,
+                   f"ASK {{ <{absent}> <http://p/next>? <http://n/0> }}")
+    # graph terms with no step on that side reach only themselves
+    assert rows("SELECT ?x WHERE { ?x <http://p/next>? <http://n/0> }") \
+        == [("http://n/0",)]
+    assert rows("SELECT ?x WHERE { <http://n/5> <http://p/next>? ?x }") \
+        == [("http://n/5",)]
+    assert ask(chain, "ASK { <http://n/1> <http://p/next>? <http://n/2> }")
+    assert not ask(chain,
+                   "ASK { <http://n/1> <http://p/next>? <http://n/3> }")
+
+
 def test_property_path_closure_size_bound(spark, chain, monkeypatch):
     """A closure whose pair relation passes the module bound raises
     SparqlError instead of returning a truncated answer, seeded or
@@ -1453,12 +1481,53 @@ def encoded_kg(spark):
 
 
 def _differential(lexical, edges, terms, sparql):
+    """Both engines must return the same bag of rows: a duplicate row on
+    either side fails."""
+    from collections import Counter
+
     from trident_spark.query.sparql import query, query_encoded
 
-    want = {tuple(r) for r in query(lexical, sparql).collect()}
-    got = {tuple(r) for r in query_encoded(edges, terms, sparql).collect()}
-    assert got == want, (len(got), len(want))
+    want = Counter(tuple(r) for r in query(lexical, sparql).collect())
+    got = Counter(tuple(r)
+                  for r in query_encoded(edges, terms, sparql).collect())
+    assert got == want, (got - want, want - got)
     return got
+
+
+def test_differential_bags_over_duplicate_captures(spark):
+    """The lexical frame holds triples from two captures; the warehouse
+    holds their dedup_triples set.  A projection that drops a variable
+    keeps real duplicates (two friends with one name) and must not gain
+    any from the repeated captures, on either engine."""
+    from collections import Counter
+
+    from trident_spark.pipeline.kg import dedup_triples, encode_triples
+
+    knows, name = SCHEMA + "knows", SCHEMA + "name"
+    facts = [
+        ("http://x/ann", RDF_TYPE, SCHEMA + "Person", "iri"),
+        ("http://x/ann", knows, "http://x/bob", "iri"),
+        ("http://x/ann", knows, "http://x/rob", "iri"),
+        ("http://x/ann", knows, "http://x/cy", "iri"),
+        ("http://x/bob", name, "Bob", "literal"),
+        ("http://x/rob", name, "Bob", "literal"),
+        ("http://x/eve", RDF_TYPE, SCHEMA + "Person", "iri"),
+    ]
+    rows = [(url, None, "test", s, p, o, kind, None, None)
+            for url in ("http://a/1", "http://a/2")
+            for s, p, o, kind in facts]
+    lexical = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, source string, subj string, "
+              "pred string, obj_lexical string, obj_kind string, "
+              "obj_datatype string, obj_lang string")
+    terms, edges = encode_triples(lexical)
+    got = _differential(lexical, dedup_triples(edges), terms, _PFX + """
+        SELECT ?p ?n WHERE {
+            ?p a schema:Person . ?p schema:knows ?f .
+            OPTIONAL { ?f schema:name ?n }
+        }""")
+    assert got == Counter({("http://x/ann", "Bob"): 2,
+                           ("http://x/ann", None): 1})
 
 
 def test_query_encoded_matches_lexical_engine(spark, encoded_kg):
@@ -1494,6 +1563,36 @@ def test_query_encoded_plan_reads_only_id_columns(spark, encoded_kg):
     # id-typed join keys, no lexical columns in the edge scans
     assert "_tid_" in plan
     assert df.count() > 0
+
+
+def test_query_encoded_two_hop_plan_has_no_shuffle(spark, encoded_kg):
+    """The warehouse edge table is a set, so pattern scans are not
+    re-deduplicated: a selective two-pattern BGP is scans and broadcast
+    hash joins, with no hash shuffle."""
+    from trident_spark.query.sparql import query_encoded
+
+    edges, terms, lexical = encoded_kg
+    node = lexical.where(f"pred = '{SCHEMA}worksFor'").first().subj
+    df = query_encoded(edges, terms, _PFX + f"""
+        SELECT ?o ?n WHERE {{ <{node}> schema:worksFor ?o .
+                              ?o schema:name ?n }}""")
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "BroadcastHashJoin" in plan
+
+
+def test_lexical_id_run_scans_each_pattern_once(spark, encoded_kg):
+    """A lexical id run carries each projected variable's value from the
+    scan that binds it: no pattern is scanned a second time to decode."""
+    edges, terms, lexical = encoded_kg
+    df = query(lexical, _PFX + """
+        SELECT ?o ?n WHERE { ?p schema:worksFor ?o . ?o schema:name ?n }""")
+    assert df.collect()
+    # the plan before adaptive re-planning: one scan per pattern
+    plan = df._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[-1]
+    assert plan.count("Scan ExistingRDD") == 2, plan
 
 
 def test_query_encoded_rejects_unsupported(spark, encoded_kg):

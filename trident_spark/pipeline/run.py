@@ -19,7 +19,9 @@ class KGResult:
     skolemized: DataFrame  # lexical triples after skolemization
     same_as: DataFrame  # entity-linking edges
     terms: DataFrame  # dictionary-encoded term table
-    triples: DataFrame  # deduped (subj_id, pred_id, obj_id) edges
+    # deduped (subj_id, pred_id, obj_id) edges: a set, as
+    # sparql.query_encoded's docstring requires
+    triples: DataFrame
     labels: DataFrame | None  # connected-component labels
 
 

@@ -1061,10 +1061,14 @@ def _filter_sql(toks: list[str], cols: set[str] | None = None) -> str:
     return " ".join(out)
 
 
-def _graph_nodes(triples: DataFrame, per_graph: bool = False) -> DataFrame:
-    """identity pairs (n, n) over every graph term — the zero-length path
-    of the `*` and `?` operators.  ``per_graph``: pairs scoped to the
-    named graph each node occurs in (carrying ``_pg``)."""
+def _zero_length(triples: DataFrame, per_graph: bool = False,
+                 seed: str | None = None) -> DataFrame:
+    """Zero-length path pairs of `*` and `?` (SPARQL 1.1 §18.5): (c, c)
+    for a constant endpoint ``seed``, in the graph or not, else (n, n)
+    over every graph term (per named graph, carrying ``_pg``)."""
+    if seed is not None:
+        return triples.sparkSession.range(1).select(
+            F.lit(seed).alias("_ps"), F.lit(seed).alias("_po"))
     if per_graph:
         nodes = (
             triples.select(F.col("graph").alias("_pg"),
@@ -1112,9 +1116,9 @@ def _compile_path(triples: DataFrame, node: tuple,
     Without a constant (and per graph) the loop squares to a fixpoint.
     There is no round cap; a closure whose step relation passes
     ``_MAX_CLOSURE_PAIRS`` raises SparqlError instead of returning a
-    truncated answer.  `*` adds the zero-length pairs of SPARQL 1.1
-    §18.5: (c, c) for a constant c, whether or not c occurs in the graph,
-    else (n, n) for every graph term."""
+    truncated answer.  `*` and `?` add the zero-length pairs of SPARQL
+    1.1 §18.5 (:func:`_zero_length`); a constant endpoint gives the one
+    pair (c, c), so a seeded `?` reads no graph node."""
     kind = node[0]
     g_sel = [F.col("graph").alias("_pg")] if per_graph else []
     g_cols = ["_pg"] if per_graph else []
@@ -1172,10 +1176,11 @@ def _compile_path(triples: DataFrame, node: tuple,
             out = out.unionByName(parts[1])
         return out.distinct()
     if kind == "opt":
-        # zero-or-one: the base pairs plus the identity pair on every node
-        base = _compile_path(triples, node[1], prefixes, per_graph)
+        # zero-or-one: the base pairs plus the zero-length pairs
+        seed = None if per_graph else (subj if subj is not None else obj)
+        base = _compile_path(triples, node[1], prefixes, per_graph, subj, obj)
         return base.unionByName(
-            _graph_nodes(triples, per_graph)).distinct()
+            _zero_length(triples, per_graph, seed)).distinct()
     if kind in ("plus", "star"):
         # materialized by its first use, read again by the decode
         base = _compile_path(triples, node[1], prefixes, per_graph) \
@@ -1243,7 +1248,7 @@ def _compile_path(triples: DataFrame, node: tuple,
                                  F.col("_po_lex").alias("_po"))
         if kind == "star":
             paths = paths.unionByName(
-                _graph_nodes(triples, per_graph)).distinct()
+                _zero_length(triples, per_graph)).distinct()
         return paths
     raise SparqlError(f"unknown path node {node!r}")  # pragma: no cover
 
@@ -1836,21 +1841,20 @@ def _compile_run_ids(triples: DataFrame, run: list[_Pattern],
                      prefixes: dict[str, str],
                      needed: set[str] | None
                      ) -> tuple[DataFrame, set[str]]:
-    """A run of ≥2 plain patterns → id-joined solutions with lexical
-    columns for the ``needed`` variables (all of them when None)."""
+    """A run of ≥2 plain patterns → solutions joined on ``_tid_`` ids,
+    with lexical columns for the ``needed`` variables (all when None):
+    each carries its value from the scan that binds it first, so no
+    pattern is re-scanned to decode; join-only variables stay ids.  Scans
+    stay ``distinct``: the frame may hold a triple from several captures."""
     ids = _id_exprs()
-    scans: list[tuple[DataFrame, dict[str, str]]] = []
-    first_binder: dict[str, tuple[DataFrame, str]] = {}
-    for pat in run:
-        scan, rename = _run_pattern_scan(triples, pat, prefixes)
-        scans.append((scan, rename))
-        for slot, v in rename.items():
-            first_binder.setdefault(v, (scan, slot))
-
     plan: DataFrame | None = None
     bound: set[str] = set()
-    for k, (scan, rename) in enumerate(scans):
+    for k, pat in enumerate(run):
+        scan, rename = _run_pattern_scan(triples, pat, prefixes)
         proj = [ids[slot].alias(f"_tid_{v}") for slot, v in rename.items()]
+        proj += [F.col(_LEX_COLS[slot]).alias(v)
+                 for slot, v in rename.items()
+                 if v not in bound and (needed is None or v in needed)]
         idscan = (scan.select(*proj).distinct() if proj
                   else scan.select(F.lit(1).alias(f"_tid1_{k}")).limit(1))
         vars_ = set(rename.values())
@@ -1861,16 +1865,8 @@ def _compile_run_ids(triples: DataFrame, run: list[_Pattern],
             plan = plan.join(idscan, keys) if keys \
                 else plan.crossJoin(idscan)
         bound |= vars_
-
-    decode = bound if needed is None else (bound & needed)
-    for v in sorted(decode):
-        scan, slot = first_binder[v]
-        dec = scan.select(ids[slot].alias(f"_tid_{v}"),
-                          F.col(_LEX_COLS[slot]).alias(v)).distinct()
-        plan = plan.join(dec, f"_tid_{v}")
-    drop = [c for c in plan.columns
-            if c.startswith("_tid_") or c.startswith("_tid1_")]
-    return plan.drop(*drop), decode
+    drop = [c for c in plan.columns if c.startswith(("_tid_", "_tid1_"))]
+    return plan.drop(*drop), bound if needed is None else bound & needed
 
 
 def _compile_group(triples: DataFrame, group: _Group,
@@ -3583,6 +3579,12 @@ def query_encoded(edges: DataFrame, terms: DataFrame,
     DISTINCT + GROUP BY/aggregates + ORDER/LIMIT/OFFSET — the
     warehouse-analytics subset; use :func:`query` on a lexical view
     for the full 1.1 surface.
+
+    Contracts (as ``kg.dedup_triples`` and ``kg.encode_triples`` write
+    the tables): ``edges`` is a set of ``(subj_id, pred_id, obj_id)``
+    and ``terms`` holds each ``term_id`` once.  A pattern's variables and
+    constants fix its edge, so scans (required and OPTIONAL) are sets and
+    are not re-deduplicated; a repeated edge or term id multiplies rows.
     """
     from trident_spark.util_xxhash import spark_xxhash64
 
@@ -3708,9 +3710,9 @@ def query_encoded(edges: DataFrame, terms: DataFrame,
                         F.col(id_col[pos]) == const_id(term, pos))
             scan, rename = _dedupe_repeated_vars(
                 scan, {id_col[p]: v for p, v in rename.items()})
-            proj = [F.col(c).alias(f"_tid_{v}")
-                    for c, v in rename.items()]
-            idscan = (scan.select(*proj).distinct() if proj
+            # no distinct: a set of edges projects to a set (docstring)
+            proj = [F.col(c).alias(f"_tid_{v}") for c, v in rename.items()]
+            idscan = (scan.select(*proj) if proj
                       else scan.select(F.lit(1).alias("_m")).limit(1))
             vars_ = set(rename.values())
             if plan is None:
@@ -3755,10 +3757,8 @@ def query_encoded(edges: DataFrame, terms: DataFrame,
               else (_all_vars(toks[1:w]) | _all_vars(tail)) & bound)
     for f in filters:
         needed |= _all_vars(f) & bound
-    dec_base = terms.select(F.col("term_id"), F.col("lexical"),
-                            F.col("kind"), F.col("datatype"), F.col("lang"))
     for v in sorted(needed):
-        dec = dec_base.select(
+        dec = terms.select(
             F.col("term_id").alias(f"_tid_{v}"),
             F.col("lexical").alias(v),
             F.col("kind").alias(f"_kind_{v}"),
