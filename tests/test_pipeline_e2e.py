@@ -265,28 +265,70 @@ def test_sink_iceberg_requires_catalog(spark):
         Sink(spark, "/x", table_format="iceberg")
 
 
-def test_link_score_col_matches_udf(spark):
-    """Rule 8: the Catalyst link score must match the pandas-UDF reference
-    bit-for-bit over edge inputs (empty/whitespace mentions, unicode
-    spaces, repeated tokens, exact vs partial overlap)."""
-    from trident_spark.pipeline.linking import link_score, link_score_col
+def test_link_entities_independent_of_partitioning(result):
+    """The same skolemized frame gives the same sameAs rows, provenance
+    (url, warc_ts) included, whatever its partitioning: each (subject,
+    alias) keeps its first capture, not whichever arrives first."""
+    from trident_spark.pipeline.alias_dict import alias_dict_df
+    from trident_spark.pipeline.linking import link_entities
 
+    skolemized = result.skolemized.where(F.col("source") != "linking")
+    alias = alias_dict_df(skolemized.sparkSession)
+    one = sorted(map(tuple, link_entities(
+        skolemized.repartition(1), alias).collect()))
+    seven = sorted(map(tuple, link_entities(
+        skolemized.repartition(7, "url"), alias).collect()))
+    assert one and one == seven
+
+
+def test_link_entities_hand_built_dictionary(spark):
+    """Linking over a hand-built dictionary, expected rows written from the
+    rule: score = 0.7 + 0.3*prior, admitted at score >= 0.5 (a null or NaN
+    prior never), top-1 per (subject, lower(trim(mention))) by score desc
+    then IRI asc, provenance = the earliest (warc_ts, url) capture."""
+    import datetime as dt
+
+    from trident_spark.pipeline.linking import SAME_AS, link_entities
+
+    name = "https://schema.org/name"
+    works = "https://trident-spark.dev/svo/works_for"
+    t1, t2 = dt.datetime(2020, 1, 1), dt.datetime(2020, 2, 1)
+    nan = float("nan")
+    alias = spark.createDataFrame([
+        ("Acme", "kb:acme-b", 0.6),          # tied on prior with acme-a
+        ("acme ", "kb:acme-a", 0.6),
+        ("ACME", "kb:acme-c", 0.3),
+        ("nullco", "kb:nullco", None),        # null prior: never links
+        ("nanco", "kb:nanco", nan),           # NaN prior: never links
+        ("mixed", "kb:mixed-a", None),
+        ("mixed", "kb:mixed-b", nan),
+        ("mixed", "kb:mixed-c", 0.1),
+        ("lowco", "kb:lowco", -1.0),          # score 0.4 < 0.5
+    ], "alias string, canonical_iri string, prior double")
     rows = [
-        ("Acme Corp", "acme corp", 0.9),
-        ("Acme  Corp ", "Acme Corp", 0.5),
-        ("acme", "acme corp", 0.25),
-        ("", "", 0.1),
-        ("   ", "acme", 0.7),
-        ("a b a b", "b a", 0.33),
-        ("Globex Inc", "globex inc", 0.6),
-        ("tab\tsep", "tab sep", 0.4),
-        ("unrelated words", "acme corp", 1.0),
-        ("Acme", "ACME", 0.0),
+        # s1: case and whitespace variants of one mention, over two
+        # captures; the later capture has the smaller url
+        ("s1", name, "Acme", "literal", "http://b/", t1),
+        ("s1", name, "  ACME ", "literal", "http://a/", t2),
+        ("s1", works, "acme", "literal", "http://c/", t2),
+        # s2: one mention captured twice at the same time: url breaks it
+        ("s2", works, "Acme", "literal", "http://z/", t1),
+        ("s2", works, "Acme", "literal", "http://y/", t1),
+        ("s3", name, "nullco", "literal", "http://a/", t1),
+        ("s3", name, "nanco", "literal", "http://a/", t1),
+        ("s3", name, "Mixed", "literal", "http://a/", t1),
+        ("s3", name, "lowco", "literal", "http://a/", t1),
+        # not mentions: an IRI object, a non-mention predicate
+        ("s4", name, "acme", "iri", "http://a/", t1),
+        ("s4", "https://schema.org/jobTitle", "acme", "literal",
+         "http://a/", t1),
     ]
-    df = spark.createDataFrame(rows, "mention string, alias string, prior double")
-    out = df.select(
-        link_score(F.col("mention"), F.col("alias"), F.col("prior")).alias("udf"),
-        link_score_col(F.col("mention"), F.col("alias"), F.col("prior")).alias("col"),
-    ).collect()
-    for r in out:
-        assert r["udf"] == r["col"], (r["udf"], r["col"])
+    skolemized = spark.createDataFrame(
+        rows, "subj string, pred string, obj_lexical string, "
+              "obj_kind string, url string, warc_ts timestamp")
+    got = sorted(tuple(r) for r in link_entities(skolemized, alias).collect())
+    assert got == [
+        ("s1", SAME_AS, "kb:acme-a", "iri", "http://b/", t1, 0.7 + 0.3 * 0.6),
+        ("s2", SAME_AS, "kb:acme-a", "iri", "http://y/", t1, 0.7 + 0.3 * 0.6),
+        ("s3", SAME_AS, "kb:mixed-c", "iri", "http://a/", t1, 0.7 + 0.3 * 0.1),
+    ]

@@ -1,8 +1,8 @@
 """Deterministic entity-linking alias dictionary (FIXTURES.md §1).
 
 Built from the same name inventories as the synthetic corpus, so linking has
-real hits; several aliases map to 2-3 candidates to force the scoring +
-window top-1 path.  ~O(100) rows here; a production dictionary is O(10^7)
+real hits; several aliases map to 2-3 candidates, so linking must pick the
+top-1 per alias (score 0.7 + 0.3·prior, ties by IRI).  ~O(100) rows here; a production dictionary is O(10^7)
 but still broadcastable.
 """
 

@@ -1,24 +1,22 @@
 """Connected components on DataFrames (C13): canonicalization of sameAs
 clusters.
 
-Two implementations:
-
-- ``connected_components`` (default) — alternating **large-star/small-star**
-  (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-  converges in O(log² n) rounds *independent of graph diameter*, the right
-  asymptotics for web-scale graphs with long sameAs chains.  Each half-round
-  is a groupBy(min) + join — no collect_list, so hub nodes cause no
-  single-task blowup.
-- ``connected_components_labelprop`` — min-label propagation
-  (GraphFrames-style), O(diameter) rounds; simpler, fine for the shallow
-  star-shaped clusters alias linking produces, kept as the cross-check.
-
-Both truncate lineage with localCheckpoint per round (SURVEY.md §4.3).
+``connected_components`` alternates **large-star/small-star** (Kiveris et
+al., "Connected Components in MapReduce and Beyond"): it converges in
+O(log² n) rounds *independent of graph diameter*, the right asymptotics for
+web-scale graphs with long sameAs chains.  Each half-round is a window min
+over the hash(u)-partitioned symmetric edge set — no collect_list, so hub
+nodes cause no single-task blowup.  Each round truncates lineage with
+localCheckpoint (SURVEY.md §4.3) and ends with a star check; a graph that
+is not a union of stars after ``MAX_ITER`` rounds raises instead of
+returning wrong labels.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+MAX_ITER = 50
 
 
 def _symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -72,8 +70,11 @@ def _star_round(sym: DataFrame, large: bool) -> DataFrame:
     return out.where(F.col("u") != F.col("v"))
 
 
-def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Alternating large-star/small-star → labels(node, component)."""
+def connected_components(edges: DataFrame) -> DataFrame:
+    """edges(src long, dst long) → labels(node long, component long);
+    component = min node id of the connected component (deterministic).
+
+    Raises RuntimeError if the rounds have not converged after MAX_ITER."""
     # materialize the (possibly expensive) upstream edges pipeline exactly
     # once: BOTH the iteration loop and the final nodes frame reference it —
     # without this checkpoint the labels join at the end re-runs the whole
@@ -87,7 +88,7 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
         .union(base.select(F.col("dst").alias("node")))
         .distinct()
     )
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         cur = _symmetrize(_star_round(cur, large=True), "u", "v")
         cur = _symmetrize(_star_round(cur, large=False),
                           "u", "v").localCheckpoint(eager=True)
@@ -106,6 +107,9 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
         )
         if converged:
             break
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in {MAX_ITER} rounds")
     # converged: a symmetric star — every member's sole neighbour is the
     # component minimum, and the minimum's neighbours are the members, so
     # component(n) = least(n, min neighbour) for every node
@@ -119,57 +123,6 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
         nodes.join(labels, "node", "left")
         .select("node", F.coalesce("component", "node").alias("component"))
     )
-
-
-def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """edges(src long, dst long) → labels(node long, component long);
-    component = min node id (deterministic).  Uses large-star/small-star."""
-    return connected_components_star(edges, max_iter)
-
-
-def connected_components_labelprop(edges: DataFrame, max_iter: int = 20) -> DataFrame:
-    """edges(src long, dst long) → labels(node long, component long).
-
-    component = min node id of the connected component (deterministic).
-    """
-    # undirected: symmetrize once, dedupe
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=True)
-    )
-
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .union(sym.select(F.col("dst").alias("node")))
-        .dropDuplicates(["node"])
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(max_iter):
-        # propagate: each node receives the labels of its neighbours
-        nbr_labels = (
-            sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .select(F.col("src").alias("node"), "component")
-        )
-        new_labels = (
-            labels.unionByName(nbr_labels)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("component", "old"), "node")
-            .where(F.col("component") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
 
 
 def rewrite_triples(triples: DataFrame, labels: DataFrame) -> DataFrame:

@@ -57,9 +57,8 @@ def full_pipeline_golden_ids(n_pages: int = 200, seed: int = 42
         cands = alias.get(o.lower().strip())
         if not cands:
             continue
-        # the join key guarantees an exact lowercase match → sim = 1.0 →
-        # score = 0.7 + 0.3*prior ≥ 0.5 always; top-1 by (score desc,
-        # canonical asc), mirroring linking.link_entities' window
+        # score = 0.7 + 0.3*prior (≥ 0.5 for every prior in this
+        # dictionary); top-1 by (score desc, canonical asc)
         top = min(cands, key=lambda c: (-(0.7 + 0.3 * c[1]), c[0]))
         same_as.add((s, SAME_AS, top[0], "iri", None, None))
 

@@ -1,26 +1,26 @@
 """Entity linking: mention literals → canonical KB IRIs (C11-C12).
 
-Two stages, exactly as the north-star prescribes:
-
-1. candidate generation — broadcast hash join of mention surface forms
-   against a small alias dictionary (no shuffle of the big side);
-2. candidate scoring — one Arrow-batched pandas UDF over (mention, alias,
-   prior) columns, then a window top-1 per mention.
+Candidates join on the normalized alias key, ``lower(trim(alias)) =
+lower(trim(mention))``, so every candidate matches its mention exactly and
+its score, ``0.7 + 0.3·prior``, is a property of the dictionary row alone.
+Linking therefore scores and filters the small dictionary once, broadcast-
+joins it against the mention rows, and takes one ``groupBy`` per
+(subject, alias key): the top candidate (score desc, then IRI asc) and the
+first capture (min ``(warc_ts, url)``), so the output does not depend on
+partitioning.
 
 The output is a set of owl:sameAs edges feeding canonicalization (cc.py).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql import DataFrame, functions as F
 
 from trident_spark.pipeline.kg import term_id
 
 SAME_AS = "http://www.w3.org/2002/07/owl#sameAs"
 KB_PREFIX = "https://kb.trident-spark.dev/entity/"
+MIN_SCORE = 0.5
 
 # predicates whose literal objects are entity mentions worth linking
 MENTION_PREDICATES = (
@@ -31,105 +31,60 @@ MENTION_PREDICATES = (
     "https://schema.org/homeLocation",
 )
 
-
-def link_score_col(mention, alias, prior):
-    """Candidate score as a pure Catalyst expression (no Arrow hop):
-    exact match → 1.0; otherwise token-Jaccard of the lowercased word
-    sets, blended 70/30 with the popularity prior — the same arithmetic,
-    in the same order, as the :func:`link_score` pandas UDF it replaced
-    (kept below as the differential-test reference, rule 8).  ``(?U)\\s+``
-    matches Python ``str.split``'s Unicode-whitespace behaviour."""
-    m, a = F.lower(F.trim(mention)), F.lower(F.trim(alias))
-    mt = F.array_distinct(F.split(m, r"(?U)\s+"))
-    at = F.array_distinct(F.split(a, r"(?U)\s+"))
-    inter = F.size(F.array_intersect(mt, at)).cast("double")
-    union = F.size(F.array_union(mt, at)).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    exact = F.when(m == a, F.lit(1.0)).otherwise(F.lit(0.0))
-    sim = F.greatest(exact, jac)
-    return sim * F.lit(0.7) + prior.cast("double") * F.lit(0.3)
+_KEY = ["mention_subj", "alias_key"]
 
 
-@pandas_udf(DoubleType())
-def link_score(mention: pd.Series, alias: pd.Series, prior: pd.Series) -> pd.Series:
-    """Batched candidate score: normalized-edit-free similarity + prior.
-
-    Deterministic and cheap: exact match → 1.0; otherwise token-Jaccard of
-    the lowercased word sets, blended 70/30 with the popularity prior.
-    (Reference implementation for the differential test; the query path
-    uses :func:`link_score_col`.)
-    """
-    m = mention.str.lower().str.strip()
-    a = alias.str.lower().str.strip()
-    exact = (m == a).astype("float64")
-    mt = m.str.split()
-    at = a.str.split()
-    jac = pd.Series(
-        [
-            (len(set(x) & set(y)) / len(set(x) | set(y)))
-            if isinstance(x, list) and isinstance(y, list) and (set(x) | set(y))
-            else 0.0
-            for x, y in zip(mt, at)
-        ],
-        index=m.index,
-        dtype="float64",
+def _mention_rows(skolemized: DataFrame) -> DataFrame:
+    """Literal objects of mention-bearing predicates, one row per capture."""
+    return skolemized.where(
+        (F.col("obj_kind") == "literal")
+        & F.col("pred").isin(*MENTION_PREDICATES)
+    ).select(
+        F.col("subj").alias("mention_subj"),
+        F.lower(F.trim(F.col("obj_lexical"))).alias("alias_key"),
+        "url",
+        "warc_ts",
     )
-    sim = exact.combine(jac, max)
-    return 0.7 * sim + 0.3 * prior.astype("float64")
 
 
 def extract_mentions(skolemized: DataFrame) -> DataFrame:
-    """Literal objects of mention-bearing predicates → distinct mentions."""
-    return (
-        skolemized.where(
-            (F.col("obj_kind") == "literal")
-            & F.col("pred").isin(*MENTION_PREDICATES)
-        )
-        .select(
-            F.col("subj").alias("mention_subj"),
-            F.col("obj_lexical").alias("mention"),
-            "url",
-            "warc_ts",
-        )
-        .withColumn("alias_key", F.lower(F.trim(F.col("mention"))))
-        .dropDuplicates(["mention_subj", "alias_key"])
-    )
+    """→ distinct mentions (mention_subj, alias_key)."""
+    return _mention_rows(skolemized).select(*_KEY).distinct()
 
 
-def link_entities(skolemized: DataFrame, alias_dict: DataFrame,
-                  min_score: float = 0.5) -> DataFrame:
-    """→ sameAs edges (subj term, canonical IRI) via broadcast join + top-1.
+def link_entities(skolemized: DataFrame, alias_dict: DataFrame) -> DataFrame:
+    """→ sameAs edges (subj term, canonical IRI), one per linked mention.
 
     alias_dict(alias string, canonical_iri string, prior double) must be
-    small enough to broadcast (the usual case: an alias table is O(10^7)
-    rows ≪ the corpus).  Ambiguous aliases are resolved by the scoring UDF
-    + row_number window.
+    small enough to broadcast (an alias table is O(10^7) rows ≪ the corpus).
+    A row links at score ``0.7 + 0.3·prior >= MIN_SCORE``; a null or NaN
+    prior never links.
     """
-    mentions = extract_mentions(skolemized)
-    cands = mentions.join(
-        F.broadcast(alias_dict.withColumn("alias_key", F.lower(F.trim("alias")))),
-        "alias_key",
+    score = F.lit(0.7) + F.col("prior").cast("double") * F.lit(0.3)
+    # Spark orders NaN above every double, so NaN >= MIN_SCORE holds
+    cands = alias_dict.select(
+        F.lower(F.trim(F.col("alias"))).alias("alias_key"),
+        "canonical_iri",
+        score.alias("score"),
+    ).where((F.col("score") >= MIN_SCORE) & ~F.isnan("score"))
+    top = (
+        _mention_rows(skolemized)
+        .join(F.broadcast(cands), "alias_key")
+        .groupBy(*_KEY)
+        .agg(
+            F.min(F.struct((-F.col("score")).alias("neg_score"),
+                           "canonical_iri")).alias("top"),
+            F.min(F.struct("warc_ts", "url")).alias("first"),
+        )
     )
-    scored = cands.withColumn(
-        "score", link_score_col(F.col("mention"), F.col("alias"), F.col("prior"))
-    ).where(F.col("score") >= min_score)
-
-    w = Window.partitionBy("mention_subj", "alias_key").orderBy(
-        F.desc("score"), F.asc("canonical_iri")
-    )
-    top1 = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    return top1.select(
+    return top.select(
         F.col("mention_subj").alias("subj"),
         F.lit(SAME_AS).alias("pred"),
-        F.col("canonical_iri").alias("obj_lexical"),
+        F.col("top.canonical_iri").alias("obj_lexical"),
         F.lit("iri").alias("obj_kind"),
-        "url",
-        "warc_ts",
-        F.col("score"),
+        F.col("first.url").alias("url"),
+        F.col("first.warc_ts").alias("warc_ts"),
+        (-F.col("top.neg_score")).alias("score"),
     )
 
 

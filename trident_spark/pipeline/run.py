@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from trident_spark.pipeline import cc, extract_stage, kg, linking
@@ -25,27 +26,16 @@ class KGResult:
     labels: DataFrame | None  # connected-component labels
 
 
-def build_kg(
-    pages: DataFrame,
-    alias_dict: DataFrame | None = None,
-    canonicalize: bool = True,
-    dedup_latest_capture: bool = True,
-    persist_intermediate: bool = True,
-) -> KGResult:
-    page_results = extract_stage.extract_pages(pages)
-    if dedup_latest_capture:
-        # after extraction: the window shuffles narrow rows (url, ts,
-        # triples), never the html blobs — the decision that matters at 100TB
-        page_results = extract_stage.latest_capture(page_results)
+def build_kg(pages: DataFrame, alias_dict: DataFrame | None = None) -> KGResult:
+    # after extraction: the window shuffles narrow rows (url, ts, triples),
+    # never the html blobs — the decision that matters at 100TB
+    page_results = extract_stage.latest_capture(extract_stage.extract_pages(pages))
     raw = extract_stage.raw_triples(page_results)
-    skolemized = kg.normalize_literal_langs(kg.skolemize(raw))
-    if persist_intermediate:
-        # extraction (the expensive Arrow hop) feeds linking, CC and encoding;
-        # materialize it once.  On a production run this boundary is a table
-        # write (lineage stage output), not an in-memory persist.
-        from pyspark import StorageLevel
-
-        skolemized = skolemized.persist(StorageLevel.MEMORY_AND_DISK)
+    # extraction (the expensive Arrow hop) feeds linking, CC and encoding;
+    # materialize it once.  On a production run this boundary is a table
+    # write (lineage stage output), not an in-memory persist.
+    skolemized = kg.normalize_literal_langs(kg.skolemize(raw)).persist(
+        StorageLevel.MEMORY_AND_DISK)
 
     same_as = None
     labels = None
@@ -53,16 +43,13 @@ def build_kg(
         # materialize the sameAs edges once: they are referenced by the
         # triples union (hence by every encode_triples projection), by the
         # CC edge set AND returned to the caller — unmaterialized, the
-        # broadcast-join + window + scoring pipeline re-executes per
-        # reference in the final job
+        # broadcast join + groupBy re-executes per reference in the final job
         same_as = linking.link_entities(
             skolemized, alias_dict).localCheckpoint(eager=True)
         # sameAs assertions are triples too: union them in so the canonical
         # KB IRIs become dictionary terms before CC rewrites edge ids
         skolemized = skolemized.unionByName(linking.same_as_triples(same_as))
-        if canonicalize:
-            edges = linking.same_as_id_edges(same_as)
-            labels = cc.connected_components(edges)
+        labels = cc.connected_components(linking.same_as_id_edges(same_as))
 
     terms, triples = kg.encode_triples(skolemized)
     if labels is not None:
