@@ -42,7 +42,6 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true",
                     help="skip buckets already recorded in <output>/lineage")
     ap.add_argument("--no-linking", action="store_true")
-    ap.add_argument("--n-buckets", type=int, default=256)
     ap.add_argument("--table-format", choices=("parquet", "iceberg"),
                     default="parquet",
                     help="iceberg requires --catalog and the Iceberg "
@@ -74,12 +73,19 @@ def main() -> None:
         pages = spark.read.parquet(args.input)
 
     if args.resume:
+        from pyspark.errors import AnalysisException
+
+        # Only a missing lineage table (first run; parquet and Iceberg
+        # both report it as AnalysisException) means "build everything".
+        # Any other failure must stop the run: a full rebuild appended
+        # onto the existing tables would duplicate every row.
         try:
             lin = sink.read("lineage")
-            pages = lineage.resume_filter(pages, lin, "triples", args.n_buckets)
-            print(f"resume: {pages.count()} pages remain", file=sys.stderr)
-        except Exception:  # noqa: BLE001 — first run: no lineage table yet
+        except AnalysisException:
             pass
+        else:
+            pages = lineage.resume_filter(pages, lin, "triples")
+            print(f"resume: {pages.count()} pages remain", file=sys.stderr)
 
     alias = None if args.no_linking else alias_dict_df(spark)
     t0 = time.monotonic()
@@ -120,8 +126,8 @@ def main() -> None:
             else:
                 frame = to_jsonld(skol).withColumnRenamed("doc", "line")
             frame.write.mode(mode).text(f"{out}/{fmt}")
-    sink.write(lineage.compute_lineage(result.skolemized, "triples",
-                                       args.n_buckets), "lineage", mode=mode)
+    sink.write(lineage.compute_lineage(result.skolemized, "triples"),
+               "lineage", mode=mode)
 
     n_triples = sink.read("triples").count()
     n_bad = result.page_results.where("NOT text_ok").count()

@@ -151,63 +151,3 @@ def test_remove_dot_segments():
     assert K.remove_dot_segments("/a/b/c/./../../g") == "/a/g"
     assert K.remove_dot_segments("mid/content=5/../6") == "mid/6"
 
-
-# ---------------------------------------------------------------------------
-# Strict IDNA2008 / UTS-46 host validation profile
-# ---------------------------------------------------------------------------
-
-STRICT_VALID_HOSTS = [
-    "example.com", "EXAMPLE.Com", "a-b.example", "192.168.0.1",
-    "example.com.",                      # single root dot ok
-    "faß.de",                            # ß PVALID in IDNA2008
-    "xn--fa-hia.de",                     # A-label round-trips to faß
-    "xn--fass-qra.de",                   # decodes to fúass — canonical
-    "münchen.de", "пример.рф", "例え.jp",
-    "[2001:db8::1]", "[v1.x]",
-    "\u0915\u094d\u200c\u0937.in",     # ka+virama+ZWNJ+ssa (ContextJ ok)
-]
-
-STRICT_INVALID_HOSTS = [
-    ("", "empty host"),
-    ("-foo.de", "hyphen"),
-    ("foo-.de", "hyphen"),
-    ("ab--cd.de", "positions 3-4"),      # CheckHyphens
-    ("ex ample.com", "non-LDH"),
-    ("ex_ample.com", "non-LDH"),         # STD3 rules
-    ("exa%41mple", "non-LDH"),
-    ("☃.net", "disallowed"),
-    ("foo..bar", "empty label"),
-    ("a" * 64 + ".com", "63"),           # VerifyDnsLength (label)
-    (".".join(["a" * 60] * 5), "253"),   # VerifyDnsLength (host)
-    ("xn--a.de", "disallowed"),          # decodes to C1 control
-    ("cafe\u0301.fr", "NFC"),           # decomposed e + combining acute
-    ("\u0301abc.fr", "leading combining mark"),
-    ("a\u200cb.in", "joiner"),          # ContextJ violation
-    ("[2001:db8::1", "unterminated"),
-    ("[vx]", "invalid IP literal"),
-]
-
-
-def test_validate_host_strict_accepts_valid_hosts():
-    for host in STRICT_VALID_HOSTS:
-        assert K.validate_host_strict(host) is None, host
-
-
-def test_validate_host_strict_rejects_with_reason():
-    for host, frag in STRICT_INVALID_HOSTS:
-        err = K.validate_host_strict(host)
-        assert err is not None, host
-        if frag:
-            assert frag in err, (host, err)
-
-
-def test_validate_host_strict_never_raises():
-    from hypothesis import given, settings, strategies as st
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.text(max_size=40))
-    def prop(s):
-        out = K.validate_host_strict(s)
-        assert out is None or isinstance(out, str)
-
-    prop()

@@ -132,18 +132,3 @@ def test_iri_json_wire_roundtrip(spark):
     assert bad["decoded"] == "http://exa mple.com/"
     assert bad["p"]["error"] is not None and bad["p"]["iri"] is None
 
-
-def test_host_strict_error_udf(spark):
-    """host_strict_error: Arrow-batched strict IDNA2008/UTS-46 check —
-    NULL for valid hosts, a reason string otherwise, NULL-safe input."""
-    from trident_spark.functions.iri_funcs import host_strict_error
-
-    rows = [(1, "example.com"), (2, "xn--fa-hia.de"), (3, "-foo.de"),
-            (4, "ex_ample.com"), (5, None)]
-    df = spark.createDataFrame(rows, "id long, host string")
-    out = {r["id"]: r["err"] for r in
-           df.select("id", host_strict_error("host").alias("err")).collect()}
-    assert out[1] is None and out[2] is None
-    assert "hyphen" in out[3]
-    assert "non-LDH" in out[4]
-    assert out[5] is None

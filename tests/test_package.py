@@ -1,10 +1,13 @@
-"""The spark-submit --py-files zip imports and loads its package data.
+"""The spark-submit --py-files zip imports and loads its package data, and
+every library module is reachable from an entry point.
 
 zipimport has no filesystem paths, so package data must load through
 importlib.resources; a filesystem pytest run can never see a break there.
-No Spark session is needed: the probe only imports and reads data.
+No Spark session is needed: the probe only imports and reads data, and the
+reachability check only parses source.
 """
 
+import ast
 import importlib.util
 import os
 import subprocess
@@ -39,3 +42,65 @@ def test_zip_imports_kg_modules_and_registry(tmp_path):
         [sys.executable, "-c", PROBE, str(zip_path)], cwd=tmp_path, env=env,
         capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr
+
+
+# What runs the library: the driver's query registry, the spark-submit
+# scripts, the benchmark (its own unit tests excluded) and the user-facing
+# Graph API, which users import directly (README layout).
+ENTRY_POINTS = [
+    REPO / "__spark_entry__.py",
+    REPO / "trident_spark" / "graph.py",
+    *sorted((REPO / "scripts").glob("*.py")),
+    *sorted(p for p in (REPO / "kgbench").glob("*.py")
+            if p.name != "test_harness.py"),
+]
+
+
+def _module_file(name: str, root: Path) -> Path | None:
+    base = root.joinpath(*name.split("."))
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
+
+
+def _imported_files(path: Path) -> set[Path]:
+    """Repo files that `path` imports, at module level or inside functions.
+
+    Importing a submodule also runs each parent package's __init__.py.  A
+    script (a file outside any package) also imports its siblings, since
+    its directory is on sys.path when it runs."""
+    in_package = (path.parent / "__init__.py").is_file()
+    roots = (REPO,) if in_package else (REPO, path.parent)
+    names = []
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.Import):
+            names += [alias.name for alias in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            module = node.module or ""
+            if node.level:
+                package = path.parents[node.level - 1].relative_to(REPO)
+                module = ".".join([*package.parts, *filter(None, [module])])
+            # `from pkg import name` imports pkg, and pkg.name if a module
+            names += [module, *(f"{module}.{a.name}" for a in node.names)]
+    found = set()
+    for name in names:
+        parts = name.split(".")
+        for i in range(1, len(parts) + 1):
+            for root in roots:
+                hit = _module_file(".".join(parts[:i]), root)
+                if hit is not None:
+                    found.add(hit)
+    return found
+
+
+def test_every_library_module_is_reachable_from_an_entry_point():
+    reached, todo = set(), list(ENTRY_POINTS)
+    while todo:
+        path = todo.pop()
+        if path not in reached:
+            reached.add(path)
+            todo += _imported_files(path)
+    library = set((REPO / "trident_spark").rglob("*.py"))
+    dead = sorted(str(p.relative_to(REPO)) for p in library - reached)
+    assert not dead, f"modules no entry point imports: {dead}"

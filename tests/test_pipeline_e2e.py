@@ -2,14 +2,21 @@
 P/R vs independently-derived golden triples, text invariant, N-Triples
 round-trip, skolemization determinism, connected components, resume."""
 
+import importlib.util
+import sys
+from pathlib import Path
+
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from trident_spark.pipeline import build_kg
 from trident_spark.pipeline import cc, extract_stage, kg, lineage, sinks
 from trident_spark.pipeline.alias_dict import alias_dict_df
+from trident_spark.pipeline.catalog import Sink
 from trident_spark.pipeline.pages import expected_triples_df, pages_df
 
+REPO = Path(__file__).resolve().parents[1]
 N_PAGES = 300
 
 
@@ -115,15 +122,51 @@ def test_ntriples_roundtrip(result):
 
 def test_lineage_resume(spark, corpus):
     pages, _ = corpus
-    lin = lineage.compute_lineage(pages.limit(100), "extract", n_buckets=16)
-    assert lin.count() <= 16
-    remaining = lineage.resume_filter(pages, lin, "extract", n_buckets=16)
-    # all buckets appear in the first 100 pages with high probability → most
-    # pages filtered; at minimum the filter is a strict subset
+    lin = lineage.compute_lineage(pages.limit(100), "extract")
+    assert lin.count() <= lineage.N_BUCKETS
+    remaining = lineage.resume_filter(pages, lin, "extract")
+    # the 100 recorded pages' buckets are filtered out, so the filter keeps
+    # a strict subset
     assert remaining.count() < pages.count()
     done_buckets = {r["bucket"] for r in lin.collect()}
-    left = lineage.with_bucket(remaining, 16).select("bucket").distinct().collect()
+    left = lineage.with_bucket(remaining).select("bucket").distinct().collect()
     assert all(r["bucket"] not in done_buckets for r in left)
+
+
+def test_sink_read_of_missing_table_raises_analysis_exception(spark, tmp_path):
+    """`run_pipeline --resume` treats exactly this error as "first run"."""
+    with pytest.raises(AnalysisException):
+        Sink(spark, str(tmp_path)).read("lineage")
+
+
+def test_resume_propagates_lineage_read_errors(spark, tmp_path, monkeypatch):
+    """Only a missing lineage table means "build everything": any other
+    read failure must stop a --resume run before it appends a full rebuild
+    onto the existing tables (CLAUDE.md rule 11)."""
+    import trident_spark.session
+
+    read = Sink.read
+
+    def failing_read(self, table):
+        if table == "lineage":
+            raise OSError("lineage unreadable")
+        return read(self, table)
+
+    monkeypatch.setattr(Sink, "read", failing_read)
+    # reuse the shared session as-is and keep it running whatever happens
+    monkeypatch.setattr(trident_spark.session, "get_spark", lambda **_: spark)
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    out = tmp_path / "kg"
+    monkeypatch.setattr(sys, "argv", [
+        "run_pipeline.py", "--synthetic", "20", "--output", str(out),
+        "--resume"])
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline", REPO / "scripts" / "run_pipeline.py")
+    run_pipeline = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run_pipeline)
+    with pytest.raises(OSError, match="lineage unreadable"):
+        run_pipeline.main()
+    assert not out.exists()
 
 
 def test_turtle_serialization(spark):
@@ -199,8 +242,6 @@ def test_python_xxhash64_matches_spark(spark):
 
 
 def test_sink_parquet_roundtrip(spark, tmp_path):
-    from trident_spark.pipeline.catalog import Sink
-
     sink = Sink(spark, str(tmp_path))
     df = spark.range(5).withColumnRenamed("id", "x")
     sink.write(df, "t", mode="overwrite")
@@ -211,8 +252,6 @@ def test_sink_parquet_roundtrip(spark, tmp_path):
 def test_sink_iceberg_api_calls(spark, monkeypatch):
     """The Iceberg path can't run in the sandbox (no runtime jar); verify
     the DataFrameWriterV2 call sequence with a recording stub instead."""
-    from trident_spark.pipeline.catalog import Sink
-
     calls = []
 
     class FakeWriterV2:
@@ -257,11 +296,7 @@ def test_sink_iceberg_api_calls(spark, monkeypatch):
 
 
 def test_sink_iceberg_requires_catalog(spark):
-    import pytest as _pytest
-
-    from trident_spark.pipeline.catalog import Sink
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         Sink(spark, "/x", table_format="iceberg")
 
 

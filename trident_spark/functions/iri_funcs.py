@@ -35,7 +35,6 @@ __all__ = [
     "iri_to_uri",
     "uri_to_iri",
     "iri_relativize",
-    "host_strict_error",
 ]
 
 IRI_PARSE_SCHEMA = StructType(
@@ -151,13 +150,3 @@ def iri_relativize(base: pd.Series, target: pd.Series) -> pd.DataFrame:
             out.append((None, str(e)))
     return pd.DataFrame(out, columns=["value", "error"])
 
-
-@pandas_udf(StringType())
-def host_strict_error(s: pd.Series) -> pd.Series:
-    """Strict IDNA2008/UTS-46 lookup-profile check of a host (kernel
-    ``validate_host_strict``): NULL when valid, short reason otherwise.
-    The lenient profile the reference normalizes with accepts more —
-    this is the opt-in filter for pipelines that want DNS-registrable
-    hosts only."""
-    table = {v: K.validate_host_strict(v) for v in s.dropna().unique()}
-    return pd.Series([table.get(v) for v in s], dtype=object)

@@ -707,123 +707,6 @@ def _host_idna_roundtrip(host: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Strict IDNA2008 / UTS-46 host validation profile
-# ---------------------------------------------------------------------------
-
-# The reference normalizes hosts with x/net/idna's LENIENT default
-# profile (iri/autority.go:250-271), which `normalize` above mirrors.
-# This is the optional STRICT lookup profile — the UTS #46 ToASCII
-# checks (CheckHyphens, CheckBidi, CheckJoiners, STD3 ASCII rules,
-# VerifyDnsLength) x/net/idna's idna.Lookup profile adds on top.
-# Deterministic pure-stdlib implementation: executors must agree
-# bit-for-bit regardless of which optional packages an image carries.
-#
-# Documented approximations (each loosens toward ACCEPT, never toward a
-# spurious reject of a valid host): code-point validity is derived from
-# Unicode general categories (letters/digits/combining marks valid,
-# punctuation/symbols/separators/controls disallowed) rather than the
-# full IDNA2008 derived-property table; ContextJ for ZWJ/ZWNJ checks
-# the preceding-virama clause only (the ZWNJ regex alternative is not
-# implemented); CheckBidi applies RFC 3987 §4.2 per-label mixing rules
-# rather than the full RFC 5893 six-rule table.
-
-_LDH = frozenset("abcdefghijklmnopqrstuvwxyz0123456789-")
-_ZWNJ_ZWJ = ("\u200c", "\u200d")  # ZWNJ, ZWJ
-
-
-def _strict_label_error(label: str) -> str | None:
-    """One U-label (or A-label) against the strict profile; None = valid."""
-    if not label:
-        return "empty label"
-    if label.startswith("xn--"):
-        # A-label: must round-trip through punycode to a non-ASCII
-        # U-label (RFC 5891 §4.4 forbids all-ASCII decodings) and the
-        # decoded form must itself validate
-        try:
-            decoded = label[4:].encode("ascii").decode("punycode")
-        except (UnicodeError, ValueError):
-            return "invalid punycode"
-        if decoded.isascii():
-            return "A-label decodes to ASCII"
-        if "xn--" + decoded.encode("punycode").decode("ascii") != label:
-            return "non-canonical punycode"
-        return _strict_label_error(decoded)
-    if len(label) >= 4 and label[2:4] == "--":
-        return "hyphens at positions 3-4"  # CheckHyphens (non-xn-- label)
-    if label[0] == "-" or label[-1] == "-":
-        return "leading/trailing hyphen"
-    if label.isascii():
-        if not set(label) <= _LDH:
-            return "non-LDH ASCII character"  # STD3 rules
-        if len(label) > 63:
-            return "label longer than 63 octets"
-        return None
-    if unicodedata.normalize("NFC", label) != label:
-        return "label not NFC"
-    if unicodedata.category(label[0]).startswith("M"):
-        return "leading combining mark"
-    for i, ch in enumerate(label):
-        if ch in _ZWNJ_ZWJ:
-            # ContextJ: preceding character must be a virama (ccc 9)
-            if i == 0 or unicodedata.combining(label[i - 1]) != 9:
-                return "joiner without preceding virama"
-            continue
-        if ch.isascii():
-            if ch in _LDH:
-                continue
-            return "non-LDH ASCII character"
-        cat = unicodedata.category(ch)
-        if cat[0] == "L" and cat != "Lu":
-            continue  # letters (uppercase must have been case-mapped)
-        if cat in ("Mn", "Mc") or cat == "Nd":
-            continue  # combining marks, decimal digits
-        return f"disallowed code point {ch!r}"
-    try:
-        if len(_label_to_ascii(label)) > 63:
-            return "label longer than 63 octets"
-    except _IdnaError:
-        return "label not punycode-encodable"
-    try:
-        _validate_bidi_component(label)
-    except IRIError:
-        return "bidi rule violation"
-    return None
-
-
-def validate_host_strict(host: str) -> str | None:
-    """Strict IDNA2008/UTS-46 lookup-profile validation of a host.
-
-    Returns None when the host is valid, else a short reason string.
-    The UTS #46 case-mapping step is applied first, so mixed-case input
-    validates like its lowercase form.  IP literals are checked against
-    RFC 3986 §3.2.2 instead (the IDNA rules do not apply to them); a
-    single trailing root dot is accepted.
-    """
-    if not host:
-        return "empty host"
-    if host.startswith("["):
-        if not host.endswith("]"):
-            return "unterminated IP literal"
-        try:
-            _validate_ip_literal(host[1:-1])
-        except IRIError:
-            return "invalid IP literal"
-        return None
-    host = host.lower()
-    if host.endswith("."):
-        host = host[:-1]
-        if not host:
-            return "empty host"
-    if len(_host_to_ascii(host)) > 253:
-        return "host longer than 253 octets"
-    for label in host.split("."):
-        err = _strict_label_error(label)
-        if err is not None:
-            return err
-    return None
-
-
-# ---------------------------------------------------------------------------
 # Normalization (RFC 3986 §6.2.2/§6.2.3; ref iri/iri.go:276-330)
 # ---------------------------------------------------------------------------
 

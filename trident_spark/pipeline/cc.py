@@ -75,10 +75,9 @@ def connected_components(edges: DataFrame) -> DataFrame:
     component = min node id of the connected component (deterministic).
 
     Raises RuntimeError if the rounds have not converged after MAX_ITER."""
-    # materialize the (possibly expensive) upstream edges pipeline exactly
-    # once: BOTH the iteration loop and the final nodes frame reference it —
-    # without this checkpoint the labels join at the end re-runs the whole
-    # upstream (e.g. the LSH candidate pipeline in dedup_clusters)
+    # materialize the input exactly once: BOTH the iteration loop and the
+    # final nodes frame reference it — without this checkpoint the labels
+    # join at the end re-runs whatever upstream pipeline produced `edges`
     base = edges.select("src", "dst").localCheckpoint(eager=True)
     cur = _symmetrize(base)
     # nodes come from the raw edges so self-loop-only nodes (filtered out of

@@ -16,18 +16,22 @@ LINEAGE_SCHEMA = (
     "stage string, bucket int, row_count long, checksum long, completed_at timestamp"
 )
 
+# Fixed, not a parameter: a resume run anti-joins on the bucket ids an
+# earlier run wrote, so a different count would skip the wrong pages.
+N_BUCKETS = 256
 
-def with_bucket(df: DataFrame, n_buckets: int = 256, col: str = "url") -> DataFrame:
-    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int"))
+
+def with_bucket(df: DataFrame) -> DataFrame:
+    return df.withColumn(
+        "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(N_BUCKETS)).cast("int"))
 
 
-def compute_lineage(df: DataFrame, stage: str, n_buckets: int = 256,
-                    key_cols: tuple = ("url",)) -> DataFrame:
+def compute_lineage(df: DataFrame, stage: str) -> DataFrame:
     """One lineage row per bucket: count + order-insensitive checksum
     (bit_xor of row hashes is associative + commutative + overflow-free)."""
     row_hash = F.xxhash64(*[F.col(c) for c in df.columns if c != "bucket"])
     return (
-        with_bucket(df, n_buckets, key_cols[0])
+        with_bucket(df)
         .groupBy("bucket")
         .agg(
             F.count("*").alias("row_count"),
@@ -43,12 +47,11 @@ def compute_lineage(df: DataFrame, stage: str, n_buckets: int = 256,
     )
 
 
-def resume_filter(pages: DataFrame, lineage: DataFrame, stage: str,
-                  n_buckets: int = 256) -> DataFrame:
+def resume_filter(pages: DataFrame, lineage: DataFrame, stage: str) -> DataFrame:
     """Drop pages whose bucket already completed `stage` (left-anti join)."""
     done = lineage.where(F.col("stage") == stage).select("bucket").distinct()
     return (
-        with_bucket(pages, n_buckets)
+        with_bucket(pages)
         .join(F.broadcast(done), "bucket", "left_anti")
         .drop("bucket")
     )
