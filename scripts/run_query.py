@@ -3,22 +3,17 @@
     spark-submit --py-files dist/trident_spark.zip scripts/run_query.py \
         --kg /tmp/kg --query 'SELECT ?s ?o WHERE { ?s <...provider> ?o }'
 
-Uses the warehouse path (query_encoded over the persisted terms/triples
-dictionary tables — scans read only id columns) when the query fits its
-fragment, and falls back to the full lexical engine over the SAME graph
-(the warehouse tables decoded back to lexical form) otherwise — both
-engines always answer over the canonical entity-linked KG.  The
-N-Triples export (the assertion-level record, with linking as explicit
-owl:sameAs statements) is parsed only when the warehouse tables are
-absent.  Results print as JSON lines (--limit rows) or write to
---output as parquet.
+Queries the warehouse tables (``query_encoded`` over the persisted
+terms/triples dictionary, the canonical entity-linked KG).  The N-Triples
+export (the assertion-level record, with linking as explicit owl:sameAs
+statements) is parsed only when the warehouse tables are absent.  Results
+print as JSON lines (--limit rows) or write to --output as parquet.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import sys
 
 
 def main() -> None:
@@ -29,60 +24,29 @@ def main() -> None:
                                      "printing")
     ap.add_argument("--limit", type=int, default=50,
                     help="rows to print when no --output (default 50)")
-    ap.add_argument("--engine", choices=("auto", "encoded", "lexical"),
-                    default="auto")
     args = ap.parse_args()
 
-    from trident_spark.query.sparql import (
-        SparqlError, query, query_encoded,
-    )
+    from pyspark.errors import AnalysisException
+
+    from trident_spark.query.sparql import query, query_encoded
     from trident_spark.session import get_spark
 
     spark = get_spark(app_name="trident-spark-query")
     kg = args.kg.rstrip("/")
 
-    from pyspark.errors import AnalysisException
-
-    # AnalysisException: kg dir lacks terms/triples parquet (e.g. an
-    # N-Triples-only export) — both engines then fall back to parsing it.
+    # AnalysisException: the kg dir lacks terms/triples parquet (an
+    # N-Triples-only export)
     try:
         edges = spark.read.parquet(f"{kg}/triples")
         terms = spark.read.parquet(f"{kg}/terms")
     except AnalysisException:
-        edges = terms = None
+        from trident_spark.pipeline.sinks import from_ntriples
 
-    df = None
-    if args.engine in ("auto", "encoded") and edges is not None:
-        try:
-            df = query_encoded(edges, terms, args.query)
-            print("engine: encoded (id-column scans)", file=sys.stderr)
-        except SparqlError as e:
-            if args.engine == "encoded":
-                raise
-            print(f"encoded path unsupported ({e}); using lexical engine",
-                  file=sys.stderr)
-    elif args.engine == "encoded":
-        raise SystemExit(f"--engine encoded needs {kg}/triples + /terms")
-    if df is None:
-        # the lexical engine must answer over the SAME graph the encoded
-        # engine queries: the canonical (entity-linked) warehouse tables,
-        # decoded back to lexical form.  The ntriples export is the
-        # assertion-level record (linking as explicit owl:sameAs) — it is
-        # the last resort only when the warehouse tables are absent.
-        if edges is not None:
-            from trident_spark.pipeline.kg import decode_triples
-
-            lex = decode_triples(edges, terms)
-            print("engine: lexical (decoded warehouse graph)",
-                  file=sys.stderr)
-        else:
-            from trident_spark.pipeline.sinks import from_ntriples
-
-            lex = from_ntriples(spark.read.text(f"{kg}/ntriples")
-                                .withColumnRenamed("value", "line"))
-            print("engine: lexical (parsed ntriples export)",
-                  file=sys.stderr)
-        df = query(lex, args.query)
+        df = query(from_ntriples(spark.read.text(f"{kg}/ntriples")
+                                 .withColumnRenamed("value", "line")),
+                   args.query)
+    else:
+        df = query_encoded(edges, terms, args.query)
 
     if args.output:
         df.write.mode("overwrite").parquet(args.output)

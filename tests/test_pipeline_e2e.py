@@ -139,12 +139,25 @@ def test_sink_read_of_missing_table_raises_analysis_exception(spark, tmp_path):
         Sink(spark, str(tmp_path)).read("lineage")
 
 
+def _run_script(spark, monkeypatch, name, *args):
+    """Run ``scripts/<name>.py`` main() in this process, on the shared
+    session, which it may neither replace nor stop."""
+    import trident_spark.session
+
+    monkeypatch.setattr(trident_spark.session, "get_spark", lambda **_: spark)
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    monkeypatch.setattr(sys, "argv", [f"{name}.py", *args])
+    spec = importlib.util.spec_from_file_location(
+        name, REPO / "scripts" / f"{name}.py")
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    module.main()
+
+
 def test_resume_propagates_lineage_read_errors(spark, tmp_path, monkeypatch):
     """Only a missing lineage table means "build everything": any other
     read failure must stop a --resume run before it appends a full rebuild
     onto the existing tables (CLAUDE.md rule 11)."""
-    import trident_spark.session
-
     read = Sink.read
 
     def failing_read(self, table):
@@ -153,20 +166,68 @@ def test_resume_propagates_lineage_read_errors(spark, tmp_path, monkeypatch):
         return read(self, table)
 
     monkeypatch.setattr(Sink, "read", failing_read)
-    # reuse the shared session as-is and keep it running whatever happens
-    monkeypatch.setattr(trident_spark.session, "get_spark", lambda **_: spark)
-    monkeypatch.setattr(type(spark), "stop", lambda self: None)
     out = tmp_path / "kg"
-    monkeypatch.setattr(sys, "argv", [
-        "run_pipeline.py", "--synthetic", "20", "--output", str(out),
-        "--resume"])
-    spec = importlib.util.spec_from_file_location(
-        "run_pipeline", REPO / "scripts" / "run_pipeline.py")
-    run_pipeline = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(run_pipeline)
     with pytest.raises(OSError, match="lineage unreadable"):
-        run_pipeline.main()
+        _run_script(spark, monkeypatch, "run_pipeline", "--synthetic", "20",
+                    "--output", str(out), "--resume")
     assert not out.exists()
+
+
+@pytest.fixture(scope="module")
+def synthetic_kg(spark, tmp_path_factory):
+    """A ``run_pipeline.py --synthetic 20`` output directory."""
+    out = tmp_path_factory.mktemp("cli") / "kg"
+    with pytest.MonkeyPatch.context() as mp:
+        _run_script(spark, mp, "run_pipeline", "--synthetic", "20",
+                    "--output", str(out))
+    return out
+
+
+_UNION = ("PREFIX schema: <https://schema.org/> SELECT ?s ?n WHERE { "
+          "{ ?s a schema:Person } UNION { ?s a schema:Organization } "
+          "?s schema:name ?n }")
+
+
+def _cli_rows(spark, monkeypatch, capsys, kg_dir):
+    import json
+    from collections import Counter
+
+    capsys.readouterr()
+    _run_script(spark, monkeypatch, "run_query", "--kg", str(kg_dir),
+                "--query", _UNION, "--limit", "100000")
+    out = capsys.readouterr().out.splitlines()
+    return Counter((r["s"], r["n"]) for r in map(json.loads, out))
+
+
+def test_run_query_cli_answers_over_warehouse(spark, monkeypatch, capsys,
+                                              synthetic_kg):
+    """The CLI answers from the warehouse tables with the rows the lexical
+    engine gives over the decoded warehouse graph."""
+    from collections import Counter
+
+    from trident_spark.query.sparql import query
+
+    got = _cli_rows(spark, monkeypatch, capsys, synthetic_kg)
+    dec = kg.decode_triples(spark.read.parquet(str(synthetic_kg / "triples")),
+                            spark.read.parquet(str(synthetic_kg / "terms")))
+    want = Counter(tuple(r) for r in query(dec, _UNION).collect())
+    assert got == want and got
+
+
+def test_run_query_cli_reads_ntriples_without_warehouse(
+        spark, monkeypatch, capsys, synthetic_kg, tmp_path):
+    """A KG directory holding only the N-Triples export is parsed."""
+    import shutil
+    from collections import Counter
+
+    from trident_spark.query.sparql import query
+
+    shutil.copytree(synthetic_kg / "ntriples", tmp_path / "ntriples")
+    got = _cli_rows(spark, monkeypatch, capsys, tmp_path)
+    lex = sinks.from_ntriples(spark.read.text(str(tmp_path / "ntriples"))
+                              .withColumnRenamed("value", "line"))
+    want = Counter(tuple(r) for r in query(lex, _UNION).collect())
+    assert got == want and got
 
 
 def test_turtle_serialization(spark):

@@ -1481,17 +1481,44 @@ def encoded_kg(spark):
 
 
 def _differential(lexical, edges, terms, sparql):
-    """Both engines must return the same bag of rows: a duplicate row on
-    either side fails."""
+    """Both engines must return the same bag of rows (a duplicate row on
+    either side fails), or both must raise SparqlError."""
     from collections import Counter
 
     from trident_spark.query.sparql import query, query_encoded
 
-    want = Counter(tuple(r) for r in query(lexical, sparql).collect())
-    got = Counter(tuple(r)
-                  for r in query_encoded(edges, terms, sparql).collect())
-    assert got == want, (got - want, want - got)
+    def bag(run):
+        try:
+            return Counter(tuple(r) for r in run().collect())
+        except SparqlError:
+            return SparqlError
+
+    want = bag(lambda: query(lexical, sparql))
+    got = bag(lambda: query_encoded(edges, terms, sparql))
+    assert got == want, (sparql, got, want)
     return got
+
+
+def test_differential_simple_literal_matches_both_stored_forms(spark):
+    """RDF 1.1: "x" and "x"^^xsd:string are one term.  The warehouse
+    stores whichever form the source wrote, and a constant in either
+    form matches both rows."""
+    from trident_spark.pipeline.kg import dedup_triples, encode_triples
+
+    rows = [("http://a/1", None, "test", "http://x/s", "http://p/n", "x",
+             "literal", XSD + "string", None),
+            ("http://a/1", None, "test", "http://x/t", "http://p/n", "x",
+             "literal", None, None)]
+    lexical = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, source string, subj string, "
+              "pred string, obj_lexical string, obj_kind string, "
+              "obj_datatype string, obj_lang string")
+    terms, edges = encode_triples(lexical)
+    edges = dedup_triples(edges)
+    for const in ('"x"', f'"x"^^<{XSD}string>'):
+        got = _differential(lexical, edges, terms,
+                            f"SELECT ?s WHERE {{ ?s <http://p/n> {const} }}")
+        assert sorted(got) == [("http://x/s",), ("http://x/t",)], const
 
 
 def test_differential_bags_over_duplicate_captures(spark):
@@ -1595,36 +1622,101 @@ def test_lexical_id_run_scans_each_pattern_once(spark, encoded_kg):
     assert plan.count("Scan ExistingRDD") == 2, plan
 
 
-def test_query_encoded_rejects_unsupported(spark, encoded_kg):
+# the four warehouse templates of the kgbench query deck, over the
+# fixture's predicates ({node} is a person, {org} its employer)
+_DECK_SHAPES = {
+    "point": "SELECT ?p ?o WHERE { <{node}> ?p ?o }",
+    "two_hop": "SELECT ?o ?n WHERE { <{node}> schema:worksFor ?o . "
+               "?o schema:name ?n }",
+    "agg": "SELECT ?t (COUNT(?s) AS ?c) WHERE { ?s schema:worksFor <{org}> "
+           ". ?s a ?t } GROUP BY ?t",
+    "optional_filter": "SELECT ?o ?n ?u WHERE { <{node}> schema:worksFor ?o "
+                       ". ?o schema:name ?n . OPTIONAL { ?o schema:url ?u } "
+                       'FILTER(lang(?n) = "en" || regex(?n, "^[A-Z]")) }',
+}
+
+
+def _deck_query(lexical, shape):
+    row = lexical.where(f"pred = '{SCHEMA}worksFor'").orderBy("subj").first()
+    return _PFX + shape.replace("{node}", row.subj).replace(
+        "{org}", row.obj_lexical)
+
+
+@pytest.mark.parametrize("sparql", [
+    *_DECK_SHAPES.values(),
+    "SELECT ?s ?n WHERE { { ?s a schema:Person } UNION "
+    "{ ?s a schema:Organization } ?s schema:name ?n }",
+    "SELECT ?s WHERE { ?s a schema:Person MINUS { ?s schema:jobTitle ?j } }",
+    "SELECT ?s WHERE { ?s a schema:Person "
+    "FILTER EXISTS { ?s schema:homeLocation ?c } }",
+    "SELECT ?s ?t WHERE { VALUES ?t { schema:Person schema:Organization } "
+    "?s a ?t }",
+    "SELECT ?s ?k WHERE { ?s schema:name ?n BIND(STRLEN(?n) AS ?k) }",
+    "SELECT ?o ?c WHERE { ?o a schema:Organization { SELECT ?o "
+    "(COUNT(?s) AS ?c) WHERE { ?s schema:worksFor ?o } GROUP BY ?o } }",
+    "SELECT ?x WHERE { <{node}> (schema:worksFor|schema:url)+ ?x }",
+    "SELECT ?s ?n WHERE { ?s a schema:Person OPTIONAL { ?s schema:name ?n "
+    "FILTER(STRLEN(?n) > 9) } }",
+    "SELECT ?s ?o ?u WHERE { ?s a schema:Person "
+    "OPTIONAL { ?s schema:worksFor ?o } OPTIONAL { ?o schema:url ?u } }",
+    # a required pattern after an OPTIONAL, sharing the ?u it introduces
+    "SELECT ?s ?u WHERE { ?s a schema:Organization "
+    "OPTIONAL { ?s schema:url ?u } ?s schema:url ?u }",
+    "ASK { <{node}> schema:worksFor ?o }",
+    "ASK { ?s a schema:Person FILTER NOT EXISTS { ?s schema:name ?n } }",
+    # a repeated variable reads the decoded graph
+    "SELECT ?s WHERE { ?s schema:url ?s }",
+    # literal constants: typed with no match, and a bare number
+    'SELECT ?s WHERE { ?s schema:name "5"^^<http://dt> }',
+    "SELECT ?s WHERE { ?s schema:name 5 }",
+    # both raise: OPTIONAL first, OPTIONAL sharing nothing, and LANG over
+    # a variable two patterns bind as object
+    "SELECT ?s WHERE { OPTIONAL { ?s ?p ?o } }",
+    "SELECT ?s WHERE { ?s a schema:Person "
+    "OPTIONAL { ?t schema:url ?x } }",
+    'SELECT ?s WHERE { ?s schema:name ?n . ?t schema:jobTitle ?n '
+    'FILTER(LANG(?n) = "") }',
+], ids=[*_DECK_SHAPES, "union", "minus", "exists", "values", "bind",
+        "subselect", "path", "optional_filter_inside", "optional_chained",
+        "required_after_optional", "ask", "ask_not_exists",
+        "repeated_var", "typed_literal", "bare_number", "optional_first",
+        "optional_disjoint", "lang_ambiguous"])
+def test_query_encoded_differential(spark, encoded_kg, sparql):
+    """query_encoded(e, t, q) answers like query(decode_triples(e, t), q),
+    or both raise: the deck's warehouse templates and every shape the
+    warehouse engine once rejected."""
+    from trident_spark.pipeline.kg import decode_triples
+
+    edges, terms, lexical = encoded_kg
+    _differential(decode_triples(edges, terms), edges, terms,
+                  _deck_query(lexical, sparql))
+
+
+@pytest.mark.parametrize("template", list(_DECK_SHAPES))
+def test_query_encoded_deck_shapes_scan_only_ids(
+        spark, encoded_kg, tmp_path, template):
+    """On a parquet warehouse every edge scan of a deck template reads the
+    id columns only, and no plan decodes the whole edge table."""
+    import re as _re
+
     from trident_spark.query.sparql import query_encoded
 
-    edges, terms, _ = encoded_kg
-    # r5: OPTIONAL is now supported — but first-position OPTIONAL keeps
-    # lexical-engine parity (raises), and shapes that would need §10.2
-    # compatibility joins reject loudly instead of answering wrong
-    with pytest.raises(SparqlError, match="first pattern"):
-        query_encoded(edges, terms,
-                      "SELECT ?s WHERE { OPTIONAL { ?s ?p ?o } }")
-    with pytest.raises(SparqlError, match="plain triple patterns"):
-        query_encoded(edges, terms, """
-            SELECT ?s WHERE { ?s ?p ?o .
-                OPTIONAL { ?s ?q ?w . FILTER(?w > 1) } }""")
-    with pytest.raises(SparqlError, match="compatibility"):
-        query_encoded(edges, terms, """
-            SELECT ?s WHERE { ?s ?p ?o .
-                OPTIONAL { ?s <http://p/a> ?x }
-                OPTIONAL { ?x <http://p/b> ?y } }""")
-    with pytest.raises(SparqlError, match="no variable"):
-        query_encoded(edges, terms, """
-            SELECT ?s WHERE { ?s ?p ?o .
-                OPTIONAL { ?t <http://p/a> ?x } }""")
-    # lifted r5: typed/lang-tagged literal constants now hash to the full
-    # term identity id (kind, lexical, datatype, lang) — an unmatched
-    # datatype simply selects nothing instead of raising
-    df = query_encoded(
-        edges, terms,
-        'SELECT ?s WHERE { ?s <http://p/n> "5"^^<http://dt> . }')
-    assert df.count() == 0
+    edges, terms, lexical = encoded_kg
+    edges.write.parquet(str(tmp_path / "triples"))
+    terms.write.parquet(str(tmp_path / "terms"))
+    df = query_encoded(spark.read.parquet(str(tmp_path / "triples")),
+                       spark.read.parquet(str(tmp_path / "terms")),
+                       _deck_query(lexical, _DECK_SHAPES[template]))
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # decode_triples names its columns obj_lexical/obj_kind
+    assert "obj_lexical" not in plan, plan
+    schemas = _re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    edge_scans = [{c.split(":")[0] for c in s.split(",")} for s in schemas
+                  if "subj_id" in s or "pred_id" in s or "obj_id" in s]
+    assert edge_scans, plan
+    for cols in edge_scans:
+        assert cols <= {"subj_id", "pred_id", "obj_id"}, cols
 
 
 # r5: the encoded engine shares _select_tail with the lexical engine —
@@ -3000,21 +3092,16 @@ def test_lexical_over_decoded_graph_matches_encoded(spark, encoded_kg):
 
 
 def test_query_encoded_optional_order_guards(spark, encoded_kg):
-    """r5 review: the OPTIONAL hoist is exact only when no required
-    pattern FOLLOWS an OPTIONAL sharing a variable it introduces, and
-    OPTIONAL-first parity must survive leading FILTERs.  Both shapes
-    were live-confirmed silent wrong answers before the guards."""
+    """A required pattern that follows an OPTIONAL sharing a variable it
+    introduces is a compatibility join, and an OPTIONAL behind a leading
+    FILTER is still first: both engines agree on each."""
     from trident_spark.query.sparql import query, query_encoded
 
     edges, terms, lexical = encoded_kg
-    # required pattern after an OPTIONAL, sharing its introduced ?n:
-    # lexical answers (ground truth), encoded must reject loudly
-    q1 = _PFX + """SELECT ?s ?n WHERE {
+    # required pattern after an OPTIONAL, sharing its introduced ?n
+    _differential(lexical, edges, terms, _PFX + """SELECT ?s ?n WHERE {
         ?s a schema:Person . OPTIONAL { ?s schema:name ?n }
-        ?s schema:url ?n }"""
-    with pytest.raises(SparqlError, match="introduces"):
-        query_encoded(edges, terms, q1)
-    query(lexical, q1).collect()  # the slow path accepts it
+        ?s schema:url ?n }""")
     # leading FILTER must not bypass the OPTIONAL-first guard
     q2 = _PFX + """SELECT ?s ?t WHERE {
         FILTER(true) OPTIONAL { ?s schema:name ?o } ?s a ?t }"""
@@ -3032,16 +3119,10 @@ def test_query_encoded_optional_order_guards(spark, encoded_kg):
 
 
 def test_query_encoded_optional_differential_fuzz(spark, encoded_kg):
-    """CLAUDE.md rule 8: the encoded engine is a fast path of query();
-    gate it with a randomized differential over element ORDER and
-    variable sharing — the dimension the hand-picked shapes missed.
-    Contract per shape: if the lexical engine raises, encoded must not
-    answer; if encoded answers, the multiset must equal the lexical
-    engine's."""
+    """The warehouse scans are a fast path of query(): gate them with a
+    randomized differential over element ORDER and variable sharing.  Per
+    shape both engines raise, or both answer the same multiset."""
     import random
-    from collections import Counter
-
-    from trident_spark.query.sparql import query, query_encoded
 
     edges, terms, lexical = encoded_kg
     rng = random.Random(7)
@@ -3072,19 +3153,6 @@ def test_query_encoded_optional_differential_fuzz(spark, encoded_kg):
         rng.shuffle(els)
         q = _PFX + "SELECT " + " ".join(vs) + \
             " WHERE { " + " ".join(els) + " }"
-        try:
-            want = Counter(tuple(r) for r in query(lexical, q).collect())
-            lex_raised = False
-        except SparqlError:
-            lex_raised = True
-        try:
-            got = Counter(
-                tuple(r) for r in query_encoded(edges, terms, q).collect())
-        except SparqlError:
-            got = None  # loud fallback — always acceptable
-        if lex_raised:
-            assert got is None, q  # must not answer what query() rejects
-        elif got is not None:
-            assert got == want, q
+        if _differential(lexical, edges, terms, q) is not SparqlError:
             checked += 1
     assert checked >= 4  # the fuzz actually exercised the fast path

@@ -1,6 +1,7 @@
 """Differential fuzz for the id-join BGP engine: every generated query
 must return the identical solution set with BGP id-runs enabled and
-disabled (pure single-pattern lexical compilation).
+disabled (pure single-pattern lexical compilation), and on the
+dictionary-encoded warehouse (``query_encoded``).
 
 The fuzz graph deliberately contains NO iri/literal lexical collisions:
 on collisions the two paths legitimately differ — the id path joins on
@@ -88,6 +89,28 @@ def test_id_runs_match_single_pattern_compilation(spark, fuzz_graph):
         finally:
             S._ID_RUNS_ENABLED = True
         got = {tuple(r) for r in S.query(fuzz_graph, q).collect()}
+        assert got == want, (q, len(got), len(want))
+
+
+def test_warehouse_matches_lexical_compilation(spark, fuzz_graph):
+    """query_encoded over the encoded fuzz graph answers every generated
+    query like query() over the graph itself: its id scans filter literal
+    constants of every form (plain, tagged in either case, typed)."""
+    from pyspark.sql import functions as F
+
+    from trident_spark.pipeline.kg import dedup_triples, encode_triples
+
+    terms, edges = encode_triples(fuzz_graph.select(
+        "*", F.lit("http://f/page").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit("fuzz").alias("source")))
+    edges = dedup_triples(edges).localCheckpoint(eager=True)
+    terms = terms.localCheckpoint(eager=True)
+    rng = random.Random(5)
+    for _ in range(15):
+        q = _gen_query(rng)
+        want = {tuple(r) for r in S.query(fuzz_graph, q).collect()}
+        got = {tuple(r) for r in S.query_encoded(edges, terms, q).collect()}
         assert got == want, (q, len(got), len(want))
 
 

@@ -88,11 +88,12 @@ def normalize_literal_langs(skolemized: DataFrame) -> DataFrame:
 
 def term_id(kind_col, lexical_col, datatype_col=None, lang_col=None):
     """Deterministic 64-bit id from canonical term content."""
+    empty = F.lit("")
     return F.xxhash64(
         kind_col,
         lexical_col,
-        F.coalesce(datatype_col if datatype_col is not None else F.lit(None).cast("string"), F.lit("")),
-        F.coalesce(lang_col if lang_col is not None else F.lit(None).cast("string"), F.lit("")),
+        empty if datatype_col is None else F.coalesce(datatype_col, empty),
+        empty if lang_col is None else F.coalesce(lang_col, empty),
     )
 
 
@@ -149,11 +150,12 @@ def decode_triples(triples: DataFrame, terms: DataFrame) -> DataFrame:
     table (subjects/predicates are always IRIs post-skolemize, so only
     the object position carries kind/datatype/lang).
 
-    This is how the CLI's lexical fallback sees the SAME graph the
-    encoded engine queries — the warehouse tables hold the CANONICAL
+    ``sparql.query_encoded`` answers as ``query`` does over this frame,
+    and builds it only for elements that need lexical columns (property
+    paths, quoted triples).  The warehouse tables hold the CANONICAL
     (entity-linked, CC-rewritten) KG, while the ntriples export is the
-    assertion-level record (linking as explicit owl:sameAs); parsing
-    the export would silently answer over a different graph.
+    assertion-level record (linking as explicit owl:sameAs); parsing the
+    export would answer over a different graph.
 
     Inner joins are safe here BY CONSTRUCTION: encode_triples derives the
     term table and the edge ids from the same rows in one pass, so every

@@ -1,11 +1,17 @@
-"""Per-partition lineage + idempotent resume (C17).
+"""Per-partition lineage + resume (C17).
 
 Work is bucketed by a deterministic hash of the url (stable across runs and
 cluster sizes, unlike Spark partition ids).  After a stage finishes a bucket,
 one lineage row (stage, bucket, row_count, checksum, completed_at) is
 appended; resuming a crashed run anti-joins the input against completed
-buckets, so finished work is never redone and re-runs are idempotent
-(deterministic term ids make re-emitted rows identical).
+buckets, so finished pages are not extracted again.
+
+Resume is not idempotent today: ``run_pipeline.py --resume`` *appends* the
+remaining buckets' ``terms``, ``triples`` and ``lineage`` rows, so a term or
+edge that two runs both produce is stored twice (identical rows appended
+twice are two rows), and lineage is written last, so a crash between
+writes leaves the finished buckets unrecorded.  ROADMAP item G holds the
+fix.
 """
 
 from __future__ import annotations

@@ -20,8 +20,8 @@ class KGResult:
     skolemized: DataFrame  # lexical triples after skolemization
     same_as: DataFrame  # entity-linking edges
     terms: DataFrame  # dictionary-encoded term table
-    # deduped (subj_id, pred_id, obj_id) edges: a set, as
-    # sparql.query_encoded's docstring requires
+    # deduped (subj_id, pred_id, obj_id) edges: a set, which
+    # sparql.query_encoded's id scans do not re-deduplicate
     triples: DataFrame
     labels: DataFrame | None  # connected-component labels
 

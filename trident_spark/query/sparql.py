@@ -69,6 +69,10 @@ GRAPH-var scopes, property-path endpoints) join on the lexical form
 alone, a documented approximation that diverges only when a literal and
 an IRI share their lexical form across join positions.
 
+``query_encoded`` runs this same compiler over the pipeline's
+dictionary-encoded tables: its runs scan the edge table's id columns and
+decode through the term table (see its docstring).
+
 The WHERE block is tokenized by a scanner that respects ``<>``-delimited
 IRIs and quoted literals (PREFIX declarations are lifted from the TOKEN
 stream), so statement splitting and filter rewriting can never corrupt
@@ -79,6 +83,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -342,7 +347,7 @@ def _literal_parts(tok: str, prefixes: dict[str, str]
                    ) -> tuple[str, str | None, str | None]:
     """Literal token → (lexical value, language tag | None,
     expanded datatype IRI | None).  The full RDF term identity of the
-    constant — pattern matching, DATA blocks and the encoded engine all
+    constant — pattern matching, DATA blocks and the warehouse scans all
     decompose through here so ``"x"@en`` / ``"x"^^xsd:token`` constants
     match on lang/datatype too, not the lexical form alone."""
     m = _LIT_TOK_RE.match(tok)
@@ -1418,28 +1423,8 @@ def _compile_pattern(triples: DataFrame, pat: _Pattern,
             scan = scan.select(F.lit(1).alias(f"_m{idx}")).limit(1)
         return scan, out_vars
 
-    scan = triples
-    rename: dict[str, str] = {}
-    for col, term in (("subj", pat.subj), ("pred", pat.pred),
-                      ("obj_lexical", pat.obj)):
-        if term.startswith("?"):
-            rename[col] = term[1:]
-        else:
-            if col == "obj_lexical" and term.startswith('"'):
-                value, c_lang, c_dt = _literal_parts(term, prefixes)
-                scan = scan.where(_literal_match_cond(
-                    F.col(col), value, c_lang, c_dt, set(triples.columns)))
-                continue
-            if col == "obj_lexical" and _PLAIN_SCALAR.match(term):
-                # numeric/boolean shorthand → typed-literal match (lexical
-                # + kind, per the engine's documented literal matching)
-                scan = scan.where((F.col("obj_kind") == "literal")
-                                  & (F.col(col) == term))
-                continue
-            value = _expand(term, prefixes)
-            if col == "obj_lexical":
-                scan = scan.where(F.col("obj_kind") == "iri")
-            scan = scan.where(F.col(col) == value)
+    scan, slots = _lexical_scan(triples, pat, prefixes)
+    rename = {_LEX_COLS[slot]: v for slot, v in slots.items()}
     if extra:
         rename.update(extra)  # GRAPH ?var: carry the graph term binding
     out_vars = set(rename.values())
@@ -1788,10 +1773,75 @@ def _id_exprs():
 _LEX_COLS = {"subj": "subj", "pred": "pred", "obj": "obj_lexical"}
 
 
-def _run_pattern_scan(triples: DataFrame, pat: _Pattern,
-                      prefixes: dict[str, str]
-                      ) -> tuple[DataFrame, dict[str, str]]:
-    """Constant-filtered scan + {slot: var} map for one run pattern."""
+@dataclass
+class _Warehouse:
+    """The pipeline's dictionary-encoded tables as a query source (see
+    :func:`query_encoded`): id runs scan ``edges`` and decode through
+    ``terms``; every other element reads :attr:`lexical`."""
+
+    edges: DataFrame
+    terms: DataFrame
+
+    @property
+    def sparkSession(self):
+        return self.edges.sparkSession
+
+    @cached_property
+    def lexical(self) -> DataFrame:
+        """The decoded graph, built the first time an element needs it."""
+        from trident_spark.pipeline.kg import decode_triples
+
+        return decode_triples(self.edges, self.terms)
+
+
+def _warehouse_scan(wh: _Warehouse, pat: _Pattern, prefixes: dict[str, str]
+                    ) -> tuple[DataFrame, dict[str, str]]:
+    """:func:`_lexical_scan` over the edge table: constants filter the
+    id columns on their ``kg.term_id``, which Catalyst folds to a literal."""
+    from trident_spark.pipeline.kg import term_id
+
+    rename: dict[str, str] = {}
+    cond = lookup = None
+    for slot, term in (("subj", pat.subj), ("pred", pat.pred),
+                       ("obj", pat.obj)):
+        if term.startswith("?"):
+            rename[slot] = term[1:]
+            continue
+        col = F.col(f"{slot}_id")
+        if slot == "obj" and term.startswith('"'):
+            value, lang, dt = _literal_parts(term, prefixes)
+            if lang is not None:
+                # a language tag compares case-insensitively: look the
+                # ids up in the dictionary with the lexical engine's own
+                # condition
+                lookup = _literal_match_cond(
+                    F.col("lexical"), value, lang, dt, set(wh.terms.columns),
+                    kind_col="kind", lang_col="lang", dt_col="datatype")
+                continue
+            # a simple literal is stored plain or as xsd:string
+            dts = [dt] if dt not in (None, XSD_STRING) else ["", XSD_STRING]
+            c = col.isin(*[term_id(F.lit("literal"), F.lit(value), F.lit(d))
+                           for d in dts])
+        elif slot == "obj" and _PLAIN_SCALAR.match(term):
+            # a bare number or boolean matches a literal of any datatype
+            lookup = ((F.col("kind") == "literal")
+                      & (F.col("lexical") == term))
+            continue
+        else:
+            c = col == term_id(F.lit("iri"), F.lit(_expand(term, prefixes)))
+        cond = c if cond is None else cond & c
+    scan = wh.edges if cond is None else wh.edges.where(cond)
+    if lookup is not None:
+        ids = wh.terms.where(lookup).select(F.col("term_id").alias("obj_id"))
+        scan = scan.join(F.broadcast(ids), "obj_id", "left_semi")
+    return scan, rename
+
+
+def _lexical_scan(triples: DataFrame, pat: _Pattern,
+                  prefixes: dict[str, str]
+                  ) -> tuple[DataFrame, dict[str, str]]:
+    """Constant-filtered scan + {slot: var} map for one plain pattern over
+    a lexical frame."""
     scan = triples
     rename: dict[str, str] = {}
     for slot, term in (("subj", pat.subj), ("pred", pat.pred),
@@ -1801,13 +1851,14 @@ def _run_pattern_scan(triples: DataFrame, pat: _Pattern,
             continue
         col = _LEX_COLS[slot]
         if slot == "obj" and term.startswith('"'):
-            # full RDF term identity, byte-identical to the slow path in
-            # _compile_pattern (lang tags case-insensitive, plain ≡
-            # xsd:string) — CLAUDE.md rule 8
+            # full RDF term identity (lang tags case-insensitive, plain ≡
+            # xsd:string)
             value, c_lang, c_dt = _literal_parts(term, prefixes)
             scan = scan.where(_literal_match_cond(
                 F.col(col), value, c_lang, c_dt, set(triples.columns)))
         elif slot == "obj" and _PLAIN_SCALAR.match(term):
+            # numeric/boolean shorthand → typed-literal match (lexical
+            # + kind, per the engine's documented literal matching)
             scan = scan.where((F.col("obj_kind") == "literal")
                               & (F.col(col) == term))
         else:
@@ -1837,26 +1888,42 @@ def _run_eligible(pat, meta: set[str], extra) -> bool:
     return True
 
 
-def _compile_run_ids(triples: DataFrame, run: list[_Pattern],
+def _compile_run_ids(triples: DataFrame | _Warehouse, run: list[_Pattern],
                      prefixes: dict[str, str],
-                     needed: set[str] | None
+                     needed: set[str] | None,
+                     meta: set[str] = frozenset()
                      ) -> tuple[DataFrame, set[str]]:
-    """A run of ≥2 plain patterns → solutions joined on ``_tid_`` ids,
-    with lexical columns for the ``needed`` variables (all when None):
-    each carries its value from the scan that binds it first, so no
-    pattern is re-scanned to decode; join-only variables stay ids.  Scans
-    stay ``distinct``: the frame may hold a triple from several captures."""
-    ids = _id_exprs()
+    """A run of plain patterns → solutions joined on ``_tid_`` ids, with
+    lexical columns for the ``needed`` variables (all when None);
+    join-only variables stay ids.
+
+    On a lexical frame each needed variable carries its value from the
+    scan that binds it first, so no pattern is re-scanned to decode, and
+    scans stay ``distinct``: the frame may hold a triple from several
+    captures.  On a :class:`_Warehouse` the scans read only the edge
+    table's id columns and are sets already (:func:`query_encoded`); each
+    needed variable decodes through one ``terms`` join, which also gives
+    the variables in ``meta`` their ``_kind_``/``_dt_``/``_lang_``
+    columns."""
+    wh = isinstance(triples, _Warehouse)
+    scan_of = _warehouse_scan if wh else _lexical_scan
+    ids = ({slot: F.col(f"{slot}_id") for slot in _LEX_COLS} if wh
+           else _id_exprs())
     plan: DataFrame | None = None
     bound: set[str] = set()
     for k, pat in enumerate(run):
-        scan, rename = _run_pattern_scan(triples, pat, prefixes)
+        scan, rename = scan_of(triples, pat, prefixes)
         proj = [ids[slot].alias(f"_tid_{v}") for slot, v in rename.items()]
-        proj += [F.col(_LEX_COLS[slot]).alias(v)
-                 for slot, v in rename.items()
-                 if v not in bound and (needed is None or v in needed)]
-        idscan = (scan.select(*proj).distinct() if proj
-                  else scan.select(F.lit(1).alias(f"_tid1_{k}")).limit(1))
+        if not wh:
+            proj += [F.col(_LEX_COLS[slot]).alias(v)
+                     for slot, v in rename.items()
+                     if v not in bound and (needed is None or v in needed)]
+        if not proj:
+            idscan = scan.select(F.lit(1).alias(f"_tid1_{k}")).limit(1)
+        else:
+            idscan = scan.select(*proj)
+            if not wh:
+                idscan = idscan.distinct()
         vars_ = set(rename.values())
         if plan is None:
             plan = idscan
@@ -1865,8 +1932,18 @@ def _compile_run_ids(triples: DataFrame, run: list[_Pattern],
             plan = plan.join(idscan, keys) if keys \
                 else plan.crossJoin(idscan)
         bound |= vars_
+    decoded = bound if needed is None else bound & needed
+    if wh:
+        for v in sorted(decoded):
+            cols = [F.col("term_id").alias(f"_tid_{v}"),
+                    F.col("lexical").alias(v)]
+            if v in meta:
+                cols += [F.col("kind").alias(f"_kind_{v}"),
+                         F.col("datatype").alias(f"_dt_{v}"),
+                         F.col("lang").alias(f"_lang_{v}")]
+            plan = plan.join(triples.terms.select(*cols), f"_tid_{v}")
     drop = [c for c in plan.columns if c.startswith(("_tid_", "_tid1_"))]
-    return plan.drop(*drop), bound if needed is None else bound & needed
+    return plan.drop(*drop), decoded
 
 
 def _compile_group(triples: DataFrame, group: _Group,
@@ -1911,19 +1988,30 @@ def _compile_group(triples: DataFrame, group: _Group,
     meta = meta_filter | (want_meta or set()) \
         | _triple_bind_vars(group.elements)
     meta_provided: set[str] = set()
-    # batch consecutive id-join-eligible patterns into BGP runs
+    for v in meta_filter:
+        if sum(isinstance(el, _Pattern) and el.obj == f"?{v}"
+               for el in group.elements) > 1:
+            raise SparqlError(
+                f"LANG/DATATYPE(?{v}) is ambiguous: ?{v} is bound in "
+                "object position by more than one pattern")
+    # batch consecutive id-join-eligible patterns into BGP runs.  The
+    # warehouse has no lexical columns to scan, so there a single pattern
+    # is a run too, and a metadata variable stays in its run: the decode
+    # join supplies the metadata
+    wh = isinstance(triples, _Warehouse)
     elements: list = []
     buf: list[_Pattern] = []
 
     def _flush():
-        if len(buf) >= 2:
+        if len(buf) >= 2 or (wh and buf):
             elements.append(("bgp_run", list(buf)))
         elif buf:
             elements.append(buf[0])
         buf.clear()
 
     for el in _reorder_group(group.elements):
-        if isinstance(el, _Pattern) and _run_eligible(el, meta, extra):
+        if isinstance(el, _Pattern) and _run_eligible(
+                el, set() if wh else meta, extra):
             buf.append(el)
         else:
             _flush()
@@ -1950,8 +2038,11 @@ def _compile_group(triples: DataFrame, group: _Group,
                 for other in elements:
                     if other is not el:
                         run_needed |= _all_vars(other)
+            run_meta = (meta - meta_provided) & {
+                p.obj[1:] for p in el[1] if p.obj.startswith("?")}
+            meta_provided |= run_meta
             scan, vars_ = _compile_run_ids(triples, el[1], prefixes,
-                                           run_needed)
+                                           run_needed, run_meta)
             how = "inner"
         elif isinstance(el, _Pattern):
             pat_meta = meta
@@ -1959,16 +2050,11 @@ def _compile_group(triples: DataFrame, group: _Group,
                     and el.obj.startswith("?") and el.obj[1:] in meta:
                 v = el.obj[1:]
                 if v in meta_provided:
-                    if v in meta_filter:
-                        raise SparqlError(
-                            f"LANG/DATATYPE(?{v}) is ambiguous: ?{v} is "
-                            "bound in object position by more than one "
-                            "pattern")
                     pat_meta = meta - {v}
                 else:
                     meta_provided.add(v)
-            scan, vars_ = _compile_pattern(triples, el, prefixes, idx, extra,
-                                           pat_meta)
+            scan, vars_ = _compile_pattern(triples.lexical if wh else triples,
+                                           el, prefixes, idx, extra, pat_meta)
             how = "inner"
         elif el[0] == "filter":
             filters.append(el[1])
@@ -2601,17 +2687,11 @@ def _compile_select(triples: DataFrame, toks: list[str],
 def _select_tail(plan: DataFrame, bound: set[str], distinct: bool,
                  items: list[_SelectItem] | None, tail: list[str]
                  ) -> tuple[DataFrame, list[str]]:
-    """Solution-modifier compiler shared by the lexical engine
-    (:func:`_compile_select`) and the warehouse id-run engine
-    (:func:`query_encoded`) — ONE implementation of GROUP BY (plain /
+    """Solution modifiers of :func:`_compile_select`: GROUP BY (plain /
     (expr AS ?k) / bare builtin-call keys), HAVING and ORDER BY hidden
     aggregates, (expr-over-aggregate AS ?v) projections, GROUP BY-only ≡
     distinct keys, DISTINCT, ORDER/LIMIT/OFFSET.  ``bound`` is the set of
-    variables the incoming plan binds as decoded lexical columns.
-
-    (r5: query_encoded previously carried a reduced private copy of this
-    logic that silently SKIPPED grouping for GROUP BY-only and
-    hidden-HAVING queries — a wrong answer, not a loud reject.)"""
+    variables the incoming plan binds as lexical columns."""
     # tail: GROUP BY ?v... | HAVING(expr) | ORDER BY [ASC|DESC] (?v)
     #     | LIMIT n | OFFSET n
     group_by: list[str] = []
@@ -2849,10 +2929,13 @@ def query(triples: DataFrame, sparql: str) -> DataFrame:
     patterns match the default graph (``graph IS NULL``) and ``GRAPH``
     patterns match the named graphs."""
     if "graph" in triples.columns:
-        quads: DataFrame | None = triples
-        triples = triples.where(F.col("graph").isNull())
-    else:
-        quads = None
+        return _query(triples.where(F.col("graph").isNull()), triples,
+                      sparql)
+    return _query(triples, None, sparql)
+
+
+def _query(triples: DataFrame | _Warehouse, quads: DataFrame | None,
+           sparql: str) -> DataFrame:
     toks, prefixes = _prep(sparql)
     if toks and toks[0].upper() == "ASK":
         if len(toks) < 2:
@@ -3558,226 +3641,25 @@ def _apply_templates(quads, spark, prefixes, with_graph, using, group,
     return apply_q(inst(del_tg), inst(ins_tg))
 
 
-# ---------------------------------------------------------------------------
-# Warehouse path: SELECT over the pipeline's PERSISTED dictionary-encoded
-# tables (pipeline/kg.py: triples(subj_id, pred_id, obj_id) + terms)
-# ---------------------------------------------------------------------------
-
-
 @_public
 def query_encoded(edges: DataFrame, terms: DataFrame,
                   sparql: str) -> DataFrame:
-    """SELECT over dictionary-encoded edges — the pipeline-warehouse path.
+    """:func:`query` over the pipeline's dictionary-encoded tables
+    (``pipeline/kg.py``: ``triples(subj_id, pred_id, obj_id)`` and
+    ``terms``): the same compiler and the same answers as
+    ``query(kg.decode_triples(edges, terms), sparql)``.
 
-    Pattern scans read ONLY the 8-byte id columns (parquet prunes the rest
-    at the source), constant terms hash driver-side with the bit-parity
-    pure-Python xxhash64 (util_xxhash.spark_xxhash64 — no terms lookup to
-    plan a query), joins move longs, and projected variables decode with
-    one terms join each at the end.  Supported fragment: plain-pattern
-    BGPs + FILTER + trailing OPTIONAL (plain patterns, left-joined on id
-    keys; shapes needing §10.2 compatibility joins reject loudly) +
-    DISTINCT + GROUP BY/aggregates + ORDER/LIMIT/OFFSET — the
-    warehouse-analytics subset; use :func:`query` on a lexical view
-    for the full 1.1 surface.
+    Runs of plain triple patterns scan only the 8-byte id columns of
+    ``edges`` (parquet prunes the rest at the source), filter constants
+    on their folded ``kg.term_id``, join on ids, and decode each variable
+    the query needs with one ``terms`` join.  Elements that need lexical
+    columns (property paths, quoted triples, a pattern that repeats a
+    variable) read the decoded graph, built only when one occurs.
 
     Contracts (as ``kg.dedup_triples`` and ``kg.encode_triples`` write
     the tables): ``edges`` is a set of ``(subj_id, pred_id, obj_id)``
     and ``terms`` holds each ``term_id`` once.  A pattern's variables and
-    constants fix its edge, so scans (required and OPTIONAL) are sets and
-    are not re-deduplicated; a repeated edge or term id multiplies rows.
+    constants fix its edge, so id scans are sets and are not
+    re-deduplicated; a repeated edge or term id multiplies rows.
     """
-    from trident_spark.util_xxhash import spark_xxhash64
-
-    toks, prefixes = _prep(sparql)
-    if not toks or toks[0].upper() != "SELECT":
-        raise SparqlError("query_encoded supports SELECT queries")
-    try:
-        w = next(i for i, t in enumerate(toks) if t.upper() == "WHERE")
-    except StopIteration:
-        raise SparqlError("missing WHERE") from None
-    if toks[w + 1 : w + 2] != ["{"]:
-        raise SparqlError("WHERE must be followed by a group")
-    distinct, items = _parse_select_items(toks[1:w])
-    group, i = _parse_group(toks, w + 2)
-    tail = toks[i:]
-
-    pats = [el for el in group.elements if isinstance(el, _Pattern)]
-    filters = [el[1] for el in group.elements
-               if isinstance(el, tuple) and el and el[0] == "filter"]
-    optionals = [el[1] for el in group.elements
-                 if isinstance(el, tuple) and el and el[0] == "optional"]
-    # §18.2 translation is left-to-right — two ORDER-sensitive guards
-    # (compile_bgp below hoists every required pattern ahead of the left
-    # joins, which is exact only under these):
-    # (a) an OPTIONAL before the first required pattern raises, matching
-    #     the lexical engine (even when FILTERs precede the OPTIONAL);
-    # (b) a required pattern that FOLLOWS an OPTIONAL and shares a
-    #     variable that OPTIONAL introduces breaks the hoist —
-    #     Join(LeftJoin(P1,P2),P3) = LeftJoin(Join(P1,P3),P2) only when
-    #     (vars(P2)∖vars(P1)) ∩ vars(P3) = ∅ — reject loudly, never a
-    #     silent wrong answer.
-    walk_bound: set[str] = set()
-    walk_intro: set[str] = set()
-    walk_pat_seen = False
-    for el in group.elements:
-        if isinstance(el, _Pattern):
-            pv = _pattern_vars(el)
-            if pv & walk_intro:
-                raise SparqlError(
-                    "query_encoded: a required pattern after an OPTIONAL "
-                    "shares a variable the OPTIONAL introduces — needs "
-                    "the lexical engine's compatibility joins (use "
-                    "query())")
-            walk_bound |= pv
-            walk_pat_seen = True
-        elif isinstance(el, tuple) and el and el[0] == "optional":
-            if not walk_pat_seen:
-                raise SparqlError("OPTIONAL cannot be the first pattern")
-            ov: set[str] = set()
-            for sp in el[1].elements:
-                if isinstance(sp, _Pattern):
-                    ov |= _pattern_vars(sp)
-            walk_intro |= ov - walk_bound
-            walk_bound |= ov
-    if (len(pats) + len(filters) + len(optionals) != len(group.elements)
-            or not pats):
-        raise SparqlError(
-            "query_encoded supports plain triple patterns + FILTER + "
-            "OPTIONAL only")
-
-    def _plain_pats(elements, where: str) -> list[_Pattern]:
-        ps = [el for el in elements if isinstance(el, _Pattern)]
-        if len(ps) != len(elements) or not ps:
-            raise SparqlError(
-                f"query_encoded {where} supports plain triple patterns "
-                "only")
-        for p in ps:
-            if isinstance(p.pred, tuple) or isinstance(p.obj, _Quoted):
-                raise SparqlError(
-                    f"query_encoded {where} supports plain triple "
-                    "patterns only")
-        return ps
-
-    _plain_pats(pats, "WHERE")
-    opt_pats = [_plain_pats(sub.elements, "OPTIONAL") for sub in optionals]
-
-    def const_id(term: str, pos: str) -> int:
-        if pos == "obj" and term.startswith('"'):
-            value, lang, dt = _literal_parts(term, prefixes)
-            if lang is not None:
-                # stored tags are canonicalized (normalize_literal_langs,
-                # RFC 5646 §4.5) — canonicalize the constant's tag the
-                # same way so `"x"@EN-us` hashes to the stored `en-US` id.
-                # RDF 1.2 base direction rides as a `--ltr/--rtl` suffix:
-                # split it off (case-insensitively, like the lexical
-                # engine's lower() comparison), canonicalize the tag part,
-                # re-attach the lowercased direction — mirroring the
-                # lexical engine's lower() comparison (the pipeline's
-                # ingest regex is case-sensitive, so stored tags are
-                # canonical lowercase-direction forms either way)
-                from trident_spark.kernels import langtag as L
-                m_dir = re.search(r"--(ltr|rtl)$", lang, re.IGNORECASE)
-                base = lang[: m_dir.start()] if m_dir else lang
-                try:
-                    base = L.normalize(base, L.load_registry()).tag
-                    lang = (base + "--" + m_dir.group(1).lower()
-                            if m_dir else base)
-                except L.LangTagError:
-                    pass  # invalid tag: hash as-is (matches nothing,
-                    # like the lexical engine, where the pipeline nulls it)
-            return spark_xxhash64("literal", value, dt or "", lang or "")
-        if pos == "obj" and _PLAIN_SCALAR.match(term):
-            # NB: ids include the datatype, so this matches PLAIN literals
-            # with this lexical form (a stored "42"^^xsd:integer has a
-            # different id) — consistent with the plain-literal-only rule
-            return spark_xxhash64("literal", term, "", "")
-        return spark_xxhash64("iri", _expand(term, prefixes), "", "")
-
-    id_col = {"subj": "subj_id", "pred": "pred_id", "obj": "obj_id"}
-
-    def compile_bgp(pat_list: list[_Pattern],
-                    plan: DataFrame | None,
-                    bound: set[str]) -> tuple[DataFrame, set[str]]:
-        for pat in _reorder_patterns(pat_list):
-            scan = edges
-            rename: dict[str, str] = {}
-            for pos, term in (("subj", pat.subj), ("pred", pat.pred),
-                              ("obj", pat.obj)):
-                if term.startswith("?"):
-                    rename[pos] = term[1:]
-                else:
-                    scan = scan.where(
-                        F.col(id_col[pos]) == const_id(term, pos))
-            scan, rename = _dedupe_repeated_vars(
-                scan, {id_col[p]: v for p, v in rename.items()})
-            # no distinct: a set of edges projects to a set (docstring)
-            proj = [F.col(c).alias(f"_tid_{v}") for c, v in rename.items()]
-            idscan = (scan.select(*proj) if proj
-                      else scan.select(F.lit(1).alias("_m")).limit(1))
-            vars_ = set(rename.values())
-            if plan is None:
-                plan = idscan
-            else:
-                keys = [f"_tid_{v}" for v in sorted(bound & vars_)]
-                plan = plan.join(idscan, keys) if keys \
-                    else plan.crossJoin(idscan)
-            bound |= vars_
-        return plan, bound
-
-    plan, bound = compile_bgp(pats, None, set())
-
-    # trailing OPTIONALs: §8.3 LeftJoin on the shared-variable id keys.
-    # Exact BECAUSE of two loud rejections — (a) an OPTIONAL-introduced
-    # variable re-shared by a LATER optional would need a §10.2
-    # compatibility join, (b) a disjoint OPTIONAL is a keep-left cross —
-    # both are lexical-engine territory, not silent wrong answers.
-    # Compiling every required pattern first is semantics-preserving
-    # under (a): Join(LeftJoin(P1,P2),P3) = LeftJoin(Join(P1,P3),P2)
-    # whenever vars(P2)∖vars(P1) ∩ vars(P3) = ∅, which (a) guarantees.
-    nullable: set[str] = set()
-    for sub_pats in opt_pats:
-        sub_plan, sub_bound = compile_bgp(sub_pats, None, set())
-        shared = sorted(bound & sub_bound)
-        if nullable & sub_bound:
-            raise SparqlError(
-                "query_encoded: a variable introduced by one OPTIONAL "
-                "is shared by a later OPTIONAL — needs the lexical "
-                "engine's compatibility joins (use query())")
-        if not shared:
-            raise SparqlError(
-                "query_encoded: OPTIONAL shares no variable with the "
-                "required patterns (use query())")
-        plan = plan.join(sub_plan,
-                         [f"_tid_{v}" for v in shared], "left")
-        nullable |= sub_bound - bound
-        bound |= sub_bound
-
-    # decode: projection surface + filter vars (join-only vars stay ids)
-    needed = (set(bound) if items is None
-              else (_all_vars(toks[1:w]) | _all_vars(tail)) & bound)
-    for f in filters:
-        needed |= _all_vars(f) & bound
-    for v in sorted(needed):
-        dec = terms.select(
-            F.col("term_id").alias(f"_tid_{v}"),
-            F.col("lexical").alias(v),
-            F.col("kind").alias(f"_kind_{v}"),
-            F.col("datatype").alias(f"_dt_{v}"),
-            F.col("lang").alias(f"_lang_{v}"))
-        # an OPTIONAL-introduced var may hold a NULL id (= unbound):
-        # decode with a LEFT join so the non-matching rows survive
-        plan = plan.join(dec, [f"_tid_{v}"],
-                         "left" if v in nullable else "inner")
-    for ftoks in filters:
-        plan = plan.where(_filter_sql(ftoks, set(plan.columns)))
-    plan = plan.drop(*[c for c in plan.columns
-                       if c.startswith(("_tid_", "_m", "_kind_", "_dt_",
-                                        "_lang_"))])
-
-    # tail modifiers: the SAME compiler the lexical engine uses — id-only
-    # scans keep their plans, and every aggregate form (DISTINCT
-    # aggregates, GROUP_CONCAT SEPARATOR, hidden HAVING/ORDER BY
-    # aggregates, GROUP BY expressions, GROUP BY-only ≡ distinct keys)
-    # works identically instead of falling back to the lexical engine
-    return _select_tail(plan, set(needed), distinct, items, tail)[0]
-
+    return _query(_Warehouse(edges, terms), None, sparql)
