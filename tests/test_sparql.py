@@ -1480,9 +1480,10 @@ def encoded_kg(spark):
                 "obj_datatype", "obj_lang").localCheckpoint(eager=True))
 
 
-def _differential(lexical, edges, terms, sparql):
+def _differential(lexical, edges, terms, sparql, raises=False):
     """Both engines must return the same bag of rows (a duplicate row on
-    either side fails), or both must raise SparqlError."""
+    either side fails).  ``raises=True``: both must raise SparqlError
+    instead; ``raises=None``: either outcome, as long as both agree."""
     from collections import Counter
 
     from trident_spark.query.sparql import query, query_encoded
@@ -1496,6 +1497,8 @@ def _differential(lexical, edges, terms, sparql):
     want = bag(lambda: query(lexical, sparql))
     got = bag(lambda: query_encoded(edges, terms, sparql))
     assert got == want, (sparql, got, want)
+    if raises is not None:
+        assert (want is SparqlError) == raises, (sparql, want)
     return got
 
 
@@ -1642,6 +1645,10 @@ def _deck_query(lexical, shape):
         "{org}", row.obj_lexical)
 
 
+# the differential shapes query() rejects too
+_BOTH_RAISE = {"optional_first", "optional_disjoint", "lang_ambiguous"}
+
+
 @pytest.mark.parametrize("sparql", [
     *_DECK_SHAPES.values(),
     "SELECT ?s ?n WHERE { { ?s a schema:Person } UNION "
@@ -1681,15 +1688,17 @@ def _deck_query(lexical, shape):
         "required_after_optional", "ask", "ask_not_exists",
         "repeated_var", "typed_literal", "bare_number", "optional_first",
         "optional_disjoint", "lang_ambiguous"])
-def test_query_encoded_differential(spark, encoded_kg, sparql):
+def test_query_encoded_differential(request, spark, encoded_kg, sparql):
     """query_encoded(e, t, q) answers like query(decode_triples(e, t), q),
-    or both raise: the deck's warehouse templates and every shape the
-    warehouse engine once rejected."""
+    or both raise where query() rejects the shape: the deck's warehouse
+    templates and every shape the warehouse engine once rejected."""
     from trident_spark.pipeline.kg import decode_triples
 
     edges, terms, lexical = encoded_kg
+    case = request.node.callspec.id
     _differential(decode_triples(edges, terms), edges, terms,
-                  _deck_query(lexical, sparql))
+                  _deck_query(lexical, sparql),
+                  raises=case in _BOTH_RAISE)
 
 
 @pytest.mark.parametrize("template", list(_DECK_SHAPES))
@@ -2873,8 +2882,9 @@ def test_encoded_literal_constant_term_identity(spark):
               "pred string, obj_lexical string, obj_kind string, "
               "obj_datatype string, obj_lang string")
     terms, edges = encode_triples(sk)
-    # the constant's tag canonicalizes (RFC 5646 §4.5) before hashing, so
-    # any case variant finds the stored en-US id
+    # a tagged constant looks its ids up in the dictionary with the tags
+    # lowercased on both sides, as query() compares them, so any case
+    # variant finds the stored en-US id
     df = query_encoded(edges, terms,
                        'SELECT ?s WHERE { ?s <http://p/n> "hello"@EN-us . }')
     assert [r.s for r in df.collect()] == ["http://s/1"]
@@ -2912,9 +2922,9 @@ def test_quoted_triple_literal_constant_lang(spark):
 
 
 def test_query_encoded_dirlang_constant(spark):
-    """r5 review fix: a dir-lang constant ("x"@EN--ltr) must canonicalize
-    its tag part exactly like normalize_literal_langs (split --dir,
-    normalize, re-attach) before hashing — both engines must agree."""
+    """A dir-lang constant ("x"@EN-US--LTR) matches the tag that
+    normalize_literal_langs stored, compared case-insensitively, and both
+    engines agree."""
     from trident_spark.pipeline.kg import (encode_triples,
                                            normalize_literal_langs)
     from trident_spark.query.sparql import query, query_encoded
@@ -3153,6 +3163,7 @@ def test_query_encoded_optional_differential_fuzz(spark, encoded_kg):
         rng.shuffle(els)
         q = _PFX + "SELECT " + " ".join(vs) + \
             " WHERE { " + " ".join(els) + " }"
-        if _differential(lexical, edges, terms, q) is not SparqlError:
+        if _differential(lexical, edges, terms, q,
+                         raises=None) is not SparqlError:
             checked += 1
     assert checked >= 4  # the fuzz actually exercised the fast path

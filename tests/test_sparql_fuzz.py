@@ -16,6 +16,7 @@ Property-path closures are checked against an independent oracle: a
 plain Python graph search over the input rows."""
 
 import random
+from collections import Counter
 
 import pytest
 
@@ -109,9 +110,10 @@ def test_warehouse_matches_lexical_compilation(spark, fuzz_graph):
     rng = random.Random(5)
     for _ in range(15):
         q = _gen_query(rng)
-        want = {tuple(r) for r in S.query(fuzz_graph, q).collect()}
-        got = {tuple(r) for r in S.query_encoded(edges, terms, q).collect()}
-        assert got == want, (q, len(got), len(want))
+        want = Counter(tuple(r) for r in S.query(fuzz_graph, q).collect())
+        got = Counter(tuple(r) for r in
+                      S.query_encoded(edges, terms, q).collect())
+        assert got == want, (q, got, want)
 
 
 def test_cross_pattern_term_identity(spark):
