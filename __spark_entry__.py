@@ -1001,10 +1001,10 @@ def q_kg_sparql_update_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples, insert an archived marker per subject — leaving every other
     named graph untouched.  Oracle reconstructs the full post-update quad
     set in SQL."""
-    from trident_spark.query.sparql import update_quads
+    from trident_spark.query.sparql import update
 
     quads = _doc_quads(spark, sf_dir)
-    out = update_quads(
+    out = update(
         quads,
         f"""
         WITH <{DOC_BASE}/doc/0>

@@ -1281,7 +1281,7 @@ def test_negated_property_set(spark, graph):
 
 
 # ---------------------------------------------------------------------------
-# graph-scoped Update (update_quads)
+# graph-scoped Update: update() over a quads frame
 # ---------------------------------------------------------------------------
 
 
@@ -1290,24 +1290,24 @@ def _q(rows):
 
 
 def test_update_quads_clear_and_drop(spark, quads):
-    from trident_spark.query.sparql import update_quads
+    from trident_spark.query.sparql import update
 
-    out = update_quads(quads, "CLEAR GRAPH <http://g/1>")
+    out = update(quads, "CLEAR GRAPH <http://g/1>")
     assert _q(out.select("graph").distinct().collect()) == {
         (None,), ("http://g/2",)}
-    out2 = update_quads(quads, "DROP DEFAULT")
+    out2 = update(quads, "DROP DEFAULT")
     assert out2.where(out2.graph.isNull()).count() == 0
-    assert update_quads(quads, "DROP NAMED").count() == 2
-    assert update_quads(quads, "DROP ALL").count() == 0
+    assert update(quads, "DROP NAMED").count() == 2
+    assert update(quads, "DROP ALL").count() == 0
     # CREATE is a no-op in the quads model
-    assert update_quads(
+    assert update(
         quads, "CREATE GRAPH <http://g/9>").count() == quads.count()
 
 
 def test_update_quads_move_copy_add(spark, quads):
-    from trident_spark.query.sparql import update_quads
+    from trident_spark.query.sparql import update
 
-    moved = update_quads(quads, "MOVE GRAPH <http://g/1> TO GRAPH <http://g/2>")
+    moved = update(quads, "MOVE GRAPH <http://g/1> TO GRAPH <http://g/2>")
     assert moved.where(moved.graph == "http://g/1").count() == 0
     g2 = _q(moved.where(moved.graph == "http://g/2")
             .select("subj", "pred").collect())
@@ -1315,21 +1315,21 @@ def test_update_quads_move_copy_add(spark, quads):
     assert ("http://x/alice", SCHEMA + "name") in g2
     assert ("http://x/bob", SCHEMA + "name") not in g2
 
-    copied = update_quads(quads, "COPY DEFAULT TO GRAPH <http://g/2>")
+    copied = update(quads, "COPY DEFAULT TO GRAPH <http://g/2>")
     assert copied.where(copied.graph.isNull()).count() == 2  # source kept
     assert _q(copied.where(copied.graph == "http://g/2")
               .select("pred").collect()) == {(RDF_TYPE,)}
 
-    added = update_quads(quads, "ADD GRAPH <http://g/1> TO GRAPH <http://g/2>")
+    added = update(quads, "ADD GRAPH <http://g/1> TO GRAPH <http://g/2>")
     g2 = added.where(added.graph == "http://g/2")
     assert g2.count() == quads.where(quads.graph == "http://g/1").count() \
         + quads.where(quads.graph == "http://g/2").count()
 
 
 def test_update_quads_insert_delete_data_graph_blocks(spark, quads):
-    from trident_spark.query.sparql import update_quads
+    from trident_spark.query.sparql import update
 
-    out = update_quads(quads, """
+    out = update(quads, """
         INSERT DATA {
             <http://x/new> <http://p/q> "v" .
             GRAPH <http://g/1> { <http://x/new> <http://p/q> "w" . }
@@ -1339,7 +1339,7 @@ def test_update_quads_insert_delete_data_graph_blocks(spark, quads):
     assert ("http://x/new", "v", None) in got
     assert ("http://x/new", "w", "http://g/1") in got
 
-    back = update_quads(out, """
+    back = update(out, """
         DELETE DATA {
             <http://x/new> <http://p/q> "v" .
             GRAPH <http://g/1> { <http://x/new> <http://p/q> "w" . }
@@ -1349,9 +1349,9 @@ def test_update_quads_insert_delete_data_graph_blocks(spark, quads):
 
 
 def test_update_quads_with_template_form(spark, quads):
-    from trident_spark.query.sparql import update_quads
+    from trident_spark.query.sparql import update
 
-    out = update_quads(quads, """
+    out = update(quads, """
         PREFIX schema: <https://schema.org/>
         WITH <http://g/1>
         DELETE { ?s schema:name ?n }
@@ -1370,11 +1370,11 @@ def test_update_quads_with_template_form(spark, quads):
 
 
 def test_update_quads_graph_template_blocks_and_using(spark, quads):
-    from trident_spark.query.sparql import update_quads
+    from trident_spark.query.sparql import update
 
     # USING makes g2 the default graph for WHERE; the template writes the
     # match into a fresh named graph
-    out = update_quads(quads, """
+    out = update(quads, """
         PREFIX schema: <https://schema.org/>
         INSERT { GRAPH <http://g/audit> { ?s schema:seen "yes" } }
         USING <http://g/2>
@@ -1386,9 +1386,9 @@ def test_update_quads_graph_template_blocks_and_using(spark, quads):
 
 
 def test_update_quads_delete_where_default_graph(spark, quads):
-    from trident_spark.query.sparql import update_quads
+    from trident_spark.query.sparql import update
 
-    out = update_quads(quads, "DELETE WHERE { ?s a <https://schema.org/Person> }")
+    out = update(quads, "DELETE WHERE { ?s a <https://schema.org/Person> }")
     assert out.where(out.graph.isNull()).count() == 0
     assert out.count() == quads.count() - 2
 
@@ -1396,9 +1396,9 @@ def test_update_quads_delete_where_default_graph(spark, quads):
 def test_update_quads_using_named(spark, quads):
     """USING NAMED defines the named-graph set for GRAPH patterns in the
     WHERE clause; graphs outside the list are invisible."""
-    from trident_spark.query.sparql import update_quads
+    from trident_spark.query.sparql import update
 
-    out = update_quads(quads, """
+    out = update(quads, """
         PREFIX schema: <https://schema.org/>
         INSERT { GRAPH <http://g/seen> { ?s schema:seenIn ?g } }
         USING NAMED <http://g/1>
@@ -1560,6 +1560,89 @@ def test_differential_bags_over_duplicate_captures(spark):
                            ("http://x/ann", None): 1})
 
 
+def _encoded(spark, rows):
+    """(lexical frame, edges, terms) of lexical triple rows."""
+    from pyspark.sql import functions as F
+
+    from trident_spark.pipeline.kg import dedup_triples, encode_triples
+
+    lexical = spark.createDataFrame(rows, COLS)
+    terms, edges = encode_triples(lexical.select(
+        "*", F.lit("http://a/1").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit("test").alias("source")))
+    return lexical, dedup_triples(edges), terms
+
+
+# an IRI/literal collision: "http://x/b" is the literal object of <ref>
+# and the IRI subject of <name>.  A solution binds ?o to one RDF term, so
+# no row joins the two, whatever FILTER the group holds or where it sits.
+_COLLISION = [
+    ("http://x/a", "http://p/ref", "http://x/b", "literal", None, None),
+    ("http://x/b", "http://p/name", "B", "literal", None, None),
+]
+
+
+@pytest.mark.parametrize("where", [
+    "?s <http://p/ref> ?o . ?o <http://p/name> ?n . FILTER(!isIRI(?o))",
+    '?s <http://p/ref> ?o . FILTER(STR(?o) != "") ?o <http://p/name> ?n',
+], ids=["isiri", "filter_between"])
+def test_differential_collision_joins_no_term(spark, where):
+    from collections import Counter
+
+    lexical, edges, terms = _encoded(spark, _COLLISION)
+    got = _differential(lexical, edges, terms,
+                        f"SELECT ?n WHERE {{ {where} }}")
+    assert got == Counter()
+
+
+def test_differential_repeated_variable_is_one_term(spark):
+    """``?s <self> ?s`` binds one term: <c>'s literal self-reference does
+    not match, and ?s joins <q>'s IRI object, not its literal twin."""
+    from collections import Counter
+
+    lexical, edges, terms = _encoded(spark, [
+        ("http://x/a", "http://p/self", "http://x/a", "iri", None, None),
+        ("http://x/c", "http://p/self", "http://x/c", "literal", None, None),
+        ("http://x/t", "http://p/q", "http://x/a", "literal", None, None),
+        ("http://x/u", "http://p/q", "http://x/a", "iri", None, None),
+        ("http://x/v", "http://p/q", "http://x/c", "iri", None, None),
+    ])
+    got = _differential(lexical, edges, terms, """
+        SELECT ?t WHERE { ?s <http://p/self> ?s . ?t <http://p/q> ?s }""")
+    assert got == Counter({("http://x/u",): 1})
+
+
+def test_differential_blank_subject_joins_blank_object(spark):
+    """An unskolemized ``_:b1`` is one blank node in subject and object
+    position, on the warehouse as in its decoded graph."""
+    from collections import Counter
+
+    from trident_spark.pipeline.kg import decode_triples
+
+    _, edges, terms = _encoded(spark, [
+        ("http://x/a", "http://p/k", "_:b1", "blank", None, None),
+        ("_:b1", "http://p/n", "B", "literal", None, None),
+    ])
+    got = _differential(decode_triples(edges, terms), edges, terms, """
+        SELECT ?n WHERE { <http://x/a> <http://p/k> ?b . ?b <http://p/n> ?n }""")
+    assert got == Counter({("B",): 1})
+
+
+def test_graph_block_joins_terms(spark):
+    """Patterns in one ``GRAPH ?g`` block join on terms: the literal
+    "http://x/b" does not reach <http://x/b>'s name, the IRI does."""
+    link = ("http://x/a", "http://p/link", "http://x/b", "iri", None, None)
+    quads = spark.createDataFrame(
+        [(*r, "http://g/1") for r in [*_COLLISION, link]],
+        COLS + ", graph string")
+    for pred, want in (("ref", []), ("link", [("http://g/1", "B")])):
+        df = query(quads, f"""
+            SELECT ?g ?n WHERE {{ GRAPH ?g {{
+                ?s <http://p/{pred}> ?o . ?o <http://p/name> ?n }} }}""")
+        assert [tuple(r) for r in df.collect()] == want, pred
+
+
 def test_query_encoded_matches_lexical_engine(spark, encoded_kg):
     edges, terms, lexical = encoded_kg
     got = _differential(lexical, edges, terms, """
@@ -1701,11 +1784,18 @@ def test_query_encoded_differential(request, spark, encoded_kg, sparql):
                   raises=case in _BOTH_RAISE)
 
 
-@pytest.mark.parametrize("template", list(_DECK_SHAPES))
+# the deck templates plus a pattern that repeats a variable (an id
+# equality on the scan, not a read of the decoded graph)
+_SCAN_SHAPES = {**_DECK_SHAPES,
+                "repeated_var": "SELECT ?s WHERE { ?s schema:url ?s }"}
+
+
+@pytest.mark.parametrize("template", list(_SCAN_SHAPES))
 def test_query_encoded_deck_shapes_scan_only_ids(
         spark, encoded_kg, tmp_path, template):
-    """On a parquet warehouse every edge scan of a deck template reads the
-    id columns only, and no plan decodes the whole edge table."""
+    """On a parquet warehouse every edge scan of a deck template (and of a
+    repeated-variable pattern) reads the id columns only, and no plan
+    decodes the whole edge table."""
     import re as _re
 
     from trident_spark.query.sparql import query_encoded
@@ -1715,7 +1805,7 @@ def test_query_encoded_deck_shapes_scan_only_ids(
     terms.write.parquet(str(tmp_path / "terms"))
     df = query_encoded(spark.read.parquet(str(tmp_path / "triples")),
                        spark.read.parquet(str(tmp_path / "terms")),
-                       _deck_query(lexical, _DECK_SHAPES[template]))
+                       _deck_query(lexical, _SCAN_SHAPES[template]))
     assert df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     # decode_triples names its columns obj_lexical/obj_kind
@@ -1862,11 +1952,33 @@ def test_construct_over_quads_dataset_semantics(spark, quads):
     assert out2.count() == 2  # alice + bob, not the named-graph facts
 
 
-def test_update_on_quads_redirects_loudly(spark, quads):
+def test_update_triples_frame_rejects_named_graphs(spark, graph, quads):
+    """A triples frame is the default graph alone: every form that names
+    another graph raises instead of writing into the default graph, and
+    a quads frame takes the default-graph forms with the graph kept."""
     from trident_spark.query.sparql import update
 
-    with pytest.raises(SparqlError, match="update_quads"):
-        update(quads, 'INSERT DATA { <http://x/s> <http://p/p> "v" . }')
+    for sparql in [
+        "CLEAR GRAPH <http://g/1>",
+        "DROP NAMED",
+        "CREATE GRAPH <http://g/9>",
+        "COPY DEFAULT TO GRAPH <http://g/2>",
+        'INSERT DATA { GRAPH <http://g/1> { <http://x/s> <http://p/p> "v" } }',
+        "WITH <http://g/1> DELETE { ?s ?p ?o } WHERE { ?s ?p ?o }",
+        "INSERT { GRAPH <http://g/1> { ?s <http://p/q> ?o } } "
+        "WHERE { ?s <http://p/p> ?o }",
+        "DELETE { ?s ?p ?o } USING <http://g/1> WHERE { ?s ?p ?o }",
+        "DELETE { ?s ?p ?o } WHERE { GRAPH ?g { ?s ?p ?o } }",
+    ]:
+        with pytest.raises(SparqlError):
+            update(graph, sparql).collect()
+    assert update(graph, "DROP DEFAULT").count() == 0
+    assert update(graph, "CLEAR ALL").count() == 0
+    out = update(quads, 'INSERT DATA { <http://x/s> <http://p/p> "v" . }')
+    assert out.columns == quads.columns
+    assert _q(out.where(out.subj == "http://x/s").select(
+        "obj_lexical", "graph").collect()) == {("v", None)}
+    assert out.count() == quads.count() + 1
 
 
 def test_is_blank_on_subject_position_var(spark):

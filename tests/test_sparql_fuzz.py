@@ -1,21 +1,20 @@
-"""Differential fuzz for the id-join BGP engine: every generated query
-must return the identical solution set with BGP id-runs enabled and
-disabled (pure single-pattern lexical compilation), and on the
-dictionary-encoded warehouse (``query_encoded``).
+"""Differential fuzz for the BGP engine: every generated query must
+return the bag of rows that an independent evaluator computes over the
+fuzz rows (a plain Python BGP matcher with RDF term identity), and the
+dictionary-encoded warehouse (``query_encoded``) must return the same bag
+as ``query``.
 
-The fuzz graph deliberately contains NO iri/literal lexical collisions:
-on collisions the two paths legitimately differ — the id path joins on
-term identity (a literal "x" never matches an IRI "x"), which is the
-SPARQL-correct semantics, while the lexical single-pattern path joins on
-the lexical form alone (a 100-query run on a collision-dense graph shows
-the lexical path emitting extra rows in ~10% of shared-subject/object-var
-queries, all term confusions).  test_cross_pattern_term_identity below
-pins the CORRECT behavior explicitly.
+The fuzz graph holds IRI/literal lexical collisions (a literal
+"http://f/n1" beside the IRI <http://f/n1>, a literal "_:b0" beside the
+blank node), blank nodes in subject and object position, and repeated
+captures of some triples; queries repeat variables inside a pattern and
+place their FILTER anywhere in the group.
 
 Property-path closures are checked against an independent oracle: a
 plain Python graph search over the input rows."""
 
 import random
+import re
 from collections import Counter
 
 import pytest
@@ -24,73 +23,149 @@ from trident_spark.query import sparql as S
 
 COLS = ("subj string, pred string, obj_lexical string, obj_kind string, "
         "obj_datatype string, obj_lang string")
+XSD = "http://www.w3.org/2001/XMLSchema#"
+NODES = [f"http://f/n{i}" for i in range(8)] + ["_:b0", "_:b1"]
 
 
-@pytest.fixture(scope="module")
-def fuzz_graph(spark):
+def _fuzz_rows():
     rng = random.Random(17)
-    nodes = [f"http://f/n{i}" for i in range(12)]
-    preds = [f"http://f/p{i}" for i in range(4)]
+    preds = [f"http://f/p{i}" for i in range(3)]
     rows = set()
     for _ in range(150):
-        s = rng.choice(nodes)
+        s = rng.choice(NODES)
         p = rng.choice(preds)
         r = rng.random()
-        if r < 0.6:
-            rows.add((s, p, rng.choice(nodes), "iri", None, None))
-        elif r < 0.8:
+        if r < 0.5:
+            o = rng.choice(NODES)
+            rows.add((s, p, o, "blank" if o.startswith("_:") else "iri",
+                      None, None))
+        elif r < 0.65:
             # control-char literals fuzz the ECHAR decode paths (rule 8)
             rows.add((s, p, rng.choice(["v1", "v2", "v3", "a\nb", "t\tv"]),
                       "literal", None, None))
+        elif r < 0.8:
+            # a literal whose lexical form is a node's: plain or anyURI
+            rows.add((s, p, rng.choice(NODES[:4] + ["_:b0"]), "literal",
+                      rng.choice([None, XSD + "anyURI"]), None))
         elif r < 0.9:
-            # lang-tagged literals (distinct lexical space: same-lexical
-            # plain/tagged twins would legitimately diverge on VARIABLE
-            # joins, where the lexical path joins on the form alone)
             rows.add((s, p, rng.choice(["lv1", "lv2"]), "literal", None,
                       rng.choice(["fr", "en", "en--ltr"])))
         else:
             rows.add((s, p, rng.choice(["dv1", "dv2"]), "literal",
-                      "http://www.w3.org/2001/XMLSchema#token", None))
-    return spark.createDataFrame(sorted(rows), COLS).cache()
+                      XSD + "token", None))
+    rows = sorted(rows, key=str)
+    return rows + rows[:20]  # a second capture of some triples
+
+
+@pytest.fixture(scope="module")
+def fuzz_graph(spark):
+    return spark.createDataFrame(_fuzz_rows(), COLS).cache()
+
+
+_FILTERS = {
+    "str": ('FILTER(STR({v}) != "nope")', lambda t: True),
+    "iri": ("FILTER(isIRI({v}))", lambda t: t[0] == "iri"),
+    "not_iri": ("FILTER(!isIRI({v}))", lambda t: t[0] != "iri"),
+    "literal": ("FILTER(isLiteral({v}))", lambda t: t[0] == "literal"),
+}
 
 
 def _gen_query(rng):
+    """→ (SPARQL text, (patterns, filter (var, test) or None, projection,
+    distinct)) for one connected BGP with an optional FILTER anywhere."""
     vars_ = ["?a", "?b", "?c", "?d"]
-    preds = [f"<http://f/p{i}>" for i in range(4)]
-    nodes = [f"<http://f/n{i}>" for i in range(12)]
-    n_pats = rng.randint(2, 4)
-    pats = []
-    for k in range(n_pats):
-        s = rng.choice(vars_[: k + 1])
+    preds = [f"<http://f/p{i}>" for i in range(3)]
+    nodes = [f"<{n}>" for n in NODES[:8]]
+    pats: list[tuple[str, str, str]] = []
+    used: list[str] = []
+    for _ in range(rng.randint(1, 4)):
+        # a subject the group already binds, now and then a constant
+        s = rng.choice(nodes) if rng.random() < 0.2 else \
+            rng.choice(used or ["?a"])
         p = rng.choice(preds + ["?p"])
-        o = rng.choice(vars_ + nodes + [
-            '"v1"', '"a\\nb"', '"t\\tv"',
-            # full-term-identity constants: the plain forms of lv1/dv1
-            # exist only tagged, so "lv1" must match NOTHING on both paths
+        o = rng.choice(vars_) if rng.random() < 0.7 else rng.choice(nodes + [
+            '"v1"', '"a\\nb"', '"t\\tv"', '"http://f/n1"',
+            f'"http://f/n2"^^<{XSD}anyURI>', f'"v2"^^<{XSD}string>',
+            # the plain forms of lv1/dv1 exist only tagged/typed, so "lv1"
+            # and "dv1" match nothing; a tag matches in any case
             '"lv1"@fr', '"lv1"@FR', '"lv1"', '"lv2"@en--ltr',
-            '"dv1"^^<http://www.w3.org/2001/XMLSchema#token>', '"dv1"'])
-        pats.append(f"{s} {p} {o} .")
-    used = sorted({t for pat in pats for t in pat.split()
-                   if t.startswith("?")})
-    proj = rng.sample(used, k=max(1, rng.randint(1, len(used))))
-    filt = ""
-    if rng.random() < 0.4 and proj:
-        filt = f'FILTER(STR({proj[0]}) != "nope")'
-    return (f"SELECT DISTINCT {' '.join(proj)} WHERE {{ "
-            f"{' '.join(pats)} {filt} }}")
+            f'"dv1"^^<{XSD}token>', '"dv1"'])
+        pats.append((s, p, o))
+        used += [t for t in (s, p, o) if t.startswith("?") and t not in used]
+    parts = [" ".join(pat) + " ." for pat in pats]
+    filt = None
+    if used and rng.random() < 0.6:
+        v = rng.choice(used)
+        kind = rng.choice(list(_FILTERS))
+        if sum(pat[2] == v for pat in pats) > 1:
+            # the engine refuses isIRI() over a variable that two patterns
+            # bind as object
+            kind = "str"
+        text, test = _FILTERS[kind]
+        parts.insert(rng.randint(0, len(parts)), text.format(v=v))
+        filt = (v, test)
+    if not used:
+        return _gen_query(rng)
+    proj = rng.sample(used, k=rng.randint(1, len(used)))
+    distinct = rng.random() < 0.5
+    q = (f"SELECT {'DISTINCT ' if distinct else ''}{' '.join(proj)} "
+         f"WHERE {{ {' '.join(parts)} }}")
+    return q, (pats, filt, proj, distinct)
 
 
-def test_id_runs_match_single_pattern_compilation(spark, fuzz_graph):
+def _term(kind, lexical, datatype=None, lang=None):
+    """RDF term identity: a plain literal is an xsd:string one, and a
+    language tag compares case-insensitively."""
+    if kind != "literal":
+        return (kind, lexical, None, None)
+    return (kind, lexical, None if datatype == XSD + "string" else datatype,
+            lang.lower() if lang else None)
+
+
+def _const(tok):
+    if tok.startswith("<"):
+        return _term("iri", tok[1:-1])
+    body, lang, dt = re.fullmatch(
+        r'"((?:[^"\\]|\\.)*)"(?:@([\w-]+)|\^\^<([^>]*)>)?', tok).groups()
+    value = body.replace("\\n", "\n").replace("\\t", "\t")
+    return _term("literal", value, dt, lang)
+
+
+def _oracle(rows, spec):
+    """Evaluate a generated BGP over the rows as a set of term triples."""
+    pats, filt, proj, distinct = spec
+    graph = {(_term("blank" if s.startswith("_:") else "iri", s),
+              _term("iri", p), _term(kind, o, dt, lang))
+             for s, p, o, kind, dt, lang in rows}
+    sols = [{}]
+    for pat in pats:
+        nxt = []
+        for sol in sols:
+            for triple in graph:
+                b = dict(sol)
+                if all(b.setdefault(tok, term) == term
+                       if tok.startswith("?") else _const(tok) == term
+                       for tok, term in zip(pat, triple)):
+                    nxt.append(b)
+        sols = nxt
+    if filt is not None:
+        v, test = filt
+        sols = [b for b in sols if test(b[v])]
+    out = Counter(tuple(b[v][1] for v in proj) for b in sols)
+    return Counter(set(out)) if distinct else out
+
+
+def test_query_matches_term_identity_oracle(spark, fuzz_graph):
+    rows = _fuzz_rows()
     rng = random.Random(99)
-    for i in range(25):
-        q = _gen_query(rng)
-        try:
-            S._ID_RUNS_ENABLED = False
-            want = {tuple(r) for r in S.query(fuzz_graph, q).collect()}
-        finally:
-            S._ID_RUNS_ENABLED = True
-        got = {tuple(r) for r in S.query(fuzz_graph, q).collect()}
-        assert got == want, (q, len(got), len(want))
+    answered = 0
+    for _ in range(30):
+        q, spec = _gen_query(rng)
+        want = _oracle(rows, spec)
+        got = Counter(tuple(r) for r in S.query(fuzz_graph, q).collect())
+        assert got == want, (q, got, want)
+        answered += bool(want)
+    assert answered >= 10  # most queries have rows to compare
 
 
 def test_warehouse_matches_lexical_compilation(spark, fuzz_graph):
@@ -109,7 +184,7 @@ def test_warehouse_matches_lexical_compilation(spark, fuzz_graph):
     terms = terms.localCheckpoint(eager=True)
     rng = random.Random(5)
     for _ in range(15):
-        q = _gen_query(rng)
+        q, _ = _gen_query(rng)
         want = Counter(tuple(r) for r in S.query(fuzz_graph, q).collect())
         got = Counter(tuple(r) for r in
                       S.query_encoded(edges, terms, q).collect())
@@ -153,7 +228,7 @@ def test_run_literal_constant_full_term_identity(spark):
         ("http://x/s2", "http://p/q", "y2", "literal", None, None),
     ]
     g = spark.createDataFrame(rows, COLS)
-    # single pattern (slow path) and two-pattern run (id path) must agree
+    # a one-pattern run and a two-pattern run must agree
     for extra in ("", "?s <http://p/q> ?o ."):
         plain = S.query(g, f"""
             SELECT ?s WHERE {{ ?s <http://p/n> "hello" . {extra} }}

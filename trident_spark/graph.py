@@ -25,12 +25,9 @@ from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+from trident_spark.pipeline.kg import TRIPLE_SCHEMA
 
-TRIPLE_SCHEMA = (
-    "subj string, pred string, obj_lexical string, obj_kind string, "
-    "obj_datatype string, obj_lang string"
-)
+XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
 
 # ---------------------------------------------------------------------------

@@ -23,13 +23,9 @@ import json
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from trident_spark.pipeline.kg import TRIPLE_SCHEMA
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-
-JSONLD_PARSED_SCHEMA = (
-    "subj string, pred string, obj_lexical string, obj_kind string, "
-    "obj_datatype string, obj_lang string"
-)
-
 
 def parse_jsonld(text: str, base_url: str = "",
                  vocab: str | None = None) -> list[tuple]:
@@ -76,7 +72,7 @@ def from_jsonld(docs: DataFrame, doc_col: str = "doc", base_url: str = "",
 
     from trident_spark.util import ensure_parallelism
 
-    return ensure_parallelism(docs).mapInPandas(run, JSONLD_PARSED_SCHEMA)
+    return ensure_parallelism(docs).mapInPandas(run, TRIPLE_SCHEMA)
 
 
 def _node_dict(subj: str, pos) -> dict:
@@ -248,4 +244,4 @@ def from_jsonld_quads(docs: DataFrame, doc_col: str = "doc",
     from trident_spark.util import ensure_parallelism
 
     return ensure_parallelism(docs).mapInPandas(
-        run, JSONLD_PARSED_SCHEMA + ", graph string")
+        run, TRIPLE_SCHEMA + ", graph string")

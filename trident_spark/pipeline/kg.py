@@ -21,6 +21,13 @@ SKOLEM_PREFIX = "https://trident-spark.dev/.well-known/genid/"
 
 TERM_COLS = ["term_id", "kind", "lexical", "datatype", "lang"]
 
+# the lexical triple frame every parser returns and ``decode_triples``
+# rebuilds; a quads frame adds ", graph string"
+TRIPLE_SCHEMA = (
+    "subj string, pred string, obj_lexical string, obj_kind string, "
+    "obj_datatype string, obj_lang string"
+)
+
 
 def _skolem(url_col, ts_col, label_col):
     return F.concat(
@@ -86,6 +93,13 @@ def normalize_literal_langs(skolemized: DataFrame) -> DataFrame:
     )
 
 
+def subject_kind(col):
+    """Kind of a subject (or graph name) term: an unskolemized ``_:``
+    label is a blank node, the kind the object slot records for it, so a
+    blank node has one term id in every slot."""
+    return F.when(col.startswith("_:"), F.lit("blank")).otherwise(F.lit("iri"))
+
+
 def term_id(kind_col, lexical_col, datatype_col=None, lang_col=None):
     """Deterministic 64-bit id from canonical term content."""
     empty = F.lit("")
@@ -108,7 +122,7 @@ def encode_triples(skolemized: DataFrame) -> tuple[DataFrame, DataFrame]:
         "url",
         "warc_ts",
         "source",
-        term_id(F.lit("iri"), F.col("subj")).alias("subj_id"),
+        term_id(subject_kind(F.col("subj")), F.col("subj")).alias("subj_id"),
         term_id(F.lit("iri"), F.col("pred")).alias("pred_id"),
         term_id(
             F.col("obj_kind"), F.col("obj_lexical"), F.col("obj_datatype"), F.col("obj_lang")
@@ -117,7 +131,7 @@ def encode_triples(skolemized: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
 
     subj_terms = with_ids.select(
-        F.col("subj_id").alias("term_id"), F.lit("iri").alias("kind"),
+        F.col("subj_id").alias("term_id"), subject_kind(F.col("subj")).alias("kind"),
         F.col("subj").alias("lexical"),
         F.lit(None).cast("string").alias("datatype"),
         F.lit(None).cast("string").alias("lang"),

@@ -21,6 +21,7 @@ import random
 
 from trident_spark.kernels import extract as X
 from trident_spark.kernels import iri as K
+from trident_spark.pipeline.kg import TRIPLE_SCHEMA
 
 SCHEMA = X.SCHEMA_ORG
 RDF_TYPE = X.RDF_TYPE
@@ -172,10 +173,7 @@ def gen_page(page_id: int, seed: int = 42) -> dict:
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
-EXPECTED_SCHEMA = (
-    "url string, subj string, pred string, obj_lexical string, "
-    "obj_kind string, obj_datatype string, obj_lang string"
-)
+EXPECTED_SCHEMA = "url string, " + TRIPLE_SCHEMA
 
 
 def pages_df(spark, n_pages: int, seed: int = 42, partitions: int | None = None):

@@ -33,7 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from trident_spark.pipeline.sinks import (
-    NT_PARSED_SCHEMA,
     _render_iri,
     _render_object,
     _render_subject,

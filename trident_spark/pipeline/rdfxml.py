@@ -41,15 +41,12 @@ import xml.etree.ElementTree as ET
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from trident_spark.pipeline.kg import TRIPLE_SCHEMA
+
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XML_NS = "http://www.w3.org/XML/1998/namespace"
 RDF_TYPE = RDF_NS + "type"
 XML_LITERAL = RDF_NS + "XMLLiteral"
-
-RDFXML_PARSED_SCHEMA = (
-    "subj string, pred string, obj_lexical string, obj_kind string, "
-    "obj_datatype string, obj_lang string"
-)
 
 
 class RdfXmlError(ValueError):
@@ -333,7 +330,7 @@ def from_rdfxml(docs: DataFrame, doc_col: str = "doc") -> DataFrame:
 
     from trident_spark.util import ensure_parallelism
 
-    return ensure_parallelism(docs).mapInPandas(run, RDFXML_PARSED_SCHEMA)
+    return ensure_parallelism(docs).mapInPandas(run, TRIPLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

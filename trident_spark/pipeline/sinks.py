@@ -21,6 +21,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from trident_spark.functions.iri_funcs import iri_to_uri
+from trident_spark.pipeline.kg import TRIPLE_SCHEMA
 
 _NON_ASCII = "[^\\x00-\\x7F]"
 
@@ -155,7 +156,7 @@ def from_nquads(lines: DataFrame, errors: str = "strict") -> DataFrame:
     from trident_spark.util import ensure_parallelism
 
     out = ensure_parallelism(lines).mapInPandas(
-        run, NT_PARSED_SCHEMA + ", graph string, error string")
+        run, TRIPLE_SCHEMA + ", graph string, error string")
     return out if quarantine else out.drop("error")
 
 
@@ -360,12 +361,6 @@ def parse_ntriples_line(line: str):
     return q[:6]
 
 
-NT_PARSED_SCHEMA = (
-    "subj string, pred string, obj_lexical string, obj_kind string, "
-    "obj_datatype string, obj_lang string"
-)
-
-
 def from_ntriples(lines: DataFrame, errors: str = "strict") -> DataFrame:
     """lines(line string) → parsed triples.  Same error contract as
     :func:`from_nquads` (strict raise / ``error`` quarantine column); quad
@@ -396,5 +391,5 @@ def from_ntriples(lines: DataFrame, errors: str = "strict") -> DataFrame:
     from trident_spark.util import ensure_parallelism
 
     out = ensure_parallelism(lines).mapInPandas(
-        run, NT_PARSED_SCHEMA + ", error string")
+        run, TRIPLE_SCHEMA + ", error string")
     return out if quarantine else out.drop("error")

@@ -43,6 +43,8 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from trident_spark.pipeline.kg import TRIPLE_SCHEMA
+
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_TYPE = RDF_NS + "type"
@@ -488,12 +490,6 @@ def parse_trig(text: str) -> list[tuple]:
     return _TrigParser(_tokenize(text), salt=salt).parse()
 
 
-TRIG_PARSED_SCHEMA = (
-    "subj string, pred string, obj_lexical string, obj_kind string, "
-    "obj_datatype string, obj_lang string, graph string"
-)
-
-
 def from_trig(docs: DataFrame, doc_col: str = "doc") -> DataFrame:
     """docs(doc string) — one TriG document per row → parsed quads."""
 
@@ -509,7 +505,8 @@ def from_trig(docs: DataFrame, doc_col: str = "doc") -> DataFrame:
 
     from trident_spark.util import ensure_parallelism
 
-    return ensure_parallelism(docs).mapInPandas(run, TRIG_PARSED_SCHEMA)
+    return ensure_parallelism(docs).mapInPandas(
+        run, TRIPLE_SCHEMA + ", graph string")
 
 
 def parse_turtle(text: str) -> list[tuple]:
@@ -522,12 +519,6 @@ def parse_turtle(text: str) -> list[tuple]:
 
     salt = hashlib.blake2b(text.encode("utf-8"), digest_size=16).hexdigest()
     return _Parser(_tokenize(text), salt=salt).parse()
-
-
-TURTLE_PARSED_SCHEMA = (
-    "subj string, pred string, obj_lexical string, obj_kind string, "
-    "obj_datatype string, obj_lang string"
-)
 
 
 def from_turtle(docs: DataFrame, doc_col: str = "doc") -> DataFrame:
@@ -545,4 +536,4 @@ def from_turtle(docs: DataFrame, doc_col: str = "doc") -> DataFrame:
 
     from trident_spark.util import ensure_parallelism
 
-    return ensure_parallelism(docs).mapInPandas(run, TURTLE_PARSED_SCHEMA)
+    return ensure_parallelism(docs).mapInPandas(run, TRIPLE_SCHEMA)

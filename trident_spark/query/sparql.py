@@ -61,13 +61,13 @@ and rejected loudly (a distributed engine calling per-row remote SPARQL
 endpoints is an anti-pattern at any scale; materialize the remote graph
 into the warehouse instead).
 
-Join semantics: runs of plain patterns join on 64-bit TERM-IDENTITY ids
-(a literal never matches an IRI with the same lexical form — the SPARQL
-semantics); patterns compiled on the single-pattern path (repeated vars
-aside, which add a same-term constraint: metadata-attachment patterns,
-GRAPH-var scopes, property-path endpoints) join on the lexical form
-alone, a documented approximation that diverges only when a literal and
-an IRI share their lexical form across join positions.
+Join semantics: every plain triple pattern compiles inside a run of
+patterns joined on 64-bit TERM-IDENTITY ids (a literal never matches an
+IRI with the same lexical form — the SPARQL semantics), a repeated
+variable included.  Joins BETWEEN group elements (runs, property-path
+endpoints, OPTIONAL, UNION, nested groups) key on the lexical form, a
+documented approximation that diverges only when a literal and an IRI
+share their lexical form across such a join.
 
 ``query_encoded`` runs this same compiler over the pipeline's
 dictionary-encoded tables: its runs scan the edge table's id columns and
@@ -1387,66 +1387,37 @@ def _compile_quoted(triples: DataFrame, pat: _Pattern,
 
 def _compile_pattern(triples: DataFrame, pat: _Pattern,
                      prefixes: dict[str, str], idx: int,
-                     extra: dict[str, str] | None = None,
-                     meta: set[str] | None = None
+                     extra: dict[str, str] | None = None
                      ) -> tuple[DataFrame, set[str]]:
+    """A property-path or quoted-triple pattern; plain patterns compile
+    in :func:`_compile_run_ids`."""
     if isinstance(pat.obj, _Quoted):
         return _compile_quoted(triples, pat, prefixes, idx, extra)
-    if isinstance(pat.pred, tuple):
-        per_graph = False
-        rename: dict[str, str] = {}
-        if extra:
-            if set(extra) != {"graph"}:
-                raise SparqlError("property paths inside nested GRAPH "
-                                  "scopes are not supported")
-            # GRAPH ?var: each named graph's path relation (and closure)
-            # is computed independently, keyed on the graph column
-            per_graph = True
-            rename["_pg"] = extra["graph"]
-        ends = {"_ps": pat.subj, "_po": pat.obj}
-        bound = {col: _term_value(term, prefixes)
-                 for col, term in ends.items() if not term.startswith("?")}
-        # the closure starts from the bound endpoints
-        scan = _compile_path(triples, pat.pred, prefixes, per_graph,
-                             subj=bound.get("_ps"), obj=bound.get("_po"))
-        for col, term in ends.items():
-            if col in bound:
-                scan = scan.where(F.col(col) == bound[col])
-            else:
-                rename[col] = term[1:]
-        out_vars = set(rename.values())
-        scan, rename = _dedupe_repeated_vars(scan, rename)
-        proj = [F.col(c).alias(v) for c, v in rename.items()]
-        if proj:
-            scan = scan.select(*proj).distinct()
-        else:
-            scan = scan.select(F.lit(1).alias(f"_m{idx}")).limit(1)
-        return scan, out_vars
-
-    scan, slots = _lexical_scan(triples, pat, prefixes)
-    rename = {_LEX_COLS[slot]: v for slot, v in slots.items()}
+    per_graph = False
+    rename: dict[str, str] = {}
     if extra:
-        rename.update(extra)  # GRAPH ?var: carry the graph term binding
+        if set(extra) != {"graph"}:
+            raise SparqlError("property paths inside nested GRAPH "
+                              "scopes are not supported")
+        # GRAPH ?var: each named graph's path relation (and closure)
+        # is computed independently, keyed on the graph column
+        per_graph = True
+        rename["_pg"] = extra["graph"]
+    ends = {"_ps": pat.subj, "_po": pat.obj}
+    bound = {col: _term_value(term, prefixes)
+             for col, term in ends.items() if not term.startswith("?")}
+    # the closure starts from the bound endpoints
+    scan = _compile_path(triples, pat.pred, prefixes, per_graph,
+                         subj=bound.get("_ps"), obj=bound.get("_po"))
+    for col, term in ends.items():
+        if col in bound:
+            scan = scan.where(F.col(col) == bound[col])
+        else:
+            rename[col] = term[1:]
     out_vars = set(rename.values())
-    # a repeated var must match the same RDF TERM: a literal object never
-    # equals an IRI/blank subject even when the lexical forms coincide
-    scan, rename = _dedupe_repeated_vars(scan, rename, exprs={
-        "subj": F.col("subj"), "pred": F.col("pred"),
-        "obj_lexical": F.when(F.col("obj_kind") != "literal",
-                              F.col("obj_lexical")),
-        "graph": F.col("graph"),
-    })
-    if meta and pat.obj in {f"?{v}" for v in meta}:
-        # LANG()/DATATYPE()/isIRI()-family filters need the term's metadata
-        # alongside the lexical binding — hidden _lang_/_dt_/_kind_ columns
-        v = pat.obj[1:]
-        rename["obj_lang"] = f"_lang_{v}"
-        rename["obj_datatype"] = f"_dt_{v}"
-        rename["obj_kind"] = f"_kind_{v}"
+    scan, rename = _dedupe_repeated_vars(scan, rename)
     proj = [F.col(c).alias(v) for c, v in rename.items()]
     if proj:
-        # RDF graphs are sets: duplicate captures of the same triple must
-        # not multiply solutions, so every pattern scan is set-projected
         scan = scan.select(*proj).distinct()
     else:
         scan = scan.select(F.lit(1).alias(f"_m{idx}")).limit(1)
@@ -1673,20 +1644,36 @@ def _reorder_patterns(patterns: list[_Pattern]) -> list[_Pattern]:
     return out
 
 
-def _reorder_group(elements: list) -> list:
-    """Reorder each maximal run of consecutive triple patterns; order
+def _group_runs(elements: list) -> list:
+    """Reorder each maximal stretch of triple patterns and batch its
+    consecutive plain patterns (no property path, no quoted triple) into
+    one ``("bgp_run", patterns)`` element.  FILTER and EXISTS apply at
+    the end of the group (§18.2), so they do not end a stretch; order
     across OPTIONAL/MINUS/BIND/... boundaries is preserved (those are
     sequence-sensitive in the SPARQL algebra)."""
     out: list = []
-    run: list[_Pattern] = []
+    stretch: list[_Pattern] = []
+
+    def flush():
+        for pat in _reorder_patterns(stretch):
+            if isinstance(pat.pred, tuple) or isinstance(pat.obj, _Quoted):
+                out.append(pat)
+            elif out and isinstance(out[-1], tuple) \
+                    and out[-1][0] == "bgp_run":
+                out[-1][1].append(pat)
+            else:
+                out.append(("bgp_run", [pat]))
+        stretch.clear()
+
     for el in elements:
         if isinstance(el, _Pattern):
-            run.append(el)
-        else:
-            out += _reorder_patterns(run)
-            run = []
+            stretch.append(el)
+        elif el[0] in ("filter", "exists"):
             out.append(el)
-    out += _reorder_patterns(run)
+        else:
+            flush()
+            out.append(el)
+    flush()
     return out
 
 
@@ -1739,38 +1726,42 @@ def _all_vars(obj) -> set[str]:
     return set()
 
 
-# --- dictionary-encoded BGP runs -------------------------------------------
-# Consecutive plain triple patterns compile to equi-joins on 64-bit term
-# ids (kg.term_id, the warehouse's own id over the term's kind/lexical/
-# datatype/lang identity) instead of lexical strings: intermediate joins
-# shuffle longs, and variables used only as join keys are never
-# materialized at all.  Lexical values come back via one small decode join
-# per *referenced* variable against the (already pred-filtered) scan that
-# bound it.  This also makes joins term-correct: a literal "x" never joins
-# an IRI "x".
+# --- BGP runs ----------------------------------------------------------------
+# Every plain triple pattern compiles inside a run of consecutive plain
+# patterns joined on 64-bit term ids (kg.term_id, the warehouse's own id
+# over the term's kind/lexical/datatype/lang identity), on a lexical frame
+# and on the warehouse alike: intermediate joins shuffle longs, variables
+# used only as join keys are never materialized, and the joins are
+# term-correct — a literal "x" never joins an IRI "x", and a variable a
+# pattern repeats is an id-equality filter.
 
-_ID_EXPRS = None
+_ID_EXPRS: dict[tuple[str, ...], dict] = {}
 
 
-def _id_exprs():
-    global _ID_EXPRS
-    if _ID_EXPRS is None:
-        from trident_spark.pipeline.kg import term_id
+def _id_exprs(columns=("obj_datatype", "obj_lang")) -> dict:
+    """``kg.term_id`` of each slot of a lexical frame with ``columns``
+    (a frame that records no datatype/lang hashes them as absent)."""
+    key = tuple(c for c in ("obj_datatype", "obj_lang") if c in columns)
+    if key not in _ID_EXPRS:
+        from trident_spark.pipeline.kg import subject_kind, term_id
 
-        # unskolemized `_:` subjects hash as kind "blank", the kind the
-        # object slot carries for them, so a blank node joins across slots
-        subj_kind = F.when(F.col("subj").startswith("_:"),
-                           F.lit("blank")).otherwise(F.lit("iri"))
-        _ID_EXPRS = {
-            "subj": term_id(subj_kind, F.col("subj")),
+        meta = [F.col(c) if c in key else None
+                for c in ("obj_datatype", "obj_lang")]
+        _ID_EXPRS[key] = {
+            slot: term_id(subject_kind(F.col(slot)), F.col(slot))
+            for slot in ("subj", "graph")
+        } | {
             "pred": term_id(F.lit("iri"), F.col("pred")),
-            "obj": term_id(F.col("obj_kind"), F.col("obj_lexical"),
-                           F.col("obj_datatype"), F.col("obj_lang")),
+            "obj": term_id(F.col("obj_kind"), F.col("obj_lexical"), *meta),
         }
-    return _ID_EXPRS
+    return _ID_EXPRS[key]
 
 
-_LEX_COLS = {"subj": "subj", "pred": "pred", "obj": "obj_lexical"}
+_LEX_COLS = {"subj": "subj", "pred": "pred", "obj": "obj_lexical",
+             "graph": "graph"}
+# hidden metadata columns of a variable → the lexical frame's object columns
+_META_COLS = {"_kind_": "obj_kind", "_dt_": "obj_datatype",
+              "_lang_": "obj_lang"}
 
 
 @dataclass
@@ -1868,63 +1859,63 @@ def _lexical_scan(triples: DataFrame, pat: _Pattern,
     return scan, rename
 
 
-# test hook: the differential fuzz gate (tests/test_sparql_fuzz.py) flips
-# this off to compare id-run plans against pure single-pattern compilation
-_ID_RUNS_ENABLED = True
-
-
-def _run_eligible(pat, meta: set[str], extra) -> bool:
-    if not _ID_RUNS_ENABLED:
-        return False
-    if extra is not None or isinstance(pat.pred, tuple) \
-            or isinstance(pat.obj, _Quoted):
-        return False
-    vars_ = [t[1:] for t in (pat.subj, pat.pred, pat.obj)
-             if isinstance(t, str) and t.startswith("?")]
-    if len(vars_) != len(set(vars_)):
-        return False  # repeated-var patterns use the single-pattern path
-    if meta and pat.obj.startswith("?") and pat.obj[1:] in meta:
-        return False  # metadata attachment stays on the single path
-    return True
-
-
 def _compile_run_ids(triples: DataFrame | _Warehouse, run: list[_Pattern],
                      prefixes: dict[str, str],
                      needed: set[str] | None,
-                     meta: set[str] = frozenset()
+                     meta: set[str] = frozenset(),
+                     extra: dict[str, str] | None = None
                      ) -> tuple[DataFrame, set[str]]:
     """A run of plain patterns → solutions joined on ``_tid_`` ids, with
     lexical columns for the ``needed`` variables (all when None);
-    join-only variables stay ids.
+    join-only variables stay ids.  A variable that a pattern repeats is
+    one term, so its slots' ids must be equal; ``extra`` (GRAPH ?var)
+    adds the graph column as one more slot.  The variables in ``meta``
+    get ``_kind_``/``_dt_``/``_lang_`` columns.
 
     On a lexical frame each needed variable carries its value from the
-    scan that binds it first, so no pattern is re-scanned to decode, and
-    scans stay ``distinct``: the frame may hold a triple from several
-    captures.  On a :class:`_Warehouse` the scans read only the edge
-    table's id columns and are sets already (:func:`query_encoded`); each
-    needed variable decodes through one ``terms`` join, which also gives
-    the variables in ``meta`` their ``_kind_``/``_dt_``/``_lang_``
-    columns."""
+    scan that binds it first, and a ``meta`` variable its metadata from
+    the scan that binds it in object position, so no pattern is
+    re-scanned to decode; scans stay ``distinct`` (the frame may hold a
+    triple from several captures), and the ids keep term identity.  On
+    a :class:`_Warehouse` the scans read only the edge table's id
+    columns and are sets already (:func:`query_encoded`); each needed
+    variable decodes through one ``terms`` join, which also carries its
+    metadata."""
     wh = isinstance(triples, _Warehouse)
-    scan_of = _warehouse_scan if wh else _lexical_scan
-    ids = ({slot: F.col(f"{slot}_id") for slot in _LEX_COLS} if wh
-           else _id_exprs())
+    if wh:
+        scan_of = _warehouse_scan
+        ids = {slot: F.col(f"{slot}_id") for slot in ("subj", "pred", "obj")}
+    else:
+        scan_of = _lexical_scan
+        ids = _id_exprs(triples.columns)
     plan: DataFrame | None = None
     bound: set[str] = set()
     for k, pat in enumerate(run):
         scan, rename = scan_of(triples, pat, prefixes)
-        proj = [ids[slot].alias(f"_tid_{v}") for slot, v in rename.items()]
+        rename.update(extra or {})
+        slot_of: dict[str, str] = {}
+        for slot, v in rename.items():
+            if v in slot_of:
+                scan = scan.where(ids[slot_of[v]] == ids[slot])
+            else:
+                slot_of[v] = slot
+        proj = [ids[slot].alias(f"_tid_{v}") for v, slot in slot_of.items()]
         if not wh:
             proj += [F.col(_LEX_COLS[slot]).alias(v)
-                     for slot, v in rename.items()
+                     for v, slot in slot_of.items()
                      if v not in bound and (needed is None or v in needed)]
+            o = rename.get("obj")
+            if o in meta:
+                proj += [F.col(c).alias(f"{m}{o}")
+                         for m, c in _META_COLS.items()]
+                meta = meta - {o}
         if not proj:
             idscan = scan.select(F.lit(1).alias(f"_tid1_{k}")).limit(1)
         else:
             idscan = scan.select(*proj)
             if not wh:
                 idscan = idscan.distinct()
-        vars_ = set(rename.values())
+        vars_ = set(slot_of)
         if plan is None:
             plan = idscan
         else:
@@ -1938,9 +1929,8 @@ def _compile_run_ids(triples: DataFrame | _Warehouse, run: list[_Pattern],
             cols = [F.col("term_id").alias(f"_tid_{v}"),
                     F.col("lexical").alias(v)]
             if v in meta:
-                cols += [F.col("kind").alias(f"_kind_{v}"),
-                         F.col("datatype").alias(f"_dt_{v}"),
-                         F.col("lang").alias(f"_lang_{v}")]
+                cols += [F.col(c.removeprefix("obj_")).alias(f"{m}{v}")
+                         for m, c in _META_COLS.items()]
             plan = plan.join(triples.terms.select(*cols), f"_tid_{v}")
     drop = [c for c in plan.columns if c.startswith(("_tid_", "_tid1_"))]
     return plan.drop(*drop), decoded
@@ -1994,29 +1984,8 @@ def _compile_group(triples: DataFrame, group: _Group,
             raise SparqlError(
                 f"LANG/DATATYPE(?{v}) is ambiguous: ?{v} is bound in "
                 "object position by more than one pattern")
-    # batch consecutive id-join-eligible patterns into BGP runs.  The
-    # warehouse has no lexical columns to scan, so there a single pattern
-    # is a run too, and a metadata variable stays in its run: the decode
-    # join supplies the metadata
     wh = isinstance(triples, _Warehouse)
-    elements: list = []
-    buf: list[_Pattern] = []
-
-    def _flush():
-        if len(buf) >= 2 or (wh and buf):
-            elements.append(("bgp_run", list(buf)))
-        elif buf:
-            elements.append(buf[0])
-        buf.clear()
-
-    for el in _reorder_group(group.elements):
-        if isinstance(el, _Pattern) and _run_eligible(
-                el, set() if wh else meta, extra):
-            buf.append(el)
-        else:
-            _flush()
-            elements.append(el)
-    _flush()
+    elements = _group_runs(group.elements)
 
     # variables that may be NULL = unbound in `plan` (VALUES UNDEF
     # cells): subsequent joins on them use §10.2 compatibility (_join)
@@ -2042,19 +2011,11 @@ def _compile_group(triples: DataFrame, group: _Group,
                 p.obj[1:] for p in el[1] if p.obj.startswith("?")}
             meta_provided |= run_meta
             scan, vars_ = _compile_run_ids(triples, el[1], prefixes,
-                                           run_needed, run_meta)
+                                           run_needed, run_meta, extra)
             how = "inner"
         elif isinstance(el, _Pattern):
-            pat_meta = meta
-            if meta and not isinstance(el.obj, _Quoted) \
-                    and el.obj.startswith("?") and el.obj[1:] in meta:
-                v = el.obj[1:]
-                if v in meta_provided:
-                    pat_meta = meta - {v}
-                else:
-                    meta_provided.add(v)
             scan, vars_ = _compile_pattern(triples.lexical if wh else triples,
-                                           el, prefixes, idx, extra, pat_meta)
+                                           el, prefixes, idx, extra)
             how = "inner"
         elif el[0] == "filter":
             filters.append(el[1])
@@ -2320,10 +2281,9 @@ def _compile_group(triples: DataFrame, group: _Group,
             if f"_kind_{v}" in plan.columns or v not in bound:
                 continue
             if v in subjpred:
-                plan = (plan.withColumn(
-                    f"_kind_{v}",
-                    F.when(F.col(v).startswith("_:"), F.lit("blank"))
-                    .otherwise(F.lit("iri")))
+                from trident_spark.pipeline.kg import subject_kind
+
+                plan = (plan.withColumn(f"_kind_{v}", subject_kind(F.col(v)))
                     .withColumn(f"_lang_{v}",
                                 F.lit(None).cast("string"))
                     .withColumn(f"_dt_{v}", F.lit(None).cast("string")))
@@ -3266,122 +3226,6 @@ def _anti_by_term(out: DataFrame, delete_df: DataFrame,
     return out.join(d, cond, "left_anti")
 
 
-@_public
-def update(triples: DataFrame, sparql: str) -> DataFrame:
-    """SPARQL 1.1 Update over an immutable graph: returns the NEW lexical
-    triples frame (never mutates the input — the natural Update semantics
-    on top of snapshot tables like Iceberg: write the result as the next
-    snapshot).
-
-    Supported: ``INSERT DATA { ground }``, ``DELETE DATA { ground }``,
-    ``DELETE WHERE { patterns }``, and the template form
-    ``[DELETE { t }] [INSERT { t }] WHERE { group }``.
-
-    Deletion matches on full RDF term identity: (subj, pred, obj_lexical,
-    obj_kind) plus — whenever the input frame records them — obj_datatype
-    and obj_lang (null-safe; ``"x"^^xsd:string`` ≡ plain ``"x"`` per
-    RDF 1.1).  Inserted literal rows carry their @lang / ^^datatype;
-    extra columns of the input frame stay NULL on inserted rows."""
-    if "graph" in triples.columns:
-        raise SparqlError(
-            "update() on a quads frame would delete across every graph — "
-            "use update_quads() for graph-aware Update semantics")
-    toks, prefixes = _prep(sparql)
-    if not toks:
-        raise SparqlError("empty update")
-    spark = triples.sparkSession
-
-    def insert_frame(rows: list[tuple]) -> DataFrame:
-        return spark.createDataFrame(
-            rows, "subj string, pred string, obj_lexical string, "
-                  "obj_kind string, obj_datatype string, obj_lang string")
-
-    def apply(delete_df: DataFrame | None,
-              insert_df: DataFrame | None) -> DataFrame:
-        out = triples
-        if delete_df is not None:
-            out = _anti_by_term(out, delete_df)
-        if insert_df is not None:
-            keep = _CORE + [c for c in _LIT_META if c in triples.columns]
-            out = out.unionByName(insert_df.select(*keep).distinct(),
-                                  allowMissingColumns=True)
-        return out
-
-    head = toks[0].upper()
-    if head in ("INSERT", "DELETE") and len(toks) > 1 \
-            and toks[1].upper() == "DATA":
-        if len(toks) < 3 or toks[2] != "{":
-            raise SparqlError(f"{head} DATA requires a group")
-        group, i = _parse_group(toks, 3)
-        if toks[i:]:
-            raise SparqlError(f"unexpected token after DATA: {toks[i]!r}")
-        df = insert_frame(_ground_rows(group, prefixes))
-        return apply(df, None) if head == "DELETE" else apply(None, df)
-
-    if head == "DELETE" and len(toks) > 1 and toks[1].upper() == "WHERE":
-        # DELETE WHERE { patterns }: the pattern group is its own template
-        if len(toks) < 3 or toks[2] != "{":
-            raise SparqlError("DELETE WHERE requires a group")
-        group, i = _parse_group(toks, 3)
-        if toks[i:]:
-            raise SparqlError(
-                f"unexpected token after DELETE WHERE: {toks[i]!r}")
-        template = [el for el in group.elements if isinstance(el, _Pattern)]
-        if len(template) != len(group.elements) or not template:
-            raise SparqlError(
-                "DELETE WHERE group must be plain triple patterns")
-        plan, bound = _compile_group(triples, group, prefixes,
-                                     want_meta=_template_obj_vars(template))
-        matched = _instantiate(triples, template, plan, bound, prefixes)
-        return apply(matched, None)
-
-    # template form: [DELETE { t }] [INSERT { t }] WHERE { group }
-    i = 0
-    del_tmpl: list | None = None
-    ins_tmpl: list | None = None
-    while i < len(toks) and toks[i].upper() in ("DELETE", "INSERT"):
-        kw = toks[i].upper()
-        if i + 1 >= len(toks) or toks[i + 1] != "{":
-            raise SparqlError(f"{kw} requires a template group")
-        tg, i = _parse_group(toks, i + 2)
-        tmpl = [el for el in tg.elements if isinstance(el, _Pattern)]
-        if len(tmpl) != len(tg.elements) or not tmpl:
-            raise SparqlError(f"{kw} template must be plain triple patterns")
-        if kw == "DELETE":
-            if del_tmpl is not None:
-                raise SparqlError("duplicate DELETE template")
-            del_tmpl = tmpl
-        else:
-            if ins_tmpl is not None:
-                raise SparqlError("duplicate INSERT template")
-            ins_tmpl = tmpl
-    if del_tmpl is None and ins_tmpl is None:
-        raise SparqlError(
-            "expected INSERT DATA / DELETE DATA / DELETE WHERE / "
-            "DELETE-INSERT-WHERE")
-    if i >= len(toks) or toks[i].upper() != "WHERE" \
-            or i + 1 >= len(toks) or toks[i + 1] != "{":
-        raise SparqlError("update template form requires WHERE { ... }")
-    group, j = _parse_group(toks, i + 2)
-    if toks[j:]:
-        raise SparqlError(f"unexpected token after WHERE: {toks[j]!r}")
-    plan, bound = _compile_group(
-        triples, group, prefixes,
-        want_meta=_template_obj_vars(del_tmpl) | _template_obj_vars(ins_tmpl))
-    delete_df = (_instantiate(triples, del_tmpl, plan, bound, prefixes)
-                 if del_tmpl else None)
-    insert_df = (_instantiate(triples, ins_tmpl, plan, bound, prefixes)
-                 if ins_tmpl else None)
-    return apply(delete_df, insert_df)
-
-
-# ---------------------------------------------------------------------------
-# SPARQL 1.1 Update with graph scope — immutable quads frame
-# ---------------------------------------------------------------------------
-
-_QCORE = _CORE + ["graph"]
-
-
 def _graph_ref(toks: list[str], i: int,
                prefixes: dict[str, str]) -> tuple[str, str | None, int]:
     """DEFAULT | NAMED | ALL | [GRAPH] <iri> → (kind, iri|None, next_i)."""
@@ -3426,41 +3270,76 @@ def _flatten_template(group: _Group, with_graph: str | None,
 
 
 @_public
-def update_quads(quads: DataFrame, sparql: str) -> DataFrame:
-    """SPARQL 1.1 Update with graph scope over an immutable quads frame
-    (``graph`` column, NULL = default graph): returns the NEW quads frame
-    — snapshot-table semantics, like :func:`update`.
+def update(frame: DataFrame, sparql: str) -> DataFrame:
+    """SPARQL 1.1 Update over an immutable graph: returns the NEW frame
+    (never mutates the input — the natural Update semantics on top of
+    snapshot tables like Iceberg: write the result as the next snapshot).
 
-    Supported: ``CLEAR``/``DROP`` ``[SILENT] (GRAPH <g> | DEFAULT | NAMED
-    | ALL)``; ``CREATE [SILENT] GRAPH <g>`` (a no-op — graphs exist
-    implicitly in the quads model, so CREATE cannot fail and CLEAR ≡ DROP);
-    ``MOVE/COPY/ADD [SILENT] (DEFAULT|[GRAPH] <g>) TO (DEFAULT|[GRAPH]
-    <g>)``; ``INSERT DATA``/``DELETE DATA`` with ``GRAPH { }`` blocks;
-    and the template form with ``WITH <g>``, ``USING <g>`` dataset
-    clauses, and ``GRAPH { }`` template blocks.
+    ``frame`` holds lexical triples, or quads with a ``graph`` column
+    (NULL = the default graph), as for :func:`query`.  A triples frame is
+    the default graph alone: an operation that names any other graph
+    (a GRAPH/NAMED target, WITH, USING, GRAPH in WHERE) raises
+    :class:`SparqlError` instead of merging into the default graph.
 
-    Deletion matches on full term identity — (subj, pred, obj_lexical,
-    obj_kind, graph) plus obj_datatype/obj_lang when the frame records
-    them; null-safe on graph, so default-graph rows delete correctly."""
+    Supported: ``INSERT DATA``/``DELETE DATA`` with ``GRAPH { }`` blocks;
+    ``DELETE WHERE { patterns }``; the template form ``[WITH <g>]
+    [DELETE { t }] [INSERT { t }] (USING [NAMED] <g>)* WHERE { group }``
+    with ``GRAPH { }`` template blocks; ``CLEAR``/``DROP`` ``[SILENT]
+    (GRAPH <g> | DEFAULT | NAMED | ALL)``; ``CREATE [SILENT] GRAPH <g>``
+    (a no-op — graphs exist implicitly in the quads model, so CREATE
+    cannot fail and CLEAR ≡ DROP); ``MOVE/COPY/ADD [SILENT] (DEFAULT|
+    [GRAPH] <g>) TO (DEFAULT|[GRAPH] <g>)``.
+
+    Deletion matches on full RDF term identity: (subj, pred, obj_lexical,
+    obj_kind, graph) plus — whenever the frame records them —
+    obj_datatype and obj_lang (null-safe; ``"x"^^xsd:string`` ≡ plain
+    ``"x"`` per RDF 1.1; null-safe on graph, so default-graph rows delete
+    correctly).  Inserted literal rows carry their @lang / ^^datatype;
+    extra columns of the input frame stay NULL on inserted rows."""
+    from trident_spark.pipeline.kg import TRIPLE_SCHEMA
+
     toks, prefixes = _prep(sparql)
     if not toks:
         raise SparqlError("empty update")
-    if "graph" not in quads.columns:
-        raise SparqlError("update_quads requires a quads frame "
-                          "(a 'graph' column); use update() for triples")
-    spark = quads.sparkSession
-    gnull = F.col("graph").isNull()
+    named = "graph" in frame.columns
+    quads = frame if named else frame.withColumn(
+        "graph", F.lit(None).cast("string"))
+
+    def graph(iri: str | None) -> str | None:
+        """A graph the operation names: a triples frame has none."""
+        if iri is not None and not named:
+            raise SparqlError(
+                f"update targets a named graph ({iri}), but a triples "
+                "frame is the default graph alone (pass quads with a "
+                "'graph' column)")
+        return iri
+
+    def result(out: DataFrame) -> DataFrame:
+        return out if named else out.drop("graph")
 
     def gmatch(kind: str, iri: str | None):
         if kind == "default":
-            return gnull
-        if kind == "named":
-            return ~gnull
+            return F.col("graph").isNull()
         if kind == "all":
             return F.lit(True)
+        if kind == "named":
+            graph("NAMED")
+            return F.col("graph").isNotNull()
         # null-safe: ~(NULL == iri) is NULL and would silently drop the
         # default graph's rows from every negated filter
-        return F.col("graph").eqNullSafe(F.lit(iri))
+        return F.col("graph").eqNullSafe(F.lit(graph(iri)))
+
+    def apply(delete_df: DataFrame | None,
+              insert_df: DataFrame | None) -> DataFrame:
+        out = quads
+        if delete_df is not None:
+            out = _anti_by_term(out, delete_df, extra_keys=["graph"])
+        if insert_df is not None:
+            keep = _CORE + ["graph"] + [c for c in _LIT_META
+                                        if c in quads.columns]
+            out = out.unionByName(insert_df.select(*keep).distinct(),
+                                  allowMissingColumns=True)
+        return result(out)
 
     head = toks[0].upper()
     i = 1
@@ -3473,8 +3352,9 @@ def update_quads(quads: DataFrame, sparql: str) -> DataFrame:
         if head == "CREATE":
             if kind != "iri":
                 raise SparqlError("CREATE takes GRAPH <iri>")
-            return quads
-        return quads.where(~gmatch(kind, iri))
+            graph(iri)
+            return frame
+        return result(quads.where(~gmatch(kind, iri)))
 
     if head in ("MOVE", "COPY", "ADD"):
         if i < len(toks) and toks[i].upper() == "SILENT":
@@ -3485,49 +3365,20 @@ def update_quads(quads: DataFrame, sparql: str) -> DataFrame:
         dkind, diri, i = _graph_ref(toks, i + 1, prefixes)
         if toks[i:]:
             raise SparqlError(f"unexpected token after {head}: {toks[i]!r}")
-        for k in (skind, dkind):
+        for k, iri in ((skind, siri), (dkind, diri)):
             if k not in ("default", "iri"):
                 raise SparqlError(f"{head} takes DEFAULT or GRAPH <iri>")
+            graph(iri)
         if (skind, siri) == (dkind, diri):
-            return quads
+            return frame
         moved = quads.where(gmatch(skind, siri)).withColumn(
-            "graph",
-            F.lit(diri) if dkind == "iri" else F.lit(None).cast("string"))
+            "graph", F.lit(diri).cast("string"))
         if head == "ADD":
-            return quads.unionByName(moved).distinct()
+            return result(quads.unionByName(moved).distinct())
         out = quads.where(~gmatch(dkind, diri))
         if head == "MOVE":
             out = out.where(~gmatch(skind, siri))
-        return out.unionByName(moved).distinct()
-
-    def apply_q(delete_df: DataFrame | None,
-                insert_df: DataFrame | None) -> DataFrame:
-        out = quads
-        if delete_df is not None:
-            out = _anti_by_term(out, delete_df, extra_keys=["graph"])
-        if insert_df is not None:
-            keep = _QCORE + [c for c in _LIT_META if c in quads.columns]
-            out = out.unionByName(
-                insert_df.select(*keep).distinct(),
-                allowMissingColumns=True)
-        return out
-
-    def ground_quads(group: _Group) -> DataFrame:
-        rows: list[tuple] = []
-        for el in group.elements:
-            if isinstance(el, tuple) and el and el[0] == "graph":
-                term, sub = el[1], el[2]
-                if term.startswith("?"):
-                    raise SparqlError("GRAPH in DATA blocks must be an IRI")
-                g = _expand(term, prefixes)
-                rows += [r + (g,) for r in _ground_rows(sub, prefixes)]
-            else:
-                one = _Group(elements=[el])
-                rows += [r + (None,) for r in _ground_rows(one, prefixes)]
-        return spark.createDataFrame(
-            rows, "subj string, pred string, obj_lexical string, "
-                  "obj_kind string, obj_datatype string, obj_lang string, "
-                  "graph string")
+        return result(out.unionByName(moved).distinct())
 
     if head in ("INSERT", "DELETE") and len(toks) > 1 \
             and toks[1].upper() == "DATA":
@@ -3536,109 +3387,105 @@ def update_quads(quads: DataFrame, sparql: str) -> DataFrame:
         group, j = _parse_group(toks, 3)
         if toks[j:]:
             raise SparqlError(f"unexpected token after DATA: {toks[j]!r}")
-        df = ground_quads(group)
-        return apply_q(df, None) if head == "DELETE" else apply_q(None, df)
+        rows: list[tuple] = []
+        for el in group.elements:
+            if isinstance(el, tuple) and el and el[0] == "graph":
+                if el[1].startswith("?"):
+                    raise SparqlError("GRAPH in DATA blocks must be an IRI")
+                g = graph(_expand(el[1], prefixes))
+                rows += [r + (g,) for r in _ground_rows(el[2], prefixes)]
+            else:
+                rows += [r + (None,) for r in
+                         _ground_rows(_Group(elements=[el]), prefixes)]
+        df = frame.sparkSession.createDataFrame(
+            rows, TRIPLE_SCHEMA + ", graph string")
+        return apply(df, None) if head == "DELETE" else apply(None, df)
 
     with_graph: str | None = None
     if head == "WITH":
         if len(toks) < 2:
             raise SparqlError("WITH requires a graph IRI")
-        with_graph = _expand(toks[1], prefixes)
+        with_graph = graph(_expand(toks[1], prefixes))
         toks = toks[2:]
-        head = toks[0].upper() if toks else ""
-
+    # DELETE WHERE { group } (the group is its own template), or
     # [DELETE {t}] [INSERT {t}] (USING [NAMED] <g>)* WHERE { group }
-    i = 0
     del_tg: _Group | None = None
     ins_tg: _Group | None = None
-    while i < len(toks) and toks[i].upper() in ("DELETE", "INSERT"):
-        kw = toks[i].upper()
-        if kw == "DELETE" and toks[i + 1 : i + 2] \
-                and toks[i + 1].upper() == "WHERE":
-            # DELETE WHERE { patterns }: the group is its own template
-            if toks[i + 2 : i + 3] != ["{"]:
-                raise SparqlError("DELETE WHERE requires a group")
-            group, j = _parse_group(toks, i + 3)
-            if toks[j:]:
-                raise SparqlError(
-                    f"unexpected token after DELETE WHERE: {toks[j]!r}")
-            del_tg, ins_tg = group, None
-            return _apply_templates(quads, spark, prefixes, with_graph,
-                                    [], group, del_tg, ins_tg, apply_q)
-        if toks[i + 1 : i + 2] != ["{"]:
-            raise SparqlError(f"{kw} requires a template group")
-        tg, i = _parse_group(toks, i + 2)
-        if kw == "DELETE":
-            if del_tg is not None:
-                raise SparqlError("duplicate DELETE template")
-            del_tg = tg
-        else:
-            if ins_tg is not None:
-                raise SparqlError("duplicate INSERT template")
-            ins_tg = tg
-    if del_tg is None and ins_tg is None:
-        raise SparqlError("expected an update operation")
     using: list[str] = []
     using_named: list[str] = []
-    while i < len(toks) and toks[i].upper() == "USING":
-        i += 1
-        if i < len(toks) and toks[i].upper() == "NAMED":
+    i = 0
+    if [t.upper() for t in toks[:2]] == ["DELETE", "WHERE"]:
+        if toks[2:3] != ["{"]:
+            raise SparqlError("DELETE WHERE requires a group")
+        group, j = _parse_group(toks, 3)
+        del_tg = group
+    else:
+        while i < len(toks) and toks[i].upper() in ("DELETE", "INSERT"):
+            kw = toks[i].upper()
+            if toks[i + 1 : i + 2] != ["{"]:
+                raise SparqlError(f"{kw} requires a template group")
+            tg, i = _parse_group(toks, i + 2)
+            if kw == "DELETE" and del_tg is None:
+                del_tg = tg
+            elif kw == "INSERT" and ins_tg is None:
+                ins_tg = tg
+            else:
+                raise SparqlError(f"duplicate {kw} template")
+        if del_tg is None and ins_tg is None:
+            raise SparqlError(
+                "expected INSERT DATA / DELETE DATA / DELETE WHERE / "
+                "DELETE-INSERT-WHERE / a graph operation")
+        while i < len(toks) and toks[i].upper() == "USING":
             i += 1
-            using_named.append(_expand(toks[i], prefixes))
-        else:
-            using.append(_expand(toks[i], prefixes))
-        i += 1
-    if toks[i : i + 2] != ["WHERE", "{"] and not (
-            i < len(toks) and toks[i].upper() == "WHERE"
-            and toks[i + 1 : i + 2] == ["{"]):
-        raise SparqlError("update template form requires WHERE { ... }")
-    group, j = _parse_group(toks, i + 2)
+            into = using
+            if i < len(toks) and toks[i].upper() == "NAMED":
+                i += 1
+                into = using_named
+            if i >= len(toks):
+                raise SparqlError("USING requires a graph IRI")
+            into.append(graph(_expand(toks[i], prefixes)))
+            i += 1
+        if i >= len(toks) or toks[i].upper() != "WHERE" \
+                or toks[i + 1 : i + 2] != ["{"]:
+            raise SparqlError("update template form requires WHERE { ... }")
+        group, j = _parse_group(toks, i + 2)
     if toks[j:]:
         raise SparqlError(f"unexpected token after WHERE: {toks[j]!r}")
-    return _apply_templates(quads, spark, prefixes, with_graph, using,
-                            group, del_tg, ins_tg, apply_q, using_named)
 
-
-def _apply_templates(quads, spark, prefixes, with_graph, using, group,
-                     del_tg, ins_tg, apply_q,
-                     using_named: list[str] | None = None):
-    """Compile the WHERE group against the scoped dataset and instantiate
-    the (possibly GRAPH-scoped) templates."""
+    # (patterns, target graph) lists of the DELETE and INSERT templates
+    templates = [None if tg is None else
+                 [(pats, graph(g)) for pats, g
+                  in _flatten_template(tg, with_graph, prefixes)]
+                 for tg in (del_tg, ins_tg)]
+    # top-level WHERE patterns see the USING graphs, else the WITH graph,
+    # else the default graph; GRAPH patterns see every named graph — or,
+    # with USING/USING NAMED clauses, exactly the USING NAMED list (empty
+    # when only plain USING is given, per SPARQL 1.1 Update)
     if using:
         scope = quads.where(F.col("graph").isin(using))
     elif with_graph is not None:
         scope = quads.where(F.col("graph") == with_graph)
     else:
         scope = quads.where(F.col("graph").isNull())
-    # top-level patterns see the scoped "default" graph; GRAPH patterns in
-    # WHERE see the full dataset — unless USING/USING NAMED clauses define
-    # one, in which case the named-graph set is exactly the USING NAMED
-    # list (empty when only plain USING is given, per SPARQL 1.1 Update)
-    graph_quads = quads
-    if using or using_named:
-        graph_quads = quads.where(
-            F.col("graph").isin(using_named or []))
+    graph_quads = None
+    if named:
+        graph_quads = quads.where(F.col("graph").isin(using_named)) \
+            if using or using_named else quads
     want = set()
-    for tg in (del_tg, ins_tg):
-        if tg is not None:
-            for pats, _ in _flatten_template(tg, with_graph, prefixes):
-                want |= _template_obj_vars(pats)
+    for pats, _ in (templates[0] or []) + (templates[1] or []):
+        want |= _template_obj_vars(pats)
     plan, bound = _compile_group(scope.drop("graph"), group, prefixes,
                                  quads=graph_quads, want_meta=want)
 
-    def inst(tg: _Group | None) -> DataFrame | None:
-        if tg is None:
-            return None
-        parts = []
-        for pats, g in _flatten_template(tg, with_graph, prefixes):
-            part = _instantiate(quads, pats, plan, bound, prefixes)
-            parts.append(part.withColumn("graph", F.lit(g)))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+    def inst(parts: list | None) -> DataFrame | None:
+        out = None
+        for pats, g in parts or []:
+            part = _instantiate(quads, pats, plan, bound, prefixes) \
+                .withColumn("graph", F.lit(g).cast("string"))
+            out = part if out is None else out.unionByName(part)
         return out
 
-    return apply_q(inst(del_tg), inst(ins_tg))
+    return apply(*map(inst, templates))
 
 
 @_public
@@ -3649,12 +3496,12 @@ def query_encoded(edges: DataFrame, terms: DataFrame,
     ``terms``): the same compiler and the same answers as
     ``query(kg.decode_triples(edges, terms), sparql)``.
 
-    Runs of plain triple patterns scan only the 8-byte id columns of
-    ``edges`` (parquet prunes the rest at the source), filter constants
-    on their folded ``kg.term_id``, join on ids, and decode each variable
-    the query needs with one ``terms`` join.  Elements that need lexical
-    columns (property paths, quoted triples, a pattern that repeats a
-    variable) read the decoded graph, built only when one occurs.
+    Plain triple patterns scan only the 8-byte id columns of ``edges``
+    (parquet prunes the rest at the source), filter constants on their
+    folded ``kg.term_id``, compare a repeated variable's ids, join on
+    ids, and decode each variable the query needs with one ``terms``
+    join.  Property paths and quoted triples read the decoded graph,
+    built only when one occurs.
 
     Contracts (as ``kg.dedup_triples`` and ``kg.encode_triples`` write
     the tables): ``edges`` is a set of ``(subj_id, pred_id, obj_id)``
