@@ -218,9 +218,9 @@ def test_cross_pattern_term_identity(spark):
 
 
 def test_run_literal_constant_full_term_identity(spark):
-    """r5 regression: a literal CONSTANT inside a >=2-pattern id-run must
-    match by full (lexical, lang, datatype) identity exactly like the
-    single-pattern path — a plain "hello" never matches "hello"@fr."""
+    """r5 regression: a literal CONSTANT inside an id run matches by full
+    (lexical, lang, datatype) identity, in a run of one pattern or two —
+    a plain "hello" never matches "hello"@fr."""
     rows = [
         ("http://x/s1", "http://p/n", "hello", "literal", None, "fr"),
         ("http://x/s1", "http://p/q", "y1", "literal", None, None),

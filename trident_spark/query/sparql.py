@@ -3194,17 +3194,17 @@ _CORE = ["subj", "pred", "obj_lexical", "obj_kind"]
 _LIT_META = ["obj_datatype", "obj_lang"]
 
 
-def _anti_by_term(out: DataFrame, delete_df: DataFrame,
-                  extra_keys: tuple[str, ...] = ()) -> DataFrame:
-    """``out`` minus ``delete_df``, matched by full RDF term identity:
-    the _CORE key plus — when the base frame records them — obj_datatype
-    and obj_lang, compared null-safely with ``"x"^^xsd:string`` ≡ plain
-    ``"x"`` (RDF 1.1 identifies the two).  Null-safe equality keys stay
+def _anti_by_term(out: DataFrame, delete_df: DataFrame) -> DataFrame:
+    """Quads ``out`` minus ``delete_df``, matched by full RDF term
+    identity: the _CORE key and the graph plus — when the base frame
+    records them — obj_datatype and obj_lang, compared null-safely with
+    ``"x"^^xsd:string`` ≡ plain ``"x"`` (RDF 1.1 identifies the two).
+    Null-safe equality keys stay
     hash-joinable (Spark plans EqualNullSafe as a shuffled/broadcast hash
     join — never a theta join)."""
     meta = [c for c in _LIT_META
             if c in out.columns and c in delete_df.columns]
-    keys = _CORE + list(extra_keys)
+    keys = _CORE + ["graph"]
     d = delete_df.select(*(keys + meta)).distinct()
     d = d.select(*[F.col(c).alias(f"_del_{c}") for c in keys + meta])
     cond = None
@@ -3333,7 +3333,7 @@ def update(frame: DataFrame, sparql: str) -> DataFrame:
               insert_df: DataFrame | None) -> DataFrame:
         out = quads
         if delete_df is not None:
-            out = _anti_by_term(out, delete_df, extra_keys=["graph"])
+            out = _anti_by_term(out, delete_df)
         if insert_df is not None:
             keep = _CORE + ["graph"] + [c for c in _LIT_META
                                         if c in quads.columns]
