@@ -104,3 +104,20 @@ def test_every_library_module_is_reachable_from_an_entry_point():
     library = set((REPO / "trident_spark").rglob("*.py"))
     dead = sorted(str(p.relative_to(REPO)) for p in library - reached)
     assert not dead, f"modules no entry point imports: {dead}"
+
+
+def test_query_modules_take_term_ids_from_kg_term_id():
+    """One term-id space: no module under trident_spark/query/ hashes a
+    term itself (a call to xxhash64, or SQL text calling it); term ids
+    come only from kg.term_id."""
+    for path in sorted((REPO / "trident_spark" / "query").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else \
+                    getattr(fn, "id", None)
+                assert name != "xxhash64", f"{path}:{node.lineno}"
+            elif isinstance(node, ast.Constant) \
+                    and isinstance(node.value, str):
+                assert "xxhash64(" not in node.value.lower(), \
+                    f"{path}:{node.lineno}"

@@ -1137,18 +1137,6 @@ def test_datatype_defaults(spark, tagged):
     assert sorted(r["l"] for r in df.collect()) == ["color", "couleur"]
 
 
-def test_lang_ambiguous_double_binding_rejected(spark, tagged):
-    with pytest.raises(SparqlError, match="ambiguous"):
-        query(tagged, """
-            PREFIX schema: <https://schema.org/>
-            SELECT ?l WHERE {
-                ?s schema:label ?l .
-                ?t schema:other ?l .
-                FILTER(LANG(?l) = "en")
-            }
-        """)
-
-
 def test_isiri_isliteral_filters(spark, graph):
     df = query(graph, """
         PREFIX schema: <https://schema.org/>
@@ -1596,6 +1584,87 @@ def test_differential_collision_joins_no_term(spark, where):
     assert got == Counter()
 
 
+X = "http://x/"
+# the literal "http://x/b" is <a>'s x:p object; the IRI <http://x/b> is a
+# subject.  A variable binds one of the two terms, never both.
+_TERMS = [
+    (X + "a", X + "p", X + "b", "literal", None, None),
+    (X + "b", X + "p", X + "c", "iri", None, None),
+    (X + "a", X + "q", X + "b", "iri", None, None),
+    (X + "b", X + "name", "B", "literal", None, "en"),
+    (X + "c", X + "name", "C", "literal", None, None),
+]
+_A, _B, _C = X + "a", X + "b", X + "c"
+
+# (query, its SPARQL answer over _TERMS); _B is the lexical form of both
+# the literal and the IRI
+_TERM_CASES = {
+    "optional": ("SELECT ?s ?n WHERE { ?s x:p ?o OPTIONAL { ?o x:name ?n } }",
+                 [(_A, None), (_B, "C")]),
+    "nested": ("SELECT ?s ?n WHERE { ?s x:p ?o { ?o x:name ?n } }",
+               [(_B, "C")]),
+    "union_branch": ("SELECT ?s ?n WHERE { ?s x:p ?o "
+                     "{ ?o x:name ?n } UNION { ?o x:none ?n } }",
+                     [(_B, "C")]),
+    # the literal has no out-edge
+    "plus": ("SELECT ?o ?lit WHERE { x:a x:p+ ?o "
+             "BIND(isLiteral(?o) AS ?lit) }", [(_B, True)]),
+    "seq": ("SELECT ?o WHERE { x:a x:p/x:p ?o }", []),
+    "bind_isiri": ("SELECT ?o ?k WHERE { ?s x:p ?o BIND(isIRI(?o) AS ?k) }",
+                   [(_B, False), (_C, True)]),
+    "lang_projection": ("SELECT ?n (LANG(?n) AS ?l) WHERE { ?s x:name ?n }",
+                        [("B", "en"), ("C", "")]),
+    "optional_isiri": ("SELECT ?s ?o WHERE { ?s x:q ?o "
+                       "OPTIONAL { ?x x:p ?o } FILTER(isIRI(?o)) }",
+                       [(_A, _B)]),
+    "path_isliteral": ("SELECT ?o WHERE { x:a x:p* ?o FILTER(isLiteral(?o)) }",
+                       [(_B,)]),
+    "subselect_isiri": ("SELECT ?o WHERE { { SELECT ?o WHERE { ?s x:p ?o } } "
+                        "FILTER(isIRI(?o)) }", [(_C,)]),
+    "values_isiri": ('SELECT ?o WHERE { VALUES ?o { x:b "v" } '
+                     "FILTER(isIRI(?o)) }", [(_B,)]),
+    "values_join": ("SELECT ?s ?p WHERE { VALUES ?o { x:b } ?s ?p ?o }",
+                    [(_A, X + "q")]),
+    # two patterns bind ?n: one term, so LANG(?n) is well defined
+    "lang_ambiguous": ("SELECT ?s ?t WHERE { ?s x:name ?n . ?t x:name ?n "
+                       'FILTER(LANG(?n) = "") }', [(_C, _C)]),
+}
+
+
+@pytest.mark.parametrize("case", list(_TERM_CASES))
+def test_differential_variable_binds_one_term(spark, case):
+    """Every group element binds whole terms: the OPTIONAL, nested-group
+    and UNION joins, paths, BIND, subselects and VALUES keep the literal
+    "http://x/b" apart from the IRI, and a term-kind function reads any
+    variable's kind, on both engines."""
+    from collections import Counter
+
+    sparql, want = _TERM_CASES[case]
+    lexical, edges, terms = _encoded(spark, _TERMS)
+    got = _differential(lexical, edges, terms,
+                        f"PREFIX x: <{X}> {sparql}")
+    assert got == Counter(want), case
+
+
+def test_construct_instantiates_the_bound_term(spark):
+    """A template variable instantiates as the term its solution binds,
+    whatever element binds it: the literal "http://x/b" stays a literal
+    beside the IRI <http://x/b>."""
+    from trident_spark.query.sparql import construct
+
+    lexical = spark.createDataFrame(_TERMS, COLS)
+    lit = (X + "b", "literal")
+    for where, want in (
+            ("x:a x:p* ?o", {(X + "a", "iri"), lit}),
+            ('VALUES ?o { "http://x/b" }', {lit}),
+            ("{ SELECT ?o WHERE { x:a x:p ?o } }", {lit}),
+            ("?s x:q ?o OPTIONAL { ?x x:p ?o } FILTER(isIRI(?o))",
+             {(X + "b", "iri")})):
+        rows = construct(lexical, f"PREFIX x: <{X}> CONSTRUCT "
+                         f"{{ x:a x:r ?o }} WHERE {{ {where} }}").collect()
+        assert {(r.obj_lexical, r.obj_kind) for r in rows} == want, where
+
+
 def test_differential_repeated_variable_is_one_term(spark):
     """``?s <self> ?s`` binds one term: <c>'s literal self-reference does
     not match, and ?s joins <q>'s IRI object, not its literal twin."""
@@ -1729,7 +1798,7 @@ def _deck_query(lexical, shape):
 
 
 # the differential shapes query() rejects too
-_BOTH_RAISE = {"optional_first", "optional_disjoint", "lang_ambiguous"}
+_BOTH_RAISE = {"optional_first", "optional_disjoint"}
 
 
 @pytest.mark.parametrize("sparql", [
@@ -1759,18 +1828,18 @@ _BOTH_RAISE = {"optional_first", "optional_disjoint", "lang_ambiguous"}
     # literal constants: typed with no match, and a bare number
     'SELECT ?s WHERE { ?s schema:name "5"^^<http://dt> }',
     "SELECT ?s WHERE { ?s schema:name 5 }",
-    # both raise: OPTIONAL first, OPTIONAL sharing nothing, and LANG over
-    # a variable two patterns bind as object
+    # LANG over a variable two patterns bind as object
+    'SELECT ?s WHERE { ?s schema:name ?n . ?t schema:jobTitle ?n '
+    'FILTER(LANG(?n) = "") }',
+    # both raise: OPTIONAL first, OPTIONAL sharing nothing
     "SELECT ?s WHERE { OPTIONAL { ?s ?p ?o } }",
     "SELECT ?s WHERE { ?s a schema:Person "
     "OPTIONAL { ?t schema:url ?x } }",
-    'SELECT ?s WHERE { ?s schema:name ?n . ?t schema:jobTitle ?n '
-    'FILTER(LANG(?n) = "") }',
 ], ids=[*_DECK_SHAPES, "union", "minus", "exists", "values", "bind",
         "subselect", "path", "optional_filter_inside", "optional_chained",
         "required_after_optional", "ask", "ask_not_exists",
-        "repeated_var", "typed_literal", "bare_number", "optional_first",
-        "optional_disjoint", "lang_ambiguous"])
+        "repeated_var", "typed_literal", "bare_number", "lang_ambiguous",
+        "optional_first", "optional_disjoint"])
 def test_query_encoded_differential(request, spark, encoded_kg, sparql):
     """query_encoded(e, t, q) answers like query(decode_triples(e, t), q),
     or both raise where query() rejects the shape: the deck's warehouse
@@ -1785,29 +1854,42 @@ def test_query_encoded_differential(request, spark, encoded_kg, sparql):
 
 
 # the deck templates plus a pattern that repeats a variable (an id
-# equality on the scan, not a read of the decoded graph)
+# equality on the scan, not a read of the decoded graph) and the deck's
+# path template (a closure over the id edges)
 _SCAN_SHAPES = {**_DECK_SHAPES,
-                "repeated_var": "SELECT ?s WHERE { ?s schema:url ?s }"}
+                "repeated_var": "SELECT ?s WHERE { ?s schema:url ?s }",
+                "path": "SELECT ?x WHERE { <{node}> schema:worksFor+ ?x }"}
 
 
 @pytest.mark.parametrize("template", list(_SCAN_SHAPES))
 def test_query_encoded_deck_shapes_scan_only_ids(
-        spark, encoded_kg, tmp_path, template):
+        spark, encoded_kg, tmp_path, monkeypatch, template):
     """On a parquet warehouse every edge scan of a deck template (and of a
     repeated-variable pattern) reads the id columns only, and no plan
-    decodes the whole edge table."""
+    decodes the whole edge table.  A closure materializes its rounds with
+    localCheckpoint, so the plans it checkpoints are read too."""
     import re as _re
 
     from trident_spark.query.sparql import query_encoded
 
     edges, terms, lexical = encoded_kg
+    plans = []
+    frame = type(edges)
+    checkpoint = frame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", recording)
     edges.write.parquet(str(tmp_path / "triples"))
     terms.write.parquet(str(tmp_path / "terms"))
     df = query_encoded(spark.read.parquet(str(tmp_path / "triples")),
                        spark.read.parquet(str(tmp_path / "terms")),
                        _deck_query(lexical, _SCAN_SHAPES[template]))
     assert df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = "\n".join(
+        [*plans, df._jdf.queryExecution().executedPlan().toString()])
     # decode_triples names its columns obj_lexical/obj_kind
     assert "obj_lexical" not in plan, plan
     schemas = _re.findall(r"ReadSchema: struct<([^>]*)>", plan)
@@ -1997,15 +2079,19 @@ def test_is_blank_on_subject_position_var(spark):
     assert [r["o"] for r in df2.collect()] == ["v2"]
 
 
-def test_meta_filter_on_expression_var_is_loud(spark, graph):
-    with pytest.raises(SparqlError, match="requires"):
-        query(graph, """
+def test_term_filter_on_expression_var(spark, graph):
+    """A BIND expression binds a simple literal, so a term-kind test on
+    it is answered, not refused."""
+    for test, want in (("isLITERAL", ["ACME", "ALICE", "BOB", "GLOBEX"]),
+                       ("isIRI", [])):
+        df = query(graph, f"""
             PREFIX schema: <https://schema.org/>
-            SELECT ?x WHERE {
+            SELECT ?x WHERE {{
                 ?s schema:name ?n . BIND(UCASE(?n) AS ?x)
-                FILTER(isLITERAL(?x))
-            }
+                FILTER({test}(?x))
+            }}
         """)
+        assert sorted(r["x"] for r in df.collect()) == want, test
 
 
 def test_regex_with_backslash_class(spark):
@@ -3169,7 +3255,7 @@ def test_id_runs_hash_like_the_warehouse(spark):
     from trident_spark.pipeline import build_kg
     from trident_spark.pipeline.kg import decode_triples
     from trident_spark.pipeline.pages import PAGES_SCHEMA, pages_df
-    from trident_spark.query.sparql import _id_exprs
+    from trident_spark.query.sparql import _id_edges
 
     node = {"@context": "https://schema.org", "@id": "http://x.example/a",
             "@type": "Person",
@@ -3187,9 +3273,7 @@ def test_id_runs_hash_like_the_warehouse(spark):
     dec = decode_triples(edges, result.terms)
     assert dec.where("obj_lang IS NOT NULL").count() == 2
     assert dec.where("obj_datatype IS NOT NULL").count() > 0
-    ids = _id_exprs()
-    got = dec.select(ids["subj"].alias("subj_id"), ids["pred"].alias("pred_id"),
-                     ids["obj"].alias("obj_id"))
+    got = _id_edges(dec)
     want = edges.select("subj_id", "pred_id", "obj_id")
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0

@@ -1,14 +1,15 @@
 """Differential fuzz for the BGP engine: every generated query must
 return the bag of rows that an independent evaluator computes over the
-fuzz rows (a plain Python BGP matcher with RDF term identity), and the
-dictionary-encoded warehouse (``query_encoded``) must return the same bag
-as ``query``.
+fuzz rows (a plain Python BGP matcher with RDF term identity), through
+``query`` over the rows and ``query_encoded`` over their
+dictionary-encoded warehouse alike.
 
 The fuzz graph holds IRI/literal lexical collisions (a literal
 "http://f/n1" beside the IRI <http://f/n1>, a literal "_:b0" beside the
 blank node), blank nodes in subject and object position, and repeated
 captures of some triples; queries repeat variables inside a pattern and
-place their FILTER anywhere in the group.
+place their FILTER anywhere in the group; a predicate may be a `/` or
+`+` path, and a group may end in an OPTIONAL pattern.
 
 Property-path closures are checked against an independent oracle: a
 plain Python graph search over the input rows."""
@@ -70,47 +71,66 @@ _FILTERS = {
 }
 
 
+def _path_text(p):
+    """A predicate: a token, ("seq", p, q) = p/q or ("plus", p) = p+."""
+    if isinstance(p, str):
+        return p
+    return "/".join(p[1:]) if p[0] == "seq" else p[1] + "+"
+
+
 def _gen_query(rng):
-    """→ (SPARQL text, (patterns, filter (var, test) or None, projection,
-    distinct)) for one connected BGP with an optional FILTER anywhere."""
+    """→ (SPARQL text, (patterns, OPTIONAL pattern or None, filter (var,
+    test) or None, projection, distinct)) for one connected BGP, whose
+    predicates may be `/` and `+` paths, with an optional OPTIONAL
+    pattern and an optional FILTER anywhere."""
     vars_ = ["?a", "?b", "?c", "?d"]
     preds = [f"<http://f/p{i}>" for i in range(3)]
     nodes = [f"<{n}>" for n in NODES[:8]]
-    pats: list[tuple[str, str, str]] = []
+    pats: list[tuple] = []
     used: list[str] = []
-    for _ in range(rng.randint(1, 4)):
+
+    def obj():
+        return rng.choice(vars_) if rng.random() < 0.7 else rng.choice(
+            nodes + [
+                '"v1"', '"a\\nb"', '"t\\tv"', '"http://f/n1"',
+                f'"http://f/n2"^^<{XSD}anyURI>', f'"v2"^^<{XSD}string>',
+                # the plain forms of lv1/dv1 exist only tagged/typed, so
+                # "lv1" and "dv1" match nothing; a tag matches in any case
+                '"lv1"@fr', '"lv1"@FR', '"lv1"', '"lv2"@en--ltr',
+                f'"dv1"^^<{XSD}token>', '"dv1"'])
+
+    for _ in range(rng.randint(1, 3)):
         # a subject the group already binds, now and then a constant
         s = rng.choice(nodes) if rng.random() < 0.2 else \
             rng.choice(used or ["?a"])
-        p = rng.choice(preds + ["?p"])
-        o = rng.choice(vars_) if rng.random() < 0.7 else rng.choice(nodes + [
-            '"v1"', '"a\\nb"', '"t\\tv"', '"http://f/n1"',
-            f'"http://f/n2"^^<{XSD}anyURI>', f'"v2"^^<{XSD}string>',
-            # the plain forms of lv1/dv1 exist only tagged/typed, so "lv1"
-            # and "dv1" match nothing; a tag matches in any case
-            '"lv1"@fr', '"lv1"@FR', '"lv1"', '"lv2"@en--ltr',
-            f'"dv1"^^<{XSD}token>', '"dv1"'])
+        r = rng.random()
+        p = (("seq", rng.choice(preds), rng.choice(preds)) if r < 0.15
+             else ("plus", rng.choice(preds)) if r < 0.3
+             else rng.choice(preds + ["?p"]))
+        o = obj()
         pats.append((s, p, o))
-        used += [t for t in (s, p, o) if t.startswith("?") and t not in used]
-    parts = [" ".join(pat) + " ." for pat in pats]
-    filt = None
-    if used and rng.random() < 0.6:
-        v = rng.choice(used)
-        kind = rng.choice(list(_FILTERS))
-        if sum(pat[2] == v for pat in pats) > 1:
-            # the engine refuses isIRI() over a variable that two patterns
-            # bind as object
-            kind = "str"
-        text, test = _FILTERS[kind]
-        parts.insert(rng.randint(0, len(parts)), text.format(v=v))
-        filt = (v, test)
+        used += [t for t in (s, p, o)
+                 if isinstance(t, str) and t.startswith("?") and t not in used]
     if not used:
         return _gen_query(rng)
+    parts = [f"{s} {_path_text(p)} {o} ." for s, p, o in pats]
+    opt = None
+    if rng.random() < 0.4:
+        # shares its subject with the required patterns
+        opt = (rng.choice(used), rng.choice(preds), rng.choice(vars_ + ["?e"]))
+        parts.append("OPTIONAL {{ {} {} {} }}".format(*opt))
+        used += [t for t in opt if t.startswith("?") and t not in used]
+    filt = None
+    if rng.random() < 0.6:
+        v = rng.choice(used)
+        text, test = _FILTERS[rng.choice(list(_FILTERS))]
+        parts.insert(rng.randint(0, len(parts)), text.format(v=v))
+        filt = (v, test)
     proj = rng.sample(used, k=rng.randint(1, len(used)))
     distinct = rng.random() < 0.5
     q = (f"SELECT {'DISTINCT ' if distinct else ''}{' '.join(proj)} "
          f"WHERE {{ {' '.join(parts)} }}")
-    return q, (pats, filt, proj, distinct)
+    return q, (pats, opt, filt, proj, distinct)
 
 
 def _term(kind, lexical, datatype=None, lang=None):
@@ -131,47 +151,68 @@ def _const(tok):
     return _term("literal", value, dt, lang)
 
 
+def _pairs(graph, p):
+    """The (subject, object) term pairs a predicate or path connects, as
+    a set, as the engine evaluates a path (SPARQL 1.1 would keep one p/q
+    solution per middle term): p/q joins on the middle term, p+ is p's
+    transitive closure."""
+    if isinstance(p, str):
+        return {(s, o) for s, pred, o in graph if pred == _const(p)}
+    if p[0] == "seq":
+        first, second = _pairs(graph, p[1]), _pairs(graph, p[2])
+        return {(x, z) for x, y in first for y2, z in second if y == y2}
+    step = _pairs(graph, p[1])
+    closure = set(step)
+    while True:
+        more = {(x, z) for x, y in closure for y2, z in step
+                if y == y2} - closure
+        if not more:
+            return closure
+        closure |= more
+
+
+def _extend(graph, sol, pat):
+    """The solutions extending ``sol`` by a match of one pattern."""
+    s, p, o = pat
+    if isinstance(p, tuple) or not p.startswith("?"):
+        toks, cands = (s, o), _pairs(graph, p)
+    else:
+        toks, cands = pat, graph
+    out = []
+    for terms in cands:
+        b = dict(sol)
+        if all(b.setdefault(tok, term) == term
+               if tok.startswith("?") else _const(tok) == term
+               for tok, term in zip(toks, terms)):
+            out.append(b)
+    return out
+
+
 def _oracle(rows, spec):
-    """Evaluate a generated BGP over the rows as a set of term triples."""
-    pats, filt, proj, distinct = spec
+    """Evaluate a generated group over the rows as a set of term triples:
+    the BGP, then the OPTIONAL as a left join (a solution no match
+    extends stays, its OPTIONAL-only variables unbound), then the FILTER,
+    which is false over an unbound variable."""
+    pats, opt, filt, proj, distinct = spec
     graph = {(_term("blank" if s.startswith("_:") else "iri", s),
               _term("iri", p), _term(kind, o, dt, lang))
              for s, p, o, kind, dt, lang in rows}
     sols = [{}]
     for pat in pats:
-        nxt = []
-        for sol in sols:
-            for triple in graph:
-                b = dict(sol)
-                if all(b.setdefault(tok, term) == term
-                       if tok.startswith("?") else _const(tok) == term
-                       for tok, term in zip(pat, triple)):
-                    nxt.append(b)
-        sols = nxt
+        sols = [b for sol in sols for b in _extend(graph, sol, pat)]
+    if opt is not None:
+        sols = [b for sol in sols for b in _extend(graph, sol, opt) or [sol]]
     if filt is not None:
         v, test = filt
-        sols = [b for b in sols if test(b[v])]
-    out = Counter(tuple(b[v][1] for v in proj) for b in sols)
+        sols = [b for b in sols if v in b and test(b[v])]
+    out = Counter(tuple(b[v][1] if v in b else None for v in proj)
+                  for b in sols)
     return Counter(set(out)) if distinct else out
 
 
-def test_query_matches_term_identity_oracle(spark, fuzz_graph):
-    rows = _fuzz_rows()
-    rng = random.Random(99)
-    answered = 0
-    for _ in range(30):
-        q, spec = _gen_query(rng)
-        want = _oracle(rows, spec)
-        got = Counter(tuple(r) for r in S.query(fuzz_graph, q).collect())
-        assert got == want, (q, got, want)
-        answered += bool(want)
-    assert answered >= 10  # most queries have rows to compare
-
-
-def test_warehouse_matches_lexical_compilation(spark, fuzz_graph):
-    """query_encoded over the encoded fuzz graph answers every generated
-    query like query() over the graph itself: its id scans filter literal
-    constants of every form (plain, tagged in either case, typed)."""
+@pytest.fixture(scope="module")
+def fuzz_warehouse(fuzz_graph):
+    """(edges, terms) of the fuzz graph, as the pipeline encodes it."""
     from pyspark.sql import functions as F
 
     from trident_spark.pipeline.kg import dedup_triples, encode_triples
@@ -180,15 +221,29 @@ def test_warehouse_matches_lexical_compilation(spark, fuzz_graph):
         "*", F.lit("http://f/page").alias("url"),
         F.lit(None).cast("timestamp").alias("warc_ts"),
         F.lit("fuzz").alias("source")))
-    edges = dedup_triples(edges).localCheckpoint(eager=True)
-    terms = terms.localCheckpoint(eager=True)
-    rng = random.Random(5)
-    for _ in range(15):
-        q, _ = _gen_query(rng)
-        want = Counter(tuple(r) for r in S.query(fuzz_graph, q).collect())
-        got = Counter(tuple(r) for r in
-                      S.query_encoded(edges, terms, q).collect())
-        assert got == want, (q, got, want)
+    return (dedup_triples(edges).localCheckpoint(eager=True),
+            terms.localCheckpoint(eager=True))
+
+
+def test_query_matches_term_identity_oracle(spark, fuzz_graph,
+                                            fuzz_warehouse):
+    """query() over the fuzz graph and query_encoded() over its warehouse
+    both return the oracle's bag, OPTIONAL groups and paths included: the
+    warehouse's id scans filter literal constants of every form (plain,
+    tagged in either case, typed) as the lexical scans do."""
+    edges, terms = fuzz_warehouse
+    rows = _fuzz_rows()
+    rng = random.Random(99)
+    answered = 0
+    for _ in range(30):
+        q, spec = _gen_query(rng)
+        want = _oracle(rows, spec)
+        for run in (lambda: S.query(fuzz_graph, q),
+                    lambda: S.query_encoded(edges, terms, q)):
+            got = Counter(tuple(r) for r in run().collect())
+            assert got == want, (q, got, want)
+        answered += bool(want)
+    assert answered >= 10  # most queries have rows to compare
 
 
 def test_cross_pattern_term_identity(spark):

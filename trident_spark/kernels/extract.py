@@ -50,11 +50,6 @@ _VOID_TAGS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
 _NON_TEXT_TAGS = frozenset(("script", "style", "template", "noscript"))
-_BLOCK_TAGS = frozenset(
-    "p div h1 h2 h3 h4 h5 h6 li ul ol table tr td th section article header "
-    "footer nav aside main blockquote pre br hr figure figcaption dl dt dd "
-    "form fieldset address details summary".split()
-)
 
 
 class RawTriple(NamedTuple):

@@ -1,7 +1,7 @@
-"""Deterministic documents→pages adapter: wraps the driver's ``documents``
-table into the pipeline's input shape (url, warc_ts, html, text, lang) with
-embedded JSON-LD, so the full KG pipeline runs over driver-provided parquet
-AND its output is exactly reconstructable in ANSI SQL (the DuckDB oracle in
+"""Deterministic documents→page-results adapter: renders each row of the
+driver's ``documents`` table as a page with embedded JSON-LD and extracts
+it, so the full KG pipeline runs over driver-provided parquet AND its
+output is exactly reconstructable in ANSI SQL (the DuckDB oracle in
 __spark_entry__.py reproduces every emitted triple from the documents
 columns — a true end-to-end correctness gate).
 """
@@ -11,13 +11,9 @@ from __future__ import annotations
 import json
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 DOC_BASE = "https://docs.trident-spark.dev"
-
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
 
 
 def doc_html(doc_id: int, text: str, lang: str, source: str, n_chars: int) -> str:
@@ -43,45 +39,12 @@ def doc_html(doc_id: int, text: str, lang: str, source: str, n_chars: int) -> st
     )
 
 
-def docs_to_pages(docs: DataFrame) -> DataFrame:
-    # the stored text column must satisfy the byte-identical invariant, so it
-    # is derived with the extraction kernel itself (as a real crawl would)
-    from trident_spark.kernels.extract import extract_text, parse_html
-
-    def run(iterator):
-        for pdf in iterator:
-            rows = []
-            for doc_id, text, lang, source, n_chars in zip(
-                pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"], pdf["n_chars"]
-            ):
-                html = doc_html(int(doc_id), text, lang, source, int(n_chars))
-                rows.append(
-                    {
-                        "url": f"{DOC_BASE}/doc/{int(doc_id)}",
-                        "warc_ts": pd.Timestamp("2025-01-01", tz="UTC")
-                        + pd.Timedelta(seconds=int(doc_id)),
-                        "html": html.encode("utf-8"),
-                        "text": extract_text(parse_html(html)),
-                        "lang": lang,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    from trident_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.select("doc_id", "text", "lang", "source", "n_chars")
-    ).mapInPandas(run, PAGES_SCHEMA)
-
-
 def docs_to_page_results(docs: DataFrame) -> DataFrame:
-    """Fused docs → extraction results: one Arrow hop instead of the
-    docs_to_pages → extract_pages pair, which round-trips every rendered
-    HTML page through the JVM between two adjacent Python stages (guide
-    §4.1: the boundary crossing is the cost; the per-row computations
-    here are IDENTICAL to running the two stages back to back — the page
-    is rendered, text-extracted for the invariant column, and extracted,
-    exactly as before).  Output: extract_stage.PAGE_RESULT_SCHEMA."""
+    """Docs → extraction results in one Arrow hop: each document is
+    rendered as a page, its text extracted for the invariant column, and
+    the page run through the extraction kernel, with no JVM round trip of
+    the rendered HTML between those steps.  Output:
+    extract_stage.PAGE_RESULT_SCHEMA."""
     from trident_spark.kernels.extract import extract_page, extract_text, parse_html
     from trident_spark.pipeline.extract_stage import PAGE_RESULT_SCHEMA
     from trident_spark.util import ensure_parallelism
@@ -94,7 +57,7 @@ def docs_to_page_results(docs: DataFrame) -> DataFrame:
             ):
                 html = doc_html(int(doc_id), _text, lang, source, int(n_chars))
                 url = f"{DOC_BASE}/doc/{int(doc_id)}"
-                # the invariant column docs_to_pages would have stored
+                # the text a crawl would store beside the page
                 page_text = extract_text(parse_html(html))
                 triples, extracted, err = extract_page(html, url)
                 urls.append(url)

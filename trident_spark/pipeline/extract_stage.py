@@ -20,12 +20,6 @@ PAGE_RESULT_SCHEMA = (
     "obj_kind:string, obj_datatype:string, obj_lang:string, source:string>>"
 )
 
-RAW_TRIPLE_COLS = [
-    "url", "warc_ts", "subj", "pred", "obj_lexical",
-    "obj_kind", "obj_datatype", "obj_lang", "source",
-]
-
-
 def extract_pages(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → per-page extraction results.
 

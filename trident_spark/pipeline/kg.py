@@ -19,8 +19,6 @@ from pyspark.sql import DataFrame, functions as F
 
 SKOLEM_PREFIX = "https://trident-spark.dev/.well-known/genid/"
 
-TERM_COLS = ["term_id", "kind", "lexical", "datatype", "lang"]
-
 # the lexical triple frame every parser returns and ``decode_triples``
 # rebuilds; a quads frame adds ", graph string"
 TRIPLE_SCHEMA = (

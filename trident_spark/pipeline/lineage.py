@@ -18,10 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-LINEAGE_SCHEMA = (
-    "stage string, bucket int, row_count long, checksum long, completed_at timestamp"
-)
-
 # Fixed, not a parameter: a resume run anti-joins on the bucket ids an
 # earlier run wrote, so a different count would skip the wrong pages.
 N_BUCKETS = 256

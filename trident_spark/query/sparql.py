@@ -27,8 +27,8 @@ of the lexical triples DataFrame; shared variables become equi-join keys
 UNION a ``unionByName(allowMissingColumns=True)``; MINUS / NOT EXISTS a
 ``left_anti`` join; EXISTS a ``left_semi``; VALUES a join against a literal
 local relation; FILTER a Spark SQL expression; aggregates a
-``groupBy().agg()``; CONSTRUCT a per-template-triple projection union with
-term kinds recovered by joining the graph's term dictionary.
+``groupBy().agg()``; CONSTRUCT a per-template-triple projection union of
+the terms the solutions bind.
 
 Unbound-variable semantics (full §8.3/§10.2 compatibility): a variable
 that may be NULL = unbound — VALUES UNDEF cells, OPTIONAL-introduced
@@ -61,13 +61,18 @@ and rejected loudly (a distributed engine calling per-row remote SPARQL
 endpoints is an anti-pattern at any scale; materialize the remote graph
 into the warehouse instead).
 
-Join semantics: every plain triple pattern compiles inside a run of
-patterns joined on 64-bit TERM-IDENTITY ids (a literal never matches an
-IRI with the same lexical form — the SPARQL semantics), a repeated
-variable included.  Joins BETWEEN group elements (runs, property-path
-endpoints, OPTIONAL, UNION, nested groups) key on the lexical form, a
-documented approximation that diverges only when a literal and an IRI
-share their lexical form across such a join.
+Join semantics: a variable binds one RDF term.  Every element that binds
+``?v`` — an id run of plain patterns, a property path, a quoted triple,
+VALUES, BIND, a subselect, a UNION branch, a GRAPH block — carries its
+64-bit ``kg.term_id`` in ``_tid_v``, and wherever ``?v`` is decoded, its
+lexical form in ``v`` and its kind/datatype/lang in ``_kind_v``/``_dt_v``
+/``_lang_v`` (unbound = null in every column).  Every join keys on the
+shared variables' ``_tid_`` columns — inside a run, between group
+elements, in the OPTIONAL/VALUES compatibility joins, MINUS and EXISTS —
+so a literal never matches an IRI with the same lexical form.  A
+variable is decoded only where the query reads its value (the
+projection, a FILTER/BIND argument); a subgroup leaves the variables its
+enclosing plan holds as ids.
 
 ``query_encoded`` runs this same compiler over the pipeline's
 dictionary-encoded tables: its runs scan the edge table's id columns and
@@ -83,14 +88,13 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from functools import cached_property
+from functools import cached_property, lru_cache
 
 from pyspark.sql import DataFrame, functions as F
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-
-_PREFIX_RE = re.compile(r"PREFIX\s+(\w*):\s*<([^>\s]*)>", re.IGNORECASE)
+XSD = "http://www.w3.org/2001/XMLSchema#"
+XSD_STRING = XSD + "string"
 
 # bare numeric / boolean object shorthand (the tokenizer's unsigned number
 # class plus true/false) — matched as typed literals on their lexical form
@@ -705,19 +709,6 @@ def _outer_bind_vars(group: "_Group", outer: set[str]) -> set[str]:
     return (binds - local) & outer
 
 
-def _triple_bind_vars(elements: list) -> set[str]:
-    """Variables used as TRIPLE(...) constructor arguments in BINDs — their
-    pattern scans should carry term metadata so the constructor renders the
-    object with its true kind/lang/datatype (heuristic fallback otherwise)."""
-    need: set[str] = set()
-    for el in elements:
-        if isinstance(el, tuple) and el and el[0] == "bind":
-            toks = el[1]
-            if toks and toks[0].upper() == "TRIPLE":
-                need |= {t[1:] for t in toks if t.startswith("?")}
-    return need
-
-
 def _triple_ctor_col(args: list[list[str]], prefixes: dict[str, str],
                      plan: DataFrame):
     """``TRIPLE(s, p, o)`` (SPARQL 1.2 17.4.2.8) → a Column rendering the
@@ -766,25 +757,14 @@ def _triple_ctor_col(args: list[list[str]], prefixes: dict[str, str],
         if pos == "pred":
             return iri
         quoted = F.concat(F.lit('"'), _esc_lit_col(val), F.lit('"'))
-        if f"_kind_{v}" in cols:
-            kind = F.col(f"_kind_{v}")
-            lang = (F.col(f"_lang_{v}") if f"_lang_{v}" in cols
-                    else F.lit(None).cast("string"))
-            dt = (F.col(f"_dt_{v}") if f"_dt_{v}" in cols
-                  else F.lit(None).cast("string"))
-            return (F.when(kind == "iri", iri)
-                    .when(kind == "blank", val)
-                    .when(kind == "triple", val)
-                    .when(lang.isNotNull(),
-                          F.concat(quoted, F.lit("@"), lang))
-                    .when(dt.isNotNull(),
-                          F.concat(quoted, F.lit("^^<"), dt, F.lit(">")))
-                    .otherwise(quoted))
-        # no metadata: kind by lexical shape (blank label / nested term /
-        # absolute-IRI scheme shape; else literal) — documented heuristic
-        return (F.when(val.startswith("_:"), val)
-                .when(val.startswith("<<("), val)
-                .when(val.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*:\S"), iri)
+        kind, lang, dt = (F.col(f"{p}{v}")
+                          for p in ("_kind_", "_lang_", "_dt_"))
+        return (F.when(kind == "iri", iri)
+                .when(kind == "blank", val)
+                .when(kind == "triple", val)
+                .when(lang.isNotNull(), F.concat(quoted, F.lit("@"), lang))
+                .when(dt.isNotNull(),
+                      F.concat(quoted, F.lit("^^<"), dt, F.lit(">")))
                 .otherwise(quoted))
 
     return F.concat(F.lit("<<( "), render(args[0], "subj"), F.lit(" "),
@@ -966,6 +946,34 @@ def _expand_macro(name: str, args: list[list[str]],
     raise SparqlError(f"{name} takes {len(args)} arguments?")
 
 
+_KIND_TESTS = {"ISIRI": "iri", "ISURI": "iri", "ISLITERAL": "literal",
+               "ISBLANK": "blank", "ISTRIPLE": "triple"}
+
+
+def _lang_sql(fn: str, v: str) -> str:
+    """LANG/LANGDIR/HASLANG/HASLANGDIR/DATATYPE(?v) over ?v's term columns.
+    RDF 1.2 base direction rides on the stored tag as `tag--ltr|rtl`:
+    LANG() returns the tag alone, LANGDIR() the direction ('' when none),
+    per SPARQL 1.2 §17.4.2."""
+    base = f"regexp_replace(`_lang_{v}`, '--(ltr|rtl)$', '')"
+    direction = f"regexp_extract(`_lang_{v}`, '--(ltr|rtl)$', 1)"
+    if fn == "LANG":
+        # SPARQL LANG() returns "" for plain literals
+        return f"coalesce({base}, '')"
+    if fn == "LANGDIR":
+        return f"coalesce({direction}, '')"
+    if fn == "HASLANG":
+        return f"(coalesce({base}, '') != '')"
+    if fn == "HASLANGDIR":
+        return f"(coalesce({direction}, '') != '')"
+    # dir-lang → rdf:dirLangString; lang → rdf:langString; plain → its
+    # datatype, default xsd:string
+    rdf_ns = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+    return (f"(CASE WHEN {direction} != '' THEN '{rdf_ns}dirLangString' "
+            f"WHEN `_lang_{v}` IS NOT NULL THEN '{rdf_ns}langString' "
+            f"ELSE coalesce(`_dt_{v}`, '{XSD_STRING}') END)")
+
+
 def _filter_sql(toks: list[str], cols: set[str] | None = None) -> str:
     """FILTER token list → Spark SQL expression (token-level, so quoted
     strings and nested parens are structurally safe).  ``cols`` is the
@@ -1007,48 +1015,19 @@ def _filter_sql(toks: list[str], cols: set[str] | None = None) -> str:
                 out.append(f"(`{var[1:]}` IS NOT NULL)")
             i += 4
             continue
-        elif up in ("LANG", "DATATYPE", "LANGDIR", "HASLANG", "HASLANGDIR"):
+        elif up in ("LANG", "DATATYPE", "LANGDIR", "HASLANG", "HASLANGDIR") \
+                or up in _KIND_TESTS:
             if i + 3 >= len(toks) or toks[i + 1] != "(" \
                     or not toks[i + 2].startswith("?") or toks[i + 3] != ")":
                 raise SparqlError(f"{up} takes one variable")
             v = toks[i + 2][1:]
-            # RDF 1.2 base direction rides on the stored tag as
-            # `tag--ltr|rtl`: LANG() returns the tag alone, LANGDIR() the
-            # direction ('' when none), per SPARQL 1.2 §17.4.2
-            base = f"regexp_replace(`_lang_{v}`, '--(ltr|rtl)$', '')"
-            direction = f"regexp_extract(`_lang_{v}`, '--(ltr|rtl)$', 1)"
-            if up == "LANG":
-                # SPARQL LANG() returns "" for plain literals
-                out.append(f"coalesce({base}, '')")
-            elif up == "LANGDIR":
-                out.append(f"coalesce({direction}, '')")
-            elif up == "HASLANG":
-                out.append(f"(coalesce({base}, '') != '')")
-            elif up == "HASLANGDIR":
-                out.append(f"(coalesce({direction}, '') != '')")
+            i += 4
+            if cols is not None and v not in cols:
+                out.append("CAST(NULL AS STRING)")  # unbound
+            elif up in _KIND_TESTS:
+                out.append(f"(`_kind_{v}` = '{_KIND_TESTS[up]}')")
             else:
-                # dir-lang → rdf:dirLangString; lang → rdf:langString;
-                # plain → its datatype, default xsd:string
-                rdf_ns = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-                out.append(
-                    f"(CASE WHEN {direction} != '' THEN "
-                    f"'{rdf_ns}dirLangString' "
-                    f"WHEN `_lang_{v}` IS NOT NULL THEN "
-                    f"'{rdf_ns}langString'"
-                    f" ELSE coalesce(`_dt_{v}`, "
-                    f"'http://www.w3.org/2001/XMLSchema#string') END)")
-            i += 4
-            continue
-        elif up in ("ISIRI", "ISURI", "ISLITERAL", "ISBLANK", "ISTRIPLE"):
-            if i + 3 >= len(toks) or toks[i + 1] != "(" \
-                    or not toks[i + 2].startswith("?") or toks[i + 3] != ")":
-                raise SparqlError(f"{up} takes one variable")
-            v = toks[i + 2][1:]
-            kind = {"ISIRI": "iri", "ISURI": "iri",
-                    "ISLITERAL": "literal", "ISBLANK": "blank",
-                    "ISTRIPLE": "triple"}[up]
-            out.append(f"(`_kind_{v}` = '{kind}')")
-            i += 4
+                out.append(_lang_sql(up, v))
             continue
         elif up in _FILTER_FUNCS:
             out.append(_FILTER_FUNCS[up])
@@ -1066,28 +1045,24 @@ def _filter_sql(toks: list[str], cols: set[str] | None = None) -> str:
     return " ".join(out)
 
 
-def _zero_length(triples: DataFrame, per_graph: bool = False,
-                 seed: str | None = None) -> DataFrame:
+def _zero_length(edges: DataFrame, per_graph: bool = False,
+                 seed: list | None = None) -> DataFrame:
     """Zero-length path pairs of `*` and `?` (SPARQL 1.1 §18.5): (c, c)
-    for a constant endpoint ``seed``, in the graph or not, else (n, n)
-    over every graph term (per named graph, carrying ``_pg``)."""
+    for each id c a constant endpoint matches (``seed``), in the graph or
+    not, else (n, n) over every graph node (per named graph, carrying
+    ``_pg``)."""
     if seed is not None:
-        return triples.sparkSession.range(1).select(
-            F.lit(seed).alias("_ps"), F.lit(seed).alias("_po"))
-    if per_graph:
-        nodes = (
-            triples.select(F.col("graph").alias("_pg"),
-                           F.col("subj").alias("_ps"))
-            .union(triples.select("graph", "obj_lexical"))
-            .distinct()
-        )
-        return nodes.select("_pg", "_ps", F.col("_ps").alias("_po"))
+        return edges.sparkSession.range(1).select(
+            F.explode(F.array(*seed)).alias("_ps")).select(
+            "_ps", F.col("_ps").alias("_po"))
+    g = [F.col("graph_id").alias("_pg")] if per_graph else []
     nodes = (
-        triples.select(F.col("subj").alias("_ps"))
-        .union(triples.select(F.col("obj_lexical")))
+        edges.select(*g, F.col("subj_id").alias("_ps"))
+        .union(edges.select(*g, F.col("obj_id")))
         .distinct()
     )
-    return nodes.select("_ps", F.col("_ps").alias("_po"))
+    return nodes.select(*(["_pg"] if per_graph else []), "_ps",
+                        F.col("_ps").alias("_po"))
 
 
 # a property-path closure whose step relation grows past this many pairs
@@ -1095,55 +1070,56 @@ def _zero_length(triples: DataFrame, per_graph: bool = False,
 _MAX_CLOSURE_PAIRS = 20_000_000
 
 
-def _compile_path(triples: DataFrame, node: tuple,
+def _compile_path(edges: DataFrame, node: tuple,
                   prefixes: dict[str, str],
                   per_graph: bool = False,
-                  subj: str | None = None,
-                  obj: str | None = None) -> DataFrame:
-    """Property path → distinct (_ps, _po) endpoint pairs (plus ``_pg``,
-    the containing named graph, when ``per_graph`` — the GRAPH ?var case:
-    each graph's closure is computed independently by keying every join on
-    the graph column too).
+                  subj=None, obj=None) -> DataFrame:
+    """Property path over the id edges of :func:`_id_edges` → distinct
+    (_ps, _po) endpoint term-id pairs (plus ``_pg``, the containing named
+    graph, when ``per_graph`` — the GRAPH ?var case: each graph's closure
+    is computed independently by keying every join on the graph column
+    too).
 
-    ``subj``/``obj`` are the lexical values of the pattern's constant
-    endpoints, if any.  The result always holds every pair with those
-    endpoints and may hold others; the caller filters on the constants.
+    ``subj``/``obj`` are the term ids each constant endpoint of the
+    pattern matches (:func:`_endpoint_ids`), if any.  The result always
+    holds every pair with those endpoints and may hold others; the caller
+    filters on the constants.
 
-    A closure (`+`/`*`) runs one loop over 64-bit endpoint hashes, decoded
-    once at the end.  The step relation starts as the one-step pairs, and
-    each round squares it (adds its composition with itself), doubling
-    the path lengths it covers, so a D-hop chain closes in about log2(D)
-    rounds.  A constant endpoint seeds the closure (a bound object alone
-    through the inverse relation; with both bound, the subject): the
-    seed's reach is the step relation's pairs from the seed, and the loop
-    squares only while that reach still grows, so a seed with no step of
-    its own costs one count of the one-step pairs and no squaring.
-    Without a constant (and per graph) the loop squares to a fixpoint.
-    There is no round cap; a closure whose step relation passes
-    ``_MAX_CLOSURE_PAIRS`` raises SparqlError instead of returning a
-    truncated answer.  `*` and `?` add the zero-length pairs of SPARQL
-    1.1 §18.5 (:func:`_zero_length`); a constant endpoint gives the one
-    pair (c, c), so a seeded `?` reads no graph node."""
+    A closure (`+`/`*`) runs one loop over the id pairs.  The step
+    relation starts as the one-step pairs, and each round squares it
+    (adds its composition with itself), doubling the path lengths it
+    covers, so a D-hop chain closes in about log2(D) rounds.  A constant
+    endpoint seeds the closure (a bound object alone through the inverse
+    relation; with both bound, the subject): the seed's reach is the step
+    relation's pairs from the seed, and the loop squares only while that
+    reach still grows, so a seed with no step of its own costs one count
+    of the one-step pairs and no squaring.  Without a constant (and per
+    graph) the loop squares to a fixpoint.  There is no round cap; a
+    closure whose step relation passes ``_MAX_CLOSURE_PAIRS`` raises
+    SparqlError instead of returning a truncated answer.  `*` and `?` add
+    the zero-length pairs of SPARQL 1.1 §18.5 (:func:`_zero_length`); a
+    constant endpoint gives the pairs (c, c) of the ids it matches, so a
+    seeded `?` reads no graph node."""
     kind = node[0]
-    g_sel = [F.col("graph").alias("_pg")] if per_graph else []
+    g_sel = [F.col("graph_id").alias("_pg")] if per_graph else []
     g_cols = ["_pg"] if per_graph else []
+
+    def pairs(cond, ps="subj_id", po="obj_id"):
+        return edges.where(cond).select(*g_sel, F.col(ps).alias("_ps"),
+                                        F.col(po).alias("_po"))
+
     if kind == "iri":
-        value = _expand(node[1], prefixes)
-        return (
-            triples.where(F.col("pred") == value)
-            .select(*g_sel, F.col("subj").alias("_ps"),
-                    F.col("obj_lexical").alias("_po"))
-            .distinct()
-        )
+        return pairs(F.col("pred_id") == _iri_id(_expand(node[1], prefixes))
+                    ).distinct()
     if kind == "inv":
-        p = _compile_path(triples, node[1], prefixes, per_graph,
+        p = _compile_path(edges, node[1], prefixes, per_graph,
                           subj=obj, obj=subj)
         return p.select(*g_cols, F.col("_po").alias("_ps"),
                         F.col("_ps").alias("_po"))
     if kind == "seq":
-        left = _compile_path(triples, node[1], prefixes, per_graph)
+        left = _compile_path(edges, node[1], prefixes, per_graph)
         right = (
-            _compile_path(triples, node[2], prefixes, per_graph)
+            _compile_path(edges, node[2], prefixes, per_graph)
             .withColumnRenamed("_ps", "_ms").withColumnRenamed("_po", "_mo")
         )
         return (
@@ -1154,8 +1130,8 @@ def _compile_path(triples: DataFrame, node: tuple,
         )
     if kind == "alt":
         return (
-            _compile_path(triples, node[1], prefixes, per_graph, subj, obj)
-            .unionByName(_compile_path(triples, node[2], prefixes,
+            _compile_path(edges, node[1], prefixes, per_graph, subj, obj)
+            .unionByName(_compile_path(edges, node[2], prefixes,
                                        per_graph, subj, obj))
             .distinct()
         )
@@ -1165,17 +1141,12 @@ def _compile_path(triples: DataFrame, node: tuple,
         # does (plus the forward part for plain !p)
         parts = []
         if node[1] or not node[2]:
-            fwd = [_expand(t, prefixes) for t in node[1]]
-            parts.append(
-                triples.where(~F.col("pred").isin(fwd))
-                .select(*g_sel, F.col("subj").alias("_ps"),
-                        F.col("obj_lexical").alias("_po")))
+            fwd = [_iri_id(_expand(t, prefixes)) for t in node[1]]
+            parts.append(pairs(~F.col("pred_id").isin(fwd)))
         if node[2]:
-            inv = [_expand(t, prefixes) for t in node[2]]
-            parts.append(
-                triples.where(~F.col("pred").isin(inv))
-                .select(*g_sel, F.col("obj_lexical").alias("_ps"),
-                        F.col("subj").alias("_po")))
+            inv = [_iri_id(_expand(t, prefixes)) for t in node[2]]
+            parts.append(pairs(~F.col("pred_id").isin(inv),
+                              "obj_id", "subj_id"))
         out = parts[0]
         if len(parts) == 2:
             out = out.unionByName(parts[1])
@@ -1183,26 +1154,24 @@ def _compile_path(triples: DataFrame, node: tuple,
     if kind == "opt":
         # zero-or-one: the base pairs plus the zero-length pairs
         seed = None if per_graph else (subj if subj is not None else obj)
-        base = _compile_path(triples, node[1], prefixes, per_graph, subj, obj)
+        base = _compile_path(edges, node[1], prefixes, per_graph, subj, obj)
         return base.unionByName(
-            _zero_length(triples, per_graph, seed)).distinct()
+            _zero_length(edges, per_graph, seed)).distinct()
     if kind in ("plus", "star"):
-        # materialized by its first use, read again by the decode
-        base = _compile_path(triples, node[1], prefixes, per_graph) \
-            .localCheckpoint(eager=False)
+        base = _compile_path(edges, node[1], prefixes, per_graph)
         seed = None if per_graph else (subj if subj is not None else obj)
         # a bound object alone seeds the inverse relation
         src, dst = (("_po", "_ps") if seed is not None and subj is None
                     else ("_ps", "_po"))
-        enc = ([F.xxhash64("_pg").alias("_pg")] if per_graph else []) + [
-            F.xxhash64(src).alias("_ps"), F.xxhash64(dst).alias("_po")]
         # the pairs whose growth keeps the loop going: the seed's, or all.
         # After round k the step relation holds every path of 1..2^k hops,
         # so a round that adds no pair from the seed shows that no node
         # lies 2^(k-1)+1 hops from it, hence none further
-        growing = (F.col("_ps") == F.xxhash64(F.lit(seed))
-                   if seed is not None else F.lit(True))
-        step, counts, grown = base.select(*enc), {}, True
+        growing = (F.col("_ps").isin(seed) if seed is not None
+                   else F.lit(True))
+        step = base.select(*g_cols, F.col(src).alias("_ps"),
+                           F.col(dst).alias("_po"))
+        counts, grown = {}, True
         while grown:
             # a lazy checkpoint: the count below materializes it
             step = step.localCheckpoint(eager=False)
@@ -1221,40 +1190,16 @@ def _compile_path(triples: DataFrame, node: tuple,
                     .select(*g_cols, "_ps", "_po")
                 ).distinct()
         if seed is not None:
-            # the zero-length path of `*` reaches the seed itself
-            far = base.sparkSession.range(int(kind == "star")) \
-                .select(F.lit(seed).alias("_lex"))
-            if counts.get(True):
-                dec = (base.select(F.col(dst).alias("_lex")).distinct()
-                       .select(F.xxhash64("_lex").alias("_po"), "_lex"))
-                far = far.union(step.where(growing).join(dec, "_po")
-                                .select("_lex"))
-            ends = {src: F.lit(seed), dst: F.col("_lex")}
-            return far.distinct().select(ends["_ps"].alias("_ps"),
-                                         ends["_po"].alias("_po"))
-        nodes = base.select(F.col("_ps").alias("_lex")) \
-            .union(base.select("_po")).distinct()
-        dec = nodes.select(F.xxhash64("_lex").alias("_k"), "_lex")
-        paths = (
-            step.join(dec.withColumnRenamed("_k", "_ps")
-                      .withColumnRenamed("_lex", "_ps_lex"), "_ps")
-            .join(dec.withColumnRenamed("_k", "_po")
-                  .withColumnRenamed("_lex", "_po_lex"), "_po")
-        )
-        if per_graph:
-            gdec = (base.select(F.col("_pg").alias("_glex")).distinct()
-                    .select(F.xxhash64("_glex").alias("_pg"), "_glex"))
-            paths = paths.join(gdec, "_pg").select(
-                F.col("_glex").alias("_pg"),
-                F.col("_ps_lex").alias("_ps"),
-                F.col("_po_lex").alias("_po"))
-        else:
-            paths = paths.select(F.col("_ps_lex").alias("_ps"),
-                                 F.col("_po_lex").alias("_po"))
+            far = step.where(growing)
+            if kind == "star":
+                # the zero-length path of `*` reaches the seed itself
+                far = far.union(_zero_length(edges, seed=seed)).distinct()
+            return far.select(F.col(src).alias("_ps"),
+                              F.col(dst).alias("_po"))
         if kind == "star":
-            paths = paths.unionByName(
-                _zero_length(triples, per_graph)).distinct()
-        return paths
+            return step.unionByName(
+                _zero_length(edges, per_graph)).distinct()
+        return step
     raise SparqlError(f"unknown path node {node!r}")  # pragma: no cover
 
 
@@ -1314,6 +1259,8 @@ def _compile_quoted(triples: DataFrame, pat: _Pattern,
     """Pattern with a quoted-triple object: filter obj_kind='triple' rows
     and match/bind the embedded components (SPARQL 1.2 triple-term
     patterns), all in whole-stage codegen."""
+    from trident_spark.pipeline.kg import subject_kind, term_id
+
     q: _Quoted = pat.obj
     scan = triples.where(F.col("obj_kind") == "triple")
     rename: dict[str, str] = {}
@@ -1342,10 +1289,25 @@ def _compile_quoted(triples: DataFrame, pat: _Pattern,
             F.regexp_extract(raw_obj, r'^"((?:[^"\\]|\\.)*)"', 1)))
     )
 
-    proj_cols = {"q_subj": q_subj, "q_pred": q_pred, "q_obj": q_obj}
+    r_lang = F.regexp_extract(
+        raw_obj, r'^"(?:[^"\\]|\\.)*"@([A-Za-z0-9\-]+)$', 1)
+    r_dt = F.regexp_extract(raw_obj, r'^"(?:[^"\\]|\\.)*"\^\^<([^>]*)>$', 1)
+    null = F.lit(None).cast("string")
+    q_kind = (F.when(raw_obj.startswith("<<("), "triple")
+              .when(raw_obj.startswith("<"), "iri")
+              .when(raw_obj.startswith("_:"), "blank").otherwise("literal"))
+    terms = dict(_slot_terms(triples.columns))
+    for name, t in (
+            ("q_subj", (subject_kind(q_subj), q_subj, null, null)),
+            ("q_pred", (F.lit("iri"), q_pred, null, null)),
+            ("q_obj", (q_kind, q_obj, F.nullif(r_dt, F.lit("")),
+                       F.nullif(r_lang, F.lit(""))))):
+        terms[name] = dict(zip(("kind", "lexical", "datatype", "lang"), t),
+                           term_id=term_id(*t))
+
     for name, term in (("q_subj", q.subj), ("q_pred", q.pred),
                        ("q_obj", q.obj)):
-        expr = proj_cols[name]
+        expr = terms[name]["lexical"]
         if term.startswith("?"):
             rename[name] = term[1:]
         elif term.startswith('"') and name == "q_obj":
@@ -1356,10 +1318,6 @@ def _compile_quoted(triples: DataFrame, pat: _Pattern,
             value, c_lang, c_dt = _literal_parts(term, prefixes)
             quoted_part = '"' + _escape_nt(value) + '"'
             r_lit = F.regexp_extract(raw_obj, r'^("(?:[^"\\]|\\.)*")', 1)
-            r_lang = F.regexp_extract(
-                raw_obj, r'^"(?:[^"\\]|\\.)*"@([A-Za-z0-9\-]+)$', 1)
-            r_dt = F.regexp_extract(
-                raw_obj, r'^"(?:[^"\\]|\\.)*"\^\^<([^>]*)>$', 1)
             cond = r_lit == quoted_part
             if c_lang is not None:
                 cond &= F.lower(r_lang) == c_lang.lower()
@@ -1372,12 +1330,10 @@ def _compile_quoted(triples: DataFrame, pat: _Pattern,
         else:
             scan = scan.where(expr == _expand(term, prefixes))
 
-    if extra:
-        rename.update(extra)
-    cols = dict(subj=F.col("subj"), pred=F.col("pred"),
-                graph=F.col("graph") if extra else F.lit(None), **proj_cols)
-    scan, rename = _dedupe_repeated_vars(scan, rename, exprs=cols)
-    proj = [cols[c].alias(v) for c, v in rename.items()]
+    rename.update(extra or {})
+    scan, rename = _dedupe_repeated_vars(
+        scan, rename, exprs={c: t["term_id"] for c, t in terms.items()})
+    proj = [col for c, v in rename.items() for col in _bind_cols(terms[c], v)]
     if proj:
         scan = scan.select(*proj).distinct()
     else:
@@ -1385,14 +1341,18 @@ def _compile_quoted(triples: DataFrame, pat: _Pattern,
     return scan, set(rename.values())
 
 
-def _compile_pattern(triples: DataFrame, pat: _Pattern,
-                     prefixes: dict[str, str], idx: int,
+def _compile_pattern(src: "DataFrame | _Warehouse", pat: _Pattern,
+                     prefixes: dict[str, str], idx: int, needed: set[str],
                      extra: dict[str, str] | None = None
                      ) -> tuple[DataFrame, set[str]]:
     """A property-path or quoted-triple pattern; plain patterns compile
-    in :func:`_compile_run_ids`."""
+    in :func:`_compile_run_ids`.  A path runs over the source's id edges,
+    and its ``needed`` endpoint variables decode through the source's
+    term dictionary."""
+    wh = isinstance(src, _Warehouse)
     if isinstance(pat.obj, _Quoted):
-        return _compile_quoted(triples, pat, prefixes, idx, extra)
+        return _compile_quoted(src.lexical if wh else src, pat, prefixes,
+                               idx, extra)
     per_graph = False
     rename: dict[str, str] = {}
     if extra:
@@ -1404,53 +1364,44 @@ def _compile_pattern(triples: DataFrame, pat: _Pattern,
         per_graph = True
         rename["_pg"] = extra["graph"]
     ends = {"_ps": pat.subj, "_po": pat.obj}
-    bound = {col: _term_value(term, prefixes)
-             for col, term in ends.items() if not term.startswith("?")}
+    consts = {col: term for col, term in ends.items()
+              if not term.startswith("?")}
+    ids = {col: _endpoint_ids(src, t, prefixes) for col, t in consts.items()}
     # the closure starts from the bound endpoints
-    scan = _compile_path(triples, pat.pred, prefixes, per_graph,
-                         subj=bound.get("_ps"), obj=bound.get("_po"))
+    scan = _compile_path(_id_edges(src), pat.pred, prefixes, per_graph,
+                         subj=ids.get("_ps"), obj=ids.get("_po"))
     for col, term in ends.items():
-        if col in bound:
-            scan = scan.where(F.col(col) == bound[col])
+        if col in ids:
+            scan = scan.where(F.col(col).isin(ids[col]))
         else:
             rename[col] = term[1:]
     out_vars = set(rename.values())
     scan, rename = _dedupe_repeated_vars(scan, rename)
-    proj = [F.col(c).alias(v) for c, v in rename.items()]
-    if proj:
-        scan = scan.select(*proj).distinct()
-    else:
-        scan = scan.select(F.lit(1).alias(f"_m{idx}")).limit(1)
-    return scan, out_vars
+    proj = [F.col(c).alias(f"_tid_{v}") for c, v in rename.items()]
+    if not proj:
+        return scan.select(F.lit(1).alias(f"_m{idx}")).limit(1), out_vars
+    # a zero-length path binds the variable end to the constant one,
+    # which the graph need not hold
+    const = next(((ids[c][0], _const_term(t, prefixes))
+                  for c, t in consts.items()), None)
+    return _decode(src, scan.select(*proj).distinct(), out_vars & needed,
+                   const), out_vars
 
 
-def _values_compat_join(plan: DataFrame, bound: set[str], scan: DataFrame,
-                        vars_: set[str]) -> tuple[DataFrame, set[str]]:
-    """Join a VALUES block containing UNDEF cells per SPARQL 1.1 §10.2
-    solution compatibility: an UNDEF (NULL) cell is compatible with any
-    binding; a bound cell must equal the other side's binding unless that
-    side is itself unbound.  Shared columns merge via COALESCE.
-
-    The condition is a theta join, but the VALUES side is an inline
-    literal list (driver-local, tiny) — Spark broadcasts it, so this is
-    scale-safe by construction."""
-    ren = {v: f"_val_{v}" for v in sorted(vars_)}
-    scan2 = scan.select([F.col(v).alias(a) for v, a in ren.items()])
-    shared = sorted(bound & vars_)
-    if shared:
-        cond = None
-        for v in shared:
-            c = (F.col(ren[v]).isNull() | F.col(v).isNull()
-                 | (F.col(v) == F.col(ren[v])))
-            cond = c if cond is None else cond & c
-        plan = plan.join(F.broadcast(scan2), cond, "inner")
-    else:
-        plan = plan.crossJoin(F.broadcast(scan2))
-    for v in sorted(vars_):
-        plan = plan.withColumn(
-            v, F.coalesce(F.col(v), F.col(ren[v])) if v in bound
-            else F.col(ren[v]))
-    return plan.drop(*ren.values()), bound | set(vars_)
+def _endpoint_ids(src: "DataFrame | _Warehouse", tok: str,
+                  prefixes: dict[str, str]) -> list:
+    """The term ids a path's constant endpoint matches, the constant's own
+    id first: a literal also matches every term the lexical engine's
+    literal match accepts (plain ≡ xsd:string, a tag in any case, a bare
+    number in any datatype), looked up in the source's dictionary."""
+    term = _const_term(tok, prefixes)
+    ids = [_const_id(term)]
+    if term[0] == "literal":
+        terms = _terms(src)
+        ids += [F.lit(r[0]) for r in terms.where(
+            _literal_lookup(tok, prefixes, terms.columns))
+            .select("term_id").distinct().collect()]
+    return ids
 
 
 def _compat_parts_join(plan: DataFrame, scan: DataFrame, keys: list[str],
@@ -1462,17 +1413,16 @@ def _compat_parts_join(plan: DataFrame, scan: DataFrame, keys: list[str],
 
     Textbook rewrite: partition each side by its null signature over the
     nullable shared keys; a (left-part, right-part) pair joins on exactly
-    the keys bound on BOTH sides — hash-joinable equality — and the parts
-    union back, COALESCE re-binding each key from whichever side bound it.
-    2^|left_null| · 2^|right_null| parts; callers cap the nullable-key
-    count (more than 2-3 compat keys in one join is not a real query).
-    The all-null × all-null pairing is a genuine product per the spec
-    (every solution pair is compatible); its inputs are only the rows
-    unbound on EVERY shared key (UNDEF cells / OPTIONAL misses)."""
+    the keys bound on BOTH sides — hash-joinable equality on their term
+    ids — and the parts union back, re-binding each key from whichever
+    side bound it.  2^|left_null| · 2^|right_null| parts; callers cap the
+    nullable-key count (more than 2-3 compat keys in one join is not a
+    real query).  The all-null × all-null pairing is a genuine product
+    per the spec (every solution pair is compatible); its inputs are only
+    the rows unbound on EVERY shared key (UNDEF cells / OPTIONAL
+    misses)."""
     ren = {v: f"_cj_{v}" for v in keys}
-    scan2 = scan
-    for v in keys:
-        scan2 = scan2.withColumnRenamed(v, ren[v])
+    scan2 = _rename_vars(scan, ren)
     # each input subtree appears once PER PART in the unioned plan; past
     # a handful of parts (>2 nullable keys on a side, or a chain of
     # compat joins whose left input is already a part-union) that means
@@ -1493,20 +1443,19 @@ def _compat_parts_join(plan: DataFrame, scan: DataFrame, keys: list[str],
             sig = {v for i, v in enumerate(null_vars) if bits >> i & 1}
             part = df
             for v in null_vars:
-                c = col_of(v)
+                c = F.col(f"_tid_{col_of(v)}")
                 part = part.where(c.isNull() if v in sig else c.isNotNull())
             out.append((sig, part))
         return out
 
     joined = []
-    for s_sig, lp in _parts(plan, sorted(left_null), F.col):
-        for t_sig, rp in _parts(scan2, sorted(right_null),
-                                lambda v: F.col(ren[v])):
+    for s_sig, lp in _parts(plan, sorted(left_null), str):
+        for t_sig, rp in _parts(scan2, sorted(right_null), ren.get):
             jk = [k for k in keys if k not in s_sig and k not in t_sig]
             if jk:
                 cond = None
                 for v in jk:
-                    c = F.col(v) == F.col(ren[v])
+                    c = F.col(f"_tid_{v}") == F.col(f"_tid_{ren[v]}")
                     cond = c if cond is None else cond & c
                 joined.append(lp.join(rp, cond, "inner"))
             else:
@@ -1514,9 +1463,7 @@ def _compat_parts_join(plan: DataFrame, scan: DataFrame, keys: list[str],
     out = joined[0]
     for p in joined[1:]:
         out = out.unionByName(p)
-    for v in keys:
-        out = out.withColumn(v, F.coalesce(F.col(v), F.col(ren[v])))
-    return out.drop(*ren.values())
+    return _merge_vars(out, ren)
 
 
 def _join(plan: DataFrame, bound: set[str], scan: DataFrame,
@@ -1525,15 +1472,16 @@ def _join(plan: DataFrame, bound: set[str], scan: DataFrame,
           scan_nullable: set[str] | None = None,
           deferred: list[list[str]] | None = None
           ) -> tuple[DataFrame, set[str]]:
-    """Join the next group element.  ``nullable`` names plan columns that
-    may hold NULL = unbound (VALUES UNDEF cells), ``scan_nullable`` the
-    same for the incoming element (a subgroup carrying UNDEF): shared
-    keys among them use SPARQL §10.2 compatibility (NULL on the nullable
-    side matches anything, then COALESCE re-binds) instead of an
-    equi-join that would silently drop the unbound rows.  Inner
-    compatibility joins re-bind a key unless BOTH sides can be unbound;
-    left joins keep plan-side nullability; non-key scan vars that may be
-    UNDEF propagate into ``nullable``."""
+    """Join the next group element on the shared variables' term ids.
+    ``nullable`` names plan variables that may be NULL = unbound (VALUES
+    UNDEF cells, OPTIONAL misses), ``scan_nullable`` the same for the
+    incoming element: shared keys among them use SPARQL §10.2
+    compatibility (NULL on the nullable side matches anything, then the
+    key re-binds from whichever side bound it) instead of an equi-join
+    that would silently drop the unbound rows.  Inner compatibility joins
+    re-bind a key unless BOTH sides can be unbound; left joins keep
+    plan-side nullability; non-key scan vars that may be unbound
+    propagate into ``nullable``."""
     keys = sorted(bound & vars_)
     left_null = {k for k in keys if nullable and k in nullable}
     right_null = {k for k in keys if scan_nullable and k in scan_nullable}
@@ -1553,16 +1501,15 @@ def _join(plan: DataFrame, bound: set[str], scan: DataFrame,
         return plan, bound | vars_
     if null_keys or deferred:
         ren = {v: f"_cj_{v}" for v in keys}
-        scan2 = scan
-        for v in keys:
-            scan2 = scan2.withColumnRenamed(v, ren[v])
+        scan2 = _rename_vars(scan, ren)
         cond = None
         for v in keys:
-            c = F.col(v) == F.col(ren[v])
+            a, b = F.col(f"_tid_{v}"), F.col(f"_tid_{ren[v]}")
+            c = a == b
             if v in left_null:
-                c = F.col(v).isNull() | c
+                c = a.isNull() | c
             if v in right_null:
-                c = F.col(ren[v]).isNull() | c
+                c = b.isNull() | c
             cond = c if cond is None else cond & c
         # deferred OPTIONAL filters referencing enclosing-scope vars join
         # the ON condition (SPARQL left-join semantics: condition false /
@@ -1573,16 +1520,17 @@ def _join(plan: DataFrame, bound: set[str], scan: DataFrame,
         for ftoks in deferred or []:
             fc = F.expr(_filter_sql(ftoks, cols_all))
             cond = fc if cond is None else cond & fc
-        plan = plan.join(scan2, cond if cond is not None else F.lit(True),
-                         how)
-        for v in keys:
-            plan = plan.withColumn(v, F.coalesce(F.col(v), F.col(ren[v])))
-        plan = plan.drop(*ren.values())
+        plan = _merge_vars(
+            plan.join(scan2, cond if cond is not None else F.lit(True), how),
+            ren)
         if how == "inner" and nullable is not None:
             nullable -= {k for k in null_keys
                          if not (k in left_null and k in right_null)}
     elif keys:
-        plan = plan.join(scan, keys, how)
+        # a key's decoded columns come from the plan when it holds them
+        scan = scan.drop(*[c for k in keys for c in _decoded_cols(k)
+                           if c in plan.columns])
+        plan = plan.join(scan, [f"_tid_{k}" for k in keys], how)
     elif how == "left":
         raise SparqlError("OPTIONAL group shares no variables with the "
                           "preceding patterns")
@@ -1677,27 +1625,19 @@ def _group_runs(elements: list) -> list:
     return out
 
 
-def _meta_vars(elements: list) -> set[str]:
-    """Variables whose literal metadata the group's filters inspect via
-    LANG(?v) / DATATYPE(?v) — their pattern scans must carry it along."""
-    need: set[str] = set()
+def _expr_vars(elements: list) -> set[str]:
+    """Variables whose values a group's expressions read: FILTER and BIND
+    arguments, and those of the filters and BINDs inside an OPTIONAL or
+    EXISTS, which may read the group's own bindings."""
+    out: set[str] = set()
     for el in elements:
-        if isinstance(el, tuple) and el and el[0] == "filter":
-            toks = el[1]
-            for i, t in enumerate(toks):
-                if t.upper() in ("LANG", "DATATYPE", "LANGDIR", "HASLANG",
-                                 "HASLANGDIR", "ISIRI", "ISURI",
-                                 "ISLITERAL", "ISBLANK", "ISTRIPLE") \
-                        and toks[i + 1 : i + 2] == ["("] \
-                        and i + 2 < len(toks) and toks[i + 2].startswith("?"):
-                    need.add(toks[i + 2][1:])
-                elif t.upper() == "SAMETERM" and toks[i + 1 : i + 2] == ["("]:
-                    # both (all) variable args want their term metadata
-                    args, _ = _parse_call_args(toks, i + 1)
-                    for a in args:
-                        if len(a) == 1 and a[0].startswith("?"):
-                            need.add(a[0][1:])
-    return need
+        if not isinstance(el, tuple):
+            continue
+        if el[0] in ("filter", "bind"):
+            out |= {t[1:] for t in el[1] if t.startswith("?")}
+        elif el[0] in ("optional", "exists"):
+            out |= _expr_vars(el[-1].elements)
+    return out
 
 
 def _all_vars(obj) -> set[str]:
@@ -1726,49 +1666,93 @@ def _all_vars(obj) -> set[str]:
     return set()
 
 
-# --- BGP runs ----------------------------------------------------------------
-# Every plain triple pattern compiles inside a run of consecutive plain
-# patterns joined on 64-bit term ids (kg.term_id, the warehouse's own id
-# over the term's kind/lexical/datatype/lang identity), on a lexical frame
-# and on the warehouse alike: intermediate joins shuffle longs, variables
-# used only as join keys are never materialized, and the joins are
-# term-correct — a literal "x" never joins an IRI "x", and a variable a
-# pattern repeats is an id-equality filter.
+# --- terms and BGP runs ------------------------------------------------------
+# A variable ?v binds one RDF term.  ``_tid_v`` holds its kg.term_id (the
+# warehouse's own id over the term's kind/lexical/datatype/lang identity)
+# and every join keys on it, so intermediate joins shuffle longs and a
+# literal "x" never joins an IRI "x"; where the query reads ?v's value,
+# ``v`` holds the lexical form and ``_kind_v``/``_dt_v``/``_lang_v`` the
+# rest of the term.  Unbound is null in every column.  Every plain triple
+# pattern compiles inside a run of consecutive plain patterns, on a
+# lexical frame and on the warehouse alike; a variable a pattern repeats
+# is an id-equality filter.
 
-_ID_EXPRS: dict[tuple[str, ...], dict] = {}
+# a variable's column prefix → the term-dictionary column it holds
+_TERM_COLS = {"_tid_": "term_id", "": "lexical", "_kind_": "kind",
+              "_dt_": "datatype", "_lang_": "lang"}
 
 
-def _id_exprs(columns=("obj_datatype", "obj_lang")) -> dict:
-    """``kg.term_id`` of each slot of a lexical frame with ``columns``
-    (a frame that records no datatype/lang hashes them as absent)."""
-    key = tuple(c for c in ("obj_datatype", "obj_lang") if c in columns)
-    if key not in _ID_EXPRS:
-        from trident_spark.pipeline.kg import subject_kind, term_id
+def _decoded_cols(v: str) -> list[str]:
+    return [f"{p}{v}" for p in _TERM_COLS if p != "_tid_"]
 
-        meta = [F.col(c) if c in key else None
-                for c in ("obj_datatype", "obj_lang")]
-        _ID_EXPRS[key] = {
-            slot: term_id(subject_kind(F.col(slot)), F.col(slot))
-            for slot in ("subj", "graph")
-        } | {
-            "pred": term_id(F.lit("iri"), F.col("pred")),
-            "obj": term_id(F.col("obj_kind"), F.col("obj_lexical"), *meta),
-        }
-    return _ID_EXPRS[key]
+
+def _bind_cols(term: dict, v: str) -> list:
+    """``term`` ({dictionary column: Column}) as the columns of ?v."""
+    return [term[c].alias(f"{p}{v}") for p, c in _TERM_COLS.items()]
+
+
+@lru_cache(maxsize=256)
+def _dict_cols(v: str) -> tuple:
+    """A term dictionary's columns as those of ?v (cached: each Column
+    costs a JVM round trip to build)."""
+    return tuple(F.col(c).alias(f"{p}{v}") for p, c in _TERM_COLS.items())
+
+
+def _rename_vars(df: DataFrame, ren: dict[str, str]) -> DataFrame:
+    """``df`` with the term columns of each variable v in ``ren`` renamed
+    to those of ``ren[v]``."""
+    names = {f"{p}{v}": f"{p}{w}" for v, w in ren.items() for p in _TERM_COLS}
+    return df.select(*[F.col(c).alias(names.get(c, c)) for c in df.columns])
+
+
+def _merge_vars(df: DataFrame, ren: dict[str, str]) -> DataFrame:
+    """Undo :func:`_rename_vars` on one side of a join: each variable
+    binds from whichever side binds it (both bind one term, or one side
+    leaves it unbound)."""
+    back = {f"{p}{w}": f"{p}{v}" for v, w in ren.items() for p in _TERM_COLS}
+    moved = {back[c]: c for c in df.columns if c in back}
+    keep = [c for c in df.columns if c not in back]
+    return df.select(
+        *[F.coalesce(c, moved[c]).alias(c) if c in moved else F.col(c)
+          for c in keep],
+        *[F.col(r).alias(c) for c, r in moved.items() if c not in keep])
 
 
 _LEX_COLS = {"subj": "subj", "pred": "pred", "obj": "obj_lexical",
              "graph": "graph"}
-# hidden metadata columns of a variable → the lexical frame's object columns
-_META_COLS = {"_kind_": "obj_kind", "_dt_": "obj_datatype",
-              "_lang_": "obj_lang"}
+_SLOT_TERMS: dict[tuple[str, ...], dict] = {}
+
+
+def _slot_terms(columns) -> dict[str, dict]:
+    """Each slot of a lexical frame with ``columns`` as an RDF term:
+    ``{slot: {dictionary column: Column}}``, its id ``kg.term_id`` (a
+    frame that records no datatype/lang hashes them as absent)."""
+    key = tuple(c for c in ("obj_datatype", "obj_lang") if c in columns)
+    if key not in _SLOT_TERMS:
+        from trident_spark.pipeline.kg import subject_kind, term_id
+
+        null = F.lit(None).cast("string")
+        meta = [F.col(c) if c in key else None
+                for c in ("obj_datatype", "obj_lang")]
+        out = {}
+        for slot, col in _LEX_COLS.items():
+            lex = F.col(col)
+            kind = (F.col("obj_kind") if slot == "obj" else F.lit("iri")
+                    if slot == "pred" else subject_kind(lex))
+            dt, lang = meta if slot == "obj" else (None, None)
+            out[slot] = {
+                "term_id": term_id(kind, lex, dt, lang), "lexical": lex,
+                "kind": kind, "datatype": null if dt is None else dt,
+                "lang": null if lang is None else lang}
+        _SLOT_TERMS[key] = out
+    return _SLOT_TERMS[key]
 
 
 @dataclass
 class _Warehouse:
     """The pipeline's dictionary-encoded tables as a query source (see
-    :func:`query_encoded`): id runs scan ``edges`` and decode through
-    ``terms``; every other element reads :attr:`lexical`."""
+    :func:`query_encoded`): patterns and paths scan ``edges`` and decode
+    through ``terms``; quoted triples read :attr:`lexical`."""
 
     edges: DataFrame
     terms: DataFrame
@@ -1783,6 +1767,121 @@ class _Warehouse:
         from trident_spark.pipeline.kg import decode_triples
 
         return decode_triples(self.edges, self.terms)
+
+
+def _id_edges(src: "DataFrame | _Warehouse") -> DataFrame:
+    """The source's edges as term ids (subj_id, pred_id, obj_id[,
+    graph_id])."""
+    if isinstance(src, _Warehouse):
+        return src.edges.select("subj_id", "pred_id", "obj_id")
+    slots = _slot_terms(src.columns)
+    return src.select(*[slots[s]["term_id"].alias(f"{s}_id")
+                        for s, c in _LEX_COLS.items() if c in src.columns])
+
+
+def _terms(src: "DataFrame | _Warehouse") -> DataFrame:
+    """The source's term dictionary (term_id, lexical, kind, datatype,
+    lang); a lexical frame's holds its subjects, objects and graphs."""
+    if isinstance(src, _Warehouse):
+        return src.terms
+    slots = _slot_terms(src.columns)
+    parts = [src.select(*[e.alias(c) for c, e in slots[s].items()])
+             for s in ("subj", "obj", "graph") if _LEX_COLS[s] in src.columns]
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.union(part)
+    return out.where(F.col("lexical").isNotNull()).distinct()
+
+
+def _decode(src: "DataFrame | _Warehouse", plan: DataFrame, vars_: set[str],
+            const: tuple | None = None) -> DataFrame:
+    """``plan`` with each of ``vars_`` (held as ``_tid_`` ids) decoded
+    through the source's term dictionary.  ``const`` = (id Column, term):
+    a query constant the variables may bind although the dictionary does
+    not hold it."""
+    terms = _terms(src)
+    for v in sorted(vars_):
+        plan = plan.join(terms.select(*_dict_cols(v)), f"_tid_{v}",
+                         "inner" if const is None else "left")
+        if const is not None:
+            hit = F.col(f"_tid_{v}") == const[0]
+            plan = plan.withColumns({
+                f"{p}{v}": F.coalesce(
+                    f"{p}{v}", F.when(hit, F.lit(x).cast("string")))
+                for p, x in zip(("_kind_", "", "_dt_", "_lang_"), const[1])})
+    return plan
+
+
+def _const_term(tok: str, prefixes: dict[str, str]) -> tuple:
+    """The RDF term a constant token denotes: (kind, lexical, datatype,
+    lang).  A bare number or boolean is an xsd:integer/decimal/boolean
+    literal (SPARQL 1.1 §4.1.2)."""
+    if tok.startswith('"'):
+        value, lang, dt = _literal_parts(tok, prefixes)
+        return ("literal", value, dt, lang)
+    if _PLAIN_SCALAR.match(tok):
+        dt = ("boolean" if tok in ("true", "false")
+              else "decimal" if "." in tok else "integer")
+        return ("literal", tok, XSD + dt, None)
+    if tok.startswith("_:"):
+        return ("blank", tok, None, None)
+    return ("iri", _expand(tok, prefixes), None, None)
+
+
+def _const_id(term: tuple):
+    """``kg.term_id`` of a (kind, lexical, datatype, lang) constant, a
+    literal Catalyst folds."""
+    from trident_spark.pipeline.kg import term_id
+
+    return term_id(*[None if x is None else F.lit(x) for x in term])
+
+
+def _iri_id(iri: str):
+    return _const_id(("iri", iri, None, None))
+
+
+def _computed_term(v: str, kind: str = "literal", dt: str | None = None,
+                   lang: str | None = None) -> dict:
+    """The term columns of a computed ?v: the term of ``kind`` (datatype
+    ``dt``, language ``lang``) whose lexical form is ?v's value; null in
+    every column where ?v is unbound."""
+    from trident_spark.pipeline.kg import term_id
+
+    is_bound = F.col(v).isNotNull()
+    meta = {"_kind_": kind, "_dt_": dt, "_lang_": lang}
+    return {f"_tid_{v}": F.when(is_bound, term_id(
+        F.lit(kind), F.col(v).cast("string"),
+        *[None if x is None else F.lit(x) for x in (dt, lang)]))} | {
+        f"{p}{v}": F.when(is_bound, F.lit(x).cast("string"))
+        for p, x in meta.items()}
+
+
+def _values_frame(spark, vars_: list[str], rows: list[tuple],
+                  prefixes: dict[str, str]) -> DataFrame:
+    """VALUES rows → a frame binding each variable to the term its token
+    denotes; an UNDEF cell is null in every column."""
+    from trident_spark.pipeline.kg import term_id
+
+    meta = ("_kind_", "", "_dt_", "_lang_")  # _const_term's order
+    data = [tuple(x for t in row for x in (
+        (None,) * 4 if t is None else _const_term(t, prefixes)))
+        for row in rows]
+    df = spark.createDataFrame(data, ", ".join(
+        f"`{p}{v}` string" for v in vars_ for p in meta))
+    return df.withColumns({f"_tid_{v}": F.when(
+        F.col(f"_kind_{v}").isNotNull(),
+        term_id(*[F.col(f"{p}{v}") for p in meta])) for v in vars_})
+
+
+def _literal_lookup(tok: str, prefixes: dict[str, str], cols):
+    """Condition on a term dictionary with ``cols`` selecting the terms a
+    literal constant (or a bare number or boolean) matches, as
+    :func:`_lexical_scan` matches it."""
+    if _PLAIN_SCALAR.match(tok):
+        return (F.col("kind") == "literal") & (F.col("lexical") == tok)
+    return _literal_match_cond(
+        F.col("lexical"), *_literal_parts(tok, prefixes), set(cols),
+        kind_col="kind", lang_col="lang", dt_col="datatype")
 
 
 def _warehouse_scan(wh: _Warehouse, pat: _Pattern, prefixes: dict[str, str]
@@ -1803,11 +1902,8 @@ def _warehouse_scan(wh: _Warehouse, pat: _Pattern, prefixes: dict[str, str]
             value, lang, dt = _literal_parts(term, prefixes)
             if lang is not None:
                 # a language tag compares case-insensitively: look the
-                # ids up in the dictionary with the lexical engine's own
-                # condition
-                lookup = _literal_match_cond(
-                    F.col("lexical"), value, lang, dt, set(wh.terms.columns),
-                    kind_col="kind", lang_col="lang", dt_col="datatype")
+                # ids up in the dictionary
+                lookup = _literal_lookup(term, prefixes, wh.terms.columns)
                 continue
             # a simple literal is stored plain or as xsd:string
             dts = [dt] if dt not in (None, XSD_STRING) else ["", XSD_STRING]
@@ -1815,11 +1911,10 @@ def _warehouse_scan(wh: _Warehouse, pat: _Pattern, prefixes: dict[str, str]
                            for d in dts])
         elif slot == "obj" and _PLAIN_SCALAR.match(term):
             # a bare number or boolean matches a literal of any datatype
-            lookup = ((F.col("kind") == "literal")
-                      & (F.col("lexical") == term))
+            lookup = _literal_lookup(term, prefixes, wh.terms.columns)
             continue
         else:
-            c = col == term_id(F.lit("iri"), F.lit(_expand(term, prefixes)))
+            c = col == _iri_id(_expand(term, prefixes))
         cond = c if cond is None else cond & c
     scan = wh.edges if cond is None else wh.edges.where(cond)
     if lookup is not None:
@@ -1859,62 +1954,59 @@ def _lexical_scan(triples: DataFrame, pat: _Pattern,
     return scan, rename
 
 
-def _compile_run_ids(triples: DataFrame | _Warehouse, run: list[_Pattern],
-                     prefixes: dict[str, str],
-                     needed: set[str] | None,
-                     meta: set[str] = frozenset(),
+def _compile_run_ids(src: DataFrame | _Warehouse, run: list[_Pattern],
+                     prefixes: dict[str, str], needed: set[str],
                      extra: dict[str, str] | None = None
                      ) -> tuple[DataFrame, set[str]]:
     """A run of plain patterns → solutions joined on ``_tid_`` ids, with
-    lexical columns for the ``needed`` variables (all when None);
-    join-only variables stay ids.  A variable that a pattern repeats is
-    one term, so its slots' ids must be equal; ``extra`` (GRAPH ?var)
-    adds the graph column as one more slot.  The variables in ``meta``
-    get ``_kind_``/``_dt_``/``_lang_`` columns.
+    the ``needed`` variables decoded; join-only variables stay ids.  A
+    variable that a pattern repeats is one term, so its slots' ids must
+    be equal; ``extra`` (GRAPH ?var) adds the graph column as one more
+    slot.
 
-    On a lexical frame each needed variable carries its value from the
-    scan that binds it first, and a ``meta`` variable its metadata from
-    the scan that binds it in object position, so no pattern is
-    re-scanned to decode; scans stay ``distinct`` (the frame may hold a
-    triple from several captures), and the ids keep term identity.  On
-    a :class:`_Warehouse` the scans read only the edge table's id
-    columns and are sets already (:func:`query_encoded`); each needed
-    variable decodes through one ``terms`` join, which also carries its
-    metadata."""
-    wh = isinstance(triples, _Warehouse)
+    On a lexical frame each needed variable carries its term from the
+    scan that binds it first, so no pattern is re-scanned to decode;
+    scans stay ``distinct`` (the frame may hold a triple from several
+    captures), and the ids keep term identity.  On a :class:`_Warehouse`
+    the scans read only the edge table's id columns and are sets already
+    (:func:`query_encoded`); each needed variable decodes through one
+    ``terms`` join."""
+    wh = isinstance(src, _Warehouse)
     if wh:
         scan_of = _warehouse_scan
-        ids = {slot: F.col(f"{slot}_id") for slot in ("subj", "pred", "obj")}
+        slots = {s: {"term_id": F.col(f"{s}_id")}
+                 for s in ("subj", "pred", "obj")}
     else:
         scan_of = _lexical_scan
-        ids = _id_exprs(triples.columns)
+        slots = _slot_terms(src.columns)
     plan: DataFrame | None = None
     bound: set[str] = set()
     for k, pat in enumerate(run):
-        scan, rename = scan_of(triples, pat, prefixes)
+        scan, rename = scan_of(src, pat, prefixes)
         rename.update(extra or {})
         slot_of: dict[str, str] = {}
         for slot, v in rename.items():
             if v in slot_of:
-                scan = scan.where(ids[slot_of[v]] == ids[slot])
+                scan = scan.where(slots[slot_of[v]]["term_id"]
+                                  == slots[slot]["term_id"])
             else:
                 slot_of[v] = slot
-        proj = [ids[slot].alias(f"_tid_{v}") for v, slot in slot_of.items()]
-        if not wh:
-            proj += [F.col(_LEX_COLS[slot]).alias(v)
-                     for v, slot in slot_of.items()
-                     if v not in bound and (needed is None or v in needed)]
-            o = rename.get("obj")
-            if o in meta:
-                proj += [F.col(c).alias(f"{m}{o}")
-                         for m, c in _META_COLS.items()]
-                meta = meta - {o}
+        proj = []
+        for v, s in slot_of.items():
+            if wh or v in bound or v not in needed:
+                proj.append(slots[s]["term_id"].alias(f"_tid_{v}"))
+            else:
+                proj += _bind_cols(slots[s], v)
         if not proj:
             idscan = scan.select(F.lit(1).alias(f"_tid1_{k}")).limit(1)
-        else:
+        elif wh:
             idscan = scan.select(*proj)
-            if not wh:
-                idscan = idscan.distinct()
+        else:
+            # distinct over one struct: the plan lists the keys of a wider
+            # distinct in hash order, which differs from query to query,
+            # where one struct key keeps one aggregation shape
+            idscan = scan.select(F.struct(*proj).alias("_row")).distinct() \
+                .select("_row.*")
         vars_ = set(slot_of)
         if plan is None:
             plan = idscan
@@ -1923,31 +2015,28 @@ def _compile_run_ids(triples: DataFrame | _Warehouse, run: list[_Pattern],
             plan = plan.join(idscan, keys) if keys \
                 else plan.crossJoin(idscan)
         bound |= vars_
-    decoded = bound if needed is None else bound & needed
     if wh:
-        for v in sorted(decoded):
-            cols = [F.col("term_id").alias(f"_tid_{v}"),
-                    F.col("lexical").alias(v)]
-            if v in meta:
-                cols += [F.col(c.removeprefix("obj_")).alias(f"{m}{v}")
-                         for m, c in _META_COLS.items()]
-            plan = plan.join(triples.terms.select(*cols), f"_tid_{v}")
-    drop = [c for c in plan.columns if c.startswith(("_tid_", "_tid1_"))]
-    return plan.drop(*drop), decoded
+        plan = _decode(src, plan, bound & needed)
+    return plan.drop(*[c for c in plan.columns if c.startswith("_tid1_")]), \
+        bound
 
 
 def _compile_group(triples: DataFrame, group: _Group,
                    prefixes: dict[str, str],
                    quads: DataFrame | None = None,
                    extra: dict[str, str] | None = None,
-                   want_meta: set[str] | None = None,
                    needed: set[str] | None = None,
                    out_nullable: set[str] | None = None,
                    outer_bound: set[str] | None = None,
                    out_deferred: list[list[str]] | None = None,
                    seed: tuple[DataFrame, set[str]] | None = None
                    ) -> tuple[DataFrame, set[str]]:
-    """``out_nullable``: mutable set the caller passes to learn which of
+    """Group pattern → (solutions, bound variables).  Every bound ?v has
+    its ``_tid_v`` column; ``needed`` names the variables the caller
+    reads decoded (all when None), and the group decodes those plus the
+    ones its own expressions read.
+
+    ``out_nullable``: mutable set the caller passes to learn which of
     the returned variables may be NULL = UNDEF-unbound (VALUES UNDEF
     cells surviving this group) — nullability must cross subgroup
     boundaries or the caller's joins silently use SQL equality on them.
@@ -1971,21 +2060,10 @@ def _compile_group(triples: DataFrame, group: _Group,
         else (None, set())
     filters: list[list[str]] = []
     exists: list[tuple[bool, _Group]] = []
-    # filter-driven metadata vars (LANG/DATATYPE — ambiguity is an error)
-    # plus soft requests from CONSTRUCT/UPDATE templates (the solution's
-    # own term kind; on multiple object-position bindings the first wins)
-    meta_filter = _meta_vars(group.elements)
-    meta = meta_filter | (want_meta or set()) \
-        | _triple_bind_vars(group.elements)
-    meta_provided: set[str] = set()
-    for v in meta_filter:
-        if sum(isinstance(el, _Pattern) and el.obj == f"?{v}"
-               for el in group.elements) > 1:
-            raise SparqlError(
-                f"LANG/DATATYPE(?{v}) is ambiguous: ?{v} is bound in "
-                "object position by more than one pattern")
-    wh = isinstance(triples, _Warehouse)
     elements = _group_runs(group.elements)
+    # the variables this group's elements decode
+    dec = (_all_vars(group) if needed is None else set(needed)) \
+        | _expr_vars(group.elements)
 
     # variables that may be NULL = unbound in `plan` (VALUES UNDEF
     # cells): subsequent joins on them use §10.2 compatibility (_join)
@@ -1996,26 +2074,21 @@ def _compile_group(triples: DataFrame, group: _Group,
     def _sub_outer() -> set[str]:
         return bound | (outer_bound or set())
 
+    # a subgroup decodes what this group decodes, except the variables
+    # the plan already holds (a join on their ids keeps the plan's terms)
+    def _sub_needed() -> set[str]:
+        return dec - (bound - nullable)
+
     for idx, el in enumerate(elements):
         scan_null: set[str] = set()  # UNDEF-nullable vars of THIS element
         scan_defer: list[list[str]] = []  # outer-referencing sub filters
         if isinstance(el, tuple) and el and el[0] == "bgp_run":
-            if needed is None:
-                run_needed = None
-            else:
-                run_needed = set(needed) | (want_meta or set())
-                for other in elements:
-                    if other is not el:
-                        run_needed |= _all_vars(other)
-            run_meta = (meta - meta_provided) & {
-                p.obj[1:] for p in el[1] if p.obj.startswith("?")}
-            meta_provided |= run_meta
-            scan, vars_ = _compile_run_ids(triples, el[1], prefixes,
-                                           run_needed, run_meta, extra)
+            scan, vars_ = _compile_run_ids(triples, el[1], prefixes, dec,
+                                           extra)
             how = "inner"
         elif isinstance(el, _Pattern):
-            scan, vars_ = _compile_pattern(triples.lexical if wh else triples,
-                                           el, prefixes, idx, extra)
+            scan, vars_ = _compile_pattern(triples, el, prefixes, idx, dec,
+                                           extra)
             how = "inner"
         elif el[0] == "filter":
             filters.append(el[1])
@@ -2038,21 +2111,21 @@ def _compile_group(triples: DataFrame, group: _Group,
             # var-branch below crosses with the named-graph list
             inner_extra = {k: v for k, v in (extra or {}).items()
                            if k != "graph"}
+            # strict bottom-up scoping (§18.2): filters inside the GRAPH
+            # group never see enclosing bindings
             if term.startswith("?"):
                 gv = term[1:]
                 frame = quads.where(F.col("graph").isNotNull())
-                sub_extra = {**inner_extra, "graph": gv}
-                # strict bottom-up scoping (§18.2): filters inside the
-                # GRAPH group never see enclosing bindings
                 scan, vars_ = _compile_group(frame, sub, prefixes, quads,
-                                             sub_extra,
+                                             {**inner_extra, "graph": gv},
+                                             needed=_sub_needed(),
                                              out_nullable=scan_null)
                 if gv not in vars_:
                     # subgroup held only nested GRAPH scopes: ?gv still
                     # ranges over every named graph (a genuine cross —
                     # the name list is small by construction)
-                    names = (quads.where(F.col("graph").isNotNull())
-                             .select(F.col("graph").alias(gv)).distinct())
+                    names = frame.select(*_bind_cols(
+                        _slot_terms(frame.columns)["graph"], gv)).distinct()
                     scan = scan.crossJoin(names)
                     vars_ = vars_ | {gv}
             else:
@@ -2060,61 +2133,17 @@ def _compile_group(triples: DataFrame, group: _Group,
                     F.col("graph") == _expand(term, prefixes))
                 scan, vars_ = _compile_group(frame, sub, prefixes, quads,
                                              inner_extra,
+                                             needed=_sub_needed(),
                                              out_nullable=scan_null)
             how = "inner"
         elif el[0] == "bind":
             # BIND applies to the solutions built so far, in sequence
             if plan is None:
                 raise SparqlError("BIND cannot be the first group element")
-            expr_toks, alias = el[1], el[2]
-            if alias in bound:
-                raise SparqlError(f"BIND reassigns bound variable ?{alias}")
-            if expr_toks and expr_toks[0].upper() == "TRIPLE":
-                t_args, t_end = _parse_call_args(expr_toks, 1)
-                if t_end != len(expr_toks):
-                    raise SparqlError(
-                        "TRIPLE(...) nested inside a larger BIND "
-                        "expression is not supported")
-                plan = plan.withColumn(
-                    alias, _triple_ctor_col(t_args, prefixes, plan))
-                t_guard = F.col(alias).isNotNull()
-                plan = (plan.withColumn(
-                    f"_kind_{alias}", F.when(t_guard, F.lit("triple")))
-                    .withColumn(f"_lang_{alias}",
-                                F.lit(None).cast("string"))
-                    .withColumn(f"_dt_{alias}",
-                                F.lit(None).cast("string")))
-                bound = bound | {alias}
-                continue
-            ctor = _term_constructor_bind(expr_toks, prefixes)
-            if ctor is not None:
-                # STRLANG/STRDT/IRI build a TYPED term: the value column
-                # plus hidden _kind_/_lang_/_dt_ metadata, so LANG()/
-                # DATATYPE()/isIRI and CONSTRUCT kinds see the real type.
-                # A NULL value = constructor over an unbound arg = SPARQL
-                # expression error → the variable stays UNBOUND, so the
-                # metadata must be NULL too (isIRI of unbound is not true)
-                value_toks, kind, lang, dt = ctor
-                cols = set(plan.columns)
-                plan = plan.withColumn(
-                    alias, F.expr(_filter_sql(value_toks, cols)))
-                bound_guard = F.col(alias).isNotNull()
-                plan = (
-                    plan.withColumn(
-                        f"_kind_{alias}",
-                        F.when(bound_guard, F.lit(kind)))
-                    .withColumn(
-                        f"_lang_{alias}",
-                        F.when(bound_guard,
-                               F.lit(lang).cast("string")))
-                    .withColumn(
-                        f"_dt_{alias}",
-                        F.when(bound_guard, F.lit(dt).cast("string")))
-                )
-            else:
-                plan = plan.withColumn(
-                    alias, F.expr(_filter_sql(expr_toks, set(plan.columns))))
-            bound = bound | {alias}
+            if el[2] in bound:
+                raise SparqlError(f"BIND reassigns bound variable ?{el[2]}")
+            plan = _bind(plan, el[1], el[2], prefixes)
+            bound = bound | {el[2]}
             continue
         elif el[0] == "minus":
             # SPARQL MINUS: drop solutions compatible with the right side.
@@ -2124,35 +2153,32 @@ def _compile_group(triples: DataFrame, group: _Group,
             # requires a shared binding) → no-op.
             if plan is None:
                 raise SparqlError("MINUS cannot be the first group element")
-            # only variables SHARED with the left side ever matter on the
-            # right (they become the anti-join keys) — id-runs inside the
-            # subgroup skip decoding everything else
-            # NO outer_bound here: per §8.3 the MINUS right side does NOT
-            # see left bindings, so a filter on an outer var evaluates
-            # with it unbound (NULL) — exactly the famous MINUS vs
-            # NOT-EXISTS divergence
+            # only the shared variables' ids matter on the right (they
+            # are the anti-join keys), so the subgroup decodes none of
+            # them.  NO outer_bound here: per §8.3 the MINUS right side
+            # does NOT see left bindings, so a filter on an outer var
+            # evaluates with it unbound (NULL) — exactly the famous MINUS
+            # vs NOT-EXISTS divergence
             r_null: set[str] = set()
             right, rv = _compile_group(triples, el[1], prefixes, quads,
-                                       extra, needed=set(bound),
+                                       extra, needed=set(),
                                        out_nullable=r_null)
-            keys = sorted(bound & rv)
-            null_keys = {k for k in keys if k in nullable or k in r_null}
-            if keys and null_keys:
+            keys = [f"_tid_{k}" for k in sorted(bound & rv)]
+            if any(k in nullable or k in r_null for k in bound & rv):
                 # UNDEF-nullable keys on the left: exact §8.3 MINUS —
                 # remove rows with a COMPATIBLE right row (NULL on either
                 # side matches) whose domains overlap (≥1 var bound on
                 # both sides).  Theta join over the distinct key tuples:
                 # only UNDEF-carrying queries (small VALUES-driven key
                 # sets) take this path, equi-anti-join otherwise.
-                ren = {k: f"_mn_{k}" for k in keys}
                 right2 = right.select(
-                    [F.col(k).alias(ren[k]) for k in keys]).distinct()
+                    [F.col(k).alias(f"_mn{k}") for k in keys]).distinct()
                 compat, overlap = None, None
                 for k in keys:
-                    c = F.col(k) == F.col(ren[k])
-                    c = F.col(k).isNull() | F.col(ren[k]).isNull() | c
+                    a, b = F.col(k), F.col(f"_mn{k}")
+                    c = a.isNull() | b.isNull() | (a == b)
                     compat = c if compat is None else compat & c
-                    o = F.col(k).isNotNull() & F.col(ren[k]).isNotNull()
+                    o = a.isNotNull() & b.isNotNull()
                     overlap = o if overlap is None else overlap | o
                 plan = plan.join(right2, compat & overlap, "left_anti")
             elif keys:
@@ -2160,53 +2186,27 @@ def _compile_group(triples: DataFrame, group: _Group,
                                  keys, "left_anti")
             continue
         elif el[0] == "values":
-            vars_, rows = el[1], el[2]
-            data = [tuple(None if t is None else _term_value(t, prefixes)
-                          for t in row)
-                    for row in rows]
-            scan = triples.sparkSession.createDataFrame(
-                data, ", ".join(f"`{v}` string" for v in vars_))
-            undef_vars = {v for v in vars_
-                          if any(row[vars_.index(v)] is None
-                                 for row in data)}
-            if undef_vars:
-                if plan is None:
-                    # the VALUES rows ARE the group so far; NULL cells
-                    # stay unbound and compat-join with what follows
-                    plan, bound = scan, set(vars_)
-                else:
-                    plan, bound = _values_compat_join(
-                        plan, bound, scan, set(vars_))
-                nullable |= undef_vars
-                continue
-            vars_, how = set(vars_), "inner"
+            scan = _values_frame(triples.sparkSession, el[1], el[2],
+                                 prefixes)
+            scan_null = {v for j, v in enumerate(el[1])
+                         if any(row[j] is None for row in el[2])}
+            vars_, how = set(el[1]), "inner"
         elif el[0] == "subselect":
             scan, out_cols = _compile_select(triples, el[1], prefixes,
-                                             quads, out_nullable=scan_null)
+                                             quads, out_nullable=scan_null,
+                                             terms=True)
             vars_, how = set(out_cols), "inner"
         elif el[0] in ("optional", "group", "union"):
-            # a subgroup's id-joined runs must decode anything the OUTER
-            # query can see: the projection surface plus every variable any
-            # sibling element (or the plan built so far) mentions
-            if needed is None:
-                sub_needed = None
-            else:
-                sub_needed = set(needed) | bound | (want_meta or set())
-                for other in elements:
-                    if other is not el:
-                        sub_needed |= _all_vars(other)
             if el[0] == "union":
                 # strict §18.2 bottom-up scoping: a UNION branch never
                 # sees enclosing-group bindings — a filter referencing
                 # one evaluates it as unbound (NULL → error → false),
                 # exactly like reference engines (no outer_bound here)
                 left, lv = _compile_group(triples, el[1], prefixes, quads,
-                                          extra, want_meta=meta,
-                                          needed=sub_needed,
+                                          extra, needed=_sub_needed(),
                                           out_nullable=scan_null)
                 right, rv = _compile_group(triples, el[2], prefixes, quads,
-                                           extra, want_meta=meta,
-                                           needed=sub_needed,
+                                           extra, needed=_sub_needed(),
                                            out_nullable=scan_null)
                 scan = left.unionByName(right, allowMissingColumns=True)
                 # a variable bound in only ONE branch is NULL = unbound on
@@ -2214,25 +2214,23 @@ def _compile_group(triples: DataFrame, group: _Group,
                 # joins on it use §10.2 compatibility, not SQL equality
                 scan_null |= (lv - rv) | (rv - lv)
                 vars_, how = lv | rv, "inner"
-            else:
+            elif el[0] == "optional":
                 # OPTIONAL filters may reference left-side vars (the
                 # LeftJoin expression, §18.2.2.7) — defer them into the
-                # join condition.  A plain nested {} gets strict
-                # bottom-up scoping: no outer_bound, so filters over
-                # enclosing vars evaluate them as unbound (NULL)
-                if el[0] == "optional":
-                    scan, vars_ = _compile_group(
-                        triples, el[1], prefixes, quads, extra,
-                        want_meta=meta, needed=sub_needed,
-                        out_nullable=scan_null,
-                        outer_bound=_sub_outer(),
-                        out_deferred=scan_defer)
-                else:
-                    scan, vars_ = _compile_group(
-                        triples, el[1], prefixes, quads, extra,
-                        want_meta=meta, needed=sub_needed,
-                        out_nullable=scan_null)
-                how = "left" if el[0] == "optional" else "inner"
+                # join condition
+                scan, vars_ = _compile_group(
+                    triples, el[1], prefixes, quads, extra,
+                    needed=_sub_needed(), out_nullable=scan_null,
+                    outer_bound=_sub_outer(), out_deferred=scan_defer)
+                how = "left"
+            else:
+                # a plain nested {} gets strict bottom-up scoping: no
+                # outer_bound, so filters over enclosing vars evaluate
+                # them as unbound (NULL)
+                scan, vars_ = _compile_group(
+                    triples, el[1], prefixes, quads, extra,
+                    needed=_sub_needed(), out_nullable=scan_null)
+                how = "inner"
         else:  # pragma: no cover
             raise SparqlError(f"unknown group element {el!r}")
         if plan is None:
@@ -2255,42 +2253,6 @@ def _compile_group(triples: DataFrame, group: _Group,
                 nullable |= vars_ - prev_bound
     if plan is None:
         raise SparqlError("empty group pattern")
-    # metadata filters on vars bound in SUBJECT/PREDICATE position: kind
-    # is derivable there (a subject is blank iff its label starts '_:';
-    # subjects/predicates are never literals), so derive the hidden
-    # columns instead of crashing with an unresolved-column error; any
-    # other un-attached metadata var is a loud SparqlError
-    if meta_filter:
-        subjpred = set()
-        def _collect_sp(els):
-            for e0 in els:
-                if isinstance(e0, _Pattern):
-                    if e0.subj.startswith("?"):
-                        subjpred.add(e0.subj[1:])
-                    if isinstance(e0.pred, str) and e0.pred.startswith("?"):
-                        subjpred.add(e0.pred[1:])
-                elif isinstance(e0, tuple) and e0 and e0[0] in (
-                        "optional", "group", "graph"):
-                    sub = e0[2] if e0[0] == "graph" else e0[1]
-                    _collect_sp(sub.elements)
-                elif isinstance(e0, tuple) and e0 and e0[0] == "union":
-                    _collect_sp(e0[1].elements)
-                    _collect_sp(e0[2].elements)
-        _collect_sp(group.elements)
-        for v in sorted(meta_filter):
-            if f"_kind_{v}" in plan.columns or v not in bound:
-                continue
-            if v in subjpred:
-                from trident_spark.pipeline.kg import subject_kind
-
-                plan = (plan.withColumn(f"_kind_{v}", subject_kind(F.col(v)))
-                    .withColumn(f"_lang_{v}",
-                                F.lit(None).cast("string"))
-                    .withColumn(f"_dt_{v}", F.lit(None).cast("string")))
-            else:
-                raise SparqlError(
-                    f"isIRI/LANG/DATATYPE(?{v}) requires ?{v} bound by a "
-                    "triple pattern in this group")
     # SPARQL filter scope: this group, after all its elements joined.
     # Filters referencing variables bound only in the ENCLOSING scope
     # defer to the caller ONLY where the spec substitutes outer bindings
@@ -2302,7 +2264,7 @@ def _compile_group(triples: DataFrame, group: _Group,
     # reference engines implement.
     for ftoks in filters:
         fvars = {t[1:] for t in ftoks if t.startswith("?")}
-        missing = fvars - set(plan.columns)
+        missing = fvars - bound
         if missing and outer_bound and missing & outer_bound:
             if out_deferred is None:
                 raise SparqlError(
@@ -2327,10 +2289,11 @@ def _compile_group(triples: DataFrame, group: _Group,
         # outer solution into the EXISTS pattern).  Seeded vars join the
         # semi/anti keys through the normal shared-variable machinery.
         e_seed_vars = _outer_bind_vars(sub, bound)
-        e_seed = ((plan.select(*sorted(e_seed_vars)).distinct(),
+        e_seed = ((plan.select(*[f"{p}{v}" for v in sorted(e_seed_vars)
+                                 for p in _TERM_COLS]).distinct(),
                    e_seed_vars) if e_seed_vars else None)
         sub_plan, sub_vars = _compile_group(triples, sub, prefixes, quads,
-                                            extra, needed=set(bound),
+                                            extra, needed=set(),
                                             out_nullable=e_null,
                                             outer_bound=bound
                                             | (outer_bound or set()),
@@ -2339,52 +2302,43 @@ def _compile_group(triples: DataFrame, group: _Group,
         keys = sorted(bound & sub_vars)
         how = "left_semi" if positive else "left_anti"
         null_keys = {k for k in keys if k in nullable or k in e_null}
-        if e_def:
-            # substitution semantics: the subgroup's filters on OUTER
-            # variables correlate the semi/anti join.  Scan side fully
-            # renamed (_ex_*), filter tokens rewritten to the renamed
+        if e_def or null_keys:
+            # substitution semantics: an unbound outer var constrains
+            # nothing, so compatibility (NULL on either side matches)
+            # replaces equality on UNDEF-nullable keys; and the
+            # subgroup's filters on OUTER variables correlate the
+            # semi/anti join.  The subgroup side is fully renamed
+            # (_ex_*) and the filter tokens rewritten to the renamed
             # columns for subgroup-bound vars — outer vars resolve
             # against the plan side.
-            fvars: set[str] = set()
-            for ftoks in e_def:
-                fvars |= {t[1:] for t in ftoks if t.startswith("?")}
-            need_cols = set(keys) | (fvars & sub_vars)
-            sub2 = sub_plan.select(*sorted(need_cols)).distinct() \
-                if need_cols else sub_plan.limit(1)
-            for c in (need_cols or set(sub2.columns)):
-                sub2 = sub2.withColumnRenamed(c, f"_ex_{c}")
+            fvars = {t[1:] for ftoks in e_def for t in ftoks
+                     if t.startswith("?")} & sub_vars
+            ren = {v: f"_ex_{v}" for v in set(keys) | fvars}
+            sub2 = _rename_vars(sub_plan.select(
+                *[f"_tid_{k}" for k in keys],
+                *[c for v in fvars for c in _decoded_cols(v)]),
+                ren).distinct() if ren \
+                else sub_plan.limit(1).select(F.lit(1).alias("_e"))
             cond = None
             for k in keys:
-                c = F.col(k) == F.col(f"_ex_{k}")
+                a, b = F.col(f"_tid_{k}"), F.col(f"_tid_{ren[k]}")
+                c = a == b
                 if k in null_keys:
-                    c = F.col(k).isNull() | F.col(f"_ex_{k}").isNull() | c
+                    c = a.isNull() | b.isNull() | c
                 cond = c if cond is None else cond & c
             cols_all = set(plan.columns) | set(sub2.columns)
             for ftoks in e_def:
-                rtoks = ["?_ex_" + t[1:]
-                         if t.startswith("?") and t[1:] in sub_vars else t
+                rtoks = ["?" + ren[t[1:]]
+                         if t.startswith("?") and t[1:] in fvars else t
                          for t in ftoks]
                 fc = F.expr(_filter_sql(rtoks, cols_all))
                 cond = fc if cond is None else cond & fc
             plan = plan.join(sub2,
                              cond if cond is not None else F.lit(True),
                              how)
-        elif keys and null_keys:
-            # UNDEF-nullable keys: substitute-then-evaluate semantics —
-            # an unbound outer var constrains nothing, so compatibility
-            # (NULL on either side matches) replaces equality.  Same
-            # theta-join scale note as the MINUS branch above.
-            ren = {k: f"_ex_{k}" for k in keys}
-            sub2 = sub_plan.select(
-                [F.col(k).alias(ren[k]) for k in keys]).distinct()
-            compat = None
-            for k in keys:
-                c = F.col(k) == F.col(ren[k])
-                c = F.col(k).isNull() | F.col(ren[k]).isNull() | c
-                compat = c if compat is None else compat & c
-            plan = plan.join(sub2, compat, how)
         elif keys:
-            plan = plan.join(sub_plan.select(*keys).distinct(), keys, how)
+            tids = [f"_tid_{k}" for k in keys]
+            plan = plan.join(sub_plan.select(*tids).distinct(), tids, how)
         else:
             # uncorrelated: gate on whether the inner group has any row
             marker = sub_plan.limit(1).select(F.lit(1).alias("_e"))
@@ -2392,6 +2346,36 @@ def _compile_group(triples: DataFrame, group: _Group,
     if out_nullable is not None:
         out_nullable |= nullable
     return plan, bound
+
+
+def _bind(plan: DataFrame, toks: list[str], alias: str,
+          prefixes: dict[str, str]) -> DataFrame:
+    """BIND(expr AS ?alias): a bare variable copies its term; TRIPLE and
+    the STRLANG/STRDT/IRI constructors bind their typed term; any other
+    expression binds a simple literal.  An unbound result (an unbound
+    argument, an expression error) is null in every column, so isIRI of
+    it is not true."""
+    cols = set(plan.columns)
+    if len(toks) == 1 and toks[0].startswith("?"):
+        v = toks[0][1:]
+        return plan.withColumns({
+            f"{p}{alias}": F.col(f"{p}{v}") if v in cols
+            else F.lit(None).cast("long" if p == "_tid_" else "string")
+            for p in _TERM_COLS})
+    if toks and toks[0].upper() == "TRIPLE":
+        t_args, t_end = _parse_call_args(toks, 1)
+        if t_end != len(toks):
+            raise SparqlError(
+                "TRIPLE(...) nested inside a larger BIND expression is "
+                "not supported")
+        return plan.withColumn(
+            alias, _triple_ctor_col(t_args, prefixes, plan)).withColumns(
+            _computed_term(alias, "triple"))
+    value_toks, kind, lang, dt = (_term_constructor_bind(toks, prefixes)
+                                  or (toks, "literal", None, None))
+    return plan.withColumn(
+        alias, F.expr(_filter_sql(value_toks, cols))).withColumns(
+        _computed_term(alias, kind, dt, lang))
 
 
 # SELECT items: plain var or (AGG(?v) AS ?alias)
@@ -2587,15 +2571,17 @@ def _rewrite_having(toks: list[str], items: list[_SelectItem]
 def _compile_select(triples: DataFrame, toks: list[str],
                     prefixes: dict[str, str],
                     quads: DataFrame | None = None,
-                    out_nullable: set[str] | None = None
+                    out_nullable: set[str] | None = None,
+                    terms: bool = False
                     ) -> tuple[DataFrame, list[str]]:
     """SELECT token list (``SELECT`` through trailing modifiers) →
     (projected plan, output column names).  Shared by ``query()`` and
-    ``{ SELECT ... }`` subqueries.  ``out_nullable``: mutable set the
-    subselect caller passes to learn which PROJECTED columns may be NULL
-    = unbound (UNDEF cells / OPTIONAL misses surviving the projection) —
-    without it the enclosing group would silently join them with SQL
-    equality."""
+    ``{ SELECT ... }`` subqueries, whose plan also carries each output
+    variable's term columns (``terms``).  ``out_nullable``: mutable set
+    the subselect caller passes to learn which PROJECTED columns may be
+    NULL = unbound (UNDEF cells / OPTIONAL misses surviving the
+    projection) — without it the enclosing group would silently join
+    them with SQL equality."""
     if not toks or toks[0].upper() != "SELECT":
         raise SparqlError("expected SELECT")
     # split SELECT items / WHERE group / tail modifiers
@@ -2629,7 +2615,7 @@ def _compile_select(triples: DataFrame, toks: list[str],
     g_null: set[str] = set()
     plan, bound = _compile_group(triples, group, prefixes, quads,
                                  needed=needed, out_nullable=g_null)
-    plan, out_cols = _select_tail(plan, bound, distinct, items, tail)
+    plan, out_cols = _select_tail(plan, bound, distinct, items, tail, terms)
     if out_nullable is not None:
         # nullability survives projection for plain (non-aggregated,
         # non-expression) variables only: aggregates and computed
@@ -2645,13 +2631,20 @@ def _compile_select(triples: DataFrame, toks: list[str],
 
 
 def _select_tail(plan: DataFrame, bound: set[str], distinct: bool,
-                 items: list[_SelectItem] | None, tail: list[str]
-                 ) -> tuple[DataFrame, list[str]]:
+                 items: list[_SelectItem] | None, tail: list[str],
+                 terms: bool = False) -> tuple[DataFrame, list[str]]:
     """Solution modifiers of :func:`_compile_select`: GROUP BY (plain /
     (expr AS ?k) / bare builtin-call keys), HAVING and ORDER BY hidden
     aggregates, (expr-over-aggregate AS ?v) projections, GROUP BY-only ≡
     distinct keys, DISTINCT, ORDER/LIMIT/OFFSET.  ``bound`` is the set of
-    variables the incoming plan binds as lexical columns."""
+    variables the incoming plan binds.  With ``terms`` each output
+    variable keeps its term columns, and a computed one (an aggregate,
+    an expression) binds a simple literal."""
+
+    def carried(vs: list[str]) -> list[str]:
+        return [f"{p}{v}" for v in vs for p in _TERM_COLS
+                if terms and p and f"{p}{v}" in plan.columns]
+
     # tail: GROUP BY ?v... | HAVING(expr) | ORDER BY [ASC|DESC] (?v)
     #     | LIMIT n | OFFSET n
     group_by: list[str] = []
@@ -2787,11 +2780,11 @@ def _select_tail(plan: DataFrame, bound: set[str], distinct: bool,
             order = new_order
         aggs += [_agg_col(it) for it in hidden_all]
         if aggs:
-            plan = (plan.groupBy(*keys).agg(*aggs) if keys
-                    else plan.agg(*aggs))
+            plan = (plan.groupBy(*keys, *carried(keys)).agg(*aggs)
+                    if keys else plan.agg(*aggs))
         else:
             # GROUP BY with no aggregate anywhere ≡ distinct group keys
-            plan = plan.select(*keys).distinct()
+            plan = plan.select(*keys, *carried(keys)).distinct()
         if having is not None:
             plan = plan.where(_filter_sql(htoks))
         for alias, rtoks in expr_rewritten.items():
@@ -2802,7 +2795,7 @@ def _select_tail(plan: DataFrame, bound: set[str], distinct: bool,
                       if t.startswith("?")}
         drop_after_order = [it.alias for it in hidden_all
                             if it.alias in order_vars]
-        plan = plan.select(*out_cols, *drop_after_order)
+        plan = plan.select(*out_cols, *carried(out_cols), *drop_after_order)
     else:
         drop_after_order = []
         if having is not None:
@@ -2821,7 +2814,11 @@ def _select_tail(plan: DataFrame, bound: set[str], distinct: bool,
                        if v not in bound and v not in exprs]
             if missing:
                 raise SparqlError(f"unbound variables in SELECT: {missing}")
-        plan = plan.select(*out_cols)
+        plan = plan.select(*out_cols, *carried(out_cols))
+    if terms:
+        plan = plan.withColumns({
+            c: e for v in out_cols if f"_tid_{v}" not in plan.columns
+            for c, e in _computed_term(v).items()})
 
     if distinct:
         # NB: with SELECT DISTINCT + ORDER BY on a hidden aggregate the
@@ -2908,7 +2905,8 @@ def _query(triples: DataFrame | _Warehouse, quads: DataFrame | None,
         group, j = _parse_group(toks, i + 1)
         if toks[j:]:
             raise SparqlError(f"unexpected token after ASK group: {toks[j]!r}")
-        plan, _ = _compile_group(triples, group, prefixes, quads)
+        plan, _ = _compile_group(triples, group, prefixes, quads,
+                                 needed=set())
         return plan.limit(1).agg(
             (F.count(F.lit(1)) > F.lit(0)).alias("ask"))
     if not toks or toks[0].upper() != "SELECT":
@@ -3010,14 +3008,10 @@ def construct(triples: DataFrame, sparql: str) -> DataFrame:
     """CONSTRUCT { template } WHERE { ... } → a lexical-triples DataFrame
     (subj, pred, obj_lexical, obj_kind, obj_datatype, obj_lang).
 
-    Term kinds for variable objects are recovered from the solution's own
-    hidden _kind_ metadata when the WHERE group binds the variable in
-    object position (want_meta), else by joining the source graph's term
-    dictionary (a term seen anywhere as IRI counts as IRI).  Literal term
-    identity flows through: constant objects carry their ``@lang`` /
-    ``^^dt``, object-position variables the matched term's own
-    datatype/lang; variables bound only in subject position or behind
-    UNION/OPTIONAL yield NULL datatype/lang (documented residual)."""
+    A template variable instantiates as the RDF term its solution binds
+    — kind, datatype and lang included, wherever in the WHERE group it
+    is bound (a pattern, a path, VALUES, BIND, a subselect) — and a
+    constant as itself, with its ``@lang`` / ``^^dt``."""
     # quads input: SPARQL dataset semantics, same as query()/describe() —
     # top-level WHERE patterns see the default graph, GRAPH the named ones
     if "graph" in triples.columns:
@@ -3040,56 +3034,30 @@ def construct(triples: DataFrame, sparql: str) -> DataFrame:
     if toks[j:]:
         raise SparqlError(
             f"unexpected token after CONSTRUCT WHERE: {toks[j]!r}")
-    plan, bound = _compile_group(triples, group, prefixes, quads=quads,
-                                 want_meta=_template_obj_vars(template))
-    return _instantiate(quads if quads is not None else triples,
-                        template, plan, bound, prefixes)
+    plan, bound = _compile_group(triples, group, prefixes, quads=quads)
+    return _instantiate(template, plan, bound, prefixes)
 
 
-def _template_obj_vars(template: list | None) -> set[str]:
-    """Variables in template OBJECT position: their solutions must carry
-    the matched term's own kind (hidden _kind_ column) so instantiation
-    does not mis-kind a literal whose lexical form also occurs as an IRI
-    elsewhere in the graph."""
-    if not template:
-        return set()
-    return {p.obj[1:] for p in template
-            if isinstance(p.obj, str) and p.obj.startswith("?")}
-
-
-def _instantiate(triples: DataFrame, template: list, plan: DataFrame,
-                 bound: set[str], prefixes: dict[str, str]) -> DataFrame:
+def _instantiate(template: list, plan: DataFrame, bound: set[str],
+                 prefixes: dict[str, str]) -> DataFrame:
     """Template triple patterns × solution multiset → lexical triples
-    (subj, pred, obj_lexical, obj_kind).  Shared by CONSTRUCT and the
-    UPDATE forms.
+    (subj, pred, obj_lexical, obj_kind, obj_datatype, obj_lang).  Shared
+    by CONSTRUCT and the UPDATE forms: a variable instantiates as the
+    term its solution binds."""
+    null_s = F.lit(None).cast("string")
 
-    Object-variable kinds come from the matched solution's own hidden
-    _kind_ column whenever the WHERE group provided one; the graph-wide
-    term→kind dictionary is only the fallback (vars bound in subject
-    position or inside UNION/OPTIONAL sub-groups)."""
-    # term → kind dictionary (iri beats literal when a lexical form is both)
-    kind_rank = F.when(F.col("obj_kind") == "iri", 0) \
-                 .when(F.col("obj_kind") == "blank", 1).otherwise(2)
-    kinds = (
-        triples.select(F.col("obj_lexical").alias("_term"),
-                       kind_rank.alias("_rank"))
-        .union(triples.select(F.col("subj"), F.lit(0)))
-        .groupBy("_term").agg(F.min("_rank").alias("_rank"))
-        .select("_term",
-                F.element_at(F.array(F.lit("iri"), F.lit("blank"),
-                                     F.lit("literal")),
-                             F.col("_rank") + 1).alias("_kind"))
-    )
-
-    def term_col(term: str):
-        """template term → (value column, kind column|None for lookup)"""
+    def term_cols(term: str) -> tuple:
+        """template term → (lexical, kind, datatype, lang) columns"""
         if term.startswith("?"):
             v = term[1:]
             if v not in bound:
                 raise SparqlError(f"unbound variable in template: ?{v}")
-            return F.col(v), None  # kind via dictionary join (objects only)
+            return tuple(F.col(f"{p}{v}")
+                         for p in ("", "_kind_", "_dt_", "_lang_"))
         if term.startswith('"'):
-            return F.lit(_term_value(term, prefixes)), F.lit("literal")
+            value, lang, dt = _literal_parts(term, prefixes)
+            return (F.lit(value), F.lit("literal"), F.lit(dt).cast("string"),
+                    F.lit(lang).cast("string"))
         if term.startswith("_:"):
             # a template blank label means a FRESH blank node per solution
             # (SPARQL 1.1 §16.2.1) — derived from the solution's bindings
@@ -3099,57 +3067,20 @@ def _instantiate(triples: DataFrame, template: list, plan: DataFrame,
                 "\x1f", F.lit(term),
                 *[F.coalesce(F.col(v).cast("string"), F.lit(""))
                   for v in sorted(bound)])
-            return F.concat(F.lit("_:c"), F.md5(key)), F.lit("blank")
-        return F.lit(_expand(term, prefixes)), F.lit("iri")
-
-    null_s = F.lit(None).cast("string")
+            return F.concat(F.lit("_:c"), F.md5(key)), F.lit("blank"), \
+                null_s, null_s
+        return F.lit(_expand(term, prefixes)), F.lit("iri"), null_s, null_s
 
     outs = []
     for pat in template:
         if isinstance(pat.pred, tuple):
             raise SparqlError("property paths are not allowed in templates")
-        s_col, _ = term_col(pat.subj)
-        p_col, _ = term_col(pat.pred)
-        o_col, o_kind = term_col(pat.obj)
-        # literal term identity: datatype/lang flow through the template —
-        # a constant carries its own @lang/^^dt; a variable carries the
-        # matched term's hidden _dt_/_lang_ metadata when the WHERE group
-        # provided it (want_meta), NULL otherwise
-        o_dt = o_lang = null_s
-        if pat.obj.startswith('"'):
-            _, c_lang, c_dt = _literal_parts(pat.obj, prefixes)
-            o_dt = F.lit(c_dt).cast("string")
-            o_lang = F.lit(c_lang).cast("string")
-        elif pat.obj.startswith("?"):
-            v = pat.obj[1:]
-            if f"_dt_{v}" in plan.columns:
-                o_dt = F.col(f"_dt_{v}")
-            if f"_lang_{v}" in plan.columns:
-                o_lang = F.col(f"_lang_{v}")
-        if o_kind is None and pat.obj.startswith("?") \
-                and f"_kind_{pat.obj[1:]}" in plan.columns:
-            o_kind = F.col(f"_kind_{pat.obj[1:]}")
-        if o_kind is not None:
-            row = plan.select(s_col.alias("subj"), p_col.alias("pred"),
-                              o_col.alias("obj_lexical"),
-                              o_kind.alias("obj_kind"),
-                              o_dt.alias("obj_datatype"),
-                              o_lang.alias("obj_lang"))
-        else:
-            row = plan.select(s_col.alias("subj"), p_col.alias("pred"),
-                              o_col.alias("obj_lexical"),
-                              o_dt.alias("obj_datatype"),
-                              o_lang.alias("obj_lang"))
-            # NOT broadcast: the term dictionary is O(graph); equi-join and
-            # let AQE choose (it broadcasts automatically on small graphs)
-            row = (
-                row.join(kinds,
-                         row["obj_lexical"] == kinds["_term"], "left")
-                .select("subj", "pred", "obj_lexical",
-                        F.coalesce("_kind", F.lit("literal"))
-                        .alias("obj_kind"), "obj_datatype", "obj_lang")
-            )
-        outs.append(row)
+        obj = term_cols(pat.obj)
+        outs.append(plan.select(
+            term_cols(pat.subj)[0].alias("subj"),
+            term_cols(pat.pred)[0].alias("pred"),
+            *[c.alias(n) for c, n in zip(obj, (
+                "obj_lexical", "obj_kind", "obj_datatype", "obj_lang"))]))
     result = outs[0]
     for o in outs[1:]:
         result = result.union(o)
@@ -3171,13 +3102,7 @@ def _ground_rows(group: _Group, prefixes: dict[str, str]) -> list[tuple]:
         for t in (el.subj, el.pred, el.obj):
             if t.startswith("?"):
                 raise SparqlError("DATA blocks cannot contain variables")
-        if el.obj.startswith('"'):
-            value, lang, dt = _literal_parts(el.obj, prefixes)
-            okind = "literal"
-        else:
-            value = _term_value(el.obj, prefixes)
-            lang = dt = None
-            okind = "blank" if el.obj.startswith("_:") else "iri"
+        okind, value, dt, lang = _const_term(el.obj, prefixes)
         rows.append((
             el.subj if el.subj.startswith("_:")
             else _expand(el.subj, prefixes),
@@ -3471,16 +3396,13 @@ def update(frame: DataFrame, sparql: str) -> DataFrame:
     if named:
         graph_quads = quads.where(F.col("graph").isin(using_named)) \
             if using or using_named else quads
-    want = set()
-    for pats, _ in (templates[0] or []) + (templates[1] or []):
-        want |= _template_obj_vars(pats)
     plan, bound = _compile_group(scope.drop("graph"), group, prefixes,
-                                 quads=graph_quads, want_meta=want)
+                                 quads=graph_quads)
 
     def inst(parts: list | None) -> DataFrame | None:
         out = None
         for pats, g in parts or []:
-            part = _instantiate(quads, pats, plan, bound, prefixes) \
+            part = _instantiate(pats, plan, bound, prefixes) \
                 .withColumn("graph", F.lit(g).cast("string"))
             out = part if out is None else out.unionByName(part)
         return out
@@ -3496,12 +3418,12 @@ def query_encoded(edges: DataFrame, terms: DataFrame,
     ``terms``): the same compiler and the same answers as
     ``query(kg.decode_triples(edges, terms), sparql)``.
 
-    Plain triple patterns scan only the 8-byte id columns of ``edges``
-    (parquet prunes the rest at the source), filter constants on their
-    folded ``kg.term_id``, compare a repeated variable's ids, join on
-    ids, and decode each variable the query needs with one ``terms``
-    join.  Property paths and quoted triples read the decoded graph,
-    built only when one occurs.
+    Plain triple patterns and property paths scan only the 8-byte id
+    columns of ``edges`` (parquet prunes the rest at the source), filter
+    constants on their folded ``kg.term_id``, compare a repeated
+    variable's ids, join on ids, and decode each variable the query
+    needs with one ``terms`` join.  Quoted triples read the decoded
+    graph, built only when one occurs.
 
     Contracts (as ``kg.dedup_triples`` and ``kg.encode_triples`` write
     the tables): ``edges`` is a set of ``(subj_id, pred_id, obj_id)``
