@@ -246,6 +246,21 @@ def test_query_matches_term_identity_oracle(spark, fuzz_graph,
     assert answered >= 10  # most queries have rows to compare
 
 
+def test_warehouse_matches_lexical_compilation(spark, fuzz_graph,
+                                               fuzz_warehouse):
+    """query_encoded over the encoded fuzz graph answers every generated
+    query like query() over the graph itself: its id scans filter literal
+    constants of every form (plain, tagged in either case, typed)."""
+    edges, terms = fuzz_warehouse
+    rng = random.Random(5)
+    for _ in range(15):
+        q, _ = _gen_query(rng)
+        want = Counter(tuple(r) for r in S.query(fuzz_graph, q).collect())
+        got = Counter(tuple(r) for r in
+                      S.query_encoded(edges, terms, q).collect())
+        assert got == want, (q, got, want)
+
+
 def test_cross_pattern_term_identity(spark):
     """A variable bound by a LITERAL object in one pattern must not join
     an IRI subject with the same lexical form — id-runs enforce term
