@@ -1,10 +1,11 @@
-"""The spark-submit --py-files zip imports and loads its package data, and
-every library module is reachable from an entry point.
+"""The spark-submit --py-files zip imports and loads its package data,
+every library module is reachable from an entry point, and only
+session.get_spark builds a SparkSession.
 
 zipimport has no filesystem paths, so package data must load through
 importlib.resources; a filesystem pytest run can never see a break there.
 No Spark session is needed: the probe only imports and reads data, and the
-reachability check only parses source.
+other checks only parse source.
 """
 
 import ast
@@ -121,3 +122,20 @@ def test_query_modules_take_term_ids_from_kg_term_id():
                     and isinstance(node.value, str):
                 assert "xxhash64(" not in node.value.lower(), \
                     f"{path}:{node.lineno}"
+
+
+def test_only_session_module_builds_a_spark_session():
+    """Every entry point gets its session from session.get_spark, so each
+    gets the session-wide static settings (the codegen cache size among
+    them): no other module references SparkSession.builder."""
+    files = [REPO / "__spark_entry__.py",
+             *(p for d in ("trident_spark", "scripts", "tests", "kgbench")
+               for p in (REPO / d).rglob("*.py"))]
+    allowed = REPO / "trident_spark" / "session.py"
+    for path in sorted(set(files) - {allowed}):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Attribute) and node.attr == "builder":
+                base = node.value
+                name = base.attr if isinstance(base, ast.Attribute) else \
+                    getattr(base, "id", None)
+                assert name != "SparkSession", f"{path}:{node.lineno}"
