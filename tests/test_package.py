@@ -139,3 +139,14 @@ def test_only_session_module_builds_a_spark_session():
                 name = base.attr if isinstance(base, ast.Attribute) else \
                     getattr(base, "id", None)
                 assert name != "SparkSession", f"{path}:{node.lineno}"
+
+
+def test_query_modules_never_decode_the_graph():
+    """No module under trident_spark/query/ references kg.decode_triples:
+    every query element reads the edge ids and the term dictionary."""
+    for path in sorted((REPO / "trident_spark" / "query").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            name = (node.attr if isinstance(node, ast.Attribute)
+                    else node.id if isinstance(node, ast.Name)
+                    else node.name if isinstance(node, ast.alias) else None)
+            assert name != "decode_triples", f"{path}:{node.lineno}"

@@ -1857,26 +1857,50 @@ def test_query_encoded_differential(request, spark, encoded_kg, sparql):
                   raises=case in _BOTH_RAISE)
 
 
+@pytest.fixture(scope="module")
+def reified_kg(spark, encoded_kg):
+    """encoded_kg's graph plus a reification of its worksFor edges, each
+    annotated with its subject, as (edges, terms, lexical)."""
+    from pyspark.sql import functions as F
+
+    from tests.test_rdfstar import _encoded
+    from trident_spark.pipeline import rdfstar
+
+    lexical = encoded_kg[2]
+    works = lexical.where(F.col("pred") == SCHEMA + "worksFor")
+    graph = lexical.unionByName(rdfstar.reify(
+        works.withColumn("doc", F.col("subj")), SCHEMA + "about", "doc",
+        ann_kind="iri"))
+    return (*[t.localCheckpoint(eager=True) for t in _encoded(graph)],
+            graph.localCheckpoint(eager=True))
+
+
 # the deck templates plus a pattern that repeats a variable (an id
-# equality on the scan, not a read of the decoded graph) and the deck's
-# path template (a closure over the id edges)
+# equality on the scan, not a read of the decoded graph), the deck's path
+# template (a closure over the id edges) and a quoted triple (a join of
+# the edges with the dictionary's triple terms)
 _SCAN_SHAPES = {**_DECK_SHAPES,
                 "repeated_var": "SELECT ?s WHERE { ?s schema:url ?s }",
-                "path": "SELECT ?x WHERE { <{node}> schema:worksFor+ ?x }"}
+                "path": "SELECT ?x WHERE { <{node}> schema:worksFor+ ?x }",
+                "quoted": "SELECT ?o ?d WHERE { ?r <http://www.w3.org/1999/"
+                          "02/22-rdf-syntax-ns#reifies> <<( <{node}> "
+                          "schema:worksFor ?o )>> . ?r schema:about ?d }"}
 
 
 @pytest.mark.parametrize("template", list(_SCAN_SHAPES))
 def test_query_encoded_deck_shapes_scan_only_ids(
-        spark, encoded_kg, tmp_path, monkeypatch, template):
+        spark, encoded_kg, reified_kg, tmp_path, monkeypatch, template):
     """On a parquet warehouse every edge scan of a deck template (and of a
-    repeated-variable pattern) reads the id columns only, and no plan
-    decodes the whole edge table.  A closure materializes its rounds with
-    localCheckpoint, so the plans it checkpoints are read too."""
+    repeated-variable pattern or a quoted triple) reads the id columns
+    only, and no plan decodes the whole edge table.  A closure
+    materializes its rounds with localCheckpoint, so the plans it
+    checkpoints are read too."""
     import re as _re
 
     from trident_spark.query.sparql import query_encoded
 
-    edges, terms, lexical = encoded_kg
+    edges, terms, lexical = \
+        reified_kg if template == "quoted" else encoded_kg
     plans = []
     frame = type(edges)
     checkpoint = frame.localCheckpoint

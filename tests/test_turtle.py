@@ -161,6 +161,20 @@ def test_from_nquads_error_channel(spark):
     assert bad[0]["subj"] is None
 
 
+def test_nquads_literal_escapes_decode_as_turtle():
+    """The N-Triples reader decodes a literal's escapes as the Turtle
+    reader does (UCHAR and every ECHAR), and an undefined escape makes
+    the line malformed."""
+    from trident_spark.pipeline.sinks import parse_nquads_line
+    from trident_spark.pipeline.turtle import parse_turtle
+
+    line = '<http://x/s> <http://x/p> "caf\\u00E9 \\b \\\' \\U0001F600 x" .'
+    assert parse_nquads_line(line)[2] == "caf\u00e9 \b ' \U0001F600 x"
+    assert parse_nquads_line(line)[:6] == parse_turtle(line)[0]
+    for bad in ('"a \\q"', '"\\uD800"'):
+        assert parse_nquads_line(f"<http://x/s> <http://x/p> {bad} .") is None
+
+
 def test_blank_node_property_list_object():
     """schema.org-style nested [...] in object position."""
     doc = """

@@ -162,9 +162,9 @@ def decode_triples(triples: DataFrame, terms: DataFrame) -> DataFrame:
     table (subjects/predicates are always IRIs post-skolemize, so only
     the object position carries kind/datatype/lang).
 
-    ``sparql.query_encoded`` answers as ``query`` does over this frame,
-    and builds it only for elements that need lexical columns (property
-    paths, quoted triples).  The warehouse tables hold the CANONICAL
+    ``sparql.query_encoded`` answers as ``query`` does over this frame
+    without building it; ``kgbench`` builds it as the query workload's
+    lexical frame.  The warehouse tables hold the CANONICAL
     (entity-linked, CC-rewritten) KG, while the ntriples export is the
     assertion-level record (linking as explicit owl:sameAs); parsing the
     export would answer over a different graph.

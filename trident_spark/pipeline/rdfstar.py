@@ -13,33 +13,33 @@ terms are rows with ``obj_kind = 'triple'`` whose ``obj_lexical`` holds the
 canonical N-Triples 1.2 rendering of the embedded triple.  Storing the
 rendered form keeps serialization a pure projection (zero extra shuffle,
 each line independent) and makes nesting free: a reification of a
-reification just embeds the already-canonical object string.
+reification just embeds the already-canonical object string.  Component
+IRIs keep their spelling (no IRI-to-URI conversion), so a component is
+the same term as the asserted triple's.
 
 Scale notes: ``reify`` is a per-row projection (no shuffle, whole-stage
-codegen except the rare non-ASCII IRI fallback); reifier ids are
-content-hashed (md5 of the rendered triple) so they are deterministic and
-reproducible across partitionings and runs — the same property the
-pipeline's skolemizer relies on.  ``unquote`` is one Arrow hop.
+codegen); reifier ids are content-hashed (md5 of the rendered triple) so
+they are deterministic and reproducible across partitionings and runs —
+the same property the pipeline's skolemizer relies on.
 
-Scope (documented, not silent): Turtle annotation syntax (``{| ... |}``)
-and SPARQL 1.2 quoted-triple patterns are not implemented; querying
-annotations goes through :func:`unquote`, which turns triple-term objects
-back into component columns that join against the asserted graph.
+Querying annotations: SPARQL 1.2 quoted-triple patterns
+(``?r rdf:reifies <<( ?s ?p ?o )>>``, ``sparql.query``/``query_encoded``)
+read the triple terms of the term dictionary and bind their components.
+Turtle annotation syntax (``{| ... |}``) is parsed by ``pipeline/turtle.py``
+but not written.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from trident_spark.pipeline.sinks import (
-    _render_iri,
-    _render_object,
-    _render_subject,
-    parse_ntriples_line,
-)
+from trident_spark.pipeline.sinks import _render_object, _render_subject
 
 RDF_REIFIES = "http://www.w3.org/1999/02/22-rdf-syntax-ns#reifies"
+
+
+def _bracket(col) -> F.Column:
+    return F.concat(F.lit("<"), col, F.lit(">"))
 
 
 def triple_term() -> F.Column:
@@ -49,9 +49,9 @@ def triple_term() -> F.Column:
     return F.concat_ws(
         " ",
         F.lit("<<("),
-        _render_subject(F.col("subj")),
-        _render_iri(F.col("pred")),
-        _render_object(),
+        _render_subject(F.col("subj"), _bracket),
+        _bracket(F.col("pred")),
+        _render_object(_bracket),
         F.lit(")>>"),
     )
 
@@ -97,52 +97,3 @@ def reify(skolemized: DataFrame, ann_pred: str, ann_value_col: str,
     # reification is a set of statements: distinct collapses repeated
     # (triple, annotation) pairs exactly like the asserted graph's dedup
     return quoted.union(annotation).distinct()
-
-
-def unquote(triples: DataFrame) -> DataFrame:
-    """Rows with ``obj_kind = 'triple'`` → the embedded triple's components
-    (``q_subj/q_pred/q_obj_lexical/q_obj_kind/q_obj_datatype/q_obj_lang``),
-    keyed by the outer subject (the reifier).  One Arrow hop; rows whose
-    object is not a triple term are dropped."""
-
-    def run(iterator):
-        cols = ["subj"] + [f"q_{c}" for c in
-                           ("subj", "pred", "obj_lexical", "obj_kind",
-                            "obj_datatype", "obj_lang")]
-        for pdf in iterator:
-            rows = []
-            sel = pdf[pdf["obj_kind"] == "triple"]
-            for subj, lex in zip(sel["subj"], sel["obj_lexical"]):
-                inner = parse_triple_term(lex)
-                if inner:
-                    rows.append((subj, *inner))
-            yield pd.DataFrame(rows, columns=cols)
-
-    schema = ("subj string, q_subj string, q_pred string, "
-              "q_obj_lexical string, q_obj_kind string, "
-              "q_obj_datatype string, q_obj_lang string")
-    return triples.mapInPandas(run, schema)
-
-
-def parse_triple_term(lexical: str):
-    """``<<( <s> <p> o )>>`` → (s, p, o_lexical, o_kind, o_dt, o_lang), or
-    None if malformed.  Nested triple terms parse one level (the inner
-    object comes back as its canonical lexical with kind 'triple')."""
-    s = lexical.strip()
-    if not (s.startswith("<<(") and s.endswith(")>>")):
-        return None
-    body = s[3:-3].strip()
-    if body.startswith("<<("):
-        return None  # triple terms cannot be subjects (RDF 1.2)
-    # nested object: split off "<s> <p>" prefix, keep the rest verbatim
-    parsed = parse_ntriples_line(body + " .")
-    if parsed is not None:
-        return parsed
-    # fall back for nested triple-term objects: locate the inner "<<("
-    k = body.find("<<(")
-    if k == -1 or not body.endswith(")>>"):
-        return None
-    head = parse_ntriples_line(body[:k].strip() + ' "" .')
-    if head is None:
-        return None
-    return (head[0], head[1], body[k:], "triple", None, None)

@@ -22,6 +22,12 @@ from pyspark.sql.types import StringType
 
 from trident_spark.functions.iri_funcs import iri_to_uri
 from trident_spark.pipeline.kg import TRIPLE_SCHEMA
+from trident_spark.pipeline.turtle import (
+    TurtleError,
+    _UNESCAPE_RE,
+    _unescape_one,
+    canonical_triple_term,
+)
 
 _NON_ASCII = "[^\\x00-\\x7F]"
 
@@ -54,17 +60,17 @@ def _render_iri(col):
     return F.concat(F.lit("<"), converted, F.lit(">"))
 
 
-def _render_object():
+def _render_object(render_iri=_render_iri):
     obj = F.col("obj_lexical")
     lit = F.concat(F.lit('"'), _escape_literal(obj), F.lit('"'))
     lit_lang = F.concat(lit, F.lit("@"), F.col("obj_lang"))
-    lit_dt = F.concat(lit, F.lit("^^"), _render_iri(F.col("obj_datatype")))
+    lit_dt = F.concat(lit, F.lit("^^"), render_iri(F.col("obj_datatype")))
     return (
         # kind-gate the rendered column too: without it a non-ASCII text
         # literal would pass _render_iri's rlike gate and ship its whole
         # body through the Arrow hop just to be discarded by this when
         F.when(F.col("obj_kind") == "iri",
-               _render_iri(F.when(F.col("obj_kind") == "iri", obj)))
+               render_iri(F.when(F.col("obj_kind") == "iri", obj)))
         # non-skolemized frames may still carry blank nodes: emit the bare
         # _:label — without this branch they'd fall through to the literal
         # arm and silently serialize as the string "_:b1"
@@ -78,9 +84,9 @@ def _render_object():
     )
 
 
-def _render_subject(col):
+def _render_subject(col, render_iri=_render_iri):
     """Blank subjects (label starts ``_:``) render bare; IRIs bracketed."""
-    return F.when(col.startswith("_:"), col).otherwise(_render_iri(col))
+    return F.when(col.startswith("_:"), col).otherwise(render_iri(col))
 
 
 def to_ntriples(skolemized: DataFrame) -> DataFrame:
@@ -306,15 +312,13 @@ _NT_LINE = re.compile(
     r" \.$"
 )
 
-_UNESCAPE = {"\\\\": "\\", '\\"': '"', "\\n": "\n", "\\r": "\r", "\\t": "\t"}
-_UNESCAPE_RE = re.compile(r"\\[\\\"nrt]")
-
 # N-Triples 1.2 LANG_DIR: tag + optional base direction '--ltr'/'--rtl'
 _LANG_DIR = re.compile(r"^[A-Za-z]+(?:-[A-Za-z0-9]+)*--(?:ltr|rtl)$")
 
-# RDF 1.2 (N-Triples 1.2) triple-term object: <<( ... )>> stored verbatim as
-# the canonical lexical form.  Greedy .* lands on the LAST ')>>' so nested
-# terms stay inside the object and a trailing graph IRI is not swallowed.
+# RDF 1.2 (N-Triples 1.2) triple-term object: <<( ... )>>, stored in the
+# canonical form the Turtle reader gives it.  Greedy .* lands on the LAST
+# ')>>' so nested terms stay inside the object and a trailing graph IRI is
+# not swallowed.
 _TT_LINE = re.compile(
     r"^(?:<(?P<s>[^>]*)>|(?P<s_blank>" + _BLANK_LABEL + r")) <(?P<p>[^>]*)> "
     r"(?P<tt><<\(.*\)>>)"
@@ -329,20 +333,25 @@ def parse_nquads_line(line: str):
     m = _NT_LINE.match(line.strip())
     if not m:
         t = _TT_LINE.match(line.strip())
-        if t:
-            subj = t.group("s") if t.group("s") is not None \
-                else t.group("s_blank")
-            return (subj, t.group("p"), t.group("tt"), "triple",
-                    None, None, t.group("g"))
-        return None
+        if t is None:
+            return None
+        try:
+            tt = canonical_triple_term(t.group("tt"))
+        except TurtleError:
+            return None
+        subj = t.group("s") if t.group("s") is not None \
+            else t.group("s_blank")
+        return (subj, t.group("p"), tt, "triple", None, None, t.group("g"))
     subj = m.group("s") if m.group("s") is not None else m.group("s_blank")
     g = m.group("g")
     if m.group("o_iri") is not None:
         return (subj, m.group("p"), m.group("o_iri"), "iri", None, None, g)
     if m.group("o_blank") is not None:
         return (subj, m.group("p"), m.group("o_blank"), "blank", None, None, g)
-    raw = m.group("o_lit")
-    lex = _UNESCAPE_RE.sub(lambda mm: _UNESCAPE[mm.group(0)], raw)
+    try:
+        lex = _UNESCAPE_RE.sub(_unescape_one, m.group("o_lit"))
+    except TurtleError:
+        return None  # an escape N-Triples does not define
     lang = m.group("lang")
     if lang is not None and "--" in lang and not _LANG_DIR.match(lang):
         # N-Triples 1.2 LANG_DIR: a '--' suffix must be exactly one

@@ -125,6 +125,26 @@ _NUMBER_RE = re.compile(
     r"^[+-]?(?:[0-9]+(?:\.[0-9]+)?|\.[0-9]+)(?:[eE][+-]?[0-9]+)?$")
 
 
+def render_term(lex: str, kind: str, dt: str | None = None,
+                lang: str | None = None) -> str:
+    """A term → its canonical N-Triples 1.2 rendering inside a triple term,
+    the form ``rdfstar.triple_term`` writes: an IRI keeps its spelling
+    (no IRI-to-URI conversion), a literal escapes backslash, double
+    quote, LF, CR and TAB."""
+    if kind == "iri":
+        return f"<{lex}>"
+    if kind in ("blank", "triple"):
+        return lex
+    for a, b in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
+                 ("\r", "\\r"), ("\t", "\\t")):
+        lex = lex.replace(a, b)
+    if lang:
+        return f'"{lex}"@{lang}'
+    if dt:
+        return f'"{lex}"^^<{dt}>'
+    return f'"{lex}"'
+
+
 class _Parser:
     def __init__(self, toks: list[str], salt: str = ""):
         self.toks = toks
@@ -195,30 +215,6 @@ class _Parser:
             return self._pname(tok)
         raise TurtleError(f"invalid predicate {tok!r}")
 
-    def _render_canonical(self, lex: str, kind: str, dt: str | None,
-                          lang: str | None) -> str:
-        """Parsed term → its canonical N-Triples 1.2 rendering (the form
-        pipeline/rdfstar.py stores and sinks.py emits)."""
-        from trident_spark.kernels import iri as K
-
-        def iri(v: str) -> str:
-            return "<" + (v if v.isascii() else K.iri_to_uri(v)) + ">"
-
-        if kind == "iri":
-            return iri(lex)
-        if kind in ("blank", "triple"):
-            return lex
-        s = lex
-        for a, b in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
-                     ("\r", "\\r"), ("\t", "\\t")):
-            s = s.replace(a, b)
-        s = '"' + s + '"'
-        if lang:
-            return s + "@" + lang
-        if dt:
-            return s + "^^" + iri(dt)
-        return s
-
     def _fresh_blank(self) -> str:
         """Fresh blank-node label for [...] / (...) — salted with a digest
         of the document so labels from different documents parsed into the
@@ -259,11 +255,9 @@ class _Parser:
 
     def _triple_term_lex(self, s: str, p: str, o: tuple) -> str:
         """(s, p, (lex, kind, dt, lang)) → canonical ``<<( … )>>`` form."""
-        s_r = s if s.startswith("_:") else self._render_canonical(
-            s, "iri", None, None)
-        return (f"<<( {s_r} "
-                f"{self._render_canonical(p, 'iri', None, None)} "
-                f"{self._render_canonical(*o)} )>>")
+        s_kind = "blank" if s.startswith("_:") else "iri"
+        return (f"<<( {render_term(s, s_kind)} {render_term(p, 'iri')} "
+                f"{render_term(*o)} )>>")
 
     def _reifier(self, s: str, p: str, o: tuple) -> str:
         """Fresh reifier blank node r with r rdf:reifies <<( s p o )>>."""
@@ -507,6 +501,17 @@ def from_trig(docs: DataFrame, doc_col: str = "doc") -> DataFrame:
 
     return ensure_parallelism(docs).mapInPandas(
         run, TRIPLE_SCHEMA + ", graph string")
+
+
+def canonical_triple_term(text: str) -> str:
+    """An N-Triples 1.2 triple term ``<<( s p o )>>``, in any spacing and
+    with any escapes, → the canonical form the pipeline stores.  Raises
+    TurtleError unless ``text`` is exactly one triple term."""
+    p = _Parser(_tokenize(text))
+    lex, kind, _, _ = p._object(p._next())
+    if kind != "triple" or p._peek() is not None or p.out:
+        raise TurtleError(f"not one triple term: {text[:40]!r}")
+    return lex
 
 
 def parse_turtle(text: str) -> list[tuple]:

@@ -88,9 +88,12 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from functools import cached_property, lru_cache
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, functions as F
+
+from trident_spark.pipeline.sinks import _BLANK_LABEL, _escape_literal
+from trident_spark.pipeline.turtle import render_term
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -362,30 +365,28 @@ def _literal_parts(tok: str, prefixes: dict[str, str]
             _expand(dt, prefixes) if dt else None)
 
 
-def _literal_match_cond(lex_col, value: str, lang: str | None,
-                        dt: str | None, cols,
-                        kind_col="obj_kind",
-                        lang_col="obj_lang", dt_col="obj_datatype"):
-    """Spark condition matching a literal CONSTANT against a lexical frame
-    by full RDF 1.1 term identity: language tags compare case-insensitively
-    (BCP 47); a plain ``"x"`` is a simple literal ≡ ``xsd:string``.
+def _literal_match_cond(lex, value: str, lang: str | None,
+                        dt: str | None, kind, lang_col=None, dt_col=None):
+    """Spark condition matching a literal CONSTANT against the term with
+    columns ``lex``/``kind``/``lang_col``/``dt_col``, by full RDF 1.1 term
+    identity: language tags compare case-insensitively (BCP 47); a plain
+    ``"x"`` is a simple literal ≡ ``xsd:string``.
 
-    ``cols`` is the frame's column set — a frame that records no
-    lang/datatype metadata (both columns optional in the ``query()``
-    contract) keeps the historical lexical-form match for the missing
-    dimension rather than matching nothing."""
-    cond = (F.col(kind_col) == "literal") & (lex_col == value)
-    has_lang, has_dt = lang_col in cols, dt_col in cols
+    A frame that records no lang/datatype metadata (both columns optional
+    in the ``query()`` contract; pass None) keeps the historical
+    lexical-form match for the missing dimension rather than matching
+    nothing."""
+    cond = (kind == "literal") & (lex == value)
     if lang is not None:
-        return (cond & (F.lower(F.col(lang_col)) == lang.lower())
-                if has_lang else cond)
-    if has_lang:
-        cond &= F.col(lang_col).isNull()
-    if not has_dt:
+        return (cond & (F.lower(lang_col) == lang.lower())
+                if lang_col is not None else cond)
+    if lang_col is not None:
+        cond &= lang_col.isNull()
+    if dt_col is None:
         return cond
-    simple = F.col(dt_col).isNull() | (F.col(dt_col) == XSD_STRING)
+    simple = dt_col.isNull() | (dt_col == XSD_STRING)
     if dt is not None and dt != XSD_STRING:
-        return cond & (F.col(dt_col) == dt)
+        return cond & (dt_col == dt)
     return cond & simple
 
 
@@ -666,16 +667,6 @@ def _term_constructor_bind(toks: list[str], prefixes: dict[str, str]
     return args[0], "literal", None, _expand(tag, prefixes)
 
 
-def _esc_lit_col(col):
-    """N-Triples literal escape, JVM-side.  Delegates to the writer's
-    helper so TRIPLE()-built lexical forms stay byte-identical to the
-    forms pipeline/sinks serializes (any escape added there is picked up
-    here automatically; a drifted duplicate would silently stop matching
-    stored rdf:reifies rows)."""
-    from trident_spark.pipeline.sinks import _escape_literal
-    return _escape_literal(col)
-
-
 def _outer_bind_vars(group: "_Group", outer: set[str]) -> set[str]:
     """Outer-scope variables a BIND expression inside ``group`` (or a
     nested subgroup) references without the group binding them itself —
@@ -713,40 +704,26 @@ def _triple_ctor_col(args: list[list[str]], prefixes: dict[str, str],
                      plan: DataFrame):
     """``TRIPLE(s, p, o)`` (SPARQL 1.2 17.4.2.8) → a Column rendering the
     canonical stored triple-term lexical ``<<( s p o )>>``
-    (pipeline/rdfstar.py triple_term writer parity), so the constructed
-    term joins/compares against pattern-bound triple terms.  NULL (= the
-    variable stays unbound) when any argument is unbound.  Non-ASCII IRI
-    args skip the writer's IRI→URI conversion (documented divergence)."""
+    (``rdfstar.triple_term``), so the constructed term joins/compares
+    against pattern-bound triple terms.  NULL (= the variable stays
+    unbound) when any argument is unbound."""
     if len(args) != 3 or any(len(a) != 1 for a in args):
         raise SparqlError(
             "TRIPLE takes (subject, predicate, object) single terms")
     cols = set(plan.columns)
 
-    def const_obj(t: str):
-        if t.startswith('"'):
-            m = re.match(r'^("(?:[^"\\]|\\.)*")(.*)$', t)
-            if not m:
-                raise SparqlError(f"malformed literal {t!r}")
-            val = _term_value(m.group(1), prefixes)
-            return F.lit('"' + _escape_nt(val) + '"' + m.group(2))
-        if t.startswith("_:"):
-            return F.lit(t)
-        return F.lit("<" + _expand(t, prefixes) + ">")
-
     def render(a: list[str], pos: str):
         t = a[0]
         if not t.startswith("?"):
-            if pos == "obj":
-                return const_obj(t)
-            if t.startswith('"'):
+            kind, lex, dt, lang = _const_term(t, prefixes)
+            if pos != "obj" and kind == "literal":
                 raise SparqlError(f"TRIPLE {pos} cannot be a literal")
-            if pos == "pred" and t.startswith("_:"):
+            if pos == "pred" and kind == "blank":
                 # a blank-node predicate is not legal RDF — constructing
                 # it would emit a triple term the writer never produces
                 # (joins silently empty); reject loudly like literals
                 raise SparqlError("TRIPLE predicate cannot be a blank node")
-            return (F.lit(t) if t.startswith("_:")
-                    else F.lit("<" + _expand(t, prefixes) + ">"))
+            return F.lit(render_term(lex, kind, dt, lang))
         v = t[1:]
         if v not in cols:
             return F.lit(None).cast("string")  # unbound arg → unbound
@@ -756,7 +733,7 @@ def _triple_ctor_col(args: list[list[str]], prefixes: dict[str, str],
             return F.when(val.startswith("_:"), val).otherwise(iri)
         if pos == "pred":
             return iri
-        quoted = F.concat(F.lit('"'), _esc_lit_col(val), F.lit('"'))
+        quoted = F.concat(F.lit('"'), _escape_literal(val), F.lit('"'))
         kind, lang, dt = (F.col(f"{p}{v}")
                           for p in ("_kind_", "_lang_", "_dt_"))
         return (F.when(kind == "iri", iri)
@@ -899,7 +876,7 @@ def _expand_macro(name: str, args: list[list[str]],
         # SPARQL 1.2 triple-term accessors over the stored lexical form
         # <<( s p o )>> (pipeline/rdfstar.py); a non-triple argument is an
         # expression error (NULL = unbound).  Same component regexes as
-        # the quoted-triple PATTERN compiler (_compile_quoted).
+        # the quoted-triple PATTERN compiler (_quoted_components).
         x = sql[0]
         if name == "SUBJECT":
             iri = f"regexp_extract({x}, {_sql_rx(_Q_SUBJ_IRI)}, 1)"
@@ -1203,14 +1180,12 @@ def _compile_path(edges: DataFrame, node: tuple,
     raise SparqlError(f"unknown path node {node!r}")  # pragma: no cover
 
 
-# quoted-triple component extraction (pure Catalyst regexp over the stored
-# canonical <<( s p o )>> form — see pipeline/rdfstar.py for the writer)
+# quoted-triple component extraction: Catalyst regexps over the canonical
+# <<( s p o )>> form that rdfstar.triple_term writes
 _Q_SUBJ_IRI = r"^<<\( <([^>]*)> "
-# blank-node labels may contain '_' '-' '.' (N-Triples grammar; keep in
-# sync with pipeline/sinks.py:_BLANK_LABEL)
-_Q_SUBJ_BLANK = r"^<<\( (_:[A-Za-z0-9_.\-]+) "
-_Q_PRED = r"^<<\( (?:<[^>]*>|_:[A-Za-z0-9_.\-]+) <([^>]*)> "
-_Q_OBJ = r"^<<\( (?:<[^>]*>|_:[A-Za-z0-9_.\-]+) <[^>]*> (.*) \)>>$"
+_Q_SUBJ_BLANK = r"^<<\( (" + _BLANK_LABEL + ") "
+_Q_PRED = r"^<<\( (?:<[^>]*>|" + _BLANK_LABEL + r") <([^>]*)> "
+_Q_OBJ = r"^<<\( (?:<[^>]*>|" + _BLANK_LABEL + r") <[^>]*> (.*) \)>>$"
 
 
 def _unescape_nt_col(col):
@@ -1225,120 +1200,96 @@ def _unescape_nt_col(col):
     return F.replace(c, F.lit("\x00"), F.lit("\\"))
 
 
-def _escape_nt(s: str) -> str:
-    for a, b in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
-                 ("\r", "\\r"), ("\t", "\\t")):
-        s = s.replace(a, b)
-    return s
-
-
-def _dedupe_repeated_vars(scan: DataFrame, rename: dict[str, str],
-                          exprs: dict | None = None
+def _dedupe_repeated_vars(scan: DataFrame, rename: dict[str, str]
                           ) -> tuple[DataFrame, dict[str, str]]:
-    """A legal pattern may repeat a variable ('?x <p> ?x', or a quoted-
-    triple slot sharing an outer var): keep ONE source column per variable
-    and compile the repeats into equality constraints — two identically-
-    aliased projections would be an AMBIGUOUS_REFERENCE at join time."""
+    """A legal path pattern may repeat a variable ('?x <p>+ ?x'): keep ONE
+    source column per variable and compile the repeats into equality
+    constraints — two identically-aliased projections would be an
+    AMBIGUOUS_REFERENCE at join time."""
     first: dict[str, str] = {}
     out: dict[str, str] = {}
     for col, var in rename.items():
         if var in first:
-            a = exprs[first[var]] if exprs else F.col(first[var])
-            b = exprs[col] if exprs else F.col(col)
-            scan = scan.where(a == b)
+            scan = scan.where(F.col(first[var]) == F.col(col))
         else:
             first[var] = col
             out[col] = var
     return scan, out
 
 
-def _compile_quoted(triples: DataFrame, pat: _Pattern,
-                    prefixes: dict[str, str], idx: int,
-                    extra: dict[str, str] | None = None
-                    ) -> tuple[DataFrame, set[str]]:
-    """Pattern with a quoted-triple object: filter obj_kind='triple' rows
-    and match/bind the embedded components (SPARQL 1.2 triple-term
-    patterns), all in whole-stage codegen."""
+def _quoted_components(lex) -> dict[str, dict]:
+    """The subject, predicate and object of the triple term whose
+    canonical form is ``lex``, each as ``{dictionary column: Column}``
+    with its ``kg.term_id``."""
     from trident_spark.pipeline.kg import subject_kind, term_id
 
-    q: _Quoted = pat.obj
-    scan = triples.where(F.col("obj_kind") == "triple")
-    rename: dict[str, str] = {}
-    for col, term in (("subj", pat.subj), ("pred", pat.pred)):
-        if isinstance(term, tuple):
-            raise SparqlError(
-                "property paths cannot carry quoted-triple objects")
-        if term.startswith("?"):
-            rename[col] = term[1:]
-        else:
-            scan = scan.where(F.col(col) == _expand(term, prefixes))
-
-    lex = F.col("obj_lexical")
-    q_subj = F.when(F.regexp_extract(lex, _Q_SUBJ_IRI, 1) != "",
-                    F.regexp_extract(lex, _Q_SUBJ_IRI, 1)) \
+    iri = F.regexp_extract(lex, _Q_SUBJ_IRI, 1)
+    subj = F.when(iri != "", iri) \
         .otherwise(F.regexp_extract(lex, _Q_SUBJ_BLANK, 1))
-    q_pred = F.regexp_extract(lex, _Q_PRED, 1)
-    raw_obj = F.regexp_extract(lex, _Q_OBJ, 1)
-    # raw object → lexical value matching what plain patterns bind
-    q_obj = (
-        F.when(raw_obj.startswith("<<("), raw_obj)          # nested term
-        .when(raw_obj.startswith("<"),
-              F.regexp_extract(raw_obj, r"^<(.*)>$", 1))    # IRI
-        .when(raw_obj.startswith("_:"), raw_obj)            # blank
-        .otherwise(_unescape_nt_col(
-            F.regexp_extract(raw_obj, r'^"((?:[^"\\]|\\.)*)"', 1)))
-    )
-
-    r_lang = F.regexp_extract(
-        raw_obj, r'^"(?:[^"\\]|\\.)*"@([A-Za-z0-9\-]+)$', 1)
-    r_dt = F.regexp_extract(raw_obj, r'^"(?:[^"\\]|\\.)*"\^\^<([^>]*)>$', 1)
+    raw = F.regexp_extract(lex, _Q_OBJ, 1)
+    kind = (F.when(raw.startswith("<<("), "triple")
+            .when(raw.startswith("<"), "iri")
+            .when(raw.startswith("_:"), "blank").otherwise("literal"))
+    obj = (F.when(kind == "iri", F.regexp_extract(raw, r"^<(.*)>$", 1))
+           .when(kind == "literal",
+                 _unescape_nt_col(F.regexp_extract(raw, _NT_LIT_BODY, 1)))
+           .otherwise(raw))
+    lang = F.regexp_extract(raw, r'^"(?:[^"\\]|\\.)*"@([A-Za-z0-9\-]+)$', 1)
+    dt = F.regexp_extract(raw, r'^"(?:[^"\\]|\\.)*"\^\^<([^>]*)>$', 1)
     null = F.lit(None).cast("string")
-    q_kind = (F.when(raw_obj.startswith("<<("), "triple")
-              .when(raw_obj.startswith("<"), "iri")
-              .when(raw_obj.startswith("_:"), "blank").otherwise("literal"))
-    terms = dict(_slot_terms(triples.columns))
-    for name, t in (
-            ("q_subj", (subject_kind(q_subj), q_subj, null, null)),
-            ("q_pred", (F.lit("iri"), q_pred, null, null)),
-            ("q_obj", (q_kind, q_obj, F.nullif(r_dt, F.lit("")),
-                       F.nullif(r_lang, F.lit(""))))):
-        terms[name] = dict(zip(("kind", "lexical", "datatype", "lang"), t),
-                           term_id=term_id(*t))
+    parts = {"subj": (subject_kind(subj), subj, null, null),
+             "pred": (F.lit("iri"), F.regexp_extract(lex, _Q_PRED, 1),
+                      null, null),
+             "obj": (kind, obj, F.nullif(dt, F.lit("")),
+                     F.nullif(lang, F.lit("")))}
+    return {slot: dict(zip(("kind", "lexical", "datatype", "lang"), t),
+                       term_id=term_id(*t)) for slot, t in parts.items()}
 
-    for name, term in (("q_subj", q.subj), ("q_pred", q.pred),
-                       ("q_obj", q.obj)):
-        expr = terms[name]["lexical"]
-        if term.startswith("?"):
-            rename[name] = term[1:]
-        elif term.startswith('"') and name == "q_obj":
-            # constants compare on the RENDERED form — escaping parity
-            # with the writer, no decode needed.  Full term identity: the
-            # rendered suffix carries @lang / ^^<dt>, so split it off and
-            # compare each dimension (lang case-insensitively per BCP 47)
-            value, c_lang, c_dt = _literal_parts(term, prefixes)
-            quoted_part = '"' + _escape_nt(value) + '"'
-            r_lit = F.regexp_extract(raw_obj, r'^("(?:[^"\\]|\\.)*")', 1)
-            cond = r_lit == quoted_part
-            if c_lang is not None:
-                cond &= F.lower(r_lang) == c_lang.lower()
-            elif c_dt is not None and c_dt != XSD_STRING:
-                cond &= r_dt == c_dt
-            else:
-                cond &= ((r_lang == "")
-                         & ((r_dt == "") | (r_dt == XSD_STRING)))
-            scan = scan.where(cond)
+
+def _compile_quoted(src: "DataFrame | _Warehouse", pat: _Pattern,
+                    prefixes: dict[str, str], idx: int, needed: set[str],
+                    extra: dict[str, str] | None = None
+                    ) -> tuple[DataFrame, set[str]]:
+    """A pattern whose object is a quoted triple (SPARQL 1.2).  Its
+    subject and predicate compile as a run pattern whose object is a
+    hidden variable; that id joins the ``triple`` terms of the source's
+    dictionary, each parsed once into its components.  A component's
+    constant filters the dictionary rows, and its variable binds the
+    component's id (and its term, where the query reads it) or, when the
+    outer pattern binds it too, joins on it."""
+    if isinstance(pat.pred, tuple):
+        raise SparqlError("property paths cannot carry quoted-triple objects")
+    tt = f"_q{idx}"
+    plan, outer = _compile_run_ids(
+        src, [_Pattern(pat.subj, pat.pred, f"?{tt}")], prefixes, needed,
+        extra)
+    comps = _quoted_components(F.col("lexical"))
+    triples = _terms(src).where(F.col("kind") == "triple")
+    inner: dict[str, dict] = {}
+    for slot, tok in zip(comps, (pat.obj.subj, pat.obj.pred, pat.obj.obj)):
+        term = comps[slot]
+        if not tok.startswith("?"):
+            triples = triples.where(
+                _literal_lookup(tok, prefixes, term)
+                if tok.startswith('"') or _PLAIN_SCALAR.match(tok)
+                else term["term_id"] == _const_id(_const_term(tok, prefixes)))
+        elif tok[1:] in inner:
+            triples = triples.where(term["term_id"]
+                                    == inner[tok[1:]]["term_id"])
         else:
-            scan = scan.where(expr == _expand(term, prefixes))
-
-    rename.update(extra or {})
-    scan, rename = _dedupe_repeated_vars(
-        scan, rename, exprs={c: t["term_id"] for c, t in terms.items()})
-    proj = [col for c, v in rename.items() for col in _bind_cols(terms[c], v)]
-    if proj:
-        scan = scan.select(*proj).distinct()
-    else:
-        scan = scan.select(F.lit(1).alias(f"_m{idx}")).limit(1)
-    return scan, set(rename.values())
+            inner[tok[1:]] = term
+    proj = [F.col("term_id").alias(f"_tid_{tt}")]
+    for v, term in inner.items():
+        proj += ([term["term_id"].alias(f"_tid_{v}")]
+                 if v in outer or v not in needed else _bind_cols(term, v))
+    keys = [f"_tid_{v}" for v in [tt, *sorted(outer & set(inner))]]
+    plan = plan.join(triples.select(*proj), keys).drop(f"_tid_{tt}")
+    vars_ = (outer | set(inner)) - {tt}
+    if not vars_:
+        return plan.select(F.lit(1).alias(f"_m{idx}")).limit(1), vars_
+    # a literal constant matches each stored form of its term ("x" and
+    # "x"^^xsd:string), which are one solution
+    return plan.distinct(), vars_
 
 
 def _compile_pattern(src: "DataFrame | _Warehouse", pat: _Pattern,
@@ -1349,10 +1300,8 @@ def _compile_pattern(src: "DataFrame | _Warehouse", pat: _Pattern,
     in :func:`_compile_run_ids`.  A path runs over the source's id edges,
     and its ``needed`` endpoint variables decode through the source's
     term dictionary."""
-    wh = isinstance(src, _Warehouse)
     if isinstance(pat.obj, _Quoted):
-        return _compile_quoted(src.lexical if wh else src, pat, prefixes,
-                               idx, extra)
+        return _compile_quoted(src, pat, prefixes, idx, needed, extra)
     per_graph = False
     rename: dict[str, str] = {}
     if extra:
@@ -1399,7 +1348,7 @@ def _endpoint_ids(src: "DataFrame | _Warehouse", tok: str,
     if term[0] == "literal":
         terms = _terms(src)
         ids += [F.lit(r[0]) for r in terms.where(
-            _literal_lookup(tok, prefixes, terms.columns))
+            _literal_lookup(tok, prefixes))
             .select("term_id").distinct().collect()]
     return ids
 
@@ -1751,8 +1700,8 @@ def _slot_terms(columns) -> dict[str, dict]:
 @dataclass
 class _Warehouse:
     """The pipeline's dictionary-encoded tables as a query source (see
-    :func:`query_encoded`): patterns and paths scan ``edges`` and decode
-    through ``terms``; quoted triples read :attr:`lexical`."""
+    :func:`query_encoded`): every element scans the id columns of
+    ``edges`` and reads terms from ``terms``."""
 
     edges: DataFrame
     terms: DataFrame
@@ -1760,13 +1709,6 @@ class _Warehouse:
     @property
     def sparkSession(self):
         return self.edges.sparkSession
-
-    @cached_property
-    def lexical(self) -> DataFrame:
-        """The decoded graph, built the first time an element needs it."""
-        from trident_spark.pipeline.kg import decode_triples
-
-        return decode_triples(self.edges, self.terms)
 
 
 def _id_edges(src: "DataFrame | _Warehouse") -> DataFrame:
@@ -1873,15 +1815,19 @@ def _values_frame(spark, vars_: list[str], rows: list[tuple],
         term_id(*[F.col(f"{p}{v}") for p in meta])) for v in vars_})
 
 
-def _literal_lookup(tok: str, prefixes: dict[str, str], cols):
-    """Condition on a term dictionary with ``cols`` selecting the terms a
-    literal constant (or a bare number or boolean) matches, as
-    :func:`_lexical_scan` matches it."""
+def _literal_lookup(tok: str, prefixes: dict[str, str],
+                    term: dict | None = None):
+    """Condition selecting the terms a literal constant (or a bare number
+    or boolean) matches, as :func:`_lexical_scan` matches it: over a term
+    dictionary's columns, or over ``term`` ({dictionary column:
+    Column})."""
+    if term is None:
+        term = {c: F.col(c) for c in ("lexical", "kind", "datatype", "lang")}
     if _PLAIN_SCALAR.match(tok):
-        return (F.col("kind") == "literal") & (F.col("lexical") == tok)
+        return (term["kind"] == "literal") & (term["lexical"] == tok)
     return _literal_match_cond(
-        F.col("lexical"), *_literal_parts(tok, prefixes), set(cols),
-        kind_col="kind", lang_col="lang", dt_col="datatype")
+        term["lexical"], *_literal_parts(tok, prefixes), term["kind"],
+        term["lang"], term["datatype"])
 
 
 def _warehouse_scan(wh: _Warehouse, pat: _Pattern, prefixes: dict[str, str]
@@ -1903,7 +1849,7 @@ def _warehouse_scan(wh: _Warehouse, pat: _Pattern, prefixes: dict[str, str]
             if lang is not None:
                 # a language tag compares case-insensitively: look the
                 # ids up in the dictionary
-                lookup = _literal_lookup(term, prefixes, wh.terms.columns)
+                lookup = _literal_lookup(term, prefixes)
                 continue
             # a simple literal is stored plain or as xsd:string
             dts = [dt] if dt not in (None, XSD_STRING) else ["", XSD_STRING]
@@ -1911,7 +1857,7 @@ def _warehouse_scan(wh: _Warehouse, pat: _Pattern, prefixes: dict[str, str]
                            for d in dts])
         elif slot == "obj" and _PLAIN_SCALAR.match(term):
             # a bare number or boolean matches a literal of any datatype
-            lookup = _literal_lookup(term, prefixes, wh.terms.columns)
+            lookup = _literal_lookup(term, prefixes)
             continue
         else:
             c = col == _iri_id(_expand(term, prefixes))
@@ -1939,9 +1885,11 @@ def _lexical_scan(triples: DataFrame, pat: _Pattern,
         if slot == "obj" and term.startswith('"'):
             # full RDF term identity (lang tags case-insensitive, plain ≡
             # xsd:string)
-            value, c_lang, c_dt = _literal_parts(term, prefixes)
             scan = scan.where(_literal_match_cond(
-                F.col(col), value, c_lang, c_dt, set(triples.columns)))
+                F.col(col), *_literal_parts(term, prefixes),
+                F.col("obj_kind"), *[F.col(c) if c in triples.columns
+                                     else None
+                                     for c in ("obj_lang", "obj_datatype")]))
         elif slot == "obj" and _PLAIN_SCALAR.match(term):
             # numeric/boolean shorthand → typed-literal match (lexical
             # + kind, per the engine's documented literal matching)
@@ -3418,12 +3366,12 @@ def query_encoded(edges: DataFrame, terms: DataFrame,
     ``terms``): the same compiler and the same answers as
     ``query(kg.decode_triples(edges, terms), sparql)``.
 
-    Plain triple patterns and property paths scan only the 8-byte id
-    columns of ``edges`` (parquet prunes the rest at the source), filter
-    constants on their folded ``kg.term_id``, compare a repeated
-    variable's ids, join on ids, and decode each variable the query
-    needs with one ``terms`` join.  Quoted triples read the decoded
-    graph, built only when one occurs.
+    Every pattern scans only the 8-byte id columns of ``edges`` (parquet
+    prunes the rest at the source), filters constants on their folded
+    ``kg.term_id``, compares a repeated variable's ids, joins on ids, and
+    decodes each variable the query needs with one ``terms`` join.  A
+    quoted triple joins the edges on ``obj_id`` to the ``triple`` rows of
+    ``terms``, whose components are parsed once per term, not per edge.
 
     Contracts (as ``kg.dedup_triples`` and ``kg.encode_triples`` write
     the tables): ``edges`` is a set of ``(subj_id, pred_id, obj_id)``
