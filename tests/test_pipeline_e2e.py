@@ -76,7 +76,82 @@ def test_skolemization_deterministic(spark, corpus):
 
 
 def test_term_ids_no_collisions(result):
-    assert kg.assert_no_id_collisions(result.terms) == 0
+    assert kg.assert_no_id_collisions(result.skolemized) == 0
+
+
+_XSD = "http://www.w3.org/2001/XMLSchema#"
+
+
+def _skolemized(spark, rows):
+    """Lexical triple rows as the skolemized frame encode_triples takes."""
+    return spark.createDataFrame(rows, kg.TRIPLE_SCHEMA).select(
+        "*", F.lit("http://a/1").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit("test").alias("source"))
+
+
+def test_assert_no_id_collisions_counts_a_collision(spark, monkeypatch):
+    """Two IRIs that hash to one id are one collision; the spellings of
+    one term ("x"@en, "x"@EN) are none."""
+    sk = _skolemized(spark, [
+        ("http://x/a", "http://p/k", "x", "literal", None, "en"),
+        ("http://x/a", "http://p/k", "x", "literal", None, "EN")])
+    assert kg.assert_no_id_collisions(sk) == 0
+    monkeypatch.setattr(kg, "term_id",
+                        lambda kind, lex, dt=None, lang=None: F.when(
+                            kind == "iri", F.lit(1)).otherwise(F.lit(2)))
+    assert kg.assert_no_id_collisions(sk) == 1
+
+
+def test_encode_triples_stores_one_spelling_per_id(spark):
+    """"x" and "x"^^xsd:string are one term, and so are "x"@en-US and
+    "x"@EN-us: one dictionary row each, the same at any shuffle
+    partitioning, with an xsd:string datatype stored as absent."""
+    rows = [("http://x/a", "http://p/k", "x", "literal", None, None),
+            ("http://x/b", "http://p/k", "x", "literal", _XSD + "string",
+             None),
+            ("http://x/c", "http://p/k", "x", "literal", None, "en-US"),
+            ("http://x/d", "http://p/k", "x", "literal", None, "EN-us")]
+    sk = _skolemized(spark, rows + rows[::-1])
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    seen = []
+    try:
+        for n in ("1", "7"):
+            spark.conf.set(key, n)
+            terms, _ = kg.encode_triples(sk.repartition(int(n)))
+            lits = sorted(tuple(r) for r in terms.where(
+                "kind = 'literal'").collect())
+            assert terms.groupBy("term_id").count().where(
+                "count > 1").count() == 0
+            seen.append(lits)
+    finally:
+        spark.conf.set(key, before)
+    assert seen[0] == seen[1]
+    assert {r[1:] for r in seen[0]} == {("literal", "x", None, None),
+                                        ("literal", "x", None, "EN-us")}
+
+
+@pytest.mark.parametrize("kind, lex, dt, lang", [
+    ("literal", "x", None, None),
+    ("literal", "x", _XSD + "string", None),
+    ("literal", "42", _XSD + "integer", None),
+    ("literal", "x", None, "en-US"),
+    ("literal", "x", None, "EN-us"),
+    ("literal", "x", None, "ar--rtl"),
+    ("iri", "http://x/a", None, None),
+    ("blank", "_:b1", None, None),
+])
+def test_golden_tid_mirrors_term_id(spark, kind, lex, dt, lang):
+    """golden._tid hashes every term as kg.term_id does, so the build
+    golden follows the id function."""
+    from trident_spark.pipeline.golden import _tid
+
+    row = spark.createDataFrame([(kind, lex, dt, lang)],
+                                "k string, l string, d string, g string")
+    got = row.select(kg.term_id(F.col("k"), F.col("l"), F.col("d"),
+                                F.col("g"))).first()[0]
+    assert got == _tid(kind, lex, dt, lang)
 
 
 def test_triples_reference_terms(result):

@@ -240,6 +240,30 @@ def test_ntriples_reader_rejects_malformed_triple_terms(spark):
                 spark.createDataFrame([(line,)], "line string")).collect()
 
 
+def test_ntriples_reader_rejects_turtle_shorthand_in_triple_terms(spark):
+    """N-Triples 1.2 spells every term of a triple term in full: `a`, a
+    bare number or boolean, a pname or a relative IRI inside one makes
+    its line malformed.  Canonical terms, UCHAR escapes included, parse."""
+    bad = [f"<http://s> <http://p> <<( {t} )>> ." for t in (
+        "<http://a> a 42", "<http://a> <http://b> true", "<rel> <http://b> "
+        "<http://c>", "<http://a> <http://b> <rel>", '<http://a> <http://b> '
+        '"x"^^<dt>', "<http://a> <http://b> :c")]
+    good = ['<http://s> <http://p> <<( <http://a> <http://x/caf\\u00E9> '
+            '"1"^^<http://www.w3.org/2001/XMLSchema#integer> )>> .',
+            '<http://s> <http://p> <<( _:b1 <http://b> "caf\\u00E9"@en )>> .']
+    lines = spark.createDataFrame([(x,) for x in [*good, *bad]],
+                                  "line string")
+    got = sinks.from_ntriples(lines, errors="column").collect()
+    assert sorted(r.error for r in got if r.error) == sorted(bad)
+    assert sorted(r.obj_lexical for r in got if not r.error) == [
+        '<<( <http://a> <http://x/café> '
+        '"1"^^<http://www.w3.org/2001/XMLSchema#integer> )>>',
+        '<<( _:b1 <http://b> "café"@en )>>']
+    with pytest.raises(Exception, match="unparseable"):
+        sinks.from_ntriples(
+            spark.createDataFrame([(bad[0],)], "line string")).collect()
+
+
 def test_turtle_renders_triple_terms(spark):
     re1 = rdfstar.reify(_graph(spark), "http://p/source", "src")
     blocks = "\n".join(r["block"] for r in sinks.to_turtle(re1).collect())

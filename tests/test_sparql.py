@@ -548,6 +548,29 @@ def test_seeded_closure_jobs_do_not_grow_with_the_graph(spark, monkeypatch):
     assert rounds == [1, 1], rounds
 
 
+def test_literal_path_endpoint_compiles_without_a_job(spark, monkeypatch):
+    """A path's literal endpoint is its term id, folded at compile time:
+    compiling the path collects nothing, on either engine, and the
+    endpoint matches its term in any tag case."""
+    from trident_spark.query.sparql import query_encoded
+
+    lexical, edges, terms = _encoded(spark, [
+        ("http://x/a", "http://p/p", "http://x/m", "iri", None, None),
+        ("http://x/m", "http://p/q", "x", "literal", None, "en"),
+        ("http://x/b", "http://p/p", "http://x/n", "iri", None, None),
+        ("http://x/n", "http://p/q", "x", "literal", None, None)])
+    q = 'SELECT ?s WHERE { ?s <http://p/p>/<http://p/q> "x"@EN }'
+    collect = type(lexical).collect
+    calls = []
+    monkeypatch.setattr(type(lexical), "collect",
+                        lambda df: calls.append(1) or collect(df))
+    plans = [query(lexical, q), query_encoded(edges, terms, q)]
+    assert calls == []
+    monkeypatch.undo()
+    for df in plans:
+        assert [r.s for r in df.collect()] == ["http://x/a"]
+
+
 # ---------------------------------------------------------------------------
 # SPARQL 1.1 solution modifiers and pattern operators (round 2 additions)
 # ---------------------------------------------------------------------------
@@ -1495,9 +1518,9 @@ def _differential(lexical, edges, terms, sparql, raises=False):
 
 
 def test_differential_simple_literal_matches_both_stored_forms(spark):
-    """RDF 1.1: "x" and "x"^^xsd:string are one term.  The warehouse
-    stores whichever form the source wrote, and a constant in either
-    form matches both rows."""
+    """RDF 1.1: "x" and "x"^^xsd:string are one term, with one term id,
+    which the warehouse stores once; a constant in either form matches
+    both rows."""
     from trident_spark.pipeline.kg import dedup_triples, encode_triples
 
     rows = [("http://a/1", None, "test", "http://x/s", "http://p/n", "x",
@@ -1514,6 +1537,65 @@ def test_differential_simple_literal_matches_both_stored_forms(spark):
         got = _differential(lexical, edges, terms,
                             f"SELECT ?s WHERE {{ ?s <http://p/n> {const} }}")
         assert sorted(got) == [("http://x/s",), ("http://x/t",)], const
+
+
+_K, _L, _AGE = "http://p/k", "http://p/l", "http://p/age"
+_XA, _XB, _XC = "http://x/a", "http://x/b", "http://x/c"
+_JOIN = f"SELECT ?s ?t WHERE {{ ?s <{_K}> ?o . ?t <{_L}> ?o }}"
+_AGES = [(_XA, _AGE, "42", "literal",
+          "http://www.w3.org/2001/XMLSchema#integer", None),
+         (_XB, _AGE, "42", "literal",
+          "http://www.w3.org/2001/XMLSchema#long", None)]
+
+# RDF 1.1 Concepts §3.3: a simple literal is an xsd:string literal and a
+# language tag compares case-insensitively, so a variable joins either
+# spelling of one term; a bare number is its SPARQL 1.1 §4.1.2 term (an
+# xsd:integer), in a pattern as in VALUES.  (rows, query, answer)
+_ONE_ID_CASES = {
+    "xsd_string_join": (
+        [(_XA, _K, "x", "literal", None, None),
+         (_XB, _K, "x", "literal",
+          "http://www.w3.org/2001/XMLSchema#string", None),
+         (_XC, _L, "x", "literal",
+          "http://www.w3.org/2001/XMLSchema#string", None)],
+        _JOIN, [(_XA, _XC), (_XB, _XC)]),
+    "tag_case_join": (
+        [(_XA, _K, "x", "literal", None, "en"),
+         (_XC, _L, "x", "literal", None, "EN")], _JOIN, [(_XA, _XC)]),
+    "same_term": (
+        [(_XA, _K, "x", "literal", None, "en"),
+         (_XC, _L, "x", "literal", None, "EN"),
+         (_XB, _L, "x", "literal", None, None)],
+        f"SELECT ?s ?t WHERE {{ ?s <{_K}> ?o . ?t <{_L}> ?p "
+        "FILTER(sameTerm(?o, ?p)) }", [(_XA, _XC)]),
+    "bare_number": (_AGES, f"SELECT ?s WHERE {{ ?s <{_AGE}> 42 }}",
+                    [(_XA,)]),
+    "bare_number_values": (
+        _AGES, f"SELECT ?s WHERE {{ VALUES ?n {{ 42 }} ?s <{_AGE}> ?n }}",
+        [(_XA,)]),
+    # DATATYPE and LANG of a term that is not a literal leave the BIND
+    # unbound (SPARQL 1.1 §17.4.2.6-7)
+    "datatype_of_non_literal": (
+        [(_XA, _K, _XB, "iri", None, None),
+         (_XA, _K, "_:b1", "blank", None, None),
+         (_XA, _K, "x", "literal", None, "en")],
+        f"SELECT ?o ?dt ?l WHERE {{ <{_XA}> <{_K}> ?o "
+        "BIND(DATATYPE(?o) AS ?dt) BIND(LANG(?o) AS ?l) }",
+        [(_XB, None, None), ("_:b1", None, None),
+         ("x", "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString",
+          "en")]),
+}
+
+
+@pytest.mark.parametrize("case", list(_ONE_ID_CASES))
+def test_differential_one_term_one_id(spark, case):
+    """Each RDF term has one id, whatever its spelling: both engines join
+    and compare the spellings of one term as that term."""
+    from collections import Counter
+
+    rows, sparql, want = _ONE_ID_CASES[case]
+    lexical, edges, terms = _encoded(spark, rows)
+    assert _differential(lexical, edges, terms, sparql) == Counter(want)
 
 
 def test_differential_bags_over_duplicate_captures(spark):
@@ -2094,7 +2176,8 @@ def test_update_triples_frame_rejects_named_graphs(spark, graph, quads):
 def test_is_blank_on_subject_position_var(spark):
     """isIRI/isBLANK on a var bound only in SUBJECT position works (kind
     derived from the label shape) instead of crashing on a missing hidden
-    column; LANG() on it is '' (subjects are never literals)."""
+    column; LANG() of it is an error (SPARQL 1.1 §17.4.2.7: subjects are
+    never literals), so a FILTER on it is false."""
     rows = [
         ("_:b1", "http://p/n", "v1", "literal", None, None),
         ("http://x/a", "http://p/n", "v2", "literal", None, None),
@@ -2103,8 +2186,11 @@ def test_is_blank_on_subject_position_var(spark):
     df = query(g, "SELECT ?o WHERE { ?s <http://p/n> ?o . FILTER(isBLANK(?s)) }")
     assert [r["o"] for r in df.collect()] == ["v1"]
     df2 = query(g, """SELECT ?o WHERE {
-        ?s <http://p/n> ?o . FILTER(isIRI(?s) && LANG(?s) = "") }""")
+        ?s <http://p/n> ?o . FILTER(isIRI(?s)) }""")
     assert [r["o"] for r in df2.collect()] == ["v2"]
+    df3 = query(g, """SELECT ?o WHERE {
+        ?s <http://p/n> ?o . FILTER(isIRI(?s) && LANG(?s) = "") }""")
+    assert df3.collect() == []
 
 
 def test_term_filter_on_expression_var(spark, graph):
@@ -3060,9 +3146,10 @@ def test_construct_carries_literal_metadata(spark, lit_graph):
                          "obj_datatype", "obj_lang"]
     got = sorted((r.subj, r.obj_datatype or "-", r.obj_lang or "-")
                  for r in c.collect())
+    # "hello"^^xsd:string is the simple literal "hello": one term, which
+    # a binding carries in its canonical form, with no datatype
     assert got == [("http://s/1", "-", "en-US"), ("http://s/2", "-", "fr"),
-                   ("http://s/3", "-", "-"),
-                   ("http://s/4", XSD + "string", "-"),
+                   ("http://s/3", "-", "-"), ("http://s/4", "-", "-"),
                    ("http://s/5", XSD + "token", "-")]
     # constants in the template carry their own tags
     c2 = construct(lit_graph, """
@@ -3083,10 +3170,13 @@ def test_update_template_preserves_binding_metadata(spark, lit_graph):
     # only the IRI-object row escapes the isLiteral() WHERE filter
     left = out.where(out.pred == "http://p/n").collect()
     assert [r.subj for r in left] == ["http://s/6"]
-    rows = {(r.obj_datatype or "-", r.obj_lang or "-")
+    # s/4's "hello"^^xsd:string is s/3's simple literal: one term, in
+    # its canonical form
+    rows = {(r.subj, r.obj_datatype or "-", r.obj_lang or "-")
             for r in out.where(out.pred == "http://p/archived").collect()}
-    assert rows == {("-", "en-US"), ("-", "fr"), ("-", "-"),
-                    (XSD + "string", "-"), (XSD + "token", "-")}
+    assert rows == {("http://s/1", "-", "en-US"), ("http://s/2", "-", "fr"),
+                    ("http://s/3", "-", "-"), ("http://s/4", "-", "-"),
+                    ("http://s/5", XSD + "token", "-")}
 
 
 def test_encoded_literal_constant_term_identity(spark):

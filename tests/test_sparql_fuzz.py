@@ -6,7 +6,8 @@ dictionary-encoded warehouse alike.
 
 The fuzz graph holds IRI/literal lexical collisions (a literal
 "http://f/n1" beside the IRI <http://f/n1>, a literal "_:b0" beside the
-blank node), blank nodes in subject and object position, and repeated
+blank node), plain literals beside their xsd:string twins (one RDF
+term), blank nodes in subject and object position, and repeated
 captures of some triples; queries repeat variables inside a pattern and
 place their FILTER anywhere in the group; a predicate may be a `/` or
 `+` path, and a group may end in an OPTIONAL pattern.
@@ -41,9 +42,15 @@ def _fuzz_rows():
             rows.add((s, p, o, "blank" if o.startswith("_:") else "iri",
                       None, None))
         elif r < 0.65:
-            # control-char literals fuzz the ECHAR decode paths (rule 8)
-            rows.add((s, p, rng.choice(["v1", "v2", "v3", "a\nb", "t\tv"]),
-                      "literal", None, None))
+            # control-char literals fuzz the ECHAR decode paths (rule 8).
+            # Some have an xsd:string twin, the same term spelled the
+            # other way, on the same subject or another one
+            lit = rng.choice(["v1", "v2", "v3", "a\nb", "t\tv"])
+            rows.add((s, p, lit, "literal", None, None))
+            twin = rng.random()
+            if twin < 0.4:
+                rows.add((s if twin < 0.2 else rng.choice(NODES), p, lit,
+                          "literal", XSD + "string", None))
         elif r < 0.8:
             # a literal whose lexical form is a node's: plain or anyURI
             rows.add((s, p, rng.choice(NODES[:4] + ["_:b0"]), "literal",

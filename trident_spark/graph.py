@@ -27,8 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from trident_spark.pipeline.kg import TRIPLE_SCHEMA
 
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-
 
 # ---------------------------------------------------------------------------
 # Terms (reference rdf.NewIRI / NewLiteral / NewLiteralWithDatatype /

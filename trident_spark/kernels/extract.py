@@ -37,7 +37,6 @@ __all__ = ["RawTriple", "extract_page", "extract_text", "parse_html"]
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD = "http://www.w3.org/2001/XMLSchema#"
-XSD_STRING = XSD + "string"
 XSD_INTEGER = XSD + "integer"
 XSD_DOUBLE = XSD + "double"
 XSD_BOOLEAN = XSD + "boolean"

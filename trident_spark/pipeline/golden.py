@@ -14,11 +14,17 @@ from __future__ import annotations
 
 from trident_spark.util_xxhash import spark_xxhash64 as _H
 
+_XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+
 
 def _tid(kind: str, lex: str, dt: str | None = None,
          lang: str | None = None) -> int:
-    """Mirror of kg.term_id: xxhash64(kind, lexical, dt or '', lang or '')."""
-    return _H(kind, lex, dt or "", lang or "")
+    """Mirror of kg.term_id: xxhash64(kind, lexical, dt, lang) with an
+    absent or xsd:string datatype as '' and the tag lowercased (RDF 1.1:
+    a simple literal is an xsd:string one; tags compare
+    case-insensitively)."""
+    return _H(kind, lex, "" if dt in (None, _XSD_STRING) else dt,
+              (lang or "").lower())
 
 
 def full_pipeline_golden_ids(n_pages: int = 200, seed: int = 42

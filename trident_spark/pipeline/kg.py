@@ -11,6 +11,14 @@ pure function of content — so retries, resumes and independent runs assign
 identical ids (SURVEY.md §4.3: never ``monotonically_increasing_id``).
 Blank nodes are skolemized with sha2(url|warc_ts|label), making them stable
 per capture (north_star: "deterministic url+warc_ts hashing").
+
+One RDF term, one id (RDF 1.1 Concepts §3.3): :func:`term_id` hashes an
+``xsd:string`` datatype as absent (a simple literal *is* an xsd:string
+literal) and the language tag case-folded (tags compare
+case-insensitively), so ``"x"``/``"x"^^xsd:string`` and ``"x"@en``/
+``"x"@EN`` share an id, and a query that compares ids compares terms.
+The dictionary stores each id once, in the least of its spellings
+(:func:`one_row_per_id`), with tags kept as written.
 """
 
 from __future__ import annotations
@@ -18,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 SKOLEM_PREFIX = "https://trident-spark.dev/.well-known/genid/"
+XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
 # the lexical triple frame every parser returns and ``decode_triples``
 # rebuilds; a quads frame adds ", graph string"
@@ -99,14 +108,54 @@ def subject_kind(col):
 
 
 def term_id(kind_col, lexical_col, datatype_col=None, lang_col=None):
-    """Deterministic 64-bit id from canonical term content."""
+    """Deterministic 64-bit id of an RDF term: ``xxhash64`` of its kind,
+    lexical form, datatype with ``xsd:string`` as absent, and language
+    tag lowercased (absent = "").  Two spellings of one term get one id."""
     empty = F.lit("")
     return F.xxhash64(
         kind_col,
         lexical_col,
-        empty if datatype_col is None else F.coalesce(datatype_col, empty),
-        empty if lang_col is None else F.coalesce(lang_col, empty),
+        empty if datatype_col is None
+        else F.coalesce(F.nullif(datatype_col, F.lit(XSD_STRING)), empty),
+        empty if lang_col is None else F.coalesce(F.lower(lang_col), empty),
     )
+
+
+def term_columns(kind, lexical, datatype=None, lang=None) -> dict:
+    """A term's dictionary row as Columns (term_id, kind, lexical,
+    datatype, lang), its datatype canonical: ``xsd:string`` is absent."""
+    null = F.lit(None).cast("string")
+    dt = null if datatype is None else F.nullif(datatype, F.lit(XSD_STRING))
+    return {"term_id": term_id(kind, lexical, datatype, lang), "kind": kind,
+            "lexical": lexical, "datatype": dt,
+            "lang": null if lang is None else lang}
+
+
+def one_row_per_id(terms: DataFrame) -> DataFrame:
+    """``terms`` with each ``term_id`` once: of the spellings one id has
+    (``"x"@en``/``"x"@EN``), the least (kind, lexical, datatype, lang), so
+    any partitioning keeps the same row."""
+    least = F.min(F.struct("kind", "lexical", "datatype", "lang"))
+    return terms.groupBy("term_id").agg(least.alias("t")).select(
+        "term_id", "t.*")
+
+
+def _slot_terms() -> dict[str, dict]:
+    """The subject, predicate and object of a skolemized row as
+    :func:`term_columns`."""
+    subj = F.col("subj")
+    return {"subj": term_columns(subject_kind(subj), subj),
+            "pred": term_columns(F.lit("iri"), F.col("pred")),
+            "obj": term_columns(F.col("obj_kind"), F.col("obj_lexical"),
+                                F.col("obj_datatype"), F.col("obj_lang"))}
+
+
+def _term_rows(skolemized: DataFrame) -> DataFrame:
+    """Every subject, predicate and object of ``skolemized`` as a
+    dictionary row, one per slot of each triple."""
+    subj, pred, obj = [skolemized.select(*[c.alias(n) for n, c in t.items()])
+                       for t in _slot_terms().values()]
+    return subj.unionByName(pred).unionByName(obj)
 
 
 def encode_triples(skolemized: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -114,45 +163,13 @@ def encode_triples(skolemized: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     ids are content hashes, so the triples side needs **no join** with the
     dictionary — both sides compute the same hash expression (shuffle-free
-    encoding; the only shuffles here are the two dropDuplicates).
+    encoding; the only shuffle here is :func:`one_row_per_id`'s).
     """
-    with_ids = skolemized.select(
-        "url",
-        "warc_ts",
-        "source",
-        term_id(subject_kind(F.col("subj")), F.col("subj")).alias("subj_id"),
-        term_id(F.lit("iri"), F.col("pred")).alias("pred_id"),
-        term_id(
-            F.col("obj_kind"), F.col("obj_lexical"), F.col("obj_datatype"), F.col("obj_lang")
-        ).alias("obj_id"),
-        "subj", "pred", "obj_lexical", "obj_kind", "obj_datatype", "obj_lang",
-    )
-
-    subj_terms = with_ids.select(
-        F.col("subj_id").alias("term_id"), subject_kind(F.col("subj")).alias("kind"),
-        F.col("subj").alias("lexical"),
-        F.lit(None).cast("string").alias("datatype"),
-        F.lit(None).cast("string").alias("lang"),
-    )
-    pred_terms = with_ids.select(
-        F.col("pred_id").alias("term_id"), F.lit("iri").alias("kind"),
-        F.col("pred").alias("lexical"),
-        F.lit(None).cast("string").alias("datatype"),
-        F.lit(None).cast("string").alias("lang"),
-    )
-    obj_terms = with_ids.select(
-        F.col("obj_id").alias("term_id"), F.col("obj_kind").alias("kind"),
-        F.col("obj_lexical").alias("lexical"),
-        F.col("obj_datatype").alias("datatype"), F.col("obj_lang").alias("lang"),
-    )
-    terms = subj_terms.unionByName(pred_terms).unionByName(obj_terms).dropDuplicates(
-        ["term_id"]
-    )
-
-    triples = with_ids.select(
-        "subj_id", "pred_id", "obj_id", "url", "warc_ts", "source"
-    )
-    return terms, triples
+    triples = skolemized.select(
+        *[t["term_id"].alias(f"{slot}_id")
+          for slot, t in _slot_terms().items()],
+        "url", "warc_ts", "source")
+    return one_row_per_id(_term_rows(skolemized)), triples
 
 
 def decode_triples(triples: DataFrame, terms: DataFrame) -> DataFrame:
@@ -211,11 +228,14 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     )
 
 
-def assert_no_id_collisions(terms: DataFrame) -> int:
-    """Safety check: xxhash64 collision across distinct lexical forms."""
+def assert_no_id_collisions(skolemized: DataFrame) -> int:
+    """Safety check: the number of term ids that :func:`encode_triples`
+    would give to more than one term (an xxhash64 collision), counted
+    over ``skolemized``'s rows before the dictionary keeps one per id."""
+    term = F.struct("kind", "lexical", "datatype", F.lower("lang"))
     return (
-        terms.groupBy("term_id")
-        .agg(F.countDistinct("kind", "lexical", "datatype", "lang").alias("n"))
+        _term_rows(skolemized).groupBy("term_id")
+        .agg(F.countDistinct(term).alias("n"))
         .where(F.col("n") > 1)
         .count()
     )

@@ -25,6 +25,7 @@ from trident_spark.pipeline.kg import TRIPLE_SCHEMA
 from trident_spark.pipeline.turtle import (
     TurtleError,
     _UNESCAPE_RE,
+    _tokenize,
     _unescape_one,
     canonical_triple_term,
 )
@@ -326,6 +327,13 @@ _TT_LINE = re.compile(
     r" \.$"
 )
 
+# the tokens of an N-Triples 1.2 triple term: its brackets, an absolute
+# IRI, a blank node, a string with its tag or datatype marker.  Turtle
+# shorthand (a pname, `a`, a bare number or boolean, a relative IRI)
+# makes the line malformed.
+_NT_TT_TOKEN = re.compile(
+    r'<<\(|\)>>|\^\^|@.+|".*|_:.+|<[A-Za-z][A-Za-z0-9+.\-]*:.*>', re.S)
+
 
 def parse_nquads_line(line: str):
     """One N-Quads line → (subj, pred, obj_lexical, obj_kind, dt, lang,
@@ -336,6 +344,8 @@ def parse_nquads_line(line: str):
         if t is None:
             return None
         try:
+            if not all(map(_NT_TT_TOKEN.fullmatch, _tokenize(t.group("tt")))):
+                return None
             tt = canonical_triple_term(t.group("tt"))
         except TurtleError:
             return None

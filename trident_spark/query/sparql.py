@@ -92,15 +92,18 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, functions as F
 
+from trident_spark.pipeline.kg import (
+    TRIPLE_SCHEMA, XSD_STRING, one_row_per_id, subject_kind, term_columns,
+    term_id,
+)
 from trident_spark.pipeline.sinks import _BLANK_LABEL, _escape_literal
 from trident_spark.pipeline.turtle import render_term
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD = "http://www.w3.org/2001/XMLSchema#"
-XSD_STRING = XSD + "string"
 
-# bare numeric / boolean object shorthand (the tokenizer's unsigned number
-# class plus true/false) — matched as typed literals on their lexical form
+# bare numeric / boolean shorthand (the tokenizer's unsigned number class
+# plus true/false): an xsd:integer/decimal/boolean term (_const_term)
 _PLAIN_SCALAR = re.compile(r"^(?:[0-9]+(?:\.[0-9]+)?|true|false)$")
 
 # scanner: IRIs and quoted literals are atomic tokens, so nothing downstream
@@ -353,41 +356,14 @@ _LIT_TOK_RE = re.compile(
 def _literal_parts(tok: str, prefixes: dict[str, str]
                    ) -> tuple[str, str | None, str | None]:
     """Literal token → (lexical value, language tag | None,
-    expanded datatype IRI | None).  The full RDF term identity of the
-    constant — pattern matching, DATA blocks and the warehouse scans all
-    decompose through here so ``"x"@en`` / ``"x"^^xsd:token`` constants
-    match on lang/datatype too, not the lexical form alone."""
+    expanded datatype IRI | None): the parts of the RDF term the constant
+    denotes (:func:`_const_term`), which templates instantiate."""
     m = _LIT_TOK_RE.match(tok)
     if not m:
         raise SparqlError(f"malformed literal token {tok!r}")
     dt = m.group("dt")
     return (_term_value(tok, prefixes), m.group("lang"),
             _expand(dt, prefixes) if dt else None)
-
-
-def _literal_match_cond(lex, value: str, lang: str | None,
-                        dt: str | None, kind, lang_col=None, dt_col=None):
-    """Spark condition matching a literal CONSTANT against the term with
-    columns ``lex``/``kind``/``lang_col``/``dt_col``, by full RDF 1.1 term
-    identity: language tags compare case-insensitively (BCP 47); a plain
-    ``"x"`` is a simple literal ≡ ``xsd:string``.
-
-    A frame that records no lang/datatype metadata (both columns optional
-    in the ``query()`` contract; pass None) keeps the historical
-    lexical-form match for the missing dimension rather than matching
-    nothing."""
-    cond = (kind == "literal") & (lex == value)
-    if lang is not None:
-        return (cond & (F.lower(lang_col) == lang.lower())
-                if lang_col is not None else cond)
-    if lang_col is not None:
-        cond &= lang_col.isNull()
-    if dt_col is None:
-        return cond
-    simple = dt_col.isNull() | (dt_col == XSD_STRING)
-    if dt is not None and dt != XSD_STRING:
-        return cond & (dt_col == dt)
-    return cond & simple
 
 
 def _parse_group(toks: list[str], i: int) -> tuple[_Group, int]:
@@ -909,17 +885,12 @@ def _expand_macro(name: str, args: list[list[str]],
                 f"THEN {raw} "
                 f"ELSE {un} END)")
     if name == "SAMETERM" and len(sql) == 2:
-        # term identity: lexical form plus kind/lang/datatype whenever the
-        # hidden metadata columns are present for both variable args
-        parts = [f"({sql[0]} <=> {sql[1]})"]
-        vars_ = [a[0][1:] if len(a) == 1 and a[0].startswith("?") else None
-                 for a in args]
-        if None not in vars_ and cols is not None:
-            va, vb = vars_
-            for pfx in ("_kind_", "_lang_", "_dt_"):
-                if pfx + va in cols and pfx + vb in cols:
-                    parts.append(f"(`{pfx + va}` <=> `{pfx + vb}`)")
-        return "(" + " AND ".join(parts) + ")"
+        # two bound variables are one term when their term ids are
+        ids = [f"_tid_{a[0][1:]}" for a in args
+               if len(a) == 1 and a[0].startswith("?")]
+        if len(ids) == 2 and cols is not None and set(ids) <= cols:
+            return f"(`{ids[0]}` = `{ids[1]}`)"
+        return f"({sql[0]} <=> {sql[1]})"
     raise SparqlError(f"{name} takes {len(args)} arguments?")
 
 
@@ -931,24 +902,23 @@ def _lang_sql(fn: str, v: str) -> str:
     """LANG/LANGDIR/HASLANG/HASLANGDIR/DATATYPE(?v) over ?v's term columns.
     RDF 1.2 base direction rides on the stored tag as `tag--ltr|rtl`:
     LANG() returns the tag alone, LANGDIR() the direction ('' when none),
-    per SPARQL 1.2 §17.4.2."""
-    base = f"regexp_replace(`_lang_{v}`, '--(ltr|rtl)$', '')"
-    direction = f"regexp_extract(`_lang_{v}`, '--(ltr|rtl)$', 1)"
-    if fn == "LANG":
-        # SPARQL LANG() returns "" for plain literals
-        return f"coalesce({base}, '')"
-    if fn == "LANGDIR":
-        return f"coalesce({direction}, '')"
+    per SPARQL 1.2 §17.4.2.  LANG, LANGDIR and DATATYPE of a term that is
+    not a literal are errors (§17.4.2.6-7): NULL, so a BIND leaves its
+    variable unbound."""
+    base = f"coalesce(regexp_replace(`_lang_{v}`, '--(ltr|rtl)$', ''), '')"
+    direction = f"coalesce(regexp_extract(`_lang_{v}`, '--(ltr|rtl)$', 1), '')"
     if fn == "HASLANG":
-        return f"(coalesce({base}, '') != '')"
+        return f"({base} != '')"
     if fn == "HASLANGDIR":
-        return f"(coalesce({direction}, '') != '')"
+        return f"({direction} != '')"
     # dir-lang → rdf:dirLangString; lang → rdf:langString; plain → its
     # datatype, default xsd:string
     rdf_ns = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-    return (f"(CASE WHEN {direction} != '' THEN '{rdf_ns}dirLangString' "
-            f"WHEN `_lang_{v}` IS NOT NULL THEN '{rdf_ns}langString' "
-            f"ELSE coalesce(`_dt_{v}`, '{XSD_STRING}') END)")
+    value = {"LANG": base, "LANGDIR": direction}.get(fn) or (
+        f"CASE WHEN {direction} != '' THEN '{rdf_ns}dirLangString' "
+        f"WHEN `_lang_{v}` IS NOT NULL THEN '{rdf_ns}langString' "
+        f"ELSE coalesce(`_dt_{v}`, '{XSD_STRING}') END")
+    return f"(CASE WHEN `_kind_{v}` = 'literal' THEN {value} END)"
 
 
 def _filter_sql(toks: list[str], cols: set[str] | None = None) -> str:
@@ -1023,15 +993,13 @@ def _filter_sql(toks: list[str], cols: set[str] | None = None) -> str:
 
 
 def _zero_length(edges: DataFrame, per_graph: bool = False,
-                 seed: list | None = None) -> DataFrame:
+                 seed=None) -> DataFrame:
     """Zero-length path pairs of `*` and `?` (SPARQL 1.1 §18.5): (c, c)
-    for each id c a constant endpoint matches (``seed``), in the graph or
-    not, else (n, n) over every graph node (per named graph, carrying
-    ``_pg``)."""
+    for a constant endpoint's id c (``seed``), in the graph or not, else
+    (n, n) over every graph node (per named graph, carrying ``_pg``)."""
     if seed is not None:
         return edges.sparkSession.range(1).select(
-            F.explode(F.array(*seed)).alias("_ps")).select(
-            "_ps", F.col("_ps").alias("_po"))
+            seed.alias("_ps"), seed.alias("_po"))
     g = [F.col("graph_id").alias("_pg")] if per_graph else []
     nodes = (
         edges.select(*g, F.col("subj_id").alias("_ps"))
@@ -1057,10 +1025,9 @@ def _compile_path(edges: DataFrame, node: tuple,
     is computed independently by keying every join on the graph column
     too).
 
-    ``subj``/``obj`` are the term ids each constant endpoint of the
-    pattern matches (:func:`_endpoint_ids`), if any.  The result always
-    holds every pair with those endpoints and may hold others; the caller
-    filters on the constants.
+    ``subj``/``obj`` are the term ids of the pattern's constant
+    endpoints, if any.  The result always holds every pair with those
+    endpoints and may hold others; the caller filters on the constants.
 
     A closure (`+`/`*`) runs one loop over the id pairs.  The step
     relation starts as the one-step pairs, and each round squares it
@@ -1075,8 +1042,8 @@ def _compile_path(edges: DataFrame, node: tuple,
     closure whose step relation passes ``_MAX_CLOSURE_PAIRS`` raises
     SparqlError instead of returning a truncated answer.  `*` and `?` add
     the zero-length pairs of SPARQL 1.1 §18.5 (:func:`_zero_length`); a
-    constant endpoint gives the pairs (c, c) of the ids it matches, so a
-    seeded `?` reads no graph node."""
+    constant endpoint gives the pair (c, c) of its id, so a seeded `?`
+    reads no graph node."""
     kind = node[0]
     g_sel = [F.col("graph_id").alias("_pg")] if per_graph else []
     g_cols = ["_pg"] if per_graph else []
@@ -1144,8 +1111,7 @@ def _compile_path(edges: DataFrame, node: tuple,
         # After round k the step relation holds every path of 1..2^k hops,
         # so a round that adds no pair from the seed shows that no node
         # lies 2^(k-1)+1 hops from it, hence none further
-        growing = (F.col("_ps").isin(seed) if seed is not None
-                   else F.lit(True))
+        growing = F.col("_ps") == seed if seed is not None else F.lit(True)
         step = base.select(*g_cols, F.col(src).alias("_ps"),
                            F.col(dst).alias("_po"))
         counts, grown = {}, True
@@ -1219,10 +1185,7 @@ def _dedupe_repeated_vars(scan: DataFrame, rename: dict[str, str]
 
 def _quoted_components(lex) -> dict[str, dict]:
     """The subject, predicate and object of the triple term whose
-    canonical form is ``lex``, each as ``{dictionary column: Column}``
-    with its ``kg.term_id``."""
-    from trident_spark.pipeline.kg import subject_kind, term_id
-
+    canonical form is ``lex``, each as its ``kg.term_columns``."""
     iri = F.regexp_extract(lex, _Q_SUBJ_IRI, 1)
     subj = F.when(iri != "", iri) \
         .otherwise(F.regexp_extract(lex, _Q_SUBJ_BLANK, 1))
@@ -1236,14 +1199,11 @@ def _quoted_components(lex) -> dict[str, dict]:
            .otherwise(raw))
     lang = F.regexp_extract(raw, r'^"(?:[^"\\]|\\.)*"@([A-Za-z0-9\-]+)$', 1)
     dt = F.regexp_extract(raw, r'^"(?:[^"\\]|\\.)*"\^\^<([^>]*)>$', 1)
-    null = F.lit(None).cast("string")
-    parts = {"subj": (subject_kind(subj), subj, null, null),
-             "pred": (F.lit("iri"), F.regexp_extract(lex, _Q_PRED, 1),
-                      null, null),
-             "obj": (kind, obj, F.nullif(dt, F.lit("")),
-                     F.nullif(lang, F.lit("")))}
-    return {slot: dict(zip(("kind", "lexical", "datatype", "lang"), t),
-                       term_id=term_id(*t)) for slot, t in parts.items()}
+    return {"subj": term_columns(subject_kind(subj), subj),
+            "pred": term_columns(F.lit("iri"),
+                                 F.regexp_extract(lex, _Q_PRED, 1)),
+            "obj": term_columns(kind, obj, F.nullif(dt, F.lit("")),
+                                F.nullif(lang, F.lit("")))}
 
 
 def _compile_quoted(src: "DataFrame | _Warehouse", pat: _Pattern,
@@ -1270,9 +1230,7 @@ def _compile_quoted(src: "DataFrame | _Warehouse", pat: _Pattern,
         term = comps[slot]
         if not tok.startswith("?"):
             triples = triples.where(
-                _literal_lookup(tok, prefixes, term)
-                if tok.startswith('"') or _PLAIN_SCALAR.match(tok)
-                else term["term_id"] == _const_id(_const_term(tok, prefixes)))
+                term["term_id"] == _const_id(_const_term(tok, prefixes)))
         elif tok[1:] in inner:
             triples = triples.where(term["term_id"]
                                     == inner[tok[1:]]["term_id"])
@@ -1287,9 +1245,7 @@ def _compile_quoted(src: "DataFrame | _Warehouse", pat: _Pattern,
     vars_ = (outer | set(inner)) - {tt}
     if not vars_:
         return plan.select(F.lit(1).alias(f"_m{idx}")).limit(1), vars_
-    # a literal constant matches each stored form of its term ("x" and
-    # "x"^^xsd:string), which are one solution
-    return plan.distinct(), vars_
+    return plan, vars_
 
 
 def _compile_pattern(src: "DataFrame | _Warehouse", pat: _Pattern,
@@ -1315,13 +1271,14 @@ def _compile_pattern(src: "DataFrame | _Warehouse", pat: _Pattern,
     ends = {"_ps": pat.subj, "_po": pat.obj}
     consts = {col: term for col, term in ends.items()
               if not term.startswith("?")}
-    ids = {col: _endpoint_ids(src, t, prefixes) for col, t in consts.items()}
+    ids = {col: _const_id(_const_term(t, prefixes))
+           for col, t in consts.items()}
     # the closure starts from the bound endpoints
     scan = _compile_path(_id_edges(src), pat.pred, prefixes, per_graph,
                          subj=ids.get("_ps"), obj=ids.get("_po"))
     for col, term in ends.items():
         if col in ids:
-            scan = scan.where(F.col(col).isin(ids[col]))
+            scan = scan.where(F.col(col) == ids[col])
         else:
             rename[col] = term[1:]
     out_vars = set(rename.values())
@@ -1331,26 +1288,10 @@ def _compile_pattern(src: "DataFrame | _Warehouse", pat: _Pattern,
         return scan.select(F.lit(1).alias(f"_m{idx}")).limit(1), out_vars
     # a zero-length path binds the variable end to the constant one,
     # which the graph need not hold
-    const = next(((ids[c][0], _const_term(t, prefixes))
+    const = next(((ids[c], _const_term(t, prefixes))
                   for c, t in consts.items()), None)
     return _decode(src, scan.select(*proj).distinct(), out_vars & needed,
                    const), out_vars
-
-
-def _endpoint_ids(src: "DataFrame | _Warehouse", tok: str,
-                  prefixes: dict[str, str]) -> list:
-    """The term ids a path's constant endpoint matches, the constant's own
-    id first: a literal also matches every term the lexical engine's
-    literal match accepts (plain ≡ xsd:string, a tag in any case, a bare
-    number in any datatype), looked up in the source's dictionary."""
-    term = _const_term(tok, prefixes)
-    ids = [_const_id(term)]
-    if term[0] == "literal":
-        terms = _terms(src)
-        ids += [F.lit(r[0]) for r in terms.where(
-            _literal_lookup(tok, prefixes))
-            .select("term_id").distinct().collect()]
-    return ids
 
 
 def _compat_parts_join(plan: DataFrame, scan: DataFrame, keys: list[str],
@@ -1674,26 +1615,17 @@ _SLOT_TERMS: dict[tuple[str, ...], dict] = {}
 
 def _slot_terms(columns) -> dict[str, dict]:
     """Each slot of a lexical frame with ``columns`` as an RDF term:
-    ``{slot: {dictionary column: Column}}``, its id ``kg.term_id`` (a
-    frame that records no datatype/lang hashes them as absent)."""
+    ``{slot: kg.term_columns}`` (a frame that records no datatype/lang
+    hashes them as absent)."""
     key = tuple(c for c in ("obj_datatype", "obj_lang") if c in columns)
     if key not in _SLOT_TERMS:
-        from trident_spark.pipeline.kg import subject_kind, term_id
-
-        null = F.lit(None).cast("string")
         meta = [F.col(c) if c in key else None
                 for c in ("obj_datatype", "obj_lang")]
-        out = {}
-        for slot, col in _LEX_COLS.items():
-            lex = F.col(col)
-            kind = (F.col("obj_kind") if slot == "obj" else F.lit("iri")
-                    if slot == "pred" else subject_kind(lex))
-            dt, lang = meta if slot == "obj" else (None, None)
-            out[slot] = {
-                "term_id": term_id(kind, lex, dt, lang), "lexical": lex,
-                "kind": kind, "datatype": null if dt is None else dt,
-                "lang": null if lang is None else lang}
-        _SLOT_TERMS[key] = out
+        _SLOT_TERMS[key] = {slot: term_columns(
+            F.col("obj_kind") if slot == "obj" else F.lit("iri")
+            if slot == "pred" else subject_kind(F.col(col)),
+            F.col(col), *(meta if slot == "obj" else ()))
+            for slot, col in _LEX_COLS.items()}
     return _SLOT_TERMS[key]
 
 
@@ -1722,8 +1654,9 @@ def _id_edges(src: "DataFrame | _Warehouse") -> DataFrame:
 
 
 def _terms(src: "DataFrame | _Warehouse") -> DataFrame:
-    """The source's term dictionary (term_id, lexical, kind, datatype,
-    lang); a lexical frame's holds its subjects, objects and graphs."""
+    """The source's term dictionary (term_id, kind, lexical, datatype,
+    lang), one row per id; a lexical frame's holds its subjects, objects
+    and graphs, each id in the spelling ``kg.one_row_per_id`` picks."""
     if isinstance(src, _Warehouse):
         return src.terms
     slots = _slot_terms(src.columns)
@@ -1732,7 +1665,7 @@ def _terms(src: "DataFrame | _Warehouse") -> DataFrame:
     out = parts[0]
     for part in parts[1:]:
         out = out.union(part)
-    return out.where(F.col("lexical").isNotNull()).distinct()
+    return one_row_per_id(out.where(F.col("lexical").isNotNull()))
 
 
 def _decode(src: "DataFrame | _Warehouse", plan: DataFrame, vars_: set[str],
@@ -1773,8 +1706,6 @@ def _const_term(tok: str, prefixes: dict[str, str]) -> tuple:
 def _const_id(term: tuple):
     """``kg.term_id`` of a (kind, lexical, datatype, lang) constant, a
     literal Catalyst folds."""
-    from trident_spark.pipeline.kg import term_id
-
     return term_id(*[None if x is None else F.lit(x) for x in term])
 
 
@@ -1787,8 +1718,6 @@ def _computed_term(v: str, kind: str = "literal", dt: str | None = None,
     """The term columns of a computed ?v: the term of ``kind`` (datatype
     ``dt``, language ``lang``) whose lexical form is ?v's value; null in
     every column where ?v is unbound."""
-    from trident_spark.pipeline.kg import term_id
-
     is_bound = F.col(v).isNotNull()
     meta = {"_kind_": kind, "_dt_": dt, "_lang_": lang}
     return {f"_tid_{v}": F.when(is_bound, term_id(
@@ -1802,8 +1731,6 @@ def _values_frame(spark, vars_: list[str], rows: list[tuple],
                   prefixes: dict[str, str]) -> DataFrame:
     """VALUES rows → a frame binding each variable to the term its token
     denotes; an UNDEF cell is null in every column."""
-    from trident_spark.pipeline.kg import term_id
-
     meta = ("_kind_", "", "_dt_", "_lang_")  # _const_term's order
     data = [tuple(x for t in row for x in (
         (None,) * 4 if t is None else _const_term(t, prefixes)))
@@ -1815,65 +1742,30 @@ def _values_frame(spark, vars_: list[str], rows: list[tuple],
         term_id(*[F.col(f"{p}{v}") for p in meta])) for v in vars_})
 
 
-def _literal_lookup(tok: str, prefixes: dict[str, str],
-                    term: dict | None = None):
-    """Condition selecting the terms a literal constant (or a bare number
-    or boolean) matches, as :func:`_lexical_scan` matches it: over a term
-    dictionary's columns, or over ``term`` ({dictionary column:
-    Column})."""
-    if term is None:
-        term = {c: F.col(c) for c in ("lexical", "kind", "datatype", "lang")}
-    if _PLAIN_SCALAR.match(tok):
-        return (term["kind"] == "literal") & (term["lexical"] == tok)
-    return _literal_match_cond(
-        term["lexical"], *_literal_parts(tok, prefixes), term["kind"],
-        term["lang"], term["datatype"])
-
-
 def _warehouse_scan(wh: _Warehouse, pat: _Pattern, prefixes: dict[str, str]
                     ) -> tuple[DataFrame, dict[str, str]]:
-    """:func:`_lexical_scan` over the edge table: constants filter the
-    id columns on their ``kg.term_id``, which Catalyst folds to a literal."""
-    from trident_spark.pipeline.kg import term_id
-
+    """:func:`_lexical_scan` over the edge table: each constant filters
+    its id column on its ``kg.term_id``, which Catalyst folds to a
+    literal."""
     rename: dict[str, str] = {}
-    cond = lookup = None
+    cond = None
     for slot, term in (("subj", pat.subj), ("pred", pat.pred),
                        ("obj", pat.obj)):
         if term.startswith("?"):
             rename[slot] = term[1:]
             continue
-        col = F.col(f"{slot}_id")
-        if slot == "obj" and term.startswith('"'):
-            value, lang, dt = _literal_parts(term, prefixes)
-            if lang is not None:
-                # a language tag compares case-insensitively: look the
-                # ids up in the dictionary
-                lookup = _literal_lookup(term, prefixes)
-                continue
-            # a simple literal is stored plain or as xsd:string
-            dts = [dt] if dt not in (None, XSD_STRING) else ["", XSD_STRING]
-            c = col.isin(*[term_id(F.lit("literal"), F.lit(value), F.lit(d))
-                           for d in dts])
-        elif slot == "obj" and _PLAIN_SCALAR.match(term):
-            # a bare number or boolean matches a literal of any datatype
-            lookup = _literal_lookup(term, prefixes)
-            continue
-        else:
-            c = col == _iri_id(_expand(term, prefixes))
+        c = F.col(f"{slot}_id") == _const_id(_const_term(term, prefixes))
         cond = c if cond is None else cond & c
-    scan = wh.edges if cond is None else wh.edges.where(cond)
-    if lookup is not None:
-        ids = wh.terms.where(lookup).select(F.col("term_id").alias("obj_id"))
-        scan = scan.join(F.broadcast(ids), "obj_id", "left_semi")
-    return scan, rename
+    return (wh.edges if cond is None else wh.edges.where(cond)), rename
 
 
 def _lexical_scan(triples: DataFrame, pat: _Pattern,
                   prefixes: dict[str, str]
                   ) -> tuple[DataFrame, dict[str, str]]:
     """Constant-filtered scan + {slot: var} map for one plain pattern over
-    a lexical frame."""
+    a lexical frame.  A literal constant (or a bare number) is its term
+    id, behind a cheap lexical-form prefilter; a frame that records no
+    datatype/lang hashes the constant's as absent, as it hashes its own."""
     scan = triples
     rename: dict[str, str] = {}
     for slot, term in (("subj", pat.subj), ("pred", pat.pred),
@@ -1881,24 +1773,20 @@ def _lexical_scan(triples: DataFrame, pat: _Pattern,
         if term.startswith("?"):
             rename[slot] = term[1:]
             continue
-        col = _LEX_COLS[slot]
-        if slot == "obj" and term.startswith('"'):
-            # full RDF term identity (lang tags case-insensitive, plain ≡
-            # xsd:string)
-            scan = scan.where(_literal_match_cond(
-                F.col(col), *_literal_parts(term, prefixes),
-                F.col("obj_kind"), *[F.col(c) if c in triples.columns
-                                     else None
-                                     for c in ("obj_lang", "obj_datatype")]))
-        elif slot == "obj" and _PLAIN_SCALAR.match(term):
-            # numeric/boolean shorthand → typed-literal match (lexical
-            # + kind, per the engine's documented literal matching)
-            scan = scan.where((F.col("obj_kind") == "literal")
-                              & (F.col(col) == term))
-        else:
-            if slot == "obj":
-                scan = scan.where(F.col("obj_kind") == "iri")
-            scan = scan.where(F.col(col) == _expand(term, prefixes))
+        col = F.col(_LEX_COLS[slot])
+        if slot == "obj" and (term.startswith('"')
+                              or _PLAIN_SCALAR.match(term)):
+            kind, value, dt, lang = _const_term(term, prefixes)
+            cols = triples.columns
+            tid = _const_id((kind, value,
+                             dt if "obj_datatype" in cols else None,
+                             lang if "obj_lang" in cols else None))
+            scan = scan.where((col == value) & (
+                _slot_terms(cols)["obj"]["term_id"] == tid))
+            continue
+        if slot == "obj":
+            scan = scan.where(F.col("obj_kind") == "iri")
+        scan = scan.where(col == _expand(term, prefixes))
     return scan, rename
 
 
@@ -3063,39 +2951,19 @@ def _ground_rows(group: _Group, prefixes: dict[str, str]) -> list[tuple]:
     return rows
 
 
-_CORE = ["subj", "pred", "obj_lexical", "obj_kind"]
-_LIT_META = ["obj_datatype", "obj_lang"]
-
-
 def _anti_by_term(out: DataFrame, delete_df: DataFrame) -> DataFrame:
-    """Quads ``out`` minus ``delete_df``, matched by full RDF term
-    identity: the _CORE key and the graph plus — when the base frame
-    records them — obj_datatype and obj_lang, compared null-safely with
-    ``"x"^^xsd:string`` ≡ plain ``"x"`` (RDF 1.1 identifies the two).
-    Null-safe equality keys stay
-    hash-joinable (Spark plans EqualNullSafe as a shuffled/broadcast hash
-    join — never a theta join)."""
-    meta = [c for c in _LIT_META
-            if c in out.columns and c in delete_df.columns]
-    keys = _CORE + ["graph"]
-    d = delete_df.select(*(keys + meta)).distinct()
-    d = d.select(*[F.col(c).alias(f"_del_{c}") for c in keys + meta])
-    cond = None
-    for c in keys + meta:
-        left, right = F.col(c), F.col(f"_del_{c}")
-        if c == "obj_datatype":
-            left = F.nullif(left, F.lit(XSD_STRING))
-            right = F.nullif(right, F.lit(XSD_STRING))
-        elif c == "obj_lang":
-            # BCP 47 tags compare case-insensitively (and --ltr/--rtl
-            # rides along) — the stored side is canonicalized
-            # ('en-US') while a DELETE constant arrives raw ('en-us');
-            # every match path lowercases both sides, so must we, or
-            # the delete silently removes nothing
-            left, right = F.lower(left), F.lower(right)
-        e = (left.eqNullSafe(right) if c in _LIT_META + ["graph"]
-             else left == right)
-        cond = e if cond is None else cond & e
+    """Quads ``out`` minus ``delete_df``, matched by RDF term: subject,
+    predicate, the object's ``kg.term_id`` over the literal metadata both
+    frames record, and the graph, null-safely (NULL is the default
+    graph).  Every key stays hash-joinable."""
+    obj = _slot_terms(set(out.columns) & set(delete_df.columns))["obj"]
+    keys = {"subj": F.col("subj"), "pred": F.col("pred"),
+            "obj": obj["term_id"]}
+    d = delete_df.select(F.col("graph").alias("_del_graph"), *[
+        c.alias(f"_del_{k}") for k, c in keys.items()]).distinct()
+    cond = F.col("graph").eqNullSafe(F.col("_del_graph"))
+    for k, c in keys.items():
+        cond &= c == F.col(f"_del_{k}")
     return out.join(d, cond, "left_anti")
 
 
@@ -3163,14 +3031,11 @@ def update(frame: DataFrame, sparql: str) -> DataFrame:
     cannot fail and CLEAR ≡ DROP); ``MOVE/COPY/ADD [SILENT] (DEFAULT|
     [GRAPH] <g>) TO (DEFAULT|[GRAPH] <g>)``.
 
-    Deletion matches on full RDF term identity: (subj, pred, obj_lexical,
-    obj_kind, graph) plus — whenever the frame records them —
-    obj_datatype and obj_lang (null-safe; ``"x"^^xsd:string`` ≡ plain
-    ``"x"`` per RDF 1.1; null-safe on graph, so default-graph rows delete
-    correctly).  Inserted literal rows carry their @lang / ^^datatype;
+    Deletion matches by RDF term: subj, pred, the object's ``kg.term_id``
+    (so ``"x"^^xsd:string`` deletes plain ``"x"`` and ``@en-us`` deletes
+    ``@en-US``) and the graph, null-safely, so default-graph rows delete
+    correctly.  Inserted literal rows carry their @lang / ^^datatype;
     extra columns of the input frame stay NULL on inserted rows."""
-    from trident_spark.pipeline.kg import TRIPLE_SCHEMA
-
     toks, prefixes = _prep(sparql)
     if not toks:
         raise SparqlError("empty update")
@@ -3208,8 +3073,8 @@ def update(frame: DataFrame, sparql: str) -> DataFrame:
         if delete_df is not None:
             out = _anti_by_term(out, delete_df)
         if insert_df is not None:
-            keep = _CORE + ["graph"] + [c for c in _LIT_META
-                                        if c in quads.columns]
+            keep = ["subj", "pred", "obj_lexical", "obj_kind", "graph"] + [
+                c for c in ("obj_datatype", "obj_lang") if c in quads.columns]
             out = out.unionByName(insert_df.select(*keep).distinct(),
                                   allowMissingColumns=True)
         return result(out)
